@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every inventory query against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query and
   * total wall seconds.
@@ -24,18 +22,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // large heaps inflate the default page size to 64m; hash-aggregate
-      // tasks then spend their time zeroing pages (measured 148s->12s on
-      // the minhash pipeline at sf0.1)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
 
     // JIT/classloading warm-up outside the measured loop: a small scan +

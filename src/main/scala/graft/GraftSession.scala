@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * strategy) from one call:
   *
   * {{{
-  * val spark = GraftSession.build()           // local[<cores>]
+  * val spark = GraftSession.build()           // local[<cpus>]
   * spark.sql("SELECT graft_dot(a.embedding, b.embedding) ...")
   * graft.plans.AsOfOps.asofJoin(...)
   * }}}
@@ -21,8 +21,13 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def build(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** Task threads: the `SPARK_GRAFT_CPUS` deployment setting, else the
+    * host's core count. */
+  private val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def build(master: String = s"local[$cpus]",
+      shufflePartitions: Int = cpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Fixture scale-up: replicate an existing SF directory N× with
@@ -32,15 +32,7 @@ object ScaleUp {
     require(factor <= 26,
       s"factor $factor exceeds the 26 distinct text transforms; " +
         "compose ScaleUp runs instead (e.g. sf0.1 -> sf1 -> sf10)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))

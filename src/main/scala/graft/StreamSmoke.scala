@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamingPipeline
 
 /** Runnable streaming demo: replays the events fixture through the
@@ -14,16 +13,7 @@ object StreamSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("stream-smoke").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // large heaps inflate the default page size to 64m; hash-aggregate
-      // tasks then spend their time zeroing pages (measured 148s->12s on
-      // the minhash pipeline at sf0.1)
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
 
     val q = StreamingPipeline.dimUpsertQuery(spark, sfDir, outDir)

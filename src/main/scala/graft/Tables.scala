@@ -19,12 +19,6 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  /** events.ts is written as parquet ns-precision; Spark reads it at µs
-    * while DuckDB keeps ns. All oracle-compared timestamp logic goes
-    * through second truncation (`tss`) so both engines agree exactly.
-    */
-  def secTrunc(colName: String) = date_trunc("second", col(colName))
-
   def lineitem(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/lineitem.parquet")
   def orders(spark: SparkSession, dir: String): DataFrame =

@@ -1,26 +1,24 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Pin toggles for controlled same-session A/B measurement (guide
-  * §1.1's empirical loop): a persist site tagged through [[pin]] can
-  * be disabled at runtime by [[AbPins]], which alternates on/off runs
-  * of one query inside ONE SparkSession so ambient host drift hits
-  * both arms equally — the r10 round's wall-clock comparisons were
-  * polluted by a measured ~1.4x cross-run host swing, which is larger
-  * than any single pin's effect.
-  *
-  * Production behavior is the default: every pin enabled, nothing
-  * consulted outside this process. */
+/** Cache and job-label policy shared by the streaming maintainers and
+  * the table format ([[graft.sources.Sources]]). */
 object Tuning {
-  @volatile private[graft] var disabledPins: Set[String] = Set.empty
 
-  def pin(df: DataFrame, tag: String,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    if (disabledPins.contains(tag)) df else df.persist(level)
+  /** Run `body` under a job-description label, RESTORING the caller's
+    * label after — setJobDescription(null) would clear a caller-set
+    * phase label, so every job after the first internal commit would
+    * profile under "?" instead of the caller's phase. */
+  def withJobDescription[T](spark: SparkSession, desc: String)
+      (body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
 
-  /** [[pin]] + immediate materialization. For a pinned frame that a
+  /** `persist()` + immediate materialization. For a pinned frame that a
     * LATER action references from SEVERAL of its leaf stages: AQE
     * submits independent stages concurrently, and every stage that
     * reaches the cache before its blocks land recomputes the whole
@@ -29,19 +27,9 @@ object Tuning {
     * One labeled count up front computes the subtree ONCE; every
     * subsequent stage reads blocks. Costs one extra small job, saves
     * (fan-out − 1) recomputes of the pinned plan. */
-  def pinEager(df: DataFrame, tag: String,
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    if (disabledPins.contains(tag)) df
-    else {
-      val p = df.persist(level)
-      val sc = df.sparkSession.sparkContext
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(s"pin:$tag")
-      try { p.count(); () }
-      finally sc.setJobDescription(prev)
-      p
-    }
-
-  /** Safe on both pinned and unpinned frames. */
-  def unpin(df: DataFrame): Unit = { df.unpersist(); () }
+  def pinEager(df: DataFrame, tag: String): DataFrame = {
+    val p = df.persist()
+    withJobDescription(df.sparkSession, s"pin:$tag") { p.count() }
+    p
+  }
 }

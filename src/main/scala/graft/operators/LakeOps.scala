@@ -802,38 +802,39 @@ object LakeOps {
       java.nio.file.Files.createDirectories(root)
       val base = root.resolve("base").toString
       val view = root.resolve("aggview").toString
-      // pin A/B-able (tag mvgate): the slice commit and the three-slice
-      // CDC merge share one orders scan (guide §5); unpersisted before
-      // the view read
-      val orders = graft.Tuning.pin(Tables.orders(s, dir).select(
+      // pinned: the slice commit and the three-slice CDC merge share
+      // one orders scan (guide §5); try/finally: an exception
+      // mid-gate must not leak the pin
+      val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), col("o_orderpriority").as("prio"),
-        col("o_totalprice")), "mvgate")
-      val k = col("o_orderkey")
-      Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
-        .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
-      Sources.commitStats(s, base, 1, Seq("o_orderkey"))
-      graft.streaming.MaterializedView.initAgg(
-        s, base, "prio", "o_totalprice", view)
-      def drain(): Unit =
-        graft.streaming.MaterializedView.maintainAggQuery(
-          s, base, "prio", "o_totalprice", view, s"$root/ckpt-agg")
-          .awaitTermination()
-      drain()
-      // merge-on-read CDC batch: group moves, deletes, a new group
-      val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
-        .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
-      val del = orders.filter(pmod(k, lit(2)) === 0 &&
-          pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
-        .withColumn("op", lit("delete"))
-      val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
-        .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
-      Sources.mergeVersionDv(
-        s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
-      drain()
-      // DV-only commit: the X-MOVED group zeroes out and must LEAVE
-      Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
-      drain()
-      orders.unpersist()
+        col("o_totalprice")).persist()
+      try {
+        val k = col("o_orderkey")
+        Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
+          .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
+        Sources.commitStats(s, base, 1, Seq("o_orderkey"))
+        graft.streaming.MaterializedView.initAgg(
+          s, base, "prio", "o_totalprice", view)
+        def drain(): Unit =
+          graft.streaming.MaterializedView.maintainAggQuery(
+            s, base, "prio", "o_totalprice", view, s"$root/ckpt-agg")
+            .awaitTermination()
+        drain()
+        // merge-on-read CDC batch: group moves, deletes, a new group
+        val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
+          .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
+        val del = orders.filter(pmod(k, lit(2)) === 0 &&
+            pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
+          .withColumn("op", lit("delete"))
+        val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
+          .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
+        Sources.mergeVersionDv(
+          s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
+        drain()
+        // DV-only commit: the X-MOVED group zeroes out and must LEAVE
+        Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
+        drain()
+      } finally { orders.unpersist(); () }
       Sources.readVersion(s, view)
         .select(col("prio"), col("n_rows"),
           col("sum_val").cast("decimal(18,4)").cast("double")
@@ -2080,39 +2081,40 @@ object LakeOps {
       val root = Tables.scratchRoot("lake-mmview", dir)
       val base = root.resolve("base").toString
       val view = root.resolve("mmview").toString
-      // pin A/B-able (tag mvgate): the slice commit and the three-slice
-      // CDC merge share one orders scan (guide §5); unpersisted before
-      // the view read
-      val orders = graft.Tuning.pin(Tables.orders(s, dir).select(
+      // pinned: the slice commit and the three-slice CDC merge share
+      // one orders scan (guide §5); try/finally: an exception
+      // mid-gate must not leak the pin
+      val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), col("o_orderpriority").as("prio"),
-        col("o_totalprice")), "mvgate")
-      val k = col("o_orderkey")
-      Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
-        .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
-      Sources.commitStats(s, base, 1, Seq("o_orderkey"))
-      graft.streaming.MaterializedView.initAggFull(
-        s, base, "prio", "o_totalprice", view)
-      def drain(): Unit =
-        graft.streaming.MaterializedView.maintainAggFullQuery(
-          s, base, "prio", "o_totalprice", view, s"$root/ckpt-mm")
-          .awaitTermination()
-      drain()
-      // the same CDC shapes as q214: group moves, deletes (min
-      // carriers among them), a brand-new group
-      val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
-        .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
-      val del = orders.filter(pmod(k, lit(2)) === 0 &&
-          pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
-        .withColumn("op", lit("delete"))
-      val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
-        .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
-      Sources.mergeVersionDv(
-        s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
-      drain()
-      // DV-only commit: the X-MOVED group zeroes out and must LEAVE
-      Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
-      drain()
-      orders.unpersist()
+        col("o_totalprice")).persist()
+      try {
+        val k = col("o_orderkey")
+        Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
+          .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
+        Sources.commitStats(s, base, 1, Seq("o_orderkey"))
+        graft.streaming.MaterializedView.initAggFull(
+          s, base, "prio", "o_totalprice", view)
+        def drain(): Unit =
+          graft.streaming.MaterializedView.maintainAggFullQuery(
+            s, base, "prio", "o_totalprice", view, s"$root/ckpt-mm")
+            .awaitTermination()
+        drain()
+        // the same CDC shapes as q214: group moves, deletes (min
+        // carriers among them), a brand-new group
+        val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
+          .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
+        val del = orders.filter(pmod(k, lit(2)) === 0 &&
+            pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
+          .withColumn("op", lit("delete"))
+        val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
+          .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
+        Sources.mergeVersionDv(
+          s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
+        drain()
+        // DV-only commit: the X-MOVED group zeroes out and must LEAVE
+        Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
+        drain()
+      } finally { orders.unpersist(); () }
       Sources.readVersion(s, view)
         .select(col("prio"), col("n_rows"),
           col("sum_val").cast("decimal(18,4)").cast("double")
@@ -2156,37 +2158,38 @@ object LakeOps {
       val root = Tables.scratchRoot("lake-topk", dir)
       val base = root.resolve("base").toString
       val view = root.resolve("topkview").toString
-      // pin A/B-able (tag mvgate): the slice commit and the three-slice
-      // CDC merge share one orders scan (guide §5); unpersisted before
-      // the view read
-      val orders = graft.Tuning.pin(Tables.orders(s, dir).select(
+      // pinned: the slice commit and the three-slice CDC merge share
+      // one orders scan (guide §5); try/finally: an exception
+      // mid-gate must not leak the pin
+      val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), col("o_orderpriority").as("prio"),
-        col("o_totalprice")), "mvgate")
-      val k = col("o_orderkey")
-      Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
-        .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
-      Sources.commitStats(s, base, 1, Seq("o_orderkey"))
-      graft.streaming.MaterializedView.initTopK(
-        s, base, "prio", "o_totalprice", "o_orderkey", view)
-      def drain(): Unit =
-        graft.streaming.MaterializedView.maintainTopKQuery(
-          s, base, "prio", "o_totalprice", "o_orderkey", 3, view,
-          s"$root/ckpt-topk")
-          .awaitTermination()
-      drain()
-      val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
-        .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
-      val del = orders.filter(pmod(k, lit(2)) === 0 &&
-          pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
-        .withColumn("op", lit("delete"))
-      val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
-        .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
-      Sources.mergeVersionDv(
-        s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
-      drain()
-      Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
-      drain()
-      orders.unpersist()
+        col("o_totalprice")).persist()
+      try {
+        val k = col("o_orderkey")
+        Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
+          .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
+        Sources.commitStats(s, base, 1, Seq("o_orderkey"))
+        graft.streaming.MaterializedView.initTopK(
+          s, base, "prio", "o_totalprice", "o_orderkey", view)
+        def drain(): Unit =
+          graft.streaming.MaterializedView.maintainTopKQuery(
+            s, base, "prio", "o_totalprice", "o_orderkey", 3, view,
+            s"$root/ckpt-topk")
+            .awaitTermination()
+        drain()
+        val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
+          .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
+        val del = orders.filter(pmod(k, lit(2)) === 0 &&
+            pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
+          .withColumn("op", lit("delete"))
+        val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
+          .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
+        Sources.mergeVersionDv(
+          s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
+        drain()
+        Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
+        drain()
+      } finally { orders.unpersist(); () }
       Sources.readVersion(s, view)
         .select(col("prio"), col("rank"), col("o_orderkey"),
           col("val").cast("decimal(18,4)").cast("double").as("price"))
@@ -2234,36 +2237,37 @@ object LakeOps {
       val root = Tables.scratchRoot("lake-distinct", dir)
       val base = root.resolve("base").toString
       val view = root.resolve("dview").toString
-      // pin A/B-able (tag mvgate): the slice commit and the three-slice
-      // CDC merge share one orders scan (guide §5); unpersisted before
-      // the view read
-      val orders = graft.Tuning.pin(Tables.orders(s, dir).select(
+      // pinned: the slice commit and the three-slice CDC merge share
+      // one orders scan (guide §5); try/finally: an exception
+      // mid-gate must not leak the pin
+      val orders = Tables.orders(s, dir).select(
         col("o_orderkey"), col("o_orderpriority").as("prio"),
-        col("o_custkey")), "mvgate")
-      val k = col("o_orderkey")
-      Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
-        .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
-      Sources.commitStats(s, base, 1, Seq("o_orderkey"))
-      graft.streaming.MaterializedView.initDistinct(
-        s, base, "prio", "o_custkey", view)
-      def drain(): Unit =
-        graft.streaming.MaterializedView.maintainDistinctQuery(
-          s, base, "prio", "o_custkey", view, s"$root/ckpt-d")
-          .awaitTermination()
-      drain()
-      val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
-        .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
-      val del = orders.filter(pmod(k, lit(2)) === 0 &&
-          pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
-        .withColumn("op", lit("delete"))
-      val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
-        .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
-      Sources.mergeVersionDv(
-        s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
-      drain()
-      Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
-      drain()
-      orders.unpersist()
+        col("o_custkey")).persist()
+      try {
+        val k = col("o_orderkey")
+        Sources.commitVersion(orders.filter(pmod(k, lit(2)) === 0)
+          .repartitionByRange(4, k).sortWithinPartitions("o_orderkey"), base)
+        Sources.commitStats(s, base, 1, Seq("o_orderkey"))
+        graft.streaming.MaterializedView.initDistinct(
+          s, base, "prio", "o_custkey", view)
+        def drain(): Unit =
+          graft.streaming.MaterializedView.maintainDistinctQuery(
+            s, base, "prio", "o_custkey", view, s"$root/ckpt-d")
+            .awaitTermination()
+        drain()
+        val upd = orders.filter(pmod(k, lit(2)) === 0 && pmod(k, lit(7)) === 0)
+          .withColumn("prio", lit("X-MOVED")).withColumn("op", lit("upsert"))
+        val del = orders.filter(pmod(k, lit(2)) === 0 &&
+            pmod(k, lit(11)) === 0 && pmod(k, lit(7)) =!= 0)
+          .withColumn("op", lit("delete"))
+        val ins = orders.filter(pmod(k, lit(2)) === 1 && pmod(k, lit(9)) === 0)
+          .withColumn("prio", lit("Z-NEW")).withColumn("op", lit("upsert"))
+        Sources.mergeVersionDv(
+          s, base, upd.unionByName(del).unionByName(ins), "o_orderkey")
+        drain()
+        Sources.deleteWhereDv(s, base, col("prio") === lit("X-MOVED"))
+        drain()
+      } finally { orders.unpersist(); () }
       graft.streaming.MaterializedView.distinctCounts(s, view, "prio")
         .select(col("prio"), col("n_distinct"))
         .orderBy("prio")

@@ -138,9 +138,9 @@ object GraftRules {
 
 /** `SparkSessionExtensions` entry point — the builder-time form of
   * [[GraftRules.install]] plus SQL function registration, for sessions
-  * constructed with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * constructed with `.withExtensions(new GraftExtensions)` on their
+  * builder or `spark.sql.extensions=graft.plans.GraftExtensions`
+  * ([[graft.GraftSession.build]] sets the latter).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {

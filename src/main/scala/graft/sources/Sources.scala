@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Tuning.withJobDescription
+
 /** Source/sink surface beyond the fixture parquet readers in
   * [[graft.Tables]] (SURVEY.md §2.3 scans/sinks rows).
   *
@@ -24,22 +26,6 @@ object Sources {
 
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** JDBC scan with partitioned parallel reads — the scale-correct form
-    * of the reference's single-connection `SELECT *` (O1,
-    * StreamGeneratorThread.java:53-58). Untested here (no database in
-    * the container) but kept to document the intended surface. */
-  def readJdbc(spark: SparkSession, url: String, table: String,
-      partitionColumn: String, lowerBound: Long, upperBound: Long,
-      numPartitions: Int): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lowerBound)
-      .option("upperBound", upperBound)
-      .option("numPartitions", numPartitions)
-      .load()
 
   /** Schema-evolution read: union the schemas of all parquet footers
     * under `path` (columns added over time arrive as nulls in old
@@ -411,21 +397,6 @@ object Sources {
   /** Latest committed version of `table`, or 0 if none. */
   def latestVersion(table: String): Int = versionsOf(table).lastOption.getOrElse(0)
 
-  /** Commit `df` to `table` as a new version. `overwrite = false`
-    * appends to the previous version's file set; `true` replaces it.
-    * Returns the published version number.
-    *
-    * Optimistic concurrency: the data batch is written ONCE (immutable,
-    * uniquely named), then the manifest publish claims the next version
-    * number atomically ([[publishManifest]]); if a concurrent committer
-    * claimed it first, the commit RE-READS the new latest file set and
-    * retries with the next number — append commits commute (each
-    * retry re-carries the winner's files, so no commit is ever lost)
-    * and an overwrite retry still means "replace whatever is latest".
-    * This is the contended-commit protocol every shared table format
-    * needs (Delta/Iceberg do the same dance against the log store);
-    * a bounded attempt count turns pathological contention into a loud
-    * failure instead of livelock. */
   /** On a lineage table, a caller batch must never supply the reserved
     * `_row_id` column: the read-side coalesce PREFERS a materialized
     * column, so forged or duplicated ids would silently corrupt row
@@ -441,6 +412,21 @@ object Sources {
         "lineage identity column — ids are table-assigned, never " +
         "caller-supplied")
 
+  /** Commit `df` to `table` as a new version. `overwrite = false`
+    * appends to the previous version's file set; `true` replaces it.
+    * Returns the published version number.
+    *
+    * Optimistic concurrency: the data batch is written ONCE (immutable,
+    * uniquely named), then the manifest publish claims the next version
+    * number atomically ([[publishManifest]]); if a concurrent committer
+    * claimed it first, the commit RE-READS the new latest file set and
+    * retries with the next number — append commits commute (each
+    * retry re-carries the winner's files, so no commit is ever lost)
+    * and an overwrite retry still means "replace whatever is latest".
+    * This is the contended-commit protocol every shared table format
+    * needs (Delta/Iceberg do the same dance against the log store);
+    * a bounded attempt count turns pathological contention into a loud
+    * failure instead of livelock. */
   def commitVersion(df: DataFrame, table: String,
       overwrite: Boolean = false): Int = {
     requireNoForgedRowIds(table, df.schema, "commitVersion")
@@ -1291,6 +1277,16 @@ object Sources {
       .select(cols.map(col).toSeq: _*)
   }
 
+  /** Per-call memo type for [[eqRetiredPositions]]: (entry key parquet
+    * path, normalized data-file path) → retired positions. Sound to
+    * reuse across versions of one planning pass because both sides are
+    * immutable bytes — the CDF planner probes the same (entry, file)
+    * pair once per drained RANGE instead of once per version. */
+  private[sources] type EqProbeMemo =
+    scala.collection.mutable.Map[(String, String), java.util.BitSet]
+  private[sources] def newEqProbeMemo(): EqProbeMemo =
+    scala.collection.mutable.Map.empty
+
   /** Physical row positions retired by eq `entries` within exactly
     * `files` — the POSITION form of [[eqRetired]], for consumers whose
     * unit is a (file, bitset) partition (the streaming CDF). One
@@ -1302,28 +1298,6 @@ object Sources {
     * column are skipped for that entry — the declared NULL-key-matches-
     * nothing semantic, mirroring [[eqFilterEntries]]. Keys of the
     * returned map are manifest paths. */
-  /** Run `body` under a job-description label, RESTORING the caller's
-    * label after — setJobDescription(null) would clear a caller-set
-    * phase label, so every job after the first internal commit would
-    * profile under "?" instead of the caller's phase. */
-  private def withJobDescription[T](spark: SparkSession, desc: String)
-      (body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
-  }
-
-  /** Per-call memo type for [[eqRetiredPositions]]: (entry key parquet
-    * path, normalized data-file path) → retired positions. Sound to
-    * reuse across versions of one planning pass because both sides are
-    * immutable bytes — the CDF planner probes the same (entry, file)
-    * pair once per drained RANGE instead of once per version. */
-  private[sources] type EqProbeMemo =
-    scala.collection.mutable.Map[(String, String), java.util.BitSet]
-  private[sources] def newEqProbeMemo(): EqProbeMemo =
-    scala.collection.mutable.Map.empty
-
   private[sources] def eqRetiredPositions(spark: SparkSession,
       table: String, files: Seq[String],
       entries: Seq[EqEntry],
@@ -1739,31 +1713,6 @@ object Sources {
       .reduce(_ unionByName _)
   }
 
-  /** Per-file min/max column statistics for a version, persisted as a
-    * `v<N>.stats` sidecar next to the manifest — the data-skipping half
-    * of the minimal table format (what Delta/Iceberg keep per file in
-    * the commit log). Stats are harvested in ONE Spark job over the
-    * version's files (`groupBy(input_file_name())`), at commit time —
-    * when the data is already hot — never at read time.
-    *
-    * [[readVersionPruned]] then answers a range predicate by dropping
-    * every file whose [min, max] interval misses the query range BEFORE
-    * `spark.read` ever sees it. Parquet row-group stats do this within
-    * a file the scan already opened; manifest stats skip the file open
-    * (and at cluster scale, the task) entirely. Composed with
-    * [[writeRangeLayout]] / [[writeZOrderLayout]] — which make per-file
-    * intervals disjoint/tight — a selective range query touches O(1)
-    * files out of thousands; on unclustered data intervals all overlap
-    * and pruning honestly degrades to reading everything (kept-file
-    * count is returned so callers can SEE the clustering payoff).
-    * Files without a stats row (e.g. committed before stats existed)
-    * are always kept — pruning is an optimization, never a filter.
-    *
-    * Values are stored as decimal strings and compared as BigDecimal:
-    * exact for every integer/decimal clustering key (the only sane
-    * Z-order/range keys; float keys would inherit float comparison
-    * anyway).
-    */
   /** Mergeable per-file Bloom builder for the FUSED sidecar pass: the
     * same `spark.util.sketch.BloomFilter` commitBlooms builds, run as
     * an Aggregator inside commitStats' per-file groupBy so ONE scan of
@@ -1815,6 +1764,31 @@ object Sources {
     else if (bloomCols.nonEmpty)
       commitBlooms(spark, table, version, bloomCols, carryFrom = carryFrom)
 
+  /** Per-file min/max column statistics for a version, persisted as a
+    * `v<N>.stats` sidecar next to the manifest — the data-skipping half
+    * of the minimal table format (what Delta/Iceberg keep per file in
+    * the commit log). Stats are harvested in ONE Spark job over the
+    * version's files (`groupBy(input_file_name())`), at commit time —
+    * when the data is already hot — never at read time.
+    *
+    * [[readVersionPruned]] then answers a range predicate by dropping
+    * every file whose [min, max] interval misses the query range BEFORE
+    * `spark.read` ever sees it. Parquet row-group stats do this within
+    * a file the scan already opened; manifest stats skip the file open
+    * (and at cluster scale, the task) entirely. Composed with
+    * [[writeRangeLayout]] / [[writeZOrderLayout]] — which make per-file
+    * intervals disjoint/tight — a selective range query touches O(1)
+    * files out of thousands; on unclustered data intervals all overlap
+    * and pruning honestly degrades to reading everything (kept-file
+    * count is returned so callers can SEE the clustering payoff).
+    * Files without a stats row (e.g. committed before stats existed)
+    * are always kept — pruning is an optimization, never a filter.
+    *
+    * Values are stored as decimal strings and compared as BigDecimal:
+    * exact for every integer/decimal clustering key (the only sane
+    * Z-order/range keys; float keys would inherit float comparison
+    * anyway).
+    */
   def commitStats(spark: SparkSession, table: String, version: Int,
       cols: Seq[String], carryFrom: Int = -1,
       bloomCols: Seq[String] = Nil, bloomExpectedPerFile: Long = 100000L,
@@ -2944,29 +2918,29 @@ object Sources {
       s"unknown partition transform kind $other")
   }
 
-  /** Write `df` into `batchPath` honoring the table's declared identity
-    * partitioning — the ONE physical-batch writer every commit and
-    * rewrite path routes through, so a partitioned table can never
-    * accumulate mixed flat/hive batches (which would make partition
-    * inference throw on read). */
+  private val RowsPerFile = 4000000L
+
   /** Data-adaptive file count for a batch about to be written: one
-    * file per `spark.graft.write.rowsPerFile` rows (default 4M — a few
-    * hundred MB at typical row widths), capped by the session's
-    * parallelism. Without it every incremental merge writes one tiny
-    * file per shuffle/cache partition — file count scaling with CORE
-    * COUNT instead of data (guide §6): the store tables snowballed to
+    * file per [[RowsPerFile]] rows (a few hundred MB at typical row
+    * widths), capped by the session's parallelism. Without it every
+    * incremental merge writes one tiny file per shuffle/cache
+    * partition — file count scaling with CORE COUNT instead of data
+    * (guide §6): the store tables snowballed to
     * 60+ files over a lifecycle, pushing every subsequent read/list/
     * stats pass over the parallel-listing threshold. `coalesce` is
     * narrow (no extra shuffle) and only merges the final post-shuffle
     * stage, so map-side parallelism is untouched. */
   private def batchFileCount(spark: SparkSession, rows: Long): Int = {
-    val per = spark.conf.getOption("spark.graft.write.rowsPerFile")
-      .map(_.toLong).filter(_ > 0).getOrElse(4000000L)
-    val n = math.max(1L, (rows + per - 1) / per)
+    val n = math.max(1L, (rows + RowsPerFile - 1) / RowsPerFile)
     math.min(n, math.max(1, spark.sparkContext.defaultParallelism).toLong)
       .toInt
   }
 
+  /** Write `df` into `batchPath` honoring the table's declared identity
+    * partitioning — the ONE physical-batch writer every commit and
+    * rewrite path routes through, so a partitioned table can never
+    * accumulate mixed flat/hive batches (which would make partition
+    * inference throw on read). */
   private def writePartitionedBatch(df: DataFrame, table: String,
       batchPath: String): Unit = {
     // job label only (guide §1.5) — identifies batch-write jobs in the

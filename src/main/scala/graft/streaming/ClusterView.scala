@@ -107,8 +107,8 @@ object ClusterView {
     val hw = FeedProbe.appliedHw(spark, viewTable, HwKey)
     // only the pair section of the store feeds the graph; the store's
     // signature/band/ledger keys are not edges
-    val fresh = graft.Tuning.pin(batch
-      .filter(col("_commit_version").cast("long") > hw), "chainfresh")
+    val fresh = batch
+      .filter(col("_commit_version").cast("long") > hw).persist()
     try {
       // one driver action ([[FeedProbe.probeSection]], the contract
       // shared with VerdictView): emptiness, high water, and the
@@ -140,8 +140,8 @@ object ClusterView {
       // assembly's concurrent stages (Tuning.pinEager scaladoc)
       val edgeDeltaP = graft.Tuning.pinEager(edgeDelta, "chainfresh")
       try applyEdgeDelta(spark, storeTable, viewTable, edgeDeltaP, newHw)
-      finally { graft.Tuning.unpin(edgeDeltaP) }
-    } finally { graft.Tuning.unpin(fresh) }
+      finally { edgeDeltaP.unpersist() }
+    } finally { fresh.unpersist() }
   }
 
   /** A drained range with no pair changes (pure signature/band churn)
@@ -213,13 +213,13 @@ object ClusterView {
       // write, batch write) — without the pin each one re-runs the
       // view-assignment scan, the subgraph semi-joins, and (past the
       // driver fast path's edge bound) the whole component re-solve
-      val merged = graft.Tuning.pin(
-        rows.unionByName(ledger).sortWithinPartitions("k"), "chainmerged")
+      val merged =
+        rows.unionByName(ledger).sortWithinPartitions("k").persist()
       try {
         preMergeCrashHook()
         Sources.mergeVersionEq(spark, viewTable, merged, Seq("k"))
         ()
-      } finally { graft.Tuning.unpin(merged) }
-    } finally { graft.Tuning.unpin(members) }
+      } finally { merged.unpersist() }
+    } finally { members.unpersist() }
   }
 }

@@ -115,11 +115,11 @@ object DedupStore {
     // pin the replay-filtered range once: everything downstream (the
     // emptiness probe, the high-water max, the dup guard, the netting
     // window) reads this cache instead of re-scanning the CDF parquet
-    val fresh = graft.Tuning.pin(batch
+    val fresh = batch
       .filter(col("_commit_version").cast("long") > hw)
-      .filter(col("text").isNotNull), "chainfresh")
+      .filter(col("text").isNotNull).persist()
     try applyFresh(spark, storeTable, fresh, digestOf)
-    finally { graft.Tuning.unpin(fresh) }
+    finally { fresh.unpersist() }
   }
 
   private def applyFresh(spark: SparkSession, storeTable: String,
@@ -181,14 +181,14 @@ object DedupStore {
       // write, upsert probe, batch write) — without the pin each action
       // re-runs the touched-digest membership re-read and the survivor
       // re-aggregation
-      val merged = graft.Tuning.pin(
+      val merged =
         memberRows.unionByName(survRows).unionByName(ledger)
-          .sortWithinPartitions("k"), "chainmerged")
+          .sortWithinPartitions("k").persist()
       try {
         preMergeCrashHook()
         Sources.mergeVersionEq(spark, storeTable, merged, Seq("k"))
         ()
-      } finally { graft.Tuning.unpin(merged) }
-    } finally { graft.Tuning.unpin(net) }
+      } finally { merged.unpersist() }
+    } finally { net.unpersist() }
   }
 }

@@ -133,17 +133,17 @@ object MaterializedView {
               val refreshed = affected.join(upserted, Seq(joinKey), "left")
               // pinned: the emptiness probe and the merge's actions
               // would otherwise each re-run the view-side join
-              val changes = graft.Tuning.pin(refreshed
+              val changes = refreshed
                 .withColumn("op",
                   when(col("__up").isNull, "delete").otherwise("upsert"))
                 .select((view.columns.map(col) :+ col("op"))
-                  .toIndexedSeq: _*), "mvchanges")
+                  .toIndexedSeq: _*).persist()
               try {
                 if (changes.agg(count(lit(1))).head.getLong(0) > 0L) {
                   Sources.mergeVersion(spark, viewTable, changes, factKey)
                   ()
                 }
-              } finally { graft.Tuning.unpin(changes) }
+              } finally { changes.unpersist() }
             }
           }
         }
@@ -315,19 +315,18 @@ object MaterializedView {
               // entirely) must leave the view
               val slots = touched.crossJoin(broadcast(
                 spark.range(1, k + 1).select(col("id").as("rank"))))
-              // pinned (tag mvchanges): mergeVersion's key probe and
-              // rewrite would otherwise re-run the head re-rank per
-              // action
-              val changes = graft.Tuning.pin(slots
+              // pinned: mergeVersion's key probe and rewrite would
+              // otherwise re-run the head re-rank per action
+              val changes = slots
                 .join(ranked, Seq(groupCol, "rank"), "left")
                 .select(
                   concat(col(groupCol).cast("string"), lit(":"),
                     col("rank")).as("gk"),
                   col(groupCol), col("rank"), col(keyCol), col("val"),
                   when(col("__up").isNull, "delete").otherwise("upsert")
-                    .as("op")), "mvchanges")
+                    .as("op")).persist()
               try Sources.mergeVersion(spark, viewTable, changes, "gk")
-              finally { graft.Tuning.unpin(changes) }
+              finally { changes.unpersist() }
               ()
             }
           }
@@ -450,15 +449,15 @@ object MaterializedView {
                     (coalesce(col("curg"), lit(0L)) + col("dd")).as("n"))
                 val pairRows = pairs.select(col("gk"), col(groupCol),
                   col("n"))
-                val changes = graft.Tuning.pin(pairRows
+                val changes = pairRows
                   .unionByName(groupRows)
                   .withColumn("op",
-                    when(col("n") > 0, "upsert").otherwise("delete")),
-                  "mvchanges")
+                    when(col("n") > 0, "upsert").otherwise("delete"))
+                  .persist()
                 try Sources.mergeVersion(spark, viewTable, changes, "gk")
-                finally { graft.Tuning.unpin(changes) }
+                finally { changes.unpersist() }
                 ()
-              } finally { graft.Tuning.unpin(pairs) }
+              } finally { pairs.unpersist() }
             }
           }
         }
@@ -546,7 +545,7 @@ object MaterializedView {
                 .join(delta.select(groupCol), Seq(groupCol), "left_semi")
                 .groupBy(groupCol)
                 .agg(min(dec).as("min_val"), max(dec).as("max_val"))
-              val changes = graft.Tuning.pin(delta
+              val changes = delta
                 .join(cur, Seq(groupCol), "left")
                 .select(col(groupCol),
                   (coalesce(col("n_rows"), lit(0L)) + col("dn"))
@@ -557,10 +556,10 @@ object MaterializedView {
                     .as("sum_val"))
                 .join(headMm, Seq(groupCol), "left")
                 .withColumn("op",
-                  when(col("n_rows") > 0, "upsert").otherwise("delete")),
-                "mvchanges")
+                  when(col("n_rows") > 0, "upsert").otherwise("delete"))
+                .persist()
               try Sources.mergeVersion(spark, viewTable, changes, groupCol)
-              finally { graft.Tuning.unpin(changes) }
+              finally { changes.unpersist() }
               ()
             }
           }

@@ -125,12 +125,12 @@ object NearDupStore {
     val hw = if (hwRow.isNullAt(0)) 0L else hwRow.getLong(0)
     // null-text inserts carry no indexable content; deletes are kept
     // regardless (the strip works off the stored signature, not text)
-    val fresh = graft.Tuning.pin(batch
+    val fresh = batch
       .filter(col("_commit_version").cast("long") > hw)
-      .filter(col("_change_type") =!= "insert" || col("text").isNotNull),
-      "chainfresh")
+      .filter(col("_change_type") =!= "insert" || col("text").isNotNull)
+      .persist()
     try applyFresh(spark, storeTable, fresh)
-    finally { graft.Tuning.unpin(fresh) }
+    finally { fresh.unpersist() }
   }
 
   private def applyFresh(spark: SparkSession, storeTable: String,
@@ -159,7 +159,7 @@ object NearDupStore {
         when(col("_change_type") === "insert", "upsert")
           .otherwise("delete").as("op")), "chainfresh")
     try applyNet(spark, storeTable, net, newHw)
-    finally { graft.Tuning.unpin(net) }
+    finally { net.unpersist() }
   }
 
   private def applyNet(spark: SparkSession, storeTable: String,
@@ -281,16 +281,16 @@ object NearDupStore {
           // write, the batch write) — without the pin each action
           // re-runs the whole 6-branch union and five store-section
           // scans (measured: the recomputes dominated the drain)
-          val merged = graft.Tuning.pin(oldBandDeletes
+          val merged = oldBandDeletes
             .unionByName(oldPairDeletes).unionByName(gRows)
             .unionByName(newBandRows).unionByName(pairUpserts)
             .unionByName(ledger)
-            .sortWithinPartitions("k"), "chainmerged")
+            .sortWithinPartitions("k").persist()
           try {
             preMergeCrashHook()
             Sources.mergeVersionEq(spark, storeTable, merged, Seq("k"))
             ()
-          } finally { graft.Tuning.unpin(merged) }
+          } finally { merged.unpersist() }
     } finally { newSigs.unpersist(); () }
   }
 

@@ -91,8 +91,8 @@ object VerdictView {
       clusterTable: String, verdictTable: String,
       batch: DataFrame): Unit = {
     val hw = FeedProbe.appliedHw(spark, verdictTable, HwKey)
-    val fresh = graft.Tuning.pin(batch
-      .filter(col("_commit_version").cast("long") > hw), "chainfresh")
+    val fresh = batch
+      .filter(col("_commit_version").cast("long") > hw).persist()
     try {
       // one driver action ([[FeedProbe.probeSection]], the contract
       // shared with ClusterView): emptiness, high water, and the
@@ -150,15 +150,15 @@ object VerdictView {
         // pinned: mergeVersionEq consumes its input per action (key
         // write, batch write) — without the pin each one re-runs the
         // stale anti-join and the view scan behind it
-        val merged = graft.Tuning.pin(fresh2.unionByName(stale)
+        val merged = fresh2.unionByName(stale)
           .unionByName(ledger)
-          .sortWithinPartitions("k"), "chainmerged")
+          .sortWithinPartitions("k").persist()
         try {
           preMergeCrashHook()
           Sources.mergeVersionEq(spark, verdictTable, merged, Seq("k"))
           ()
-        } finally { graft.Tuning.unpin(merged) }
-      } finally { graft.Tuning.unpin(fresh2) }
-    } finally { graft.Tuning.unpin(fresh) }
+        } finally { merged.unpersist() }
+      } finally { fresh2.unpersist() }
+    } finally { fresh.unpersist() }
   }
 }

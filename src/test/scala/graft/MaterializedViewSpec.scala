@@ -368,4 +368,15 @@ class MaterializedViewSpec extends SparkTestBase {
     drain()
     assert(Sources.latestVersion(view) === vPre)
   }
+
+  test("the four MV lifecycle gates release their orders pin") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    Seq("q214_incremental_agg_mv", "q247_mv_minmax", "q249_mv_topk",
+        "q250_mv_distinct").foreach { name =>
+      SparkEntry.queries(name)(spark, sf)
+      assert(cache.isEmpty, s"$name left a cached plan behind")
+    }
+  }
 }

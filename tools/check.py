@@ -21,7 +21,8 @@ if not skip_verify:
     sel = " " + " ".join(only) if only else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}{sel}'],
-        cwd="/root/repo", capture_output=True, text=True)
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True)
     tail = "\n".join((r.stdout + r.stderr).splitlines()[-25:])
     if r.returncode != 0:
         print(tail); sys.exit(1)
