@@ -30,8 +30,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    map-side under the pinned model, and the net change lands on the
   *    index through [[Sources.mergeVersion]]'s file-granular keyed
   *    merge — re-embedded vectors re-encode, deleted vectors leave the
-  *    index, untouched index files carry forward. A query-id-keyed
-  *    batch marker absorbs foreachBatch replays.
+  *    index, untouched index files carry forward. Each merge records
+  *    the highest applied source version in the index's `#txn`
+  *    ledger, and every batch first drops the versions the ledger
+  *    covers, so replays and fresh checkpoints apply nothing twice.
   *
   * 100 TB shape: per commit the work is O(changed vectors) encode +
   * O(affected index files) merge — the corpus is never re-read, the
@@ -127,35 +129,16 @@ object AnnIndex {
       }: _*).getField("k")
     }: _*)
 
-  /** Map-side encode of `(vec_id, embedding)` rows to index rows
-    * `(b_id, cell, codes)` under the pinned model — embarrassingly
-    * parallel, the only per-vector work maintenance ever does. */
-  /** The index shares its `b_id` keyspace with the net-maintenance
-    * ledger, which owns the NEGATIVE ids (the [[LedgerKey]] sentinel) —
-    * a negative source vec_id would be misparsed as a ledger row
-    * (skewing the applied-version high-water mark) or collide with a
-    * sentinel outright. Fail loudly, executor-side, at encode/retire
-    * time rather than corrupting silently. */
-  /** The net-maintenance ledger's single reserved key: one sentinel row
-    * far outside the valid (non-negative, [[guardedVecId]]-enforced)
-    * data keyspace; `codes(0)` carries the highest applied source
-    * version, `cell` stays -1 so probed-cell joins never see it. */
-  private[graft] val LedgerKey = -999999L
-
   /** TEST ONLY — crash injection for ExactlyOnceFaultSpec, fired just
     * before the net maintainer's single atomic merge. No-op in
     * production. */
   private[graft] var preMergeCrashHook: () => Unit = () => ()
 
-  private def guardedVecId: Column =
-    when(col("vec_id") < 0L, raise_error(concat(
-      lit("ANN index maintenance requires vec_id >= 0 (the in-band " +
-        "ledger owns the negative keyspace); got "),
-      col("vec_id").cast("string"))))
-      .otherwise(col("vec_id"))
-
+  /** Map-side encode of `(vec_id, embedding)` rows to index rows
+    * `(b_id, cell, codes)` under the pinned model — embarrassingly
+    * parallel, the only per-vector work maintenance ever does. */
   def encode(df: DataFrame, m: Model): DataFrame =
-    df.select(guardedVecId.as("b_id"), nearestCellCol(m).as("cell"),
+    df.select(col("vec_id").as("b_id"), nearestCellCol(m).as("cell"),
       codesCol(m).as("codes"))
 
   /** Create the index: train the model from the source table's current
@@ -181,10 +164,8 @@ object AnnIndex {
 
   /** Tail the SOURCE table's change feed and keep the index current:
     * last-change-wins per vector, upserts encoded under the pinned
-    * model, net change keyed-merged into the index table. Effectively
-    * once via the query-id-keyed batch ledger (replicateTable's
-    * device); the residual replay window re-applies an idempotent
-    * keyed merge. */
+    * model, net change keyed-merged into the index table. Exactly once
+    * via the index's `#txn` ledger. */
   def maintainQuery(spark: SparkSession, srcTable: String,
       indexTable: String, checkpoint: String): StreamingQuery = {
     val model = loadModel(indexTable)
@@ -193,38 +174,36 @@ object AnnIndex {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = java.nio.file.Paths.get(indexTable, "_annindex",
-          graft.streaming.StreamingPipeline.checkpointQueryId(checkpoint),
-          s"batch-$batchId.done")
-        if (!java.nio.file.Files.exists(marker)) {
-          val w = Window.partitionBy("vec_id")
-            .orderBy(col("_commit_version").desc,
-              when(col("_change_type") === "insert", 1).otherwise(0).desc)
-          val last = batch
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1)
-          val ups = encode(
-            last.filter(col("_change_type") === "insert"), model)
-            .withColumn("op", lit("upsert"))
-          val dels = last.filter(col("_change_type") =!= "insert")
-            .select(guardedVecId.as("b_id"),
-              lit(null).cast("long").as("cell"),
-              lit(null).cast("array<int>").as("codes"),
-              lit("delete").as("op"))
-          // UNPINNED (r11 A/B, verdict item 1): the emptiness count and
-          // the merge's key probe both PRUNE the codes column away, so
-          // only the single rewrite pass ever evaluates the PQ encode —
-          // pinning forced a full-column cache build that measured
-          // 13-17x MORE task time than the recompute (q203 49 vs 3.4
-          // task-seconds) and one extra job
-          val changes = ups.unionByName(dels)
-          if (changes.agg(count(lit(1))).head.getLong(0) > 0L) {
-            Sources.mergeVersion(spark, indexTable, changes, "b_id")
-            ()
-          }
-          java.nio.file.Files.createDirectories(marker.getParent)
-          java.nio.file.Files.write(marker, Array.emptyByteArray)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("ann_index", srcTable)
+        val w = Window.partitionBy("vec_id")
+          .orderBy(col("_commit_version").desc,
+            when(col("_change_type") === "insert", 1).otherwise(0).desc)
+        val last = graft.streaming.FeedProbe
+          .unapplied(batch, indexTable, consumer)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1)
+        val ups = encode(
+          last.filter(col("_change_type") === "insert"), model)
+          .withColumn("op", lit("upsert"))
+        val dels = last.filter(col("_change_type") =!= "insert")
+          .select(col("vec_id").as("b_id"),
+            lit(null).cast("long").as("cell"),
+            lit(null).cast("array<int>").as("codes"),
+            lit("delete").as("op"))
+        // UNPINNED (r11 A/B, verdict item 1): the emptiness count and
+        // the merge's key probe both PRUNE the codes column away, so
+        // only the single rewrite pass ever evaluates the PQ encode —
+        // pinning forced a full-column cache build that measured
+        // 13-17x MORE task time than the recompute (q203 49 vs 3.4
+        // task-seconds) and one extra job. The count over `last` is
+        // the count of ups + dels; its max is the ledger position.
+        val changes = ups.unionByName(dels)
+        val pr = last.agg(count(lit(1)),
+          max(col("_commit_version").cast("long"))).head
+        if (pr.getLong(0) > 0L) {
+          Sources.mergeVersion(spark, indexTable, changes, "b_id",
+            txn = Some(consumer -> pr.getLong(1)))
           ()
         }
       }
@@ -236,16 +215,16 @@ object AnnIndex {
     * rewrite-transparent sibling: each micro-batch applies the net
     * endpoint diff of the not-yet-applied version range, so a source
     * compaction/purge drain re-encodes NOTHING (an empty net lands
-    * only a ledger bookmark), where the file-granular feed would
-    * re-encode the whole rewritten byte volume. Unlike the text
-    * index's three tables, the ANN index is ONE table — the range's
-    * upserts, deletes, and its single in-band ledger sentinel
-    * ([[LedgerKey]], `cell = -1` so no probed-cell join ever sees it,
-    * `codes(0)` = the applied high-water version) ride ONE atomic
-    * keyed merge, so there is no partial-application crash window and
-    * no intent journal: a crashed range replays whole
-    * (ExactlyOnceFaultSpec injects exactly that crash), an applied
-    * range is ledger-skipped. Use ONE maintainer per index. */
+    * only a manifest-only ledger bookmark), where the file-granular
+    * feed would re-encode the whole rewritten byte volume. Unlike the
+    * text index's three tables, the ANN index is ONE table — the
+    * range's upserts and deletes ride ONE atomic keyed merge whose
+    * manifest records the range's end in the `#txn` ledger, so there
+    * is no partial-application crash window and no intent journal: a
+    * crashed range replays whole (ExactlyOnceFaultSpec injects exactly
+    * that crash), an applied range is ledger-skipped. Use ONE
+    * maintainer per index (this or [[maintainQuery]]) — they share one
+    * ledger entry. */
   def maintainNetQuery(spark: SparkSession, srcTable: String,
       indexTable: String, checkpoint: String): StreamingQuery = {
     val model = loadModel(indexTable)
@@ -261,17 +240,8 @@ object AnnIndex {
           .head
         if (!hiRow.isNullAt(0)) {
           val hi = hiRow.getLong(0)
-          // hw from the compacted sentinel; indexes written by the
-          // per-version sentinel format (b_id = -(1000000+v)) read
-          // through the otherwise branch, so a format migration never
-          // silently re-nets the whole source history from version 0
-          val hwRows = Sources.readVersion(spark, indexTable)
-            .filter(col("b_id") < 0L)
-            .select(when(col("b_id") === LedgerKey,
-              element_at(col("codes"), 1).cast("long"))
-              .otherwise(-col("b_id") - 1000000L).as("v"))
-            .collect().map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-          val from = if (hwRows.isEmpty) 0L else hwRows.max
+          val consumer = Sources.txnConsumer("ann_index", srcTable)
+          val from = math.max(0L, Sources.appliedVersion(indexTable, consumer))
           if (hi > from) {
             val net = graft.sources.RowIds.readChangesLineage(spark,
                 srcTable, from.toInt, hi.toInt)
@@ -284,35 +254,27 @@ object AnnIndex {
               // drop the old key, not just upsert the new one
               val dels = net.filter(col("_change_type")
                   .isin("delete", "update_preimage"))
-                .select(guardedVecId.as("b_id"),
+                .select(col("vec_id").as("b_id"),
                   lit(null).cast("long").as("cell"),
                   lit(null).cast("array<int>").as("codes"),
                   lit("delete").as("op"))
-              val s2 = spark
-              import s2.implicits._
-              // ONE compacted ledger sentinel, upserted in place —
-              // ranges apply strictly in order, so the high-water mark
-              // carries the full replay guarantee without growing a
-              // sentinel per version forever (the TextIndex ledger's
-              // rule); cell stays -1 so no probed-cell join ever sees
-              // it, and the hw rides codes(0)
-              val ledger = Seq((LedgerKey, -1L))
-                .toDF("b_id", "cell")
-                .withColumn("codes",
-                  array(lit(hi.toInt)).cast("array<int>"))
-                .withColumn("op", lit("upsert"))
               // UNPINNED (r11 A/B, same pathology as maintainQuery):
               // the key probe prunes the codes column, so only the
               // rewrite evaluates the PQ encode — and the net range is
               // already pinned above, so nothing upstream re-reads
               val changes = ups.unionByName(dels)
-                .unionByName(ledger.select(
-                  col("b_id"), col("cell"), col("codes"), col("op")))
+              val txn = Some(consumer -> hi)
               // TEST-ONLY crash injection (ExactlyOnceFaultSpec): the
-              // window before the single atomic merge — a crash here
+              // window before the single atomic commit — a crash here
               // must replay the whole range on the next drain
               preMergeCrashHook()
-              Sources.mergeVersion(spark, indexTable, changes, "b_id")
+              // the count materializes the pinned range; a range that
+              // nets to nothing (a pure rewrite) only bookmarks
+              if (net.agg(count(lit(1))).head.getLong(0) == 0L)
+                Sources.commitVersionFiles(indexTable, Nil, txn = txn)
+              else
+                Sources.mergeVersion(spark, indexTable, changes, "b_id",
+                  txn = txn)
               ()
             } finally { net.unpersist(); () }
           }

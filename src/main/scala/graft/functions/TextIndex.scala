@@ -28,17 +28,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (only documents with ≥1 token, the BM25 length-normalization
   *    denominator population). Same eq-merge maintenance.
   *  - `termstats` `(tk, term, cnt)` — corpus-wide occurrence totals
-  *    per term, maintained by ADDITIVE keyed merges (the
-  *    [[graft.streaming.StreamingPipeline.maintainDsirQuery]] device):
-  *    inserts add their token counts, deletes subtract. Additive
-  *    arithmetic cannot tolerate replays, so ONE IN-BAND LEDGER row
-  *    (`tk = "v:hw"`, `term` NULL, `cnt` = highest applied source
-  *    version) rides the SAME atomic commit as each delta — versions
-  *    apply strictly in order, so a single high-water mark carries the
-  *    full replay guarantee without growing a row per version forever;
-  *    the merge key is the CONSTRUCTED `tk` (`"t:" + term` for term
-  *    rows), so the ledger key can never collide with token-derived
-  *    keys whatever bytes the corpus contains.
+  *    per term (`tk = "t:" + term`), maintained by ADDITIVE keyed
+  *    merges (the [[graft.streaming.StreamingPipeline.maintainDsirQuery]]
+  *    device): inserts add their token counts, deletes subtract.
+  *    Additive arithmetic cannot tolerate replays, so each termstats
+  *    commit records the highest applied source version in the
+  *    table's `#txn` ledger — the same atomic manifest publish as the
+  *    delta; versions apply strictly in order, so one position per
+  *    consumer carries the full replay guarantee.
   *
   * Crash/replay contract (spec-pinned in TextIndexSpec): postings and
   * docstore merges are IDEMPOTENT by construction — an eq merge
@@ -110,8 +107,8 @@ object TextIndex {
     * current. Per micro-batch: versions already in the termstats
     * ledger are dropped (replay filter); each remaining document's
     * outcome is its LAST change; postings/docstore land as O(keys)
-    * eq merges; the signed term-count delta + this batch's ledger rows
-    * land as ONE additive keyed merge, last. */
+    * eq merges; the signed term-count delta lands as ONE additive
+    * keyed merge that records the batch's ledger position, last. */
   def maintainQuery(spark: SparkSession, srcTable: String,
       indexRoot: String, checkpoint: String): StreamingQuery = {
     spark.readStream.format("graft-cdf").option("path", srcTable).load()
@@ -120,21 +117,14 @@ object TextIndex {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // replay filter against the ledger HIGH-WATER MARK: versions
-        // apply strictly in order (the ledger row commits last,
-        // atomically with its range), so the applied set is always a
-        // contiguous prefix — one max, not an ever-growing version
-        // set collected to the driver each micro-batch. The termstats
-        // scan is 3 tiny rows; probing it FIRST lets the pin's hwAgg
-        // double as the batch-emptiness probe, so no separate
-        // `batch.isEmpty` job ever scans the feed.
-        val hwRow = Sources.readVersion(spark, termstatsT(indexRoot))
-          .filter(col("term").isNull)
-          .agg(max(col("cnt"))).head
-        val hw = if (hwRow.isNullAt(0)) 0L else hwRow.getLong(0)
-        val pinned =
-          batch.filter(col("_commit_version").cast("long") > hw)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // replay filter against the termstats ledger: versions apply
+        // strictly in order (the ledger entry commits last, atomically
+        // with its range), so the applied set is always a contiguous
+        // prefix — one position, read from the manifest
+        val consumer = Sources.txnConsumer("text_index", srcTable)
+        val pinned = graft.streaming.FeedProbe
+          .unapplied(batch, termstatsT(indexRoot), consumer)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           // one aggregate both materializes the pin and answers
           // "anything fresh?" — a NULL max IS the emptiness probe (it
@@ -184,7 +174,7 @@ object TextIndex {
             applyIndexChanges(spark, indexRoot,
               tokCounts = tokCounts,
               changedDocIds = pinned.select("doc_id").distinct(),
-              ledgerHw = newHw)
+              txn = consumer -> newHw)
           }
         } finally { pinned.unpersist(); () }
       }
@@ -194,17 +184,19 @@ object TextIndex {
   /** The shared merge pass of both maintainers: changed docs retire as
     * ONE eq key each, their final postings/lengths re-append (batches
     * land term-sorted so the stats/bloom sidecars stay selective), and
-    * the signed token delta + the range's ledger rows land as ONE
-    * atomic additive commit, LAST — so every crash window replays
-    * either idempotent eq merges or ledger-gated additive work. Runs
-    * the termstats commit even when the data delta is empty: the
-    * ledger row is the range's high-water bookmark. */
+    * the signed token delta lands as ONE atomic additive commit that
+    * records `txn` in the termstats ledger, LAST — so every crash
+    * window replays either idempotent eq merges or ledger-gated
+    * additive work. A range that changes no document (a net range over
+    * a pure rewrite) writes no data: its ledger entry lands as a
+    * manifest-only termstats version, the bookmark the net
+    * maintainer's next range starts from. */
   /** TEST ONLY — see the call site in [[applyIndexChanges]]. */
   private[graft] var midApplyCrashHook: () => Unit = () => ()
 
   private def applyIndexChanges(spark: SparkSession, indexRoot: String,
       tokCounts: DataFrame, changedDocIds: DataFrame,
-      ledgerHw: Long): Unit = {
+      txn: (String, Long)): Unit = {
     val ts = termstatsT(indexRoot)
     // tokenization is the drain's only data-proportional work; callers
     // hand it in as ONE aggregated (doc, term, cnt, __s, __new) pass —
@@ -234,9 +226,14 @@ object TextIndex {
       .sortWithinPartitions("term", "doc_id")
       .unionByName(retire)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Sources.mergeVersionEq(spark, postingsT(indexRoot), postIn,
-      Seq("doc_id"))
-    finally { postIn.unpersist(); () }
+    val (_, retired) =
+      try Sources.mergeVersionEq(spark, postingsT(indexRoot), postIn,
+        Seq("doc_id"))
+      finally { postIn.unpersist(); () }
+    if (retired == 0L) { // no document changed: bookmark only
+      Sources.commitVersionFiles(ts, Nil, txn = Some(txn))
+      return
+    }
     val dlIn = newPosts.groupBy("doc_id").agg(sum("tf").as("dl"))
       .withColumn("op", lit("upsert"))
       .unionByName(retire.drop("term", "tf")
@@ -250,7 +247,6 @@ object TextIndex {
     // half carries the old text, so counts subtract without reading
     // the index)
     val cur = Sources.readVersion(spark, ts)
-      .filter(col("term").isNotNull)
       .select(col("tk"), col("cnt").as("cur"))
     val merged = delta.join(cur, Seq("tk"), "left")
       .select(col("tk"), col("term"),
@@ -262,21 +258,9 @@ object TextIndex {
     // eq merges have landed, the atomic termstats+ledger commit has
     // NOT. A no-op in production.
     midApplyCrashHook()
-    val s2 = spark
-    import s2.implicits._
-    // ONE high-water-mark row, upserted in place — versions apply
-    // strictly in order (this additive commit lands LAST, atomically
-    // with its range), so the prefix property makes a single max row
-    // carry the same replay guarantee a per-version row set did,
-    // without growing by one row per applied version forever
-    val ledger = Seq(("v:hw", ledgerHw))
-      .toDF("tk", "cnt")
-      .withColumn("term", lit(null).cast("string"))
-      .withColumn("op", lit("upsert"))
-    val tsIn = merged.unionByName(ledger.select(
-        col("tk"), col("term"), col("cnt"), col("op")))
+    val tsIn = merged
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try Sources.mergeVersion(spark, ts, tsIn, "tk")
+    try Sources.mergeVersion(spark, ts, tsIn, "tk", txn = Some(txn))
     finally { tsIn.unpersist(); () }
     ()
     } finally { tokPinned.unpersist(); () }
@@ -287,9 +271,9 @@ object TextIndex {
     * version offsets; each batch applies the net endpoint diff of the
     * not-yet-applied range. The payoff over [[maintainQuery]] is
     * rewrite transparency — a source compaction/purge drain nets to
-    * ZERO data changes and commits NOTHING on postings/docstore (one
-    * ledger-row bookmark lands on the stats table so the next drain
-    * never re-diffs the rewritten range), where the file-granular feed
+    * ZERO data changes and commits NOTHING on postings/docstore (a
+    * manifest-only termstats version bookmarks the ledger so the next
+    * drain never re-diffs the rewritten range), where the file-granular feed
     * would re-tokenize and re-merge the whole rewritten byte volume.
     * At 100 TB: nightly OPTIMIZE on the corpus is free for the index.
     *
@@ -298,10 +282,10 @@ object TextIndex {
     * verbatim (the net over a fixed range is deterministic, the eq
     * merges idempotent, the additive commit ledger-gated) instead of
     * being silently re-netted into a WIDER range whose endpoint diff
-    * could cancel the half-applied changes and strand them. The ledger
-    * high-water mark is the journal's stale test, so fresh-checkpoint
-    * replays are no-ops. Use ONE maintainer per index (this or
-    * [[maintainQuery]]) — they share the ledger keyspace. */
+    * could cancel the half-applied changes and strand them. The
+    * termstats ledger position is the journal's stale test, so
+    * fresh-checkpoint replays are no-ops. Use ONE maintainer per index
+    * (this or [[maintainQuery]]) — they share one ledger entry. */
   def maintainNetQuery(spark: SparkSession, srcTable: String,
       indexRoot: String, checkpoint: String): StreamingQuery = {
     spark.readStream.format("graft-cdf").option("path", srcTable).load()
@@ -310,14 +294,14 @@ object TextIndex {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
+        // one feed job: the version-range max is the emptiness probe
+        // too (NULL max = empty batch)
+        val hiRow = batch.agg(max(col("_commit_version").cast("long"))).head
+        if (!hiRow.isNullAt(0)) {
           val ts = termstatsT(indexRoot)
-          def ledgerMax(): Long = {
-            val vs = Sources.readVersion(spark, ts)
-              .filter(col("term").isNull)
-              .select(col("cnt")).collect().map(_.getLong(0))
-            if (vs.isEmpty) 0L else vs.max
-          }
+          val consumer = Sources.txnConsumer("text_index", srcTable)
+          def ledgerMax(): Long =
+            math.max(0L, Sources.appliedVersion(ts, consumer))
           val intentDir = java.nio.file.Paths.get(indexRoot, "_netmaintain")
           java.nio.file.Files.createDirectories(intentDir)
           def applyRange(from: Long, hi: Long): Unit = {
@@ -342,7 +326,7 @@ object TextIndex {
                   .select(col("doc_id"), col("term"), col("cnt"),
                     col("__s"), (col("__s") === 1L).as("__new")),
                 changedDocIds = net.select("doc_id").distinct(),
-                ledgerHw = hi)
+                txn = consumer -> hi)
             } finally { net.unpersist(); () }
             java.nio.file.Files.deleteIfExists(intent)
             ()
@@ -367,8 +351,7 @@ object TextIndex {
                 case _ => ()
               }
             }
-          val hi = batch.agg(max(col("_commit_version").cast("long")))
-            .head.getLong(0)
+          val hi = hiRow.getLong(0)
           if (hi > lm) applyRange(lm, hi)
         }
       }
@@ -385,7 +368,6 @@ object TextIndex {
   def searchFromIndex(spark: SparkSession, indexRoot: String,
       k: Int = 50): DataFrame = {
     val qterms = Sources.readVersion(spark, termstatsT(indexRoot))
-      .filter(col("term").isNotNull)
       .orderBy(col("cnt").desc, col("term").asc).limit(3)
       .select("term").collect().map(_.getString(0)).toSeq
     search(spark, indexRoot, qterms, k)

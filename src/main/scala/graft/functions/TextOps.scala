@@ -2559,7 +2559,7 @@ object TextOps {
       Sources.deleteWhereDv(s, src, pmod(col("doc_id"), lit(97)) === 0)
       graft.streaming.StreamingPipeline
         .maintainDsirQuery(s, src, store, ckpt).awaitTermination()
-      val st = Sources.readVersion(s, store).filter(col("b") >= 0L)
+      val st = Sources.readVersion(s, store)
       val tot = st.agg(sum(col("n_r")).as("tot_r"),
         sum(col("n_t")).as("tot_t"))
       st.crossJoin(broadcast(tot))

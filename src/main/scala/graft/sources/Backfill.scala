@@ -18,8 +18,7 @@ import org.apache.spark.sql.types.StructType
   * would restart from zero. The standard operational answer is chunked
   * progress with durable bookkeeping; this is that primitive, with the
   * bookkeeping made CRASH-ATOMIC by riding the output table's own merge
-  * (the DedupStore/AnnIndex in-band ledger pattern — a chunk either
-  * landed with its ledger row or neither exists).
+  * (a chunk either landed with its ledger row or neither exists).
   *
   * Contract: `work` maps a source slice to output rows carrying a
   * unique string key column `k` that never starts with `#` (the ledger

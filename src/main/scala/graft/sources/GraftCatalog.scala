@@ -1406,30 +1406,14 @@ private[sources] class GraftWriteBuilder(table: String,
 /** Exactly-once streaming sink over the versioned table: executor
   * tasks write parquet through the same machinery as the row-level
   * BatchWrite, and each epoch's driver commit is one OCC append
-  * publish.
-  *
-  * Restart safety is a TWO-PHASE epoch ledger under
-  * `table/_streams/<queryId>/` (query id, not write instance — a
-  * restarted driver builds a fresh GraftStreamingWrite and must still
-  * see the original run's ledger):
-  *
-  *  1. claim `e<N>.commit` atomically, content = the epoch's FILE LIST
-  *     (state: pending);
-  *  2. publish the manifest version;
-  *  3. rewrite the marker content to `committed`.
-  *
-  * A replay that finds `committed` deletes its duplicate files and
-  * returns. A replay that finds `pending` hit the crash window and
-  * RESOLVES it from the ground truth: if the recorded files appear in
-  * any manifest, the publish happened — finalize and skip; if not but
-  * the recorded files still exist on disk (they were fully written —
-  * task commits preceded the driver commit), ADOPT them and publish
-  * exactly those, so the original epoch's rows land once; only if the
-  * recorded files are gone does the replay fall back to its own
-  * re-written files. A publish FAILURE deletes the pending marker
-  * before rethrowing, so the retry is never mistaken for a duplicate.
-  * Either way: every epoch lands exactly once, under any interleaving
-  * of crash and restart. */
+  * publish whose manifest records (query id, epoch) in the table's
+  * `#txn` ledger — Delta's streaming-sink idempotence. The claim IS
+  * the publish, so there is no state between them: a replayed epoch
+  * (a restarted driver builds a fresh GraftStreamingWrite with the
+  * same stable query id) finds its epoch in the ledger and deletes its
+  * duplicate files, and a failed publish leaves no entry, so the retry
+  * publishes once. Every epoch lands exactly once, under any
+  * interleaving of crash and restart. */
 private[graft] class GraftStreamingWrite(spark: SparkSession,
     table: String, schema: StructType, queryId: String)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -1437,24 +1421,13 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
   import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  // data files per write INSTANCE (names never collide across
-  // restarts), but epoch-claim markers per QUERY: a restarted query
-  // constructs a fresh GraftStreamingWrite, and exactly-once only
-  // holds if the replayed epoch finds the ORIGINAL run's marker — so
-  // markers key on the stable streaming query id, not the instance
+  // data files per write INSTANCE (names never collide across restarts)
   private val streamDir = java.nio.file.Paths.get(table, "data",
     s"stream-${java.util.UUID.randomUUID().toString.take(12)}")
-  private val markerDir = java.nio.file.Paths.get(table, "_streams",
-    queryId)
-
-  private def ensureDir(): Unit = {
-    java.nio.file.Files.createDirectories(streamDir)
-    java.nio.file.Files.createDirectories(markerDir)
-  }
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    ensureDir()
+    java.nio.file.Files.createDirectories(streamDir)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
     job.setOutputKeyClass(classOf[Void])
@@ -1471,129 +1444,41 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
     files.foreach(f =>
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
 
-  private def publishEpoch(files: Seq[String]): Unit =
-    if (files.nonEmpty) {
-      val v = Sources.commitVersionFiles(table, files, Some(schema))
-      val cols = Sources.statsColumnsOf(table)
-        .filter(schema.fieldNames.contains(_))
-      val bcols = Sources.bloomColumnsOf(table)
-        .filter(schema.fieldNames.contains(_))
-      Sources.commitSidecars(spark, table, v, cols, bcols, v - 1)
-    }
-
-  /** Does any manifest version reference `probe`? (ground truth for
-    * resolving a pending marker's crash window) */
-  private def everPublished(probe: String): Boolean =
-    Sources.versionsOf(table).exists(v =>
-      Sources.filesOf(table, v).contains(probe))
-
-  /** Atomically CLAIM `marker` with `content` (temp file + hard link —
-    * the link either appears with COMPLETE bytes or fails because a
-    * racing/previous claimant already owns the epoch). Returns false on
-    * an existing marker. A plain CREATE_NEW+write is NOT crash-safe: a
-    * death mid-write leaves a torn marker that parses as neither
-    * pending nor committed. */
-  private def claimMarker(marker: java.nio.file.Path,
-      content: String): Boolean = {
-    val tmp = java.nio.file.Files.createTempFile(markerDir, ".claim", ".tmp")
-    // the write sits INSIDE the try so a failed write (disk full)
-    // can't leak the tmp file in markerDir permanently
-    try {
-      java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-      try { java.nio.file.Files.createLink(marker, tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
-  /** Atomically TRANSITION `marker` to `content` (temp file +
-    * ATOMIC_MOVE with REPLACE_EXISTING — readers observe either the old
-    * complete state or the new complete state, never a truncated
-    * in-between). A plain Files.write truncates first, so a crash
-    * mid-rewrite would leave an empty marker and the replay would
-    * re-publish an already-published epoch. */
-  private def transitionMarker(marker: java.nio.file.Path,
-      content: String): Unit = {
-    val tmp = java.nio.file.Files.createTempFile(markerDir, ".state", ".tmp")
-    // a successful move CONSUMES tmp; clean it up only on failure
-    // (write or move) so a disk-full write can't leak it permanently
-    try {
-      java.nio.file.Files.write(tmp, content.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, marker,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case e: Throwable =>
-      java.nio.file.Files.deleteIfExists(tmp); throw e
-    }
-  }
-
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect {
       case GraftWriteMessage(fs) => fs
     }.flatten.toSeq.sorted
-    ensureDir()
-    val marker = markerDir.resolve(s"e$epochId.commit")
-    val claimed = claimMarker(marker, "pending\n" + files.mkString("\n"))
-    if (!claimed) {
-      // the epoch was claimed by a previous run: resolve its state
-      val lines = new String(
-        java.nio.file.Files.readAllBytes(marker), "UTF-8").split("\n").toSeq
-      if (lines.headOption.contains("committed")) {
-        deleteAll(files) // plain duplicate replay
-        return
-      }
-      if (!lines.headOption.contains("pending"))
-        // Unreachable with the atomic claim/transition protocol above
-        // (every marker state is complete-or-absent). An unparsable
-        // marker therefore means external corruption; re-publishing on
-        // guesswork would break exactly-once, so fail loudly instead.
-        throw new IllegalStateException(
-          s"unparsable epoch marker $marker: " +
-            s"'${lines.headOption.getOrElse("")}' — resolve manually " +
-            "(delete if the epoch is absent from every manifest)")
-      // pending: the claimant died between claim and publish-finalize
-      val recorded = lines.drop(1).filter(_.nonEmpty)
-      val published = recorded.headOption.exists(everPublished)
-      if (!published) {
-        val recordedIntact = recorded.nonEmpty && recorded.forall(f =>
-          java.nio.file.Files.exists(java.nio.file.Paths.get(f)))
-        if (recordedIntact) publishEpoch(recorded) // adopt the original
-        else {
-          // original files lost with the claimant: commit OUR replay
-          transitionMarker(marker, "pending\n" + files.mkString("\n"))
-          publishEpoch(files)
-          transitionMarker(marker, "committed")
-          return
-        }
-      }
-      transitionMarker(marker, "committed")
-      if (!(recorded == files)) deleteAll(files)
+    if (Sources.appliedVersion(table, queryId) >= epochId) {
+      deleteAll(files) // a replay of an epoch the ledger holds
       return
     }
-    // fresh claim: publish, then finalize; a failed publish deletes the
-    // epoch's task files (the retry re-writes its own output — leaving
-    // them would strand unreferenced parquet under data/ forever, since
-    // vacuum only sweeps manifest-referenced files) and releases the
-    // claim so the retry/replay is never mistaken for a duplicate
-    try publishEpoch(files)
-    catch { case e: Throwable =>
-      if (files.headOption.exists(everPublished))
-        // the manifest landed and only a stats/bloom sidecar failed:
-        // the data IS committed — finalize so the retry sees a plain
-        // duplicate (sidecars are skipping-only; reads stay correct)
-        transitionMarker(marker, "committed")
+    if (files.nonEmpty) {
+      // a failed publish deletes the epoch's task files (the retry
+      // re-writes its own output — leaving them would strand
+      // unreferenced parquet under data/ forever, since vacuum only
+      // sweeps manifest-referenced files) and records no entry, so the
+      // retry is never mistaken for a duplicate
+      val v =
+        try Sources.commitVersionFiles(table, files, Some(schema),
+          txn = Some(queryId -> epochId))
+        catch { case e: Throwable => deleteAll(files); throw e }
+      if (!Sources.filesOf(table, v).contains(files.head))
+        deleteAll(files) // a racing run of this query published first
       else {
-        deleteAll(files)
-        java.nio.file.Files.deleteIfExists(marker)
+        // skipping sidecars only: a failure here leaves the committed
+        // epoch readable, and its replay a plain duplicate
+        val cols = Sources.statsColumnsOf(table)
+          .filter(schema.fieldNames.contains(_))
+        val bcols = Sources.bloomColumnsOf(table)
+          .filter(schema.fieldNames.contains(_))
+        Sources.commitSidecars(spark, table, v, cols, bcols, v - 1)
       }
-      throw e
     }
-    transitionMarker(marker, "committed")
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case GraftWriteMessage(fs) => fs }.flatten
-      .foreach(f =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
+    deleteAll(messages.collect { case GraftWriteMessage(fs) => fs }
+      .flatten.toSeq)
 }

@@ -385,14 +385,68 @@ object Sources {
       .sorted
   }
 
-  private[sources] def filesOf(table: String, version: Int): Seq[String] = {
-    val p = java.nio.file.Paths.get(table, s"v$version.manifest")
+  private def manifestLines(table: String, version: Int): Seq[String] =
     scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala.toSeq
+      java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(table, s"v$version.manifest"))).asScala.toSeq
+
+  private[sources] def filesOf(table: String, version: Int): Seq[String] =
+    manifestLines(table, version)
       // `#`-prefixed lines are metadata trailers (staged-sidecar
-      // pointers), not data files
+      // pointers, the `#txn` ledger), not data files
       .filter(l => l.nonEmpty && !l.startsWith("#"))
+
+  // ---- the exactly-once ledger: `#txn` manifest trailers -------------
+  //
+  // Every change-feed maintainer and streaming sink records how far it
+  // has applied as one `#txn\t<consumer>\t<n>` trailer in the manifest
+  // of the commit that applies it — Delta's SetTransaction (appId,
+  // version) riding the log entry it guards. The position and the data
+  // it covers publish in ONE atomic manifest link, so no crash window
+  // exists between "applied" and "recorded". [[publishManifest]] copies
+  // the previous version's entries forward and replaces only the
+  // committing consumer's, so every commit path (compaction, purge,
+  // rollback, merges) keeps the ledger without per-path code. For a
+  // change-feed consumer `n` is the highest source version applied and
+  // the consumer id names the maintainer kind and its source table
+  // ([[txnConsumer]]), so a fresh checkpoint's full replay filters down
+  // to nothing; for a sink without a source version `n` is the epoch
+  // or batch id and the consumer is the streaming query id.
+
+  /** The ledger entries (consumer -> applied position) recorded in
+    * `version`'s manifest; empty for version 0 or a missing manifest.
+    * A malformed entry FAILS LOUDLY: reading it as "never applied"
+    * would re-apply a batch. */
+  private def txnsOf(table: String,
+      version: Int): Map[String, Long] = {
+    val p = java.nio.file.Paths.get(table, s"v$version.manifest")
+    if (version < 1 || !java.nio.file.Files.exists(p)) Map.empty
+    else manifestLines(table, version).filter(_.startsWith("#txn"))
+      .map { l =>
+        l.split("\t", -1) match {
+          case Array("#txn", c, n) if c.nonEmpty && n.matches("\\d+") =>
+            c -> n.toLong
+          case _ => throw new IllegalStateException(
+            s"malformed ledger line in $table v$version: '$l'")
+        }
+      }.toMap
   }
+
+  /** `consumer`'s applied position as recorded at the head of `table`,
+    * or -1 if it has applied nothing there. Reads one manifest; starts
+    * no Spark job. */
+  def appliedVersion(table: String, consumer: String): Long =
+    txnsOf(table, latestVersion(table)).getOrElse(consumer, -1L)
+
+  /** The ledger id of a change-feed maintainer: its kind plus its
+    * source table's absolute path — stable across checkpoints. */
+  def txnConsumer(kind: String, source: String): String =
+    s"$kind:${java.nio.file.Paths.get(source).toAbsolutePath.normalize}"
+
+  /** Does `version` already record `txn`'s position (or a later one)? */
+  private def txnApplied(table: String, version: Int,
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (c, n) => txnsOf(table, version).get(c).exists(_ >= n) }
 
   /** Latest committed version of `table`, or 0 if none. */
   def latestVersion(table: String): Int = versionsOf(table).lastOption.getOrElse(0)
@@ -428,17 +482,27 @@ object Sources {
     * a bounded attempt count turns pathological contention into a loud
     * failure instead of livelock. */
   def commitVersion(df: DataFrame, table: String,
-      overwrite: Boolean = false): Int = {
+      overwrite: Boolean = false,
+      txn: Option[(String, Long)] = None): Int = {
     requireNoForgedRowIds(table, df.schema, "commitVersion")
+    // `txn` (consumer, position) rides the manifest as a ledger entry;
+    // a head that already records it makes the commit a no-op that
+    // returns the head version
+    val head = latestVersion(table)
+    if (txnApplied(table, head, txn)) return head
     val files = writeBatch(df, table)
+    def dropBatch(): Unit = files.headOption.foreach(f =>
+      deleteBatchDir(java.nio.file.Paths.get(f).getParent))
     try publishNextVersion(table, files, overwrite,
-      batchSchema = Some(df.schema))
+      batchSchema = Some(df.schema), txn = txn).getOrElse {
+      dropBatch() // a racing run of the same consumer applied it first
+      latestVersion(table)
+    }
     catch { case e: IllegalArgumentException =>
       // schema-incompatible append (or exhausted publish race): nothing
       // was published, so the just-written batch would be stranded —
       // delete it before surfacing the rejection
-      files.headOption.foreach(f =>
-        deleteBatchDir(java.nio.file.Paths.get(f).getParent))
+      dropBatch()
       throw e
     }
   }
@@ -446,16 +510,23 @@ object Sources {
   /** Append-commit PRE-WRITTEN immutable files (a streaming epoch's
     * task outputs) as the next version — the publish half of
     * [[commitVersion]] for writers that already landed their parquet
-    * through the executor-side writer machinery. */
+    * through the executor-side writer machinery. With a `txn` the head
+    * already records, nothing is published and the head version is
+    * returned (the files stay the caller's to delete). With no files it
+    * publishes a manifest-only version — the head's exact file set,
+    * schema and skipping sidecars under a new number — the bookmark a
+    * consumer whose drain changed nothing uses to record its `txn`. */
   def commitVersionFiles(table: String, files: Seq[String],
-      batchSchema: Option[StructType] = None): Int = {
+      batchSchema: Option[StructType] = None,
+      txn: Option[(String, Long)] = None): Int = {
     batchSchema.foreach(s =>
       requireNoForgedRowIds(table, s, "commitVersionFiles"))
     // pre-written epoch files share dirs across epochs — record their
     // footer shape per file so CDF readers never re-open the footers
     batchSchema.foreach(recordFileCols(files, _))
     publishNextVersion(table, files, overwrite = false,
-      batchSchema = batchSchema)
+      batchSchema = batchSchema, txn = txn)
+      .getOrElse(latestVersion(table))
   }
 
   /** Write `df` as an immutable, uniquely-named batch directory under
@@ -495,11 +566,18 @@ object Sources {
     * [[mergeVersion]]/[[rollbackTo]], whose semantics do not commute
     * with a racing commit — they DETECT the conflict instead. */
   private def publishNextVersion(table: String, newFiles: Seq[String],
-      overwrite: Boolean, batchSchema: Option[StructType] = None): Int = {
+      overwrite: Boolean, batchSchema: Option[StructType] = None,
+      txn: Option[(String, Long)] = None): Option[Int] = {
     var attempt = 0
     while (true) {
       val prev = latestVersion(table)
       val next = prev + 1
+      // the ledger check runs per attempt against the version the claim
+      // builds on: of two racing runs of one consumer only one applies
+      if (txnApplied(table, prev, txn)) return None
+      // a manifest-only append (a consumer's bookmark) re-publishes the
+      // head's file set, so its schema and skipping sidecars carry too
+      val bookmark = newFiles.isEmpty && !overwrite && prev > 0
       val carried = if (overwrite || prev == 0) Nil else filesOf(table, prev)
       // Declared-schema carry-forward: once a table has been evolved
       // (some prior version pinned a sidecar), a PLAIN append must not
@@ -519,6 +597,7 @@ object Sources {
           // fall back to — pin the batch schema or the table becomes
           // unreadable (schemaOf would .head an empty file list)
           if (newFiles.isEmpty) batchSchema else None
+        else if (bookmark) declaredSchema(table, prev)
         else batchSchema.flatMap(bs =>
           declaredSchema(table, prev).map(ds =>
             evolveSchema(ds, bs, Map.empty)))
@@ -538,10 +617,11 @@ object Sources {
           (if (eq.nonEmpty) Map("eq" -> stageSidecar(table, "eq",
             eqText(eq).getBytes("UTF-8"))) else Map.empty[String, String])
       try {
-        publishManifest(table, next, carried ++ newFiles, staged)
+        publishManifest(table, next, carried ++ newFiles, staged, txn)
         promoteStaged(table, next, staged)
         declaredNext.foreach(publishSchema(table, next, _))
-        return next
+        if (bookmark) copyStatsSidecar(table, prev, next)
+        return Some(next)
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           discardStaged(table, staged)
@@ -550,7 +630,7 @@ object Sources {
             s"publishNextVersion: lost the publish race $attempt times on $table")
       }
     }
-    -1 // unreachable
+    None // unreachable
   }
 
   /** Publish `files` as version latest+1, REQUIRING that `basedOn` is
@@ -606,16 +686,25 @@ object Sources {
     * committers could both pass the check and the second rename would
     * silently OVERWRITE the first manifest, losing a commit. */
   private[sources] def publishManifest(table: String, version: Int,
-      files: Seq[String], sidecars: Map[String, String] = Map.empty): Unit = {
+      files: Seq[String], sidecars: Map[String, String] = Map.empty,
+      txn: Option[(String, Long)] = None): Unit = {
+    txn.foreach { case (c, n) =>
+      require(c.nonEmpty && !c.exists(ch => ch == '\t' || ch == '\n') &&
+        n >= 0, s"invalid ledger entry ($c, $n) for $table")
+    }
     val dir = java.nio.file.Paths.get(table)
     java.nio.file.Files.createDirectories(dir)
     val tmp = java.nio.file.Files.createTempFile(dir, s".v$version", ".tmp")
     // trailer lines point at PRE-STAGED sidecar files (see
     // [[stageSidecar]]) so a reader that can see this manifest can
     // always resolve complete DV/eq state — the claim and its
-    // correctness-bearing sidecars publish as one atomic unit
+    // correctness-bearing sidecars publish as one atomic unit. The
+    // `#txn` ledger carries forward from the previous version with the
+    // committing consumer's entry replaced.
+    val ledger = (txnsOf(table, version - 1) ++ txn).toSeq.sortBy(_._1)
     val lines = files ++ sidecars.toSeq.sortBy(_._1)
-      .map { case (ext, name) => s"#sidecar\t$ext\t$name" }
+      .map { case (ext, name) => s"#sidecar\t$ext\t$name" } ++
+      ledger.map { case (c, n) => s"#txn\t$c\t$n" }
     java.nio.file.Files.write(tmp,
       lines.mkString("\n").getBytes("UTF-8"))
     try java.nio.file.Files.createLink(dir.resolve(s"v$version.manifest"), tmp)
@@ -655,40 +744,45 @@ object Sources {
     name
   }
 
-  /** ext -> staged-file name for a version's manifest trailers. */
+  /** ext -> staged-file name for a version's manifest trailers. A
+    * malformed pointer fails loudly: dropping it would read the
+    * version's deletes as absent. */
   private[sources] def sidecarPointersOf(table: String,
       version: Int): Map[String, String] = {
     val p = java.nio.file.Paths.get(table, s"v$version.manifest")
     if (!java.nio.file.Files.exists(p)) Map.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala
-      .filter(_.startsWith("#sidecar\t"))
-      .flatMap { l =>
-        scala.util.Try {
-          val Array(_, ext, name) = l.split("\t", 3)
-          ext -> name
-        }.toOption
+    else manifestLines(table, version).filter(_.startsWith("#sidecar"))
+      .map { l =>
+        l.split("\t", -1) match {
+          case Array("#sidecar", ext, name) if ext.nonEmpty && name.nonEmpty =>
+            ext -> name
+          case _ => throw new IllegalStateException(
+            s"malformed sidecar pointer in $table v$version: '$l'")
+        }
       }.toMap
   }
 
   /** Resolve a version's sidecar file: the canonical `v<N>.<ext>` if
     * present, else the manifest's staged pointer (repair-renaming it to
     * canonical opportunistically — racing the committer's own rename is
-    * benign, ATOMIC_MOVE of the same source lets exactly one win). */
+    * benign, ATOMIC_MOVE of the same source lets exactly one win). A
+    * pointer whose file exists neither staged nor canonical fails
+    * loudly: the version's deletes are lost, and reading it as "no
+    * deletes" would bring the deleted rows back. */
   private def resolveSidecar(table: String, version: Int,
       ext: String): Option[java.nio.file.Path] = {
     val canonical = java.nio.file.Paths.get(table, s"v$version.$ext")
     if (java.nio.file.Files.exists(canonical)) Some(canonical)
-    else sidecarPointersOf(table, version).get(ext).flatMap { name =>
+    else sidecarPointersOf(table, version).get(ext).map { name =>
       val staged = java.nio.file.Paths.get(table, name)
-      if (java.nio.file.Files.exists(staged)) {
+      if (java.nio.file.Files.exists(staged))
         scala.util.Try(java.nio.file.Files.move(staged, canonical,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE))
-        if (java.nio.file.Files.exists(canonical)) Some(canonical)
-        else if (java.nio.file.Files.exists(staged)) Some(staged)
-        else None
-      } else if (java.nio.file.Files.exists(canonical)) Some(canonical)
-      else None
+      if (java.nio.file.Files.exists(canonical)) canonical
+      else if (java.nio.file.Files.exists(staged)) staged
+      else throw new IllegalStateException(
+        s"$table v$version points at its $ext sidecar $name, which " +
+          "exists neither staged nor canonical — its deletes are lost")
     }
   }
 
@@ -712,12 +806,13 @@ object Sources {
     * files are deleted before the conflict surfaces. */
   private[sources] def publishIfLatestStaged(table: String, basedOn: Int,
       files: Seq[String], op: String,
-      sidecarBytes: Map[String, Array[Byte]]): Int = {
+      sidecarBytes: Map[String, Array[Byte]],
+      txn: Option[(String, Long)] = None): Int = {
     val staged = sidecarBytes.map { case (ext, bytes) =>
       ext -> stageSidecar(table, ext, bytes) }
     val next = basedOn + 1
     try {
-      publishManifest(table, next, files, staged)
+      publishManifest(table, next, files, staged, txn)
       promoteStaged(table, next, staged)
       next
     } catch {
@@ -734,12 +829,13 @@ object Sources {
   private[sources] def publishIfLatestWith(table: String, basedOn: Int,
       files: Seq[String], op: String,
       dv: Map[String, java.util.BitSet] = Map.empty,
-      eq: Seq[EqEntry] = Nil): Int =
+      eq: Seq[EqEntry] = Nil,
+      txn: Option[(String, Long)] = None): Int =
     publishIfLatestStaged(table, basedOn, files, op,
       (if (dv.nonEmpty) Map("dv" -> dvText(dv).getBytes("UTF-8"))
        else Map.empty[String, Array[Byte]]) ++
         (if (eq.nonEmpty) Map("eq" -> eqText(eq).getBytes("UTF-8"))
-         else Map.empty[String, Array[Byte]]))
+         else Map.empty[String, Array[Byte]]), txn)
 
   /** Read `table` at `version` (default: latest) by its pinned file
     * list. An empty table (version 0) is an error by design — there is
@@ -801,24 +897,25 @@ object Sources {
   //    with its manifest.
 
   /** file -> deleted-row positions for a version; empty if the version
-    * has no DV sidecar. Malformed lines degrade to "no DV" for their
-    * file — that file's rows all read as live, which is the only safe
-    * default (a dropped DELETE is recoverable by re-running it; rows
-    * silently vanishing to a parse bug are not). */
+    * has no DV sidecar. A malformed line FAILS LOUDLY: read as "no DV"
+    * for its file, every row that file ever deleted would silently come
+    * back to life, and no reader could tell. */
   def dvOf(table: String, version: Int): Map[String, java.util.BitSet] =
     resolveSidecar(table, version, "dv") match {
       case None => Map.empty
-      case Some(p) => scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(p)).asScala
-        .filter(_.nonEmpty)
-        .flatMap { line =>
-          scala.util.Try {
-            val Array(f, b64) = line.split("\t", 2)
-            f -> java.util.BitSet.valueOf(
-              java.util.Base64.getDecoder.decode(b64))
-          }.toOption
-        }.toMap
+      case Some(p) => sidecarLines(p).map { line =>
+        scala.util.Try {
+          val Array(f, b64) = line.split("\t", 2)
+          f -> java.util.BitSet.valueOf(
+            java.util.Base64.getDecoder.decode(b64))
+        }.getOrElse(throw new IllegalStateException(
+          s"malformed DV line in $table v$version: '$line'"))
+      }.toMap
     }
+
+  private def sidecarLines(p: java.nio.file.Path): Seq[String] =
+    scala.jdk.CollectionConverters.ListHasAsScala(
+      java.nio.file.Files.readAllLines(p)).asScala.toSeq.filter(_.nonEmpty)
 
   /** Total deleted positions recorded for a version — the DV pressure
     * gauge a table owner reads before scheduling [[purgeDv]]. */
@@ -1144,21 +1241,17 @@ object Sources {
   case class EqEntry(keyCols: Seq[String], dataPath: String, basedOn: Int)
 
   /** The version's pending equality-delete entries; empty if none.
-    * Malformed lines degrade to "no entry" — same recoverable-loud
-    * default as [[dvOf]] (a dropped delete is re-runnable; rows
-    * silently vanishing to a parse bug would not be). */
+    * A malformed line fails loudly, as in [[dvOf]]. */
   def eqOf(table: String, version: Int): Seq[EqEntry] =
     resolveSidecar(table, version, "eq") match {
       case None => Nil
-      case Some(p) => scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(p)).asScala.toSeq
-        .filter(_.nonEmpty)
-        .flatMap { line =>
-          scala.util.Try {
-            val Array(k, d, b) = line.split("\t", 3)
-            EqEntry(k.split(",").toSeq, d, b.toInt)
-          }.toOption
-        }
+      case Some(p) => sidecarLines(p).map { line =>
+        scala.util.Try {
+          val Array(k, d, b) = line.split("\t", 3)
+          EqEntry(k.split(",").toSeq, d, b.toInt)
+        }.getOrElse(throw new IllegalStateException(
+          s"malformed eq line in $table v$version: '$line'"))
+      }
     }
 
   /** Total pending equality-delete keys for a version — the pressure
@@ -1383,14 +1476,21 @@ object Sources {
     * manifest, appends the upsert rows, and publishes both as sidecar
     * metadata. Write cost O(change keys); the deferred position work
     * moves to readers (broadcast anti-join per pending entry) until
-    * [[purgeEq]] absorbs it. Returns (version, retired key count). */
+    * [[purgeEq]] absorbs it. Returns (version, retired key count).
+    * `txn` (consumer, position) is recorded in the same commit; a head
+    * that already records it makes the merge a no-op returning
+    * (head, 0). */
   def mergeVersionEq(spark: SparkSession, table: String,
       changes: DataFrame, keyCols: Seq[String],
-      opCol: String = "op"): (Int, Long) = {
+      opCol: String = "op",
+      txn: Option[(String, Long)] = None): (Int, Long) = {
     require(keyCols.nonEmpty, "mergeVersionEq needs at least one key column")
     requireNoForgedRowIds(table, changes.schema, "mergeVersionEq")
     val v = latestVersion(table)
     require(v > 0, s"$table has no committed versions")
+    // the publish below is conflict-detecting on v, so checking the
+    // ledger of v is the in-claim check: an applied `txn` is a no-op
+    if (txnApplied(table, v, txn)) return (v, 0L)
     val files = filesOf(table, v)
     val eqDir = java.nio.file.Paths.get(table, "eqdel",
       s"eq-${java.util.UUID.randomUUID().toString.take(12)}")
@@ -1461,7 +1561,8 @@ object Sources {
     val next =
       try publishIfLatestWith(table, v, files ++ newFiles, "eq-merge",
         dv = dvOf(table, v),
-        eq = eqOf(table, v) :+ EqEntry(keyCols, eqDir.toString, v))
+        eq = eqOf(table, v) :+ EqEntry(keyCols, eqDir.toString, v),
+        txn = txn)
       catch {
         case e: java.util.ConcurrentModificationException =>
           if (hasUpserts) deleteBatchDir(batch)
@@ -1673,7 +1774,8 @@ object Sources {
     require(lost.isEmpty,
       s"evolving commit on $table would rename pending equality-delete " +
         s"key column(s) ${lost.mkString(", ")} — purge_eq first")
-    val v = publishNextVersion(table, writeBatch(df, table), overwrite = false)
+    val v = publishNextVersion(table, writeBatch(df, table),
+      overwrite = false).get
     publishSchema(table, v, declared)
     v
   }
@@ -2183,18 +2285,23 @@ object Sources {
     * range/Z-order clustering, a dimension-delta's keys land in a few
     * files. The change-key set collected to the driver is commit
     * metadata (CDC-batch-sized), not data. Returns (new version,
-    * affected files rewritten, files carried untouched). */
+    * affected files rewritten, files carried untouched). `txn`
+    * (consumer, position) is recorded in the same commit; a head that
+    * already records it makes the merge a no-op returning (head, 0, 0). */
   def mergeVersion(spark: SparkSession, table: String, changes: DataFrame,
       key: String, opCol: String = "op",
-      keyProbeLimit: Int = 100000): (Int, Int, Int) = {
+      keyProbeLimit: Int = 100000,
+      txn: Option[(String, Long)] = None): (Int, Int, Int) = {
     requireNoForgedRowIds(table, changes.schema, "mergeVersion")
     val v = latestVersion(table)
     require(v > 0, s"$table has no committed versions")
+    // conflict-detecting publish on v: the ledger of v is the claim's
+    if (txnApplied(table, v, txn)) return (v, 0, 0)
     val files = filesOf(table, v)
     val (affected, untouched, keysHint) =
       mergeAffected(spark, table, v, changes, key, keyProbeLimit)
     mergeRewrite(spark, table, v, changes, key, opCol,
-      affected, untouched, files, keysHint)
+      affected, untouched, files, keysHint, txn)
   }
 
   /** The merge-key → affected-file probe shared by [[mergeVersion]]
@@ -2306,7 +2413,8 @@ object Sources {
   private def mergeRewrite(spark: SparkSession, table: String, v: Int,
       changes: DataFrame, key: String, opCol: String,
       affected: Seq[String], untouched: Seq[String],
-      files: Seq[String], keysHint: Long = -1L): (Int, Int, Int) = {
+      files: Seq[String], keysHint: Long = -1L,
+      txn: Option[(String, Long)] = None): (Int, Int, Int) = {
     // read affected files under the DECLARED schema where one exists —
     // a mixed-generation rewrite must not narrow to one file's footer;
     // subset reads are partition-aware (hive path values reattach)
@@ -2362,7 +2470,7 @@ object Sources {
       // untouched files' DVs + pending eq entries ride the claim
       try publishIfLatestWith(table, v, untouched ++ newFiles, "merge",
         dv = carriedDv(table, v, untouched),
-        eq = carriedEq(table, v, untouched))
+        eq = carriedEq(table, v, untouched), txn = txn)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
@@ -2689,7 +2797,7 @@ object Sources {
     } else {
       val newFiles = batchParquetFiles(batch)
       try Right(publishNextVersion(table, newFiles, overwrite,
-        batchSchema = Some(df.schema)))
+        batchSchema = Some(df.schema)).get)
       catch { case e: IllegalArgumentException =>
         deleteBatchDir(batch) // incompatible-schema rejection: no strand
         throw e
@@ -3383,9 +3491,24 @@ object Sources {
       // them dead)
       val branchPinned =
         filesOf(table, v).exists(branchFiles.contains)
+      val pointers = sidecarPointersOf(table, v)
+      val eqData = eqOf(table, v).map(e => normalizePath(e.dataPath)).distinct
+      val manifest = java.nio.file.Paths.get(table, s"v$v.manifest")
       if (!pinnedScopes.contains(v) && !branchPinned)
-        java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(table, s"v$v.manifest"))
+        java.nio.file.Files.deleteIfExists(manifest)
+      else if (pointers.nonEmpty) {
+        // a manifest kept only as a file list drops its sidecar
+        // pointers with the sidecars swept below — a pointer at a
+        // missing sidecar reads as lost deletes and fails loudly
+        val tmp = java.nio.file.Files.createTempFile(
+          java.nio.file.Paths.get(table), s".v$v", ".tmp")
+        java.nio.file.Files.write(tmp, manifestLines(table, v)
+          .filterNot(_.startsWith("#sidecar")).mkString("\n")
+          .getBytes("UTF-8"))
+        java.nio.file.Files.move(tmp, manifest,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      }
       // sidecars travel with their manifest
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(table, s"v$v.stats"))
@@ -3401,13 +3524,12 @@ object Sources {
         java.nio.file.Paths.get(table, s"v$v.rid"))
       // an expired version's eq sidecar goes; its key parquets go too
       // unless a kept version still lists them
-      eqOf(table, v).map(e => normalizePath(e.dataPath)).distinct
-        .filterNot(pinnedEqData.contains)
+      eqData.filterNot(pinnedEqData.contains)
         .foreach(d => deleteTree(java.nio.file.Paths.get(d)))
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(table, s"v$v.eq"))
       // un-promoted staged sidecars this version pointed at go with it
-      sidecarPointersOf(table, v).values.foreach(n =>
+      pointers.values.foreach(n =>
         java.nio.file.Files.deleteIfExists(
           java.nio.file.Paths.get(table, n)))
     }

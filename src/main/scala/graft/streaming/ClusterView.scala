@@ -39,14 +39,13 @@ import graft.sources.Sources
   * DELETION even though the pair row itself was upserted.
   *
   * One table, one merge ([[DedupStore]]'s contract): assignment rows
-  * (`c:<doc>` → component root = min member id) and the one-row
-  * replay ledger land in a single atomic [[Sources.mergeVersionEq]];
-  * a crash before it leaves the view bitwise untouched and the store
-  * range replays verbatim.
+  * (`c:<doc>` → component root = min member id) land in a single
+  * atomic [[Sources.mergeVersionEq]] that also records the range's
+  * `#txn` ledger position; a crash before it leaves the view bitwise
+  * untouched and the store range replays verbatim. A range with no
+  * pair changes commits nothing.
   */
 object ClusterView {
-
-  val HwKey = "#hw"
 
   /** Minimum estimated Jaccard for a verified pair to count as an edge. */
   val EdgeThreshold = 0.5
@@ -97,30 +96,25 @@ object ClusterView {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, storeTable, viewTable, batch)
+        applyBatch(spark, storeTable, viewTable,
+          Sources.txnConsumer("cluster", storeTable), batch)
       }
       .start()
   }
 
   private def applyBatch(spark: SparkSession, storeTable: String,
-      viewTable: String, batch: DataFrame): Unit = {
-    val hw = FeedProbe.appliedHw(spark, viewTable, HwKey)
+      viewTable: String, consumer: String, batch: DataFrame): Unit = {
     // only the pair section of the store feeds the graph; the store's
-    // signature/band/ledger keys are not edges
-    val fresh = batch
-      .filter(col("_commit_version").cast("long") > hw).persist()
+    // signature/band keys are not edges
+    val fresh = FeedProbe.unapplied(batch, viewTable, consumer).persist()
     try {
       // one driver action ([[FeedProbe.probeSection]], the contract
       // shared with VerdictView): emptiness, high water, and the
-      // pair-section count (no p: rows -> the netting shuffle is
-      // skipped outright, the ledger-only path)
-      val (newHw, nPairs) = FeedProbe.probeSection(fresh, "p:") match {
+      // pair-section count (no p: rows -> the range changes no edge,
+      // and the view commits nothing)
+      val newHw = FeedProbe.probeSection(fresh, "p:") match {
+        case Some(hw) => hw
         case None => return
-        case Some(t) => t
-      }
-      if (nPairs == 0L) {
-        commitLedgerOnly(spark, viewTable, newHw)
-        return
       }
       // net edge outcome per pair key: LAST change wins, insert
       // preferred within a version; a surviving pair below the
@@ -139,26 +133,15 @@ object ClusterView {
       // EAGER: referenced by both endpoint projections and the member
       // assembly's concurrent stages (Tuning.pinEager scaladoc)
       val edgeDeltaP = graft.Tuning.pinEager(edgeDelta, "chainfresh")
-      try applyEdgeDelta(spark, storeTable, viewTable, edgeDeltaP, newHw)
+      try applyEdgeDelta(spark, storeTable, viewTable, edgeDeltaP,
+        consumer -> newHw)
       finally { edgeDeltaP.unpersist() }
     } finally { fresh.unpersist() }
   }
 
-  /** A drained range with no pair changes (pure signature/band churn)
-    * still advances the ledger so replays stay provable no-ops. */
-  private def commitLedgerOnly(spark: SparkSession, viewTable: String,
-      newHw: Long): Unit = {
-    val s2 = spark
-    import s2.implicits._
-    preMergeCrashHook()
-    Sources.mergeVersionEq(spark, viewTable,
-      Seq((HwKey, newHw, -1L, "upsert")).toDF("k", "a", "b", "op"),
-      Seq("k"))
-    ()
-  }
-
   private def applyEdgeDelta(spark: SparkSession, storeTable: String,
-      viewTable: String, edgeDelta: DataFrame, newHw: Long): Unit = {
+      viewTable: String, edgeDelta: DataFrame,
+      txn: (String, Long)): Unit = {
     // no distinct: touched feeds a semi-join right side (duplicates
     // can't change it) and the members union, which ends in its own
     // distinct — deduping here was a pure extra exchange (guide §2.4)
@@ -205,19 +188,15 @@ object ClusterView {
           coalesce(col("cluster_id"), lit(-1L)).as("b"),
           when(col("cluster_id").isNull, "delete").otherwise("upsert")
             .as("op"))
-      val s2 = spark
-      import s2.implicits._
-      val ledger = Seq((HwKey, newHw, -1L, "upsert"))
-        .toDF("k", "a", "b", "op")
       // pinned: mergeVersionEq consumes its input per action (key
       // write, batch write) — without the pin each one re-runs the
       // view-assignment scan, the subgraph semi-joins, and (past the
       // driver fast path's edge bound) the whole component re-solve
-      val merged =
-        rows.unionByName(ledger).sortWithinPartitions("k").persist()
+      val merged = rows.sortWithinPartitions("k").persist()
       try {
         preMergeCrashHook()
-        Sources.mergeVersionEq(spark, viewTable, merged, Seq("k"))
+        Sources.mergeVersionEq(spark, viewTable, merged, Seq("k"),
+          txn = Some(txn))
         ()
       } finally { merged.unpersist() }
     } finally { members.unpersist() }

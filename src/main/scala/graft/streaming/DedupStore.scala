@@ -23,14 +23,14 @@ import graft.sources.Sources
   * shape for incrementally maintaining any non-invertible aggregate
   * (MIN/MAX/argmax): re-aggregate the touched groups only.
   *
-  * One table, one merge: member rows (`m:<digest>:<doc_id>`), survivor
-  * rows (`s:<digest>`), and the replay ledger (`#hw`, the TextIndex
-  * high-water rule — one row, not one per version) share the key space
-  * and land in a SINGLE atomic [[Sources.mergeVersionEq]] per fresh
-  * version range. There is no partial-application crash window: either
-  * the whole batch (members + survivors + ledger) is visible or none
-  * of it is, and a replayed range is dropped by the ledger filter
-  * before any work runs.
+  * One table, one merge: member rows (`m:<digest>:<doc_id>`) and
+  * survivor rows (`s:<digest>`) share the key space and land in a
+  * SINGLE atomic [[Sources.mergeVersionEq]] per fresh version range,
+  * whose manifest also records the range's high-water source version
+  * in the store's `#txn` ledger. There is no partial-application crash
+  * window: either the whole batch (members + survivors + ledger entry)
+  * is visible or none of it is, and a replayed range is dropped by the
+  * ledger filter before any work runs.
   *
   * 100 TB shape: per batch the work is O(changed docs) digesting +
   * O(affected digests) membership re-read (digest-keyed semi-join
@@ -41,11 +41,6 @@ import graft.sources.Sources
   * idempotent upserts — membership and survivors do not churn.
   */
 object DedupStore {
-
-  /** Ledger key: the store's applied high-water source version rides
-    * the data key space under a prefix no digest row can take ("#" <
-    * "m"/"s", and digests are hex). */
-  val HwKey = "#hw"
 
   /** Test seam: fires immediately before the single atomic merge, so
     * fault specs can prove the no-partial-application contract (the
@@ -101,29 +96,22 @@ object DedupStore {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, storeTable, batch, digestOf)
+        val consumer = Sources.txnConsumer("dedup", docsTable)
+        // pin the ledger-filtered range once: everything downstream
+        // (the emptiness probe, the high-water max, the dup guard, the
+        // netting window) reads this cache instead of re-scanning the
+        // CDF parquet
+        val fresh = FeedProbe.unapplied(batch, storeTable, consumer)
+          .filter(col("text").isNotNull).persist()
+        try applyFresh(spark, storeTable, consumer, fresh, digestOf)
+        finally { fresh.unpersist() }
       }
       .start()
   }
 
-  private def applyBatch(spark: SparkSession, storeTable: String,
-      batch: DataFrame, digestOf: Column => Column): Unit = {
-    val hwRow = Sources.readVersion(spark, storeTable)
-      .filter(col("k") === HwKey)
-      .agg(max(col("doc_id"))).head
-    val hw = if (hwRow.isNullAt(0)) 0L else hwRow.getLong(0)
-    // pin the replay-filtered range once: everything downstream (the
-    // emptiness probe, the high-water max, the dup guard, the netting
-    // window) reads this cache instead of re-scanning the CDF parquet
-    val fresh = batch
-      .filter(col("_commit_version").cast("long") > hw)
-      .filter(col("text").isNotNull).persist()
-    try applyFresh(spark, storeTable, fresh, digestOf)
-    finally { fresh.unpersist() }
-  }
-
   private def applyFresh(spark: SparkSession, storeTable: String,
-      fresh: DataFrame, digestOf: Column => Column): Unit = {
+      consumer: String, fresh: DataFrame,
+      digestOf: Column => Column): Unit = {
     // ONE driver action ([[FeedProbe]]) for the emptiness probe, high
     // water, and the doc_id-uniqueness guard — every driver action is
     // a full Spark job, per-micro-batch fixed latency at scale
@@ -173,20 +161,17 @@ object DedupStore {
       val memberRows = net.select(
         concat(lit("m:"), col("digest"), lit(":"), col("doc_id")).as("k"),
         col("digest"), col("doc_id"), col("op"))
-      val s2 = spark
-      import s2.implicits._
-      val ledger = Seq((HwKey, "", newHw)).toDF("k", "digest", "doc_id")
-        .withColumn("op", lit("upsert"))
       // pinned: mergeVersionEq consumes its input three times (key
       // write, upsert probe, batch write) — without the pin each action
       // re-runs the touched-digest membership re-read and the survivor
       // re-aggregation
       val merged =
-        memberRows.unionByName(survRows).unionByName(ledger)
+        memberRows.unionByName(survRows)
           .sortWithinPartitions("k").persist()
       try {
         preMergeCrashHook()
-        Sources.mergeVersionEq(spark, storeTable, merged, Seq("k"))
+        Sources.mergeVersionEq(spark, storeTable, merged, Seq("k"),
+          txn = Some(consumer -> newHw))
         ()
       } finally { merged.unpersist() }
     } finally { net.unpersist() }

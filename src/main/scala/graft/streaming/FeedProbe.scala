@@ -3,41 +3,38 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The shared per-drain ingestion probe of the doc-keyed store
-  * maintainers ([[DedupStore]], [[NearDupStore]]): ONE driver action
-  * computing the emptiness check, the high-water mark, and the
-  * doc_id-uniqueness guard (a doc_id committed twice in one version is
-  * ambiguous under replay — keyed state cannot tell "second copy
-  * inserted" from "same copy replayed" — so ingestion fails loudly).
-  * One definition keeps both stores' ingestion contracts in lockstep.
+/** The shared per-drain feed probes of the change-feed maintainers:
+  * the ledger filter every one of them applies first, and the
+  * one-driver-action probes of the doc-keyed stores ([[DedupStore]],
+  * [[NearDupStore]]) and the derived views ([[ClusterView]],
+  * [[VerdictView]]). The store probe also runs the doc_id-uniqueness
+  * guard (a doc_id committed twice in one version is ambiguous under
+  * replay — keyed state cannot tell "second copy inserted" from "same
+  * copy replayed" — so ingestion fails loudly). One definition keeps
+  * the maintainers' replay contracts in lockstep.
   */
-private[streaming] object FeedProbe {
+private[graft] object FeedProbe {
 
-  /** The derived-view replay contract shared by [[ClusterView]] and
-    * [[VerdictView]]: the applied high-water version lives in a
-    * single `#hw` ledger row (key `hwKey`, value in column `a`) of
-    * the view table itself. One definition so the two view
-    * maintainers' replay semantics cannot diverge. */
-  def appliedHw(spark: org.apache.spark.sql.SparkSession,
-      viewTable: String, hwKey: String): Long = {
-    val row = graft.sources.Sources.readVersion(spark, viewTable)
-      .filter(col("k") === hwKey)
-      .agg(max(col("a"))).head
-    if (row.isNullAt(0)) 0L else row.getLong(0)
+  /** The feed rows `table` has not applied yet: source versions above
+    * `consumer`'s `#txn` entry ([[graft.sources.Sources.appliedVersion]],
+    * a manifest read — no Spark job). A replayed batch, a crash after
+    * the commit and a fresh checkpoint's full replay all filter down to
+    * exactly the unapplied suffix. */
+  def unapplied(batch: DataFrame, table: String,
+      consumer: String): DataFrame = {
+    val applied = graft.sources.Sources.appliedVersion(table, consumer)
+    batch.filter(col("_commit_version").cast("long") > applied)
   }
 
-  /** ONE driver action over a replay-filtered view feed: total row
-    * count, new high water, and the count of rows in the maintainer's
-    * relevant key section. Returns None when the range is empty,
-    * otherwise Some((newHw, sectionRows)) — sectionRows == 0 is the
-    * ledger-only fast path. */
+  /** ONE driver action over a ledger-filtered view feed: Some(new high
+    * water) when the range carries rows of the maintainer's key
+    * section, None when it is empty or changes nothing in the view. */
   def probeSection(fresh: DataFrame,
-      sectionPrefix: String): Option[(Long, Long)] = {
-    val a = fresh.agg(count(lit(1)).as("n"),
-      max(col("_commit_version").cast("long")).as("hw"),
+      sectionPrefix: String): Option[Long] = {
+    val a = fresh.agg(max(col("_commit_version").cast("long")).as("hw"),
       sum(when(col("k").startsWith(sectionPrefix), 1L).otherwise(0L))
         .as("ns")).head
-    if (a.getLong(0) == 0L) None else Some((a.getLong(1), a.getLong(2)))
+    if (a.isNullAt(1) || a.getLong(1) == 0L) None else Some(a.getLong(0))
   }
 
   /** Returns None when the range carries no changes; otherwise

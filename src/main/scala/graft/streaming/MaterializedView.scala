@@ -25,9 +25,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    file-granular keyed merge — fact table untouched, view rewrite
   *    bounded by affected files. Dim deletes drop their view rows.
   *
-  * Both loops are effectively-once via the query-id-keyed batch ledger
-  * (replicateTable's device); the view is itself a graft table — time
-  * travel, stats, its own CDF — so downstream consumers can chain. */
+  * Every maintainer here is exactly-once through the `#txn` ledger
+  * ([[Sources.appliedVersion]]): a drain drops the source versions the
+  * view already records and records the highest one it applies in
+  * the same view commit, so neither a crash after that commit nor a
+  * restart on a fresh checkpoint re-applies an append or an additive
+  * merge. The view is itself a graft table — time travel, stats, its
+  * own CDF — so downstream consumers can chain. */
 object MaterializedView {
 
   /** Create the view table: declared schema = fact ⋈ dim schema (fact
@@ -45,19 +49,6 @@ object MaterializedView {
         "mv.joinKey" -> joinKey, "mv.factKey" -> factKey))
   }
 
-  private def marker(viewTable: String, checkpoint: String,
-      side: String, batchId: Long): java.nio.file.Path =
-    java.nio.file.Paths.get(viewTable, "_mv",
-      s"$side-${StreamingPipeline.checkpointQueryId(checkpoint)}",
-      s"batch-$batchId.done")
-
-  private def claim(m: java.nio.file.Path)(body: => Unit): Unit =
-    if (!java.nio.file.Files.exists(m)) {
-      body
-      java.nio.file.Files.createDirectories(m.getParent)
-      java.nio.file.Files.write(m, Array.emptyByteArray)
-    }
-
   /** Tail the FACT table's change feed: each commit's inserted rows
     * join the dimension head (broadcast) and append to the view. The
     * fact side must be append-only (the star-schema fact contract);
@@ -70,20 +61,23 @@ object MaterializedView {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        claim(marker(viewTable, checkpoint, "fact", batchId)) {
-          // one driver action: emptiness probe + append-only guard
-          val pr = batch.agg(count(lit(1)).as("n"),
-            sum(when(col("_change_type") =!= "insert", 1L).otherwise(0L))
-              .as("bad")).head
-          require(pr.getLong(0) == 0L || pr.getLong(1) == 0L,
-            "materialized view: the fact feed must be append-only")
-          val delta = batch.drop("_change_type", "_commit_version")
-          if (pr.getLong(0) > 0L) {
-            val dim = broadcast(Sources.readVersion(spark, dimTable))
-            Sources.commitVersion(delta.join(dim, joinKey), viewTable)
-            ()
-          }
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("mv.fact", factTable)
+        val fresh = FeedProbe.unapplied(batch, viewTable, consumer)
+        // one driver action: emptiness probe + append-only guard + the
+        // highest source version the commit applies
+        val pr = fresh.agg(count(lit(1)).as("n"),
+          sum(when(col("_change_type") =!= "insert", 1L).otherwise(0L))
+            .as("bad"),
+          max(col("_commit_version").cast("long")).as("hi")).head
+        require(pr.getLong(0) == 0L || pr.getLong(1) == 0L,
+          "materialized view: the fact feed must be append-only")
+        val delta = fresh.drop("_change_type", "_commit_version")
+        if (pr.getLong(0) > 0L) {
+          val dim = broadcast(Sources.readVersion(spark, dimTable))
+          Sources.commitVersion(delta.join(dim, joinKey), viewTable,
+            txn = Some(consumer -> pr.getLong(2)))
+          ()
         }
       }
       .start()
@@ -101,51 +95,53 @@ object MaterializedView {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        claim(marker(viewTable, checkpoint, "dim", batchId)) {
-          // last change per dim key decides its outcome (CDF apply
-          // rule). UNPINNED (r11 A/B): recomputing this batch-sized
-          // netting window per consumer measured cheaper than a cache
-          // build.
-          val w = Window.partitionBy(joinKey)
-            .orderBy(col("_commit_version").desc,
-              when(col("_change_type") === "insert", 1).otherwise(0).desc)
-          val last = batch.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-          locally {
-            // one driver action: the count is the emptiness probe
-            if (last.agg(count(lit(1))).head.getLong(0) > 0L) {
-              val changedKeys = broadcast(
-                last.select(joinKey).distinct())
-              val upserted = broadcast(
-                last.filter(col("_change_type") === "insert")
-                  .drop("_change_type", "_commit_version")
-                  .withColumn("__up", lit(1)))
-              val view = Sources.readVersion(spark, viewTable)
-              // affected view rows, re-joined to the NEW dim rows: rows
-              // whose dim key was deleted find no match and become keyed
-              // deletes; the rest refresh their dim attributes
-              val dimValueCols = upserted.columns
-                .filterNot(c => c == joinKey || c == "__up")
-              val factCols = view.columns.filterNot(dimValueCols.contains)
-              val affected = view.join(changedKeys, joinKey)
-                .select(factCols.map(col).toIndexedSeq: _*)
-              val refreshed = affected.join(upserted, Seq(joinKey), "left")
-              // pinned: the emptiness probe and the merge's actions
-              // would otherwise each re-run the view-side join
-              val changes = refreshed
-                .withColumn("op",
-                  when(col("__up").isNull, "delete").otherwise("upsert"))
-                .select((view.columns.map(col) :+ col("op"))
-                  .toIndexedSeq: _*).persist()
-              try {
-                if (changes.agg(count(lit(1))).head.getLong(0) > 0L) {
-                  Sources.mergeVersion(spark, viewTable, changes, factKey)
-                  ()
-                }
-              } finally { changes.unpersist() }
+      .foreachBatch { (feed: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("mv.dim", dimTable)
+        val batch = FeedProbe.unapplied(feed, viewTable, consumer)
+        // last change per dim key decides its outcome (CDF apply
+        // rule). UNPINNED (r11 A/B): recomputing this batch-sized
+        // netting window per consumer measured cheaper than a cache
+        // build.
+        val w = Window.partitionBy(joinKey)
+          .orderBy(col("_commit_version").desc,
+            when(col("_change_type") === "insert", 1).otherwise(0).desc)
+        val last = batch.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        // one driver action: the count is the emptiness probe, the
+        // max the ledger position the merge records
+        val pr = last.agg(count(lit(1)),
+          max(col("_commit_version").cast("long"))).head
+        if (pr.getLong(0) > 0L) {
+          val changedKeys = broadcast(
+            last.select(joinKey).distinct())
+          val upserted = broadcast(
+            last.filter(col("_change_type") === "insert")
+              .drop("_change_type", "_commit_version")
+              .withColumn("__up", lit(1)))
+          val view = Sources.readVersion(spark, viewTable)
+          // affected view rows, re-joined to the NEW dim rows: rows
+          // whose dim key was deleted find no match and become keyed
+          // deletes; the rest refresh their dim attributes
+          val dimValueCols = upserted.columns
+            .filterNot(c => c == joinKey || c == "__up")
+          val factCols = view.columns.filterNot(dimValueCols.contains)
+          val affected = view.join(changedKeys, joinKey)
+            .select(factCols.map(col).toIndexedSeq: _*)
+          val refreshed = affected.join(upserted, Seq(joinKey), "left")
+          // pinned: the emptiness probe and the merge's actions
+          // would otherwise each re-run the view-side join
+          val changes = refreshed
+            .withColumn("op",
+              when(col("__up").isNull, "delete").otherwise("upsert"))
+            .select((view.columns.map(col) :+ col("op"))
+              .toIndexedSeq: _*).persist()
+          try {
+            if (changes.agg(count(lit(1))).head.getLong(0) > 0L) {
+              Sources.mergeVersion(spark, viewTable, changes, factKey,
+                txn = Some(consumer -> pr.getLong(1)))
+              ()
             }
-          }
+          } finally { changes.unpersist() }
         }
       }
       .start()
@@ -182,8 +178,8 @@ object MaterializedView {
     * O(Δbase) + a file-granular merge bounded by touched groups: the
     * base table's history is NEVER re-aggregated, which at 100 TB is
     * the difference between a rollup costing megabytes and a full
-    * table scan per refresh. Effectively-once via the query-id-keyed
-    * batch ledger, like the star-join loops. */
+    * table scan per refresh. Exactly-once via the `#txn` ledger, like
+    * the star-join loops. */
   def maintainAggQuery(spark: SparkSession, baseTable: String,
       groupCol: String, valueCol: String, viewTable: String,
       checkpoint: String): StreamingQuery =
@@ -192,41 +188,43 @@ object MaterializedView {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        claim(marker(viewTable, checkpoint, "agg", batchId)) {
-          val sign = when(col("_change_type") === "insert", lit(1L))
-            .otherwise(lit(-1L))
-          val dec = col(valueCol).cast("decimal(28,4)")
-          // UNPINNED (r11 A/B, verdict item 1): each consumer — the
-          // emptiness probe, the state join, and through it the merge's
-          // key probe + rewrite — recomputes this CDC-batch-sized
-          // aggregate off the feed. Pinning it measured 4-5x MORE task
-          // time than the recompute (cache build overhead dwarfs a
-          // small map-side agg); r09's unpinned form was faster too.
-          val delta = batch
-            .groupBy(groupCol)
-            .agg(sum(sign).as("dn"),
-              sum(sign * dec).cast("decimal(28,4)").as("ds"))
-          locally {
-            // one driver action: the count is the emptiness probe
-            if (delta.agg(count(lit(1))).head.getLong(0) > 0L) {
-              // touched groups only — untouched view rows ride the
-              // merge's carried files unread
-              val cur = Sources.readVersion(spark, viewTable)
-              val merged = delta.join(cur, Seq(groupCol), "left")
-                .select(col(groupCol),
-                  (coalesce(col("n_rows"), lit(0L)) + col("dn"))
-                    .as("n_rows"),
-                  (coalesce(col("sum_val"), lit(BigDecimal(0))
-                    .cast("decimal(28,4)")) + coalesce(col("ds"),
-                    lit(BigDecimal(0)))).cast("decimal(28,4)")
-                    .as("sum_val"))
-              val changes = merged.withColumn("op",
-                when(col("n_rows") > 0, "upsert").otherwise("delete"))
-              Sources.mergeVersion(spark, viewTable, changes, groupCol)
-              ()
-            }
-          }
+      .foreachBatch { (feed: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("mv.agg", baseTable)
+        val batch = FeedProbe.unapplied(feed, viewTable, consumer)
+        val sign = when(col("_change_type") === "insert", lit(1L))
+          .otherwise(lit(-1L))
+        val dec = col(valueCol).cast("decimal(28,4)")
+        // UNPINNED (r11 A/B, verdict item 1): each consumer — the
+        // emptiness probe, the state join, and through it the merge's
+        // key probe + rewrite — recomputes this CDC-batch-sized
+        // aggregate off the feed. Pinning it measured 4-5x MORE task
+        // time than the recompute (cache build overhead dwarfs a
+        // small map-side agg); r09's unpinned form was faster too.
+        val delta = batch
+          .groupBy(groupCol)
+          .agg(sum(sign).as("dn"),
+            sum(sign * dec).cast("decimal(28,4)").as("ds"),
+            max(col("_commit_version").cast("long")).as("__cv"))
+        // one driver action: the count is the emptiness probe, the
+        // max the ledger position the merge records
+        val pr = delta.agg(count(lit(1)), max(col("__cv"))).head
+        if (pr.getLong(0) > 0L) {
+          // touched groups only — untouched view rows ride the
+          // merge's carried files unread
+          val cur = Sources.readVersion(spark, viewTable)
+          val merged = delta.join(cur, Seq(groupCol), "left")
+            .select(col(groupCol),
+              (coalesce(col("n_rows"), lit(0L)) + col("dn"))
+                .as("n_rows"),
+              (coalesce(col("sum_val"), lit(BigDecimal(0))
+                .cast("decimal(28,4)")) + coalesce(col("ds"),
+                lit(BigDecimal(0)))).cast("decimal(28,4)")
+                .as("sum_val"))
+          val changes = merged.withColumn("op",
+            when(col("n_rows") > 0, "upsert").otherwise("delete"))
+          Sources.mergeVersion(spark, viewTable, changes, groupCol,
+            txn = Some(consumer -> pr.getLong(1)))
+          ()
         }
       }
       .start()
@@ -277,59 +275,60 @@ object MaterializedView {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        claim(marker(viewTable, checkpoint, "topk", batchId)) {
-          // UNPINNED (r11 A/B): the touched set drives the emptiness
-          // probe, the semi-join, and the slot cross join — each
-          // recompute is a map-side distinct over the CDC batch,
-          // measured cheaper than a cache build
-          val touched = batch.select(groupCol).distinct()
-          locally {
-            // one driver action: emptiness probe + null-group guard (a
-            // null group would concat to a NULL gk, which mergeVersion
-            // can never retire — the view would accumulate one copy
-            // per touching batch)
-            val pr = touched.agg(count(lit(1)).as("n"),
-              sum(when(col(groupCol).isNull, 1L).otherwise(0L)).as("bad"))
-              .head
-            if (pr.getLong(0) > 0L) {
-              require(pr.getLong(1) == 0L,
-                s"top-k view: null $groupCol in the change feed — a " +
-                  "keyed slot for the null group is not well-defined")
-              val dec = col(valueCol).cast("decimal(28,4)")
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(groupCol)
-                .orderBy(dec.desc, col(keyCol).asc)
-              val ranked = Sources.readVersion(spark, baseTable)
-                .join(touched, Seq(groupCol), "left_semi")
-                .withColumn("rank", row_number().over(w).cast("long"))
-                .filter(col("rank") <= k)
-                .select(col(groupCol), col("rank"), col(keyCol),
-                  dec.as("val"),
-                  // presence marker: a slot is live iff the re-rank
-                  // filled it — null-probing keyCol would misread a
-                  // ranked row whose KEY is legitimately null
-                  lit(true).as("__up"))
-              // every touched group rewrites ALL k slots: a rank the
-              // re-rank no longer fills (group shrank, or vanished
-              // entirely) must leave the view
-              val slots = touched.crossJoin(broadcast(
-                spark.range(1, k + 1).select(col("id").as("rank"))))
-              // pinned: mergeVersion's key probe and rewrite would
-              // otherwise re-run the head re-rank per action
-              val changes = slots
-                .join(ranked, Seq(groupCol, "rank"), "left")
-                .select(
-                  concat(col(groupCol).cast("string"), lit(":"),
-                    col("rank")).as("gk"),
-                  col(groupCol), col("rank"), col(keyCol), col("val"),
-                  when(col("__up").isNull, "delete").otherwise("upsert")
-                    .as("op")).persist()
-              try Sources.mergeVersion(spark, viewTable, changes, "gk")
-              finally { changes.unpersist() }
-              ()
-            }
-          }
+      .foreachBatch { (feed: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("mv.topk", baseTable)
+        val batch = FeedProbe.unapplied(feed, viewTable, consumer)
+        // UNPINNED (r11 A/B): the touched set drives the emptiness
+        // probe, the semi-join, and the slot cross join — each
+        // recompute is a map-side distinct over the CDC batch,
+        // measured cheaper than a cache build
+        val touched = batch.groupBy(groupCol)
+          .agg(max(col("_commit_version").cast("long")).as("__cv"))
+        // one driver action: emptiness probe + null-group guard (a
+        // null group would concat to a NULL gk, which mergeVersion
+        // can never retire — the view would accumulate one copy
+        // per touching batch) + the ledger position
+        val pr = touched.agg(count(lit(1)).as("n"),
+          sum(when(col(groupCol).isNull, 1L).otherwise(0L)).as("bad"),
+          max(col("__cv")).as("hi"))
+          .head
+        if (pr.getLong(0) > 0L) {
+          require(pr.getLong(1) == 0L,
+            s"top-k view: null $groupCol in the change feed — a " +
+              "keyed slot for the null group is not well-defined")
+          val dec = col(valueCol).cast("decimal(28,4)")
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(groupCol)
+            .orderBy(dec.desc, col(keyCol).asc)
+          val ranked = Sources.readVersion(spark, baseTable)
+            .join(touched, Seq(groupCol), "left_semi")
+            .withColumn("rank", row_number().over(w).cast("long"))
+            .filter(col("rank") <= k)
+            .select(col(groupCol), col("rank"), col(keyCol),
+              dec.as("val"),
+              // presence marker: a slot is live iff the re-rank
+              // filled it — null-probing keyCol would misread a
+              // ranked row whose KEY is legitimately null
+              lit(true).as("__up"))
+          // every touched group rewrites ALL k slots: a rank the
+          // re-rank no longer fills (group shrank, or vanished
+          // entirely) must leave the view
+          val slots = touched.crossJoin(broadcast(
+            spark.range(1, k + 1).select(col("id").as("rank"))))
+          // pinned: mergeVersion's key probe and rewrite would
+          // otherwise re-run the head re-rank per action
+          val changes = slots
+            .join(ranked, Seq(groupCol, "rank"), "left")
+            .select(
+              concat(col(groupCol).cast("string"), lit(":"),
+                col("rank")).as("gk"),
+              col(groupCol), col("rank"), col(keyCol), col("val"),
+              when(col("__up").isNull, "delete").otherwise("upsert")
+                .as("op")).persist()
+          try Sources.mergeVersion(spark, viewTable, changes, "gk",
+            txn = Some(consumer -> pr.getLong(2)))
+          finally { changes.unpersist() }
+          ()
         }
       }
       .start()
@@ -381,85 +380,89 @@ object MaterializedView {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        claim(marker(viewTable, checkpoint, "distinct", batchId)) {
-          val sign = when(col("_change_type") === "insert", lit(1L))
-            .otherwise(lit(-1L))
-          // UNPINNED (r11 A/B): pair deltas feed the probe, the state
-          // join, and the merge input — each recompute is a map-side
-          // combinable aggregate over the CDC batch, measured cheaper
-          // than a cache build
-          val delta = batch
-            .groupBy(col(groupCol), col(valueCol).cast("string").as("__v"))
-            .agg(sum(sign).as("dref"))
-            .filter(col("dref") =!= 0L)
-          locally {
-            // one driver action: emptiness probe + null-key guard
-            val pr = delta.agg(count(lit(1)).as("n"),
-              sum(when(col(groupCol).isNull || col("__v").isNull, 1L)
-                .otherwise(0L)).as("bad")).head
-            if (pr.getLong(0) > 0L) {
-              require(pr.getLong(1) == 0L,
-                s"distinct view: null $groupCol/$valueCol in the " +
-                  "change feed — a refcount key for null is not " +
-                  "well-defined")
-              val pairKey = concat(lit("p:"),
-                col(groupCol).cast("string"), lit(":"), col("__v"))
-              val curPairs = Sources.readVersion(spark, viewTable)
-                .filter(col("gk").startsWith("p:"))
-                .select(col("gk"), col("n").as("cur"))
-              // EAGER (Tuning.pinEager): the merge references the
-              // refcounted pairs from two concurrent stages (group
-              // delta + pair rows) — unmaterialized, each would redo
-              // the state join
-              val pairs = graft.Tuning.pinEager(delta
-                .withColumn("gk", pairKey)
-                .join(curPairs, Seq("gk"), "left")
-                .select(col("gk"), col(groupCol), col("__v"),
-                  (coalesce(col("cur"), lit(0L)) + col("dref")).as("n"),
-                  // prior liveness rides the SAME state join — the
-                  // birth/death balance below needs no second pass
-                  // over the view's pair section
-                  when(coalesce(col("cur"), lit(0L)) > 0, 1L)
-                    .otherwise(0L).as("was_alive")), "mvchanges")
-              try {
-                // births/deaths: a pair's liveness (refcount > 0)
-                // crossing zero in either direction moves the group's
-                // distinct count by ±1
-                val groupDelta = pairs
-                  .withColumn("birth",
-                    when(col("n") > 0, 1L).otherwise(0L))
-                  .withColumn("dd",
-                    col("birth") - col("was_alive"))
-                  .groupBy(groupCol)
-                  .agg(sum(col("dd")).as("dd"))
-                  // a group whose liveness balance nets to zero keeps
-                  // its row untouched (its pair rows still merge)
-                  .filter(col("dd") =!= 0L)
-                val curGroups = Sources.readVersion(spark, viewTable)
-                  .filter(col("gk").startsWith("g:"))
-                  .select(col(groupCol).as("__g"), col("n").as("curg"))
-                val groupRows = groupDelta
-                  .join(curGroups,
-                    col(groupCol) === col("__g"), "left")
-                  .select(
-                    concat(lit("g:"), col(groupCol).cast("string"))
-                      .as("gk"),
-                    col(groupCol),
-                    (coalesce(col("curg"), lit(0L)) + col("dd")).as("n"))
-                val pairRows = pairs.select(col("gk"), col(groupCol),
-                  col("n"))
-                val changes = pairRows
-                  .unionByName(groupRows)
-                  .withColumn("op",
-                    when(col("n") > 0, "upsert").otherwise("delete"))
-                  .persist()
-                try Sources.mergeVersion(spark, viewTable, changes, "gk")
-                finally { changes.unpersist() }
-                ()
-              } finally { pairs.unpersist() }
-            }
-          }
+      .foreachBatch { (feed: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("mv.distinct", baseTable)
+        val batch = FeedProbe.unapplied(feed, viewTable, consumer)
+        val sign = when(col("_change_type") === "insert", lit(1L))
+          .otherwise(lit(-1L))
+        // UNPINNED (r11 A/B): pair deltas feed the probe, the state
+        // join, and the merge input — each recompute is a map-side
+        // combinable aggregate over the CDC batch, measured cheaper
+        // than a cache build
+        val pairDelta = batch
+          .groupBy(col(groupCol), col(valueCol).cast("string").as("__v"))
+          .agg(sum(sign).as("dref"),
+            max(col("_commit_version").cast("long")).as("__cv"))
+        val delta = pairDelta.filter(col("dref") =!= 0L)
+        // one driver action: emptiness probe + null-key guard + the
+        // ledger position (over every pair, netted-away ones included:
+        // their versions are applied too)
+        val live = col("dref") =!= 0L
+        val pr = pairDelta.agg(count(when(live, 1L)).as("n"),
+          sum(when(live && (col(groupCol).isNull || col("__v").isNull),
+            1L).otherwise(0L)).as("bad"),
+          max(col("__cv")).as("hi")).head
+        if (pr.getLong(0) > 0L) {
+          require(pr.getLong(1) == 0L,
+            s"distinct view: null $groupCol/$valueCol in the " +
+              "change feed — a refcount key for null is not " +
+              "well-defined")
+          val pairKey = concat(lit("p:"),
+            col(groupCol).cast("string"), lit(":"), col("__v"))
+          val curPairs = Sources.readVersion(spark, viewTable)
+            .filter(col("gk").startsWith("p:"))
+            .select(col("gk"), col("n").as("cur"))
+          // EAGER (Tuning.pinEager): the merge references the
+          // refcounted pairs from two concurrent stages (group
+          // delta + pair rows) — unmaterialized, each would redo
+          // the state join
+          val pairs = graft.Tuning.pinEager(delta
+            .withColumn("gk", pairKey)
+            .join(curPairs, Seq("gk"), "left")
+            .select(col("gk"), col(groupCol), col("__v"),
+              (coalesce(col("cur"), lit(0L)) + col("dref")).as("n"),
+              // prior liveness rides the SAME state join — the
+              // birth/death balance below needs no second pass
+              // over the view's pair section
+              when(coalesce(col("cur"), lit(0L)) > 0, 1L)
+                .otherwise(0L).as("was_alive")), "mvchanges")
+          try {
+            // births/deaths: a pair's liveness (refcount > 0)
+            // crossing zero in either direction moves the group's
+            // distinct count by ±1
+            val groupDelta = pairs
+              .withColumn("birth",
+                when(col("n") > 0, 1L).otherwise(0L))
+              .withColumn("dd",
+                col("birth") - col("was_alive"))
+              .groupBy(groupCol)
+              .agg(sum(col("dd")).as("dd"))
+              // a group whose liveness balance nets to zero keeps
+              // its row untouched (its pair rows still merge)
+              .filter(col("dd") =!= 0L)
+            val curGroups = Sources.readVersion(spark, viewTable)
+              .filter(col("gk").startsWith("g:"))
+              .select(col(groupCol).as("__g"), col("n").as("curg"))
+            val groupRows = groupDelta
+              .join(curGroups,
+                col(groupCol) === col("__g"), "left")
+              .select(
+                concat(lit("g:"), col(groupCol).cast("string"))
+                  .as("gk"),
+                col(groupCol),
+                (coalesce(col("curg"), lit(0L)) + col("dd")).as("n"))
+            val pairRows = pairs.select(col("gk"), col(groupCol),
+              col("n"))
+            val changes = pairRows
+              .unionByName(groupRows)
+              .withColumn("op",
+                when(col("n") > 0, "upsert").otherwise("delete"))
+              .persist()
+            try Sources.mergeVersion(spark, viewTable, changes, "gk",
+              txn = Some(consumer -> pr.getLong(2)))
+            finally { changes.unpersist() }
+            ()
+          } finally { pairs.unpersist() }
         }
       }
       .start()
@@ -514,55 +517,57 @@ object MaterializedView {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        claim(marker(viewTable, checkpoint, "aggfull", batchId)) {
-          val sign = when(col("_change_type") === "insert", lit(1L))
-            .otherwise(lit(-1L))
-          val dec = col(valueCol).cast("decimal(28,4)")
-          // UNPINNED (r11 A/B): the delta feeds the emptiness probe,
-          // the head semi-join, and the merge input — each recompute
-          // is a map-side combinable aggregate over the CDC batch,
-          // measured cheaper than a cache build
-          val delta = batch
+      .foreachBatch { (feed: DataFrame, _: Long) =>
+        val consumer = Sources.txnConsumer("mv.aggfull", baseTable)
+        val batch = FeedProbe.unapplied(feed, viewTable, consumer)
+        val sign = when(col("_change_type") === "insert", lit(1L))
+          .otherwise(lit(-1L))
+        val dec = col(valueCol).cast("decimal(28,4)")
+        // UNPINNED (r11 A/B): the delta feeds the emptiness probe,
+        // the head semi-join, and the merge input — each recompute
+        // is a map-side combinable aggregate over the CDC batch,
+        // measured cheaper than a cache build
+        val delta = batch
+          .groupBy(groupCol)
+          .agg(sum(sign).as("dn"),
+            sum(sign * dec).cast("decimal(28,4)").as("ds"),
+            max(col("_commit_version").cast("long")).as("__cv"))
+        // one driver action: emptiness probe + null-group guard (a
+        // null group can never be retired by the keyed merge — it
+        // would accumulate one row per touching batch) + the ledger
+        // position
+        val pr = delta.agg(count(lit(1)).as("n"),
+          sum(when(col(groupCol).isNull, 1L).otherwise(0L)).as("bad"),
+          max(col("__cv")).as("hi"))
+          .head
+        if (pr.getLong(0) > 0L) {
+          require(pr.getLong(1) == 0L,
+            s"aggregate view: null $groupCol in the change feed — " +
+              "a keyed rollup row for the null group is not " +
+              "well-defined")
+          val cur = Sources.readVersion(spark, viewTable)
+          // the non-invertible half: touched groups re-read at head
+          val headMm = Sources.readVersion(spark, baseTable)
+            .join(delta.select(groupCol), Seq(groupCol), "left_semi")
             .groupBy(groupCol)
-            .agg(sum(sign).as("dn"),
-              sum(sign * dec).cast("decimal(28,4)").as("ds"))
-          locally {
-            // one driver action: emptiness probe + null-group guard (a
-            // null group can never be retired by the keyed merge — it
-            // would accumulate one row per touching batch)
-            val pr = delta.agg(count(lit(1)).as("n"),
-              sum(when(col(groupCol).isNull, 1L).otherwise(0L)).as("bad"))
-              .head
-            if (pr.getLong(0) > 0L) {
-              require(pr.getLong(1) == 0L,
-                s"aggregate view: null $groupCol in the change feed — " +
-                  "a keyed rollup row for the null group is not " +
-                  "well-defined")
-              val cur = Sources.readVersion(spark, viewTable)
-              // the non-invertible half: touched groups re-read at head
-              val headMm = Sources.readVersion(spark, baseTable)
-                .join(delta.select(groupCol), Seq(groupCol), "left_semi")
-                .groupBy(groupCol)
-                .agg(min(dec).as("min_val"), max(dec).as("max_val"))
-              val changes = delta
-                .join(cur, Seq(groupCol), "left")
-                .select(col(groupCol),
-                  (coalesce(col("n_rows"), lit(0L)) + col("dn"))
-                    .as("n_rows"),
-                  (coalesce(col("sum_val"), lit(BigDecimal(0))
-                    .cast("decimal(28,4)")) + coalesce(col("ds"),
-                    lit(BigDecimal(0)))).cast("decimal(28,4)")
-                    .as("sum_val"))
-                .join(headMm, Seq(groupCol), "left")
-                .withColumn("op",
-                  when(col("n_rows") > 0, "upsert").otherwise("delete"))
-                .persist()
-              try Sources.mergeVersion(spark, viewTable, changes, groupCol)
-              finally { changes.unpersist() }
-              ()
-            }
-          }
+            .agg(min(dec).as("min_val"), max(dec).as("max_val"))
+          val changes = delta
+            .join(cur, Seq(groupCol), "left")
+            .select(col(groupCol),
+              (coalesce(col("n_rows"), lit(0L)) + col("dn"))
+                .as("n_rows"),
+              (coalesce(col("sum_val"), lit(BigDecimal(0))
+                .cast("decimal(28,4)")) + coalesce(col("ds"),
+                lit(BigDecimal(0)))).cast("decimal(28,4)")
+                .as("sum_val"))
+            .join(headMm, Seq(groupCol), "left")
+            .withColumn("op",
+              when(col("n_rows") > 0, "upsert").otherwise("delete"))
+            .persist()
+          try Sources.mergeVersion(spark, viewTable, changes, groupCol,
+            txn = Some(consumer -> pr.getLong(2)))
+          finally { changes.unpersist() }
+          ()
         }
       }
       .start()

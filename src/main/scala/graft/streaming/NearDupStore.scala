@@ -34,12 +34,13 @@ import graft.sources.Sources
   * are bounded by the affected docs' index footprint.
   *
   * One table, one merge: signature rows (`g:<doc>`), band rows
-  * (`b:<band>:<sig>:<doc>`), pair rows (`p:<a>:<b>`), and the replay
-  * ledger (`#hw`, one high-water row) share the key space and land in
-  * a SINGLE atomic [[Sources.mergeVersionEq]] per fresh version range
-  * — no partial-application crash window (the [[DedupStore]]
-  * contract; the fault spec kills before the merge and proves the
-  * store bitwise untouched + verbatim replay).
+  * (`b:<band>:<sig>:<doc>`) and pair rows (`p:<a>:<b>`) share the key
+  * space and land in a SINGLE atomic [[Sources.mergeVersionEq]] per
+  * fresh version range, whose manifest records the range's high-water
+  * source version in the store's `#txn` ledger — no
+  * partial-application crash window (the [[DedupStore]] contract; the
+  * fault spec kills before the merge and proves the store bitwise
+  * untouched + verbatim replay).
   *
   * 100 TB shape: per batch the work is O(changed docs) shingling +
   * minhashing, a band-key equi-join against the indexed band rows
@@ -57,9 +58,6 @@ import graft.sources.Sources
   * hot (band, sig) join keys are runtime skew AQE splits.
   */
 object NearDupStore {
-
-  /** Ledger key — sorts before every data prefix ("#" < "b"/"g"/"p"). */
-  val HwKey = "#hw"
 
   private val RowsPerBand = DedupOps.NumHashes / DedupOps.NumBands
 
@@ -112,29 +110,21 @@ object NearDupStore {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, storeTable, batch)
+        val consumer = Sources.txnConsumer("neardup", docsTable)
+        // null-text inserts carry no indexable content; deletes are
+        // kept regardless (the strip works off the stored signature,
+        // not text)
+        val fresh = FeedProbe.unapplied(batch, storeTable, consumer)
+          .filter(col("_change_type") =!= "insert" || col("text").isNotNull)
+          .persist()
+        try applyFresh(spark, storeTable, consumer, fresh)
+        finally { fresh.unpersist() }
       }
       .start()
   }
 
-  private def applyBatch(spark: SparkSession, storeTable: String,
-      batch: DataFrame): Unit = {
-    val hwRow = Sources.readVersion(spark, storeTable)
-      .filter(col("k") === HwKey)
-      .agg(max(col("a"))).head
-    val hw = if (hwRow.isNullAt(0)) 0L else hwRow.getLong(0)
-    // null-text inserts carry no indexable content; deletes are kept
-    // regardless (the strip works off the stored signature, not text)
-    val fresh = batch
-      .filter(col("_commit_version").cast("long") > hw)
-      .filter(col("_change_type") =!= "insert" || col("text").isNotNull)
-      .persist()
-    try applyFresh(spark, storeTable, fresh)
-    finally { fresh.unpersist() }
-  }
-
   private def applyFresh(spark: SparkSession, storeTable: String,
-      fresh: DataFrame): Unit = {
+      consumer: String, fresh: DataFrame): Unit = {
     // ONE driver action ([[FeedProbe]], the contract shared with
     // DedupStore) for the emptiness probe, high water, and the
     // doc_id-uniqueness guard
@@ -158,12 +148,12 @@ object NearDupStore {
       .select(col("doc_id"), col("text"),
         when(col("_change_type") === "insert", "upsert")
           .otherwise("delete").as("op")), "chainfresh")
-    try applyNet(spark, storeTable, net, newHw)
+    try applyNet(spark, storeTable, net, consumer -> newHw)
     finally { net.unpersist() }
   }
 
   private def applyNet(spark: SparkSession, storeTable: String,
-      net: DataFrame, newHw: Long): Unit = {
+      net: DataFrame, txn: (String, Long)): Unit = {
     // already unique: the netting window keeps exactly one row per
     // doc_id, so a distinct here would be a pure extra exchange
     val affected = net.select(col("doc_id"))
@@ -262,11 +252,6 @@ object NearDupStore {
                 lit(0L), (acc, x) => acc + x).cast("double")
                 / DedupOps.NumHashes).as("e"),
               lit("upsert").as("op"))
-          val s2 = spark
-          import s2.implicits._
-          val ledger = Seq((HwKey, newHw, -1L, "")).toDF("k", "a", "b", "v")
-            .withColumn("e", lit(null).cast("double"))
-            .withColumn("op", lit("upsert"))
           // NO per-key resolution pass: a key carrying both a delete
           // (sig-unchanged rewrite, re-created pair) and an upsert is
           // already resolved BY mergeVersionEq itself — the key retires
@@ -279,16 +264,16 @@ object NearDupStore {
           // union that changed nothing (guide §2.4).
           // pinned: mergeVersionEq consumes its input twice (the key
           // write, the batch write) — without the pin each action
-          // re-runs the whole 6-branch union and five store-section
+          // re-runs the whole 5-branch union and five store-section
           // scans (measured: the recomputes dominated the drain)
           val merged = oldBandDeletes
             .unionByName(oldPairDeletes).unionByName(gRows)
             .unionByName(newBandRows).unionByName(pairUpserts)
-            .unionByName(ledger)
             .sortWithinPartitions("k").persist()
           try {
             preMergeCrashHook()
-            Sources.mergeVersionEq(spark, storeTable, merged, Seq("k"))
+            Sources.mergeVersionEq(spark, storeTable, merged, Seq("k"),
+              txn = Some(txn))
             ()
           } finally { merged.unpersist() }
     } finally { newSigs.unpersist(); () }

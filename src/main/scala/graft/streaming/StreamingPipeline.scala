@@ -484,12 +484,12 @@ object StreamingPipeline {
     * apply rule), and the net change set lands on the replica through
     * [[Sources.mergeVersion]]'s file-granular copy-on-write.
     *
-    * Delivery: EFFECTIVELY once. The CDF source resumes at the
-    * checkpointed version and a batch-id marker on the replica absorbs
-    * Spark's routine re-delivery of the last uncommitted batch; the
-    * one residual window (crash between merge and marker) re-applies
-    * an idempotent keyed merge — replica CONTENT is always exact, at
-    * worst one content-identical extra version appears in its history.
+    * Delivery: EXACTLY once. Each merge records the highest source
+    * version it applies in the replica's `#txn` ledger, in the same
+    * commit, and every batch first drops the versions the replica
+    * already records — so Spark's re-delivery of the last uncommitted
+    * batch, a crash after the merge and a restart on a fresh
+    * checkpoint all apply nothing twice.
     *
     * Contract: `key` must be a non-null unique key of the source (a
     * null key fails the batch loudly — a keyed replica of null-keyed
@@ -529,8 +529,11 @@ object StreamingPipeline {
   def replicateTable(spark: SparkSession, srcTable: String,
       dstTable: String, key: String, checkpoint: String): StreamingQuery =
     replicateWith(spark, srcTable, dstTable, key, checkpoint,
-      (s, dst, changes) =>
-        graft.sources.Sources.mergeVersion(s, dst, changes, key))
+      (s, dst, changes, txn) => {
+        graft.sources.Sources.mergeVersion(s, dst, changes, key,
+          txn = Some(txn))
+        ()
+      })
 
   /** O(keys) streaming replication: the [[replicateTable]] contract
     * with each micro-batch landing as an EQUALITY-DELETE merge
@@ -547,8 +550,9 @@ object StreamingPipeline {
   def replicateTableEq(spark: SparkSession, srcTable: String,
       dstTable: String, key: String, checkpoint: String): StreamingQuery =
     replicateWith(spark, srcTable, dstTable, key, checkpoint,
-      (s, dst, changes) => {
-        graft.sources.Sources.mergeVersionEq(s, dst, changes, Seq(key))
+      (s, dst, changes, txn) => {
+        graft.sources.Sources.mergeVersionEq(s, dst, changes, Seq(key),
+          txn = Some(txn))
         ()
       })
 
@@ -564,7 +568,8 @@ object StreamingPipeline {
     * difference between nightly OPTIMIZE being free for downstream
     * replicas and costing every replica a full re-merge. In-place
     * updates apply as their postimage (the upsert retires the key);
-    * replay is safe (marker + idempotent eq merge).
+    * the net range starts above the replica's `#txn` ledger position,
+    * which the merge advances in the same commit.
     *
     * `transform` turns the replica into a DERIVED table: each net
     * upsert's full row maps through it before the keyed merge (the
@@ -586,18 +591,16 @@ object StreamingPipeline {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = java.nio.file.Paths.get(dstTable, "_replication",
-          checkpointQueryId(checkpoint), s"net-batch-$batchId.done")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val consumer = graft.sources.Sources.txnConsumer("replica", srcTable)
         // one driver action: emptiness probe + version range (a `return`
         // here would be a non-local return out of the already-finished
         // enclosing method — guard with the count instead)
-        val vs =
-          if (java.nio.file.Files.exists(marker)) null
-          else batch.agg(count(lit(1)),
+        val vs = FeedProbe.unapplied(batch, dstTable, consumer)
+          .agg(count(lit(1)),
             min(col("_commit_version").cast("long")),
             max(col("_commit_version").cast("long"))).head
-        if (vs != null && vs.getLong(0) > 0L) {
+        if (vs.getLong(0) > 0L) {
           val net = graft.sources.RowIds.readChangesLineage(spark,
               srcTable, (vs.getLong(1) - 1L).toInt, vs.getLong(2).toInt)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -652,13 +655,10 @@ object StreamingPipeline {
                 graft.sources.Sources.createEmptyTable(dstTable,
                   changes.drop("op").schema)
               graft.sources.Sources.mergeVersionEq(spark, dstTable,
-                changes, Seq(key))
+                changes, Seq(key), txn = Some(consumer -> vs.getLong(2)))
               ()
             } finally { changes.unpersist(); () }
           } finally { net.unpersist(); () }
-          java.nio.file.Files.createDirectories(marker.getParent)
-          java.nio.file.Files.write(marker, Array.emptyByteArray)
-          ()
         }
       }
       .start()
@@ -673,21 +673,12 @@ object StreamingPipeline {
     * to refresh after every corpus commit instead of a corpus rescan —
     * how a growing 100 TB crawl keeps its data-selection scores live.
     *
-    * EXACTLY-ONCE, not effectively-once: an additive merge cannot
-    * tolerate the marker-file protocol's residual window (a replayed
-    * add DOUBLE-COUNTS, where the replication loops' keyed LWW merge
-    * is naturally idempotent), and a fresh checkpoint replays the
-    * whole feed. So the ledger here is IN-BAND: ONE high-water
-    * sentinel row (`b = -999999`, `n_r` = highest applied source
-    * version — disjoint from the real bucket key space, upserted in
-    * place) rides the SAME atomic store commit as each delta; versions
-    * apply strictly in order, so the single max carries the full
-    * replay guarantee (the TextIndex ledger rule; legacy per-version
-    * `b = -(1000000+v)` sentinels read through the same max). Every
-    * batch first drops rows at or under the high-water mark, so any
-    * replay — duplicate batch, crash window, fresh checkpoint,
-    * different batching — is a provable no-op (DsirStoreSpec).
-    * Consumers read buckets as `b >= 0`. */
+    * EXACTLY-ONCE: a replayed add DOUBLE-COUNTS, so each delta's
+    * store commit records the highest source version it applies in
+    * the store's `#txn` ledger (the same atomic manifest publish), and
+    * every batch first drops the versions at or under it — any replay
+    * (duplicate batch, crash window, fresh checkpoint, different
+    * batching) is a provable no-op (DsirStoreSpec). */
   def maintainDsirQuery(spark: SparkSession, docsTable: String,
       storeTable: String, checkpoint: String): StreamingQuery = {
     if (graft.sources.Sources.latestVersion(storeTable) == 0)
@@ -704,25 +695,9 @@ object StreamingPipeline {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // replay filter against the ledger HIGH-WATER MARK (the
-        // TextIndex rule): versions apply strictly in order — the
-        // sentinel commits atomically with its delta — so a single
-        // max carries the full replay guarantee instead of one
-        // sentinel per version growing forever and a full set
-        // collect per micro-batch. Legacy per-version sentinels
-        // (b = -(1000000+v)) read through the same max. Probed FIRST
-        // (a tiny store scan) so the fresh pin's aggregate doubles as
-        // the batch-emptiness probe — no separate isEmpty jobs.
-        val hwRows = graft.sources.Sources
-          .readVersion(spark, storeTable)
-          .filter(col("b") < 0L)
-          .select(when(col("b") === -999999L, col("n_r"))
-            .otherwise(-col("b") - 1000000L).as("v"))
-          .agg(max(col("v"))).head
-        val hw = if (hwRows.isNullAt(0)) 0L else hwRows.getLong(0)
-        val signed = batch
-          .filter(col("_commit_version").cast("long") > hw)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val consumer = graft.sources.Sources.txnConsumer("dsir", docsTable)
+        val signed = FeedProbe.unapplied(batch, storeTable, consumer)
           .withColumn("__sign",
             when(col("_change_type") === "insert", lit(1L))
               .otherwise(lit(-1L)))
@@ -744,23 +719,17 @@ object StreamingPipeline {
           val hwAgg = delta.agg(max(col("__hw"))).head
           if (!hwAgg.isNullAt(0)) {
             val newHw = hwAgg.getLong(0)
-            // touched buckets (≤64 rows) + this batch's ledger rows
-            // keyed-merge into the store in ONE atomic commit
+            // touched buckets (≤64 rows) keyed-merge into the store
+            // in ONE atomic commit that records the ledger position
             val cur = graft.sources.Sources.readVersion(spark, storeTable)
-              .filter(col("b") >= 0L)
             val merged = delta.join(cur, Seq("b"), "left")
               .select(col("b"),
                 (coalesce(col("n_r"), lit(0L)) + col("dn_r")).as("n_r"),
                 (coalesce(col("n_t"), lit(0L)) + col("dn_t")).as("n_t"))
               .withColumn("op",
                 when(col("n_r") > 0, "upsert").otherwise("delete"))
-            val s2 = spark
-            import s2.implicits._
-            val ledger = Seq((-999999L, newHw, -1L))
-              .toDF("b", "n_r", "n_t")
-              .withColumn("op", lit("upsert"))
             graft.sources.Sources.mergeVersion(spark, storeTable,
-              merged.unionByName(ledger), "b")
+              merged, "b", txn = Some(consumer -> newHw))
             ()
           }
         } finally { delta.unpersist(); () }
@@ -770,60 +739,52 @@ object StreamingPipeline {
 
   private def replicateWith(spark: SparkSession, srcTable: String,
       dstTable: String, key: String, checkpoint: String,
-      merge: (SparkSession, String, DataFrame) => Unit): StreamingQuery =
+      merge: (SparkSession, String, DataFrame, (String, Long)) => Unit)
+      : StreamingQuery =
     spark.readStream.format("graft-cdf").option("path", srcTable).load()
       .writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Markers are keyed by (streaming query id, batch id), NOT batch
-        // id alone: restarting with a FRESH checkpoint resets batch ids
-        // to 0, and a bare batch-N.done from the previous run would make
-        // the new run silently skip real batches as already-applied —
-        // the replica would stop tracking the source. The query id lives
-        // in the checkpoint's metadata file and is regenerated whenever
-        // the checkpoint is recreated, so each run keeps its own ledger.
-        val marker = java.nio.file.Paths.get(dstTable, "_replication",
-          checkpointQueryId(checkpoint), s"batch-$batchId.done")
-        if (!java.nio.file.Files.exists(marker)) {
-          require(!batch.schema.fieldNames.contains("op"),
-            "replicateTable: the source schema reserves no 'op' column")
-          // one pass feeds the probes and the merge actions
-          val pinned = batch.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // one driver action: materializes the pin + emptiness
-            // probe + null-key guard
-            val pr = pinned.agg(count(lit(1)).as("n"),
-              sum(when(col(key).isNull, 1L).otherwise(0L)).as("bad"))
-              .head
-            require(pr.isNullAt(1) || pr.getLong(1) == 0L,
-              s"replicateTable: null $key in the change feed — a keyed " +
-                "replica of null-keyed rows is not well-defined")
-            if (pr.getLong(0) > 0L) {
-              val w = org.apache.spark.sql.expressions.Window
-                .partitionBy(key)
-                .orderBy(col("_commit_version").desc,
-                  when(col("_change_type") === "insert", 1)
-                    .otherwise(0).desc)
-              val changes = pinned
-                .withColumn("__rn", row_number().over(w))
-                .filter(col("__rn") === 1)
-                .withColumn("op", when(col("_change_type") === "insert",
-                  "upsert").otherwise("delete"))
-                .drop("_change_type", "_commit_version", "__rn")
-              if (graft.sources.Sources.latestVersion(dstTable) == 0)
-                graft.sources.Sources.createEmptyTable(dstTable,
-                  org.apache.spark.sql.types.StructType(
-                    changes.schema.fields.filterNot(_.name == "op")))
-              merge(spark, dstTable, changes)
-              java.nio.file.Files.createDirectories(marker.getParent)
-              java.nio.file.Files.write(marker, Array.emptyByteArray)
-              ()
-            }
-          } finally pinned.unpersist(false)
-        }
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // the ledger is keyed by the source table, not the checkpoint:
+        // a FRESH checkpoint replays the feed from version 0, and the
+        // filter drops everything the replica already records
+        val consumer = graft.sources.Sources.txnConsumer("replica", srcTable)
+        require(!batch.schema.fieldNames.contains("op"),
+          "replicateTable: the source schema reserves no 'op' column")
+        // one pass feeds the probes and the merge actions
+        val pinned = FeedProbe.unapplied(batch, dstTable, consumer).persist(
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // one driver action: materializes the pin + emptiness
+          // probe + null-key guard + the ledger position
+          val pr = pinned.agg(count(lit(1)).as("n"),
+            sum(when(col(key).isNull, 1L).otherwise(0L)).as("bad"),
+            max(col("_commit_version").cast("long")).as("hi"))
+            .head
+          require(pr.isNullAt(1) || pr.getLong(1) == 0L,
+            s"replicateTable: null $key in the change feed — a keyed " +
+              "replica of null-keyed rows is not well-defined")
+          if (pr.getLong(0) > 0L) {
+            val w = org.apache.spark.sql.expressions.Window
+              .partitionBy(key)
+              .orderBy(col("_commit_version").desc,
+                when(col("_change_type") === "insert", 1)
+                  .otherwise(0).desc)
+            val changes = pinned
+              .withColumn("__rn", row_number().over(w))
+              .filter(col("__rn") === 1)
+              .withColumn("op", when(col("_change_type") === "insert",
+                "upsert").otherwise("delete"))
+              .drop("_change_type", "_commit_version", "__rn")
+            if (graft.sources.Sources.latestVersion(dstTable) == 0)
+              graft.sources.Sources.createEmptyTable(dstTable,
+                org.apache.spark.sql.types.StructType(
+                  changes.schema.fields.filterNot(_.name == "op")))
+            merge(spark, dstTable, changes, consumer -> pr.getLong(2))
+          }
+        } finally pinned.unpersist(false)
       }
       .start()
 
@@ -1159,24 +1120,22 @@ object StreamingPipeline {
 
   /** Exactly-once versioned sink for `foreachBatch`: commits the
     * micro-batch into a [[graft.sources.Sources]] snapshot-versioned
-    * table, guarded by a per-batch-id marker file. `foreachBatch` is
+    * table with (`queryId`, `batchId`) in the commit's `#txn` ledger —
+    * Delta's streaming-sink idempotence. `foreachBatch` is
     * at-least-once by contract (a batch is re-delivered after a
-    * failure between sink write and checkpoint commit); the marker
+    * failure between sink write and checkpoint commit); the ledger
     * makes the re-delivery a no-op, so the table sees each batch's
-    * rows exactly once — idempotence via the batch id Spark already
-    * supplies, the same device a MERGE-on-batch-id table format uses.
+    * rows exactly once. The ledger is per query id, so a restart on a
+    * fresh checkpoint (new id, batch ids from 0) skips nothing.
     * Returns true iff this call performed the commit. */
   def commitVersionedBatch(batch: DataFrame, batchId: Long,
-      table: String): Boolean = {
-    val marker = java.nio.file.Paths.get(table, s"batch-$batchId.done")
-    if (java.nio.file.Files.exists(marker)) false
+      table: String, queryId: String): Boolean =
+    if (graft.sources.Sources.appliedVersion(table, queryId) >= batchId) false
     else {
-      val v = graft.sources.Sources.commitVersion(batch, table)
-      java.nio.file.Files.write(marker,
-        v.toString.getBytes("UTF-8"))
+      graft.sources.Sources.commitVersion(batch, table,
+        txn = Some(queryId -> batchId))
       true
     }
-  }
 
   /** The streaming ingest → versioned-table pipeline: every micro-batch
     * becomes one table version via [[commitVersionedBatch]], so the
@@ -1192,7 +1151,9 @@ object StreamingPipeline {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", s"$table/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitVersionedBatch(batch, batchId, s"$table/events_v"); ()
+        commitVersionedBatch(batch, batchId, s"$table/events_v",
+          checkpointQueryId(s"$table/_checkpoint"))
+        ()
       }
       .start()
 
@@ -1200,8 +1161,8 @@ object StreamingPipeline {
     * micro-batch is classified by the SHARED
     * [[graft.operators.TemporalOps.quarantineClassify]] rule and split
     * into a clean table and a quarantine (DLQ) table, each an
-    * exactly-once versioned sink ([[commitVersionedBatch]] batch-id
-    * markers per table, so a re-delivered batch is a no-op on BOTH
+    * exactly-once versioned sink ([[commitVersionedBatch]] ledger
+    * entries per table, so a re-delivered batch is a no-op on BOTH
     * sides and clean/DLQ can never double-apply out of step). Rejected
     * rows are kept AS DATA with their reason — replayable once the
     * producer is fixed, exactly what a production ingest needs from
@@ -1217,10 +1178,11 @@ object StreamingPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cls = graft.operators.TemporalOps.quarantineClassify(batch)
           .localCheckpoint()
+        val queryId = checkpointQueryId(s"$table/_checkpoint")
         commitVersionedBatch(cls.filter(col("status") === "valid"),
-          batchId, s"$table/clean")
+          batchId, s"$table/clean", queryId)
         commitVersionedBatch(cls.filter(col("status") =!= "valid"),
-          batchId, s"$table/dlq")
+          batchId, s"$table/dlq", queryId)
         ()
       }
       .start()

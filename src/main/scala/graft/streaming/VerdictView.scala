@@ -30,12 +30,10 @@ import graft.sources.Sources
   * docs always do), the cluster view re-solves its component and
   * re-upserts the assignment rows, and those view changes put the
   * doc's cluster in this maintainer's touched set — where the fresh
-  * token count is re-read. One table, one atomic merge, one-row
-  * replay ledger: the family's crash contract.
+  * token count is re-read. One table, one atomic merge carrying the
+  * range's `#txn` ledger position: the family's crash contract.
   */
 object VerdictView {
-
-  val HwKey = "#hw"
 
   /** Test seam: fires immediately before the single atomic merge. */
   private[graft] var preMergeCrashHook: () => Unit = () => ()
@@ -82,35 +80,24 @@ object VerdictView {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(spark, srcTable, clusterTable, verdictTable, batch)
+        applyBatch(spark, srcTable, clusterTable, verdictTable,
+          Sources.txnConsumer("verdict", clusterTable), batch)
       }
       .start()
   }
 
   private def applyBatch(spark: SparkSession, srcTable: String,
-      clusterTable: String, verdictTable: String,
+      clusterTable: String, verdictTable: String, consumer: String,
       batch: DataFrame): Unit = {
-    val hw = FeedProbe.appliedHw(spark, verdictTable, HwKey)
-    val fresh = batch
-      .filter(col("_commit_version").cast("long") > hw).persist()
+    val fresh = FeedProbe.unapplied(batch, verdictTable, consumer).persist()
     try {
       // one driver action ([[FeedProbe.probeSection]], the contract
       // shared with ClusterView): emptiness, high water, and the
-      // assignment-section count
-      val (newHw, nAsg) = FeedProbe.probeSection(fresh, "c:") match {
+      // assignment-section count (none -> the verdicts do not change
+      // and nothing commits)
+      val newHw = FeedProbe.probeSection(fresh, "c:") match {
+        case Some(hw) => hw
         case None => return
-        case Some(t) => t
-      }
-      val s2 = spark
-      import s2.implicits._
-      val ledger = Seq((HwKey, newHw, -1L, 0L, 0L))
-        .toDF("k", "a", "b", "n", "kp")
-        .withColumn("op", lit("upsert"))
-      if (nAsg == 0L) {
-        // ledger-only: the range carried no assignment changes
-        preMergeCrashHook()
-        Sources.mergeVersionEq(spark, verdictTable, ledger, Seq("k"))
-        return
       }
       // every cluster id the range mentions — deletes carry the OLD
       // assignment, inserts the NEW, so a doc's move touches both.
@@ -151,11 +138,11 @@ object VerdictView {
         // write, batch write) — without the pin each one re-runs the
         // stale anti-join and the view scan behind it
         val merged = fresh2.unionByName(stale)
-          .unionByName(ledger)
           .sortWithinPartitions("k").persist()
         try {
           preMergeCrashHook()
-          Sources.mergeVersionEq(spark, verdictTable, merged, Seq("k"))
+          Sources.mergeVersionEq(spark, verdictTable, merged, Seq("k"),
+            txn = Some(consumer -> newHw))
           ()
         } finally { merged.unpersist() }
       } finally { fresh2.unpersist() }

@@ -207,7 +207,7 @@ class AnnIndexSpec extends SparkTestBase {
     def drain(ckpt: String = s"$root/ckpt"): Unit =
       AnnIndex.maintainNetQuery(spark, src, idx, ckpt).awaitTermination()
     def content(): Set[(Long, Long, Seq[Int])] =
-      Sources.readVersion(spark, idx).filter(col("b_id") >= 0L)
+      Sources.readVersion(spark, idx)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           r.getSeq[Int](2))).toSet
     def rebuild(df: org.apache.spark.sql.DataFrame) =
@@ -216,12 +216,15 @@ class AnnIndexSpec extends SparkTestBase {
     drain()
     assert(content() === rebuild(emb.filter(col("vec_id") < 200)))
     // pure layout work: only the ledger bookmark lands — no data row
-    // of the index changes
+    // of the index changes, and the next range starts past the rewrite
     Sources.compactVersion(spark, src, 64L)
     val data0 = content()
     drain()
     assert(content() === data0,
       "a source compaction drain must not change one index row")
+    assert(Sources.appliedVersion(idx,
+      Sources.txnConsumer("ann_index", src)) ===
+      Sources.latestVersion(src).toLong)
     // a re-embed (id-preserving update) and a delete still track
     Sources.updateWhere(spark, src, col("vec_id") === 7,
       Map("embedding" -> reverse(col("embedding"))))
@@ -232,34 +235,39 @@ class AnnIndexSpec extends SparkTestBase {
         .withColumn("embedding", when(col("vec_id") === 7,
           reverse(col("embedding"))).otherwise(col("embedding"))))
     assert(content() === expected)
-    // fresh checkpoint: the in-band ledger makes the replay a no-op
+    // fresh checkpoint: the `#txn` ledger makes the replay a no-op
     drain(s"$root/ckpt2")
     assert(content() === expected)
   }
 
-  test("a negative vec_id fails maintenance loudly — the in-band " +
-    "ledger owns the negative b_id keyspace") {
+  test("a negative vec_id is indexed, and retired by its delete — no " +
+    "part of the b_id keyspace is reserved") {
     val root = tmp("ann-neg")
     val src = s"$root/emb"
     val idx = s"$root/idx"
     val emb = Tables.embeddings(spark, sf)
       .select("vec_id", "embedding", "label")
-    Sources.commitVersion(emb.filter(col("vec_id") < 100), src)
+    // ids -10..-8 replace 0..2
+    val shifted = emb.filter(col("vec_id") < 100)
+      .withColumn("vec_id", when(col("vec_id") < 3, col("vec_id") - 10L)
+        .otherwise(col("vec_id")))
+    Sources.commitVersion(shifted, src)
     AnnIndex.init(spark, src, idx)
     val model = AnnIndex.loadModel(idx)
-    val e = intercept[Exception] {
-      AnnIndex.encode(
-        emb.filter(col("vec_id") < 3)
-          .withColumn("vec_id", col("vec_id") - 10L), model)
-        .collect()
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("vec_id >= 0")),
-      s"expected the keyspace guard, got $e")
-    // non-negative ids encode unchanged
-    assert(AnnIndex.encode(emb.filter(col("vec_id") < 3), model)
-      .count() === 3L)
+    def drain(): Unit =
+      AnnIndex.maintainQuery(spark, src, idx, s"$root/ckpt").awaitTermination()
+    def content(): Set[(Long, Long, Seq[Int])] =
+      Sources.readVersion(spark, idx).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
+    def rebuild(df: org.apache.spark.sql.DataFrame) =
+      AnnIndex.encode(df, model).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).toSet
+    drain()
+    assert(content().map(_._1).count(_ < 0L) === 3)
+    assert(content() === rebuild(shifted))
+    Sources.deleteWhereDv(spark, src, col("vec_id") < 0L)
+    drain()
+    assert(!content().exists(_._1 < 0L), "a deleted negative id must retire")
+    assert(content() === rebuild(shifted.filter(col("vec_id") >= 0L)))
   }
 }

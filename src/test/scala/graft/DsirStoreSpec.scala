@@ -5,10 +5,10 @@ import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.functions._
 
 /** The streaming DSIR distribution store's exactly-once ledger
-  * ([[StreamingPipeline.maintainDsirQuery]]): an ADDITIVE store cannot
-  * ride the marker-file protocol (a replayed add double-counts), so
-  * each applied source version leaves an in-band sentinel row inside
-  * the same atomic commit — replays of any shape are no-ops. */
+  * ([[StreamingPipeline.maintainDsirQuery]]): an ADDITIVE store
+  * double-counts a replayed add, so each store commit records its
+  * applied source version in the `#txn` ledger of the same manifest —
+  * replays of any shape are no-ops. */
 class DsirStoreSpec extends SparkTestBase {
 
   test("fresh-checkpoint replay of the whole feed is a provable no-op; " +
@@ -29,7 +29,7 @@ class DsirStoreSpec extends SparkTestBase {
     val s1 = buckets()
     assert(s1.nonEmpty && s1.map(_._2).sum > 0)
     // FRESH checkpoint: the stream replays versions 1..2 from scratch —
-    // without the in-band ledger this would double every count
+    // without the ledger this would double every count
     StreamingPipeline.maintainDsirQuery(spark, src, store,
       root.resolve("ck2").toString).awaitTermination()
     assert(buckets() === s1,

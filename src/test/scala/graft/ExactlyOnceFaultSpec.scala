@@ -4,11 +4,11 @@ import graft.sources.Sources
 import graft.streaming.StreamingPipeline
 import org.apache.spark.sql.functions._
 
-/** Fault-injection specs for the exactly-once machinery: the round-5
-  * hardening (batch-keyed dedup store, atomic epoch markers,
-  * publish-failure cleanup, query-id-keyed replication ledger) shipped
-  * behind happy-path tests only — these exercise the CRASH and REPLAY
-  * scenarios that code exists for. */
+/** Fault-injection specs for the exactly-once machinery — the `#txn`
+  * ledger every change-feed maintainer and streaming sink records in
+  * the commit it guards, the batch-keyed dedup store, publish-failure
+  * cleanup — exercising the CRASH and REPLAY scenarios that code
+  * exists for. */
 class ExactlyOnceFaultSpec extends SparkTestBase {
 
   private def tmp(name: String): String = {
@@ -74,15 +74,14 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
       "post-replay batches must still match historical signatures")
   }
 
-  test("an epoch whose publish FAILS releases its claim and deletes its " +
-    "files — the retry is a fresh claim, never a mistaken duplicate") {
+  test("an epoch whose publish FAILS records no ledger entry and deletes " +
+    "its files — the retry publishes once, its replay nothing") {
     val root = tmp("pubfail")
     val dir = s"$root/t"
     import org.apache.spark.sql.types._
     // declared schema k BOOLEAN vs epoch write schema k LONG (upcasts
     // in neither direction): the declared-carry evolution check throws
-    // BEFORE any manifest publish — a deterministic injection at
-    // exactly the claim->publish window
+    // BEFORE any manifest publish — a deterministic publish failure
     Sources.createEmptyTable(dir, StructType(Seq(StructField("k", BooleanType))))
     val writeSchema = StructType(Seq(StructField("k", LongType)))
     val sw = new graft.sources.GraftStreamingWrite(spark, dir, writeSchema,
@@ -98,31 +97,38 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
       java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(p))
       p
     }
-    val f1 = stage("epoch-fail-1")
-    val marker = java.nio.file.Paths.get(dir, "_streams", "q-pubfail",
-      "e5.commit")
-    val vBefore = Sources.latestVersion(dir)
-    intercept[IllegalArgumentException] {
-      sw.commit(5L, Array(graft.sources.GraftWriteMessage(Seq(f1))))
+    def commit(name: String): String = {
+      val f = stage(name)
+      sw.commit(5L, Array(graft.sources.GraftWriteMessage(Seq(f))))
+      f
     }
+    val vBefore = Sources.latestVersion(dir)
+    val f1 = s"$dir/data/epoch-fail-1.parquet"
+    intercept[IllegalArgumentException] { commit("epoch-fail-1") }
     assert(Sources.latestVersion(dir) === vBefore, "nothing published")
-    assert(!java.nio.file.Files.exists(marker),
-      "a failed publish must release the epoch claim")
+    assert(Sources.appliedVersion(dir, "q-pubfail") === -1L,
+      "a failed publish must leave no ledger entry")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(f1)),
       "a failed publish must delete the stranded task files")
-    // the RETRY claims afresh — were the marker left 'pending', the
-    // retry would adopt the deleted files and publish an empty epoch
-    val f2 = stage("epoch-fail-2")
-    intercept[IllegalArgumentException] {
-      sw.commit(5L, Array(graft.sources.GraftWriteMessage(Seq(f2))))
-    }
-    assert(!java.nio.file.Files.exists(marker))
-    assert(Sources.latestVersion(dir) === vBefore)
+    // the operator fixes the schema; the RETRY publishes exactly once
+    Sources.alterSchema(dir, writeSchema)
+    val vFixed = Sources.latestVersion(dir)
+    val f2 = commit("epoch-retry")
+    assert(Sources.latestVersion(dir) === vFixed + 1)
+    assert(Sources.appliedVersion(dir, "q-pubfail") === 5L)
+    assert(Sources.readVersion(spark, dir).count() === 5L)
+    // a crash AFTER the publish replays the epoch: it publishes nothing
+    // and deletes its duplicate files
+    val f3 = commit("epoch-replay")
+    assert(Sources.latestVersion(dir) === vFixed + 1)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(f2)))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(f3)))
+    assert(Sources.readVersion(spark, dir).count() === 5L)
   }
 
-  test("a hand-corrupted epoch marker fails LOUDLY instead of guessing " +
+  test("a hand-corrupted ledger entry fails LOUDLY instead of guessing " +
     "at re-publish") {
-    val root = tmp("tornmarker")
+    val root = tmp("tornledger")
     val dir = s"$root/t"
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("k", LongType)))
@@ -131,13 +137,13 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
     val part = new java.io.File(s"$root/payload").listFiles()
       .find(_.getName.endsWith(".parquet")).get
     Sources.commitVersion(spark.read.parquet(s"$root/payload"), dir)
-    // external corruption: a marker that is neither pending nor
-    // committed (the atomic claim/transition protocol cannot produce
-    // this state — only outside interference can)
-    val mdir = java.nio.file.Paths.get(dir, "_streams", "q-torn")
-    java.nio.file.Files.createDirectories(mdir)
-    java.nio.file.Files.write(mdir.resolve("e2.commit"),
-      "garbage-state\n/nonexistent".getBytes("UTF-8"))
+    // external corruption: an entry whose position does not parse (the
+    // atomic manifest publish cannot produce this — only outside
+    // interference can); read as "never applied" it would re-publish
+    val head = java.nio.file.Paths.get(dir,
+      s"v${Sources.latestVersion(dir)}.manifest")
+    java.nio.file.Files.write(head, "\n#txn\tq-torn\tgarbage".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
     val sw = new graft.sources.GraftStreamingWrite(spark, dir, schema, "q-torn")
     val replay = s"$dir/data/torn-replay.parquet"
     java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(replay))
@@ -145,13 +151,14 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
     val e = intercept[IllegalStateException] {
       sw.commit(2L, Array(graft.sources.GraftWriteMessage(Seq(replay))))
     }
-    assert(e.getMessage.contains("unparsable epoch marker"))
+    assert(e.getMessage.contains("malformed ledger line"))
     assert(Sources.latestVersion(dir) === vBefore,
       "corruption must block publication, not double it")
   }
 
   test("replication restarted with a FRESH checkpoint keeps tracking: " +
-    "the ledger is query-id-keyed, so reset batch ids skip nothing") {
+    "the ledger is keyed by the source table, so the full replay " +
+    "filters down to the unapplied suffix") {
     import spark.implicits._
     val root = tmp("fresh-ckpt")
     val src = s"$root/src"
@@ -167,6 +174,7 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
       Sources.readVersion(spark, t).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(content(dst) === content(src))
+    val dstV = Sources.latestVersion(dst)
     // source advances, then the operator LOSES the checkpoint (the
     // classic ops accident) and restarts replication from scratch
     Sources.mergeVersion(spark, src,
@@ -176,18 +184,22 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
     val q2 = StreamingPipeline.replicateTable(spark, src, dst, "k",
       s"$root/ckptB")
     q2.awaitTermination()
-    // a batch-id-only ledger would see dst/_replication/batch-0.done
-    // from run A and silently skip run B's batch 0 — the replica would
-    // freeze at the old state. The query-id key gives run B its own
-    // ledger; the keyed merge re-applies idempotently.
+    // run B replays the feed from version 0; the ledger drops version
+    // 1, so only the merge applies — one replica commit, not two
     assert(content(dst) === content(src),
       "fresh-checkpoint restart must keep tracking the source")
     assert(content(dst)(7L) === "v7-updated")
     assert(!content(dst).contains(13L))
-    val ledgers = Option(new java.io.File(s"$dst/_replication").listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory).map(_.getName).toSet
-    assert(ledgers.size === 2,
-      s"each run keeps its own query-id ledger, got $ledgers")
+    assert(Sources.latestVersion(dst) === dstV + 1)
+    val consumer = Sources.txnConsumer("replica", src)
+    assert(Sources.appliedVersion(dst, consumer) ===
+      Sources.latestVersion(src).toLong)
+    import scala.jdk.CollectionConverters._
+    val entries = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(
+      dst, s"v${Sources.latestVersion(dst)}.manifest")).asScala
+      .filter(_.startsWith("#txn"))
+    assert(entries === Seq(s"#txn\t$consumer\t${Sources.latestVersion(src)}"),
+      s"both runs share ONE ledger entry, got $entries")
   }
 
   test("checkpointQueryId: parses the checkpoint metadata id, FAILS " +
@@ -404,5 +416,239 @@ class ExactlyOnceFaultSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got === want,
       "the recovery drain must land the crashed range exactly once")
+  }
+
+  // ---- restart after a crash, and on a fresh checkpoint -----------------
+  //
+  // One table-driven test per change-feed consumer: drain two source
+  // commits, then restart the consumer in (a) the state a crash right
+  // after its last commit leaves — the checkpoint's last `commits/N`
+  // entry missing, so Spark delivers that batch again — and (b) on a
+  // brand-new checkpoint, whose feed replays from version 0. Either
+  // way the consumer table must equal a batch recompute from the
+  // source head: an append or an additive merge applied twice would
+  // double-count.
+
+  /** A consumer under test. `init` makes the source's first commit
+    * and the consumer table, `second` the source's second commit,
+    * `drain` one AvailableNow run on a checkpoint; `got`/`want` render
+    * the consumer table and the batch recompute as sorted rows. */
+  private case class RestartCase(name: String,
+      init: String => Unit, second: String => Unit,
+      drain: (String, String) => Unit,
+      got: String => Seq[String], want: String => Seq[String])
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val cols = df.columns.sorted
+    df.select(cols.map(col).toIndexedSeq: _*).collect()
+      .map(_.toSeq.mkString("|")).toSeq.sorted
+  }
+
+  /** (k, g, v, c): `g` groups, `v` a decimal measure, `c` a small
+    * distinct-value domain. */
+  private def baseRows(lo: Long, hi: Long): org.apache.spark.sql.DataFrame =
+    spark.range(lo, hi).select(col("id").as("k"),
+      pmod(col("id"), lit(7L)).as("g"),
+      (col("id") * lit(1.25)).cast("decimal(10,2)").as("v"),
+      pmod(col("id"), lit(5L)).as("c"))
+
+  private def restartCases: Seq[RestartCase] = {
+    import graft.streaming.MaterializedView
+    import graft.functions.AnnIndex
+    def src(r: String) = s"$r/src"
+    def out(r: String) = s"$r/out"
+    def dim(r: String) = s"$r/dim"
+    def view(r: String) = sortedRows(Sources.readVersion(spark, out(r)))
+    def appendBase(lo: Long, hi: Long)(r: String): Unit = {
+      Sources.commitVersion(baseRows(lo, hi), src(r)); ()
+    }
+    def commitDim(r: String): Unit = {
+      Sources.commitVersion(spark.range(0, 7).select(col("id").as("g"),
+        concat(lit("G"), col("id")).as("gname")), dim(r)); ()
+    }
+    def star(r: String) = sortedRows(Sources.readVersion(spark, src(r))
+      .join(Sources.readVersion(spark, dim(r)), "g"))
+    val dec = col("v").cast("decimal(28,4)")
+    def aggWant(r: String, full: Boolean) = {
+      val base = Sources.readVersion(spark, src(r)).groupBy("g")
+      sortedRows(if (!full) base.agg(count(lit(1)).as("n_rows"),
+          sum(dec).cast("decimal(28,4)").as("sum_val"))
+        else base.agg(count(lit(1)).as("n_rows"),
+          sum(dec).cast("decimal(28,4)").as("sum_val"),
+          min(dec).as("min_val"), max(dec).as("max_val")))
+    }
+    def replica(kind: String,
+        start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery,
+        lineage: Boolean = false) =
+      RestartCase(kind,
+        r => {
+          appendBase(0, 40)(r)
+          if (lineage) graft.sources.RowIds.enableRowIds(src(r))
+        },
+        appendBase(40, 80),
+        (r, ck) => start(r, ck).awaitTermination(),
+        r => sortedRows(Sources.readVersion(spark, out(r))
+          .select("k", "g", "v", "c")),
+        r => sortedRows(Sources.readVersion(spark, src(r))
+          .select("k", "g", "v", "c")))
+    def docs = Tables.documents(spark, sf).select("doc_id", "text", "lang")
+      .filter(col("doc_id") < 150)
+    def emb = Tables.embeddings(spark, sf)
+      .select("vec_id", "embedding", "label")
+    Seq(
+      RestartCase("mv.fact",
+        r => {
+          appendBase(0, 40)(r); commitDim(r)
+          MaterializedView.init(spark, src(r), dim(r), "g", "k", out(r))
+        },
+        appendBase(40, 80),
+        (r, ck) => MaterializedView.maintainFactQuery(spark, src(r), dim(r),
+          "g", out(r), ck).awaitTermination(),
+        view, star),
+      RestartCase("mv.dim",
+        r => {
+          appendBase(0, 40)(r); commitDim(r)
+          MaterializedView.init(spark, src(r), dim(r), "g", "k", out(r))
+          MaterializedView.maintainFactQuery(spark, src(r), dim(r), "g",
+            out(r), s"$r/ck-fact").awaitTermination()
+        },
+        r => {
+          Sources.mergeVersion(spark, dim(r), spark.range(1, 3).select(
+            col("id").as("g"), concat(lit("X"), col("id")).as("gname"),
+            lit("upsert").as("op")), "g"); ()
+        },
+        (r, ck) => MaterializedView.maintainDimQuery(spark, dim(r), "g", "k",
+          out(r), ck).awaitTermination(),
+        view, star),
+      RestartCase("mv.agg",
+        r => {
+          appendBase(0, 40)(r)
+          MaterializedView.initAgg(spark, src(r), "g", "v", out(r))
+        },
+        appendBase(40, 80),
+        (r, ck) => MaterializedView.maintainAggQuery(spark, src(r), "g", "v",
+          out(r), ck).awaitTermination(),
+        view, r => aggWant(r, full = false)),
+      RestartCase("mv.topk",
+        r => {
+          appendBase(0, 40)(r)
+          MaterializedView.initTopK(spark, src(r), "g", "v", "k", out(r))
+        },
+        appendBase(40, 80),
+        (r, ck) => MaterializedView.maintainTopKQuery(spark, src(r), "g", "v",
+          "k", 3, out(r), ck).awaitTermination(),
+        view,
+        r => sortedRows(Sources.readVersion(spark, src(r))
+          .withColumn("rank", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy("g")
+              .orderBy(dec.desc, col("k").asc)).cast("long"))
+          .filter(col("rank") <= 3)
+          .select(concat(col("g").cast("string"), lit(":"), col("rank"))
+            .as("gk"), col("g"), col("rank"), col("k"), dec.as("val")))),
+      RestartCase("mv.distinct",
+        r => {
+          appendBase(0, 40)(r)
+          MaterializedView.initDistinct(spark, src(r), "g", "c", out(r))
+        },
+        appendBase(40, 80),
+        (r, ck) => MaterializedView.maintainDistinctQuery(spark, src(r), "g",
+          "c", out(r), ck).awaitTermination(),
+        view,
+        r => {
+          val b = Sources.readVersion(spark, src(r))
+          sortedRows(b.groupBy("g", "c").agg(count(lit(1)).as("n"))
+            .select(concat(lit("p:"), col("g").cast("string"), lit(":"),
+              col("c").cast("string")).as("gk"), col("g"), col("n"))
+            .unionByName(b.groupBy("g").agg(countDistinct("c").as("n"))
+              .select(concat(lit("g:"), col("g").cast("string")).as("gk"),
+                col("g"), col("n"))))
+        }),
+      RestartCase("mv.aggfull",
+        r => {
+          appendBase(0, 40)(r)
+          MaterializedView.initAggFull(spark, src(r), "g", "v", out(r))
+        },
+        appendBase(40, 80),
+        (r, ck) => MaterializedView.maintainAggFullQuery(spark, src(r), "g",
+          "v", out(r), ck).awaitTermination(),
+        view, r => aggWant(r, full = true)),
+      replica("replicateTable", (r, ck) =>
+        StreamingPipeline.replicateTable(spark, src(r), out(r), "k", ck)),
+      replica("replicateTableEq", (r, ck) =>
+        StreamingPipeline.replicateTableEq(spark, src(r), out(r), "k", ck)),
+      replica("replicateTableNet", (r, ck) =>
+        StreamingPipeline.replicateTableNet(spark, src(r), out(r), "k", ck),
+        lineage = true),
+      RestartCase("AnnIndex.maintainQuery",
+        r => {
+          Sources.commitVersion(emb.filter(col("vec_id") < 60), src(r))
+          AnnIndex.init(spark, src(r), out(r))
+        },
+        r => {
+          Sources.commitVersion(
+            emb.filter(col("vec_id") >= 60 && col("vec_id") < 100), src(r))
+          ()
+        },
+        (r, ck) => AnnIndex.maintainQuery(spark, src(r), out(r), ck)
+          .awaitTermination(),
+        view,
+        r => sortedRows(AnnIndex.encode(Sources.readVersion(spark, src(r)),
+          AnnIndex.loadModel(out(r))))),
+      RestartCase("dsir",
+        r => {
+          Sources.commitVersion(docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+            src(r)); ()
+        },
+        r => {
+          Sources.commitVersion(docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
+            src(r)); ()
+        },
+        (r, ck) => StreamingPipeline.maintainDsirQuery(spark, src(r), out(r),
+          ck).awaitTermination(),
+        view,
+        r => sortedRows(graft.functions.TextOps
+          .dsirBuckets(Sources.readVersion(spark, src(r)),
+            passthrough = Seq("lang"))
+          .groupBy("b").agg(count(lit(1)).as("n_r"),
+            count_if(col("lang") === "en").as("n_t"))))
+    )
+  }
+
+  /** Drain both source commits as two batches; returns the checkpoint. */
+  private def drainTwice(c: RestartCase, root: String): String = {
+    val ck = s"$root/ck"
+    c.init(root)
+    c.drain(root, ck)
+    c.second(root)
+    c.drain(root, ck)
+    assert(c.got(root) === c.want(root), s"${c.name}: before the restart")
+    ck
+  }
+
+  restartCases.foreach { c =>
+    test(s"${c.name}: a crash after the last commit re-delivers that " +
+      "batch, and the restart applies it once") {
+      val root = tmp(s"restart-a-${c.name}")
+      val ck = drainTwice(c, root)
+      // the crash state: the consumer table holds the batch, the
+      // checkpoint does not record it as done
+      val commits = java.nio.file.Paths.get(ck, "commits")
+      val last = commits.toFile.list().filter(_.forall(_.isDigit))
+        .map(_.toLong).max
+      assert(last >= 1L, s"${c.name}: expected two drained batches")
+      java.nio.file.Files.delete(commits.resolve(last.toString))
+      java.nio.file.Files.deleteIfExists(commits.resolve(s".$last.crc"))
+      c.drain(root, ck)
+      assert(c.got(root) === c.want(root),
+        s"${c.name}: the re-delivered batch was applied twice")
+    }
+    test(s"${c.name}: a restart on a fresh checkpoint replays the whole " +
+      "feed and applies none of it twice") {
+      val root = tmp(s"restart-b-${c.name}")
+      drainTwice(c, root)
+      c.drain(root, s"$root/ck-fresh")
+      assert(c.got(root) === c.want(root),
+        s"${c.name}: the fresh checkpoint's replay was applied twice")
+    }
   }
 }

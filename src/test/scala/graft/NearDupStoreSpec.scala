@@ -105,7 +105,6 @@ class NearDupStoreSpec extends SparkTestBase {
     // column b is a doc reference only on pair rows (band rows reuse it
     // as the band index) — check each section by its own key meaning
     val doc1Keys = Sources.readVersion(spark, store)
-      .filter(col("k") =!= NearDupStore.HwKey)
       .filter(col("a") === 1L ||
         (col("k").startsWith("p:") && col("b") === 1L)).count()
     assert(doc1Keys == 0L, "erased doc still referenced in the index")
@@ -120,12 +119,17 @@ class NearDupStoreSpec extends SparkTestBase {
     // many small commits -> fragmented table worth compacting
     base.foreach(d => Sources.commitVersion(docsDf(Seq(d)), src))
     drain(src, store, ck)
-    val before = storeRows(store).filterNot(_._1 == NearDupStore.HwKey)
+    val before = storeRows(store)
     Sources.compactVersion(spark, src, targetRecordsPerFile = 1000L)
     drain(src, store, ck)
-    val after = storeRows(store).filterNot(_._1 == NearDupStore.HwKey)
+    val after = storeRows(store)
     assert(after == before,
       "a pure rewrite churned the index — rewrites must net to no-ops")
+    // the store holds data rows only; the applied position lives in
+    // its `#txn` ledger, at the compacted source version
+    assert(Sources.appliedVersion(store,
+      Sources.txnConsumer("neardup", src)) ==
+      Sources.latestVersion(src).toLong)
     assert(storedPairs(store) == expectedPairs(docsDf(base)))
   }
 

@@ -596,15 +596,25 @@ class StreamingSpec extends SparkTestBase {
     val total = Sources.readVersion(spark, table).count()
     assert(total === Tables.events(spark, sf).count())
     // re-deliver "batch 0" by hand (foreachBatch is at-least-once):
-    // the marker absorbs it — no new version, no new rows
+    // the query's ledger entry absorbs it — no new version, no new rows
+    val queryId = StreamingPipeline.checkpointQueryId(s"$root/t/_checkpoint")
+    assert(Sources.appliedVersion(table, queryId) >= 0L)
     val replay = Tables.events(spark, sf).limit(10)
-    val did = StreamingPipeline.commitVersionedBatch(replay, 0L, table)
+    val did = StreamingPipeline.commitVersionedBatch(replay, 0L, table,
+      queryId)
     assert(!did)
     assert(Sources.latestVersion(table) === v)
     assert(Sources.readVersion(spark, table).count() === total)
     // a NEW batch id commits and is visible
-    assert(StreamingPipeline.commitVersionedBatch(replay, 99999L, table))
+    assert(StreamingPipeline.commitVersionedBatch(replay, 99999L, table,
+      queryId))
     assert(Sources.readVersion(spark, table).count() === total + 10)
+    // a restart on a fresh checkpoint (a new query id whose batch ids
+    // start at 0 again) keeps its own entry and skips nothing
+    assert(StreamingPipeline.commitVersionedBatch(replay, 0L, table,
+      "fresh-query"))
+    assert(Sources.readVersion(spark, table).count() === total + 20)
+    assert(Sources.appliedVersion(table, queryId) === 99999L)
   }
 
   test("streaming quarantine router: clean/DLQ split equals q191's batch classification") {
@@ -786,81 +796,49 @@ class StreamingSpec extends SparkTestBase {
 
     // exactly-once under RESTART: the replayed epoch arrives through a
     // FRESH GraftStreamingWrite instance (that is what a driver restart
-    // constructs) with the same stable streaming query id — the marker
-    // must be found across instances, or replays double-commit
+    // constructs) with the same stable streaming query id — the ledger
+    // entry must be found across instances, or replays double-commit
     val sw = new graft.sources.GraftStreamingWrite(spark, dir, schema, "q-test")
     val dupe = s"$dir/data/replay-dupe.parquet"
     spark.range(0, 5).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v")
       .coalesce(1).write.parquet(s"$root/dupe")
     val part = new java.io.File(s"$root/dupe").listFiles()
       .find(_.getName.endsWith(".parquet")).get
+    def staged(name: String): String = {
+      val f = dupe.replace("replay-dupe", name)
+      java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(f))
+      f
+    }
     java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(dupe))
     val msg = Array[org.apache.spark.sql.connector.write.WriterCommitMessage](
       graft.sources.GraftWriteMessage(Seq(dupe)))
     val vBefore = Sources.latestVersion(dir)
-    sw.commit(7L, msg) // first claim: commits a version
+    sw.commit(7L, msg) // first publish: commits a version + its entry
     assert(Sources.latestVersion(dir) === vBefore + 1)
+    assert(Sources.appliedVersion(dir, "q-test") === 7L)
     val swRestarted =
       new graft.sources.GraftStreamingWrite(spark, dir, schema, "q-test")
-    val dupe2 = dupe.replace("replay-dupe", "replay-dupe2")
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(dupe2))
+    val dupe2 = staged("replay-dupe2")
     swRestarted.commit(7L, Array(graft.sources.GraftWriteMessage(Seq(dupe2))))
     assert(Sources.latestVersion(dir) === vBefore + 1,
       "replayed epoch published a duplicate version across restart")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dupe2)),
       "replayed epoch left its duplicate files behind")
-    // a DIFFERENT query writing the same table keeps its own ledger
+    // an OLDER epoch replayed after the restart is covered by the same
+    // entry (epochs publish in order)
+    val dupeOld = staged("replay-dupe-old")
+    swRestarted.commit(6L, Array(graft.sources.GraftWriteMessage(Seq(dupeOld))))
+    assert(Sources.latestVersion(dir) === vBefore + 1)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dupeOld)))
+    // a DIFFERENT query writing the same table keeps its own entry
     val swOther =
       new graft.sources.GraftStreamingWrite(spark, dir, schema, "q-other")
-    val dupe3 = dupe.replace("replay-dupe", "replay-dupe3")
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(dupe3))
+    val dupe3 = staged("replay-dupe3")
     swOther.commit(7L, Array(graft.sources.GraftWriteMessage(Seq(dupe3))))
     assert(Sources.latestVersion(dir) === vBefore + 2)
-
-    // CRASH WINDOW between claim and publish: the claimant died with a
-    // pending marker whose recorded files exist but were never
-    // published — the replay must ADOPT the recorded files (so the
-    // ORIGINAL epoch's rows land exactly once) and drop its own
-    val orphan = s"$dir/data/orphan-epoch.parquet"
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(orphan))
-    val pendDir = java.nio.file.Paths.get(dir, "_streams", "q-crash")
-    java.nio.file.Files.createDirectories(pendDir)
-    java.nio.file.Files.write(pendDir.resolve("e3.commit"),
-      s"pending\n$orphan".getBytes("UTF-8"))
-    val swCrash =
-      new graft.sources.GraftStreamingWrite(spark, dir, schema, "q-crash")
-    val replayFile = s"$dir/data/orphan-replay.parquet"
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(replayFile))
-    val vC = Sources.latestVersion(dir)
-    swCrash.commit(3L, Array(graft.sources.GraftWriteMessage(Seq(replayFile))))
-    assert(Sources.latestVersion(dir) === vC + 1)
-    def manifestFiles(v: Int): Seq[String] = {
-      val p = java.nio.file.Paths.get(dir, s"v$v.manifest")
-      scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(p)).asScala.toSeq
-        .filter(l => l.nonEmpty && !l.startsWith("#"))
-    }
-    assert(manifestFiles(vC + 1).contains(orphan),
-      "recovery should publish the ORIGINAL epoch's recorded files")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(replayFile)),
-      "recovery should discard the replay duplicates")
-    // and the marker is finalized: one more replay is a pure no-op
-    val rf2 = s"$dir/data/orphan-replay2.parquet"
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(rf2))
-    swCrash.commit(3L, Array(graft.sources.GraftWriteMessage(Seq(rf2))))
-    assert(Sources.latestVersion(dir) === vC + 1)
-
-    // CRASH WINDOW between publish and finalize: pending marker whose
-    // files ARE in a manifest — resolve to committed, publish nothing
-    val committedFile = manifestFiles(vC + 1).head
-    java.nio.file.Files.write(pendDir.resolve("e4.commit"),
-      s"pending\n$committedFile".getBytes("UTF-8"))
-    val rf3 = s"$dir/data/orphan-replay3.parquet"
-    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(rf3))
-    swCrash.commit(4L, Array(graft.sources.GraftWriteMessage(Seq(rf3))))
-    assert(Sources.latestVersion(dir) === vC + 1,
-      "post-publish crash recovery must not double-commit")
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(rf3)))
+    assert(Sources.appliedVersion(dir, "q-other") === 7L)
+    assert(Sources.appliedVersion(dir, "q-test") === 7L,
+      "a second query's publish must carry the first query's entry")
   }
 
   test("table-to-table replication off the change feed: replica tracks " +

@@ -197,7 +197,7 @@ class TextIndexSpec extends SparkTestBase {
       "the index-served ranking must be bit-identical to the full scan")
   }
 
-  test("the termstats ledger stays ONE compacted high-water row, " +
+  test("the termstats ledger holds ONE `#txn` entry per consumer, " +
     "however many source versions apply") {
     val root = tmp("text-idx-ledger")
     val src = s"$root/docs"
@@ -208,23 +208,29 @@ class TextIndexSpec extends SparkTestBase {
       docs.filter(col("doc_id") >= 100 && col("doc_id") < 200), src)
     Sources.commitVersion(docs.filter(col("doc_id") >= 200), src)
     TextIndex.init(idx)
-    def ledger(): Seq[(String, Long)] =
-      Sources.readVersion(spark, s"$idx/termstats")
-        .filter(col("term").isNull)
-        .select("tk", "cnt").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    val consumer = Sources.txnConsumer("text_index", src)
+    def ledger(): Seq[String] = {
+      val ts = s"$idx/termstats"
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(ts,
+        s"v${Sources.latestVersion(ts)}.manifest")).asScala.toSeq
+        .filter(_.startsWith("#txn"))
+    }
     TextIndex.maintainQuery(spark, src, idx, s"$root/ckpt")
       .awaitTermination()
-    assert(ledger() === Seq(("v:hw", Sources.latestVersion(src).toLong)),
-      s"expected one high-water row, got ${ledger()}")
-    // more commits + another drain: the SAME row advances in place
+    assert(ledger() === Seq(s"#txn\t$consumer\t${Sources.latestVersion(src)}"),
+      s"expected one entry at the source head, got ${ledger()}")
+    // the table itself holds term rows only
+    assert(Sources.readVersion(spark, s"$idx/termstats")
+      .filter(!col("tk").startsWith("t:")).isEmpty)
+    // more commits + another drain: the SAME entry advances in place
     Sources.commitVersion(docs.filter(col("doc_id") < 5)
       .withColumn("doc_id", col("doc_id") + 500000L), src)
     Sources.commitVersion(docs.filter(col("doc_id") < 5)
       .withColumn("doc_id", col("doc_id") + 600000L), src)
     TextIndex.maintainQuery(spark, src, idx, s"$root/ckpt")
       .awaitTermination()
-    assert(ledger() === Seq(("v:hw", Sources.latestVersion(src).toLong)),
+    assert(ledger() === Seq(s"#txn\t$consumer\t${Sources.latestVersion(src)}"),
       s"the ledger must not grow with applied versions: ${ledger()}")
     assertIndexEquals(idx, docs.unionByName(
       docs.filter(col("doc_id") < 5).withColumn("doc_id", col("doc_id") + 500000L))
