@@ -1191,8 +1191,9 @@ object LakeOps {
     * refused on it until `purge_eq`. Now the delta scan resolves the
     * pending key sets into per-file skip bitsets at planning time
     * ([[graft.sources.GraftDeltaScan]] + `Sources.eqRetiredPositions` —
-    * key columns + row index of each entry's in-scope files, one
-    * broadcast key join), so eq-retired rows are never match
+    * key columns + row index of each entry's in-scope files, probed
+    * against the key sets once per (entry, file)), so eq-retired rows
+    * are never match
     * candidates. The lifecycle: eq-merge (API, O(keys)) → SQL MERGE on
     * the PENDING table (updates the LIVE upserted generation, never
     * the retired one; re-inserts an eq-deleted key as NOT MATCHED) →
@@ -1764,7 +1765,7 @@ object LakeOps {
   /** Q233 — RUNTIME (DPP-style) PRUNING on the bucketed fact scan,
     * oracle-gated: the dimension's selective filter is only knowable
     * at execution (it rides the join), yet the fact side reads a
-    * FRACTION of its files — [[graft.sources.GraftBucketedScan]]'s
+    * FRACTION of its files — [[graft.sources.GraftNativeScan]]'s
     * `SupportsRuntimeFiltering` hashes the collected key in-set to
     * bucket ids and drops whole `_b=<id>` slices before any task
     * launches (Spark's DPP handshake; what Iceberg does for its

@@ -244,7 +244,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             val v = Sources.latestVersion(dir)
             Sources.eqOf(dir, v).map { e =>
               val nKeys = scala.util.Try(
-                s.read.parquet(e.dataPath).count()).getOrElse(0L)
+                Sources.eqKeyFooter(e.dataPath)._2).getOrElse(0L)
               (e.keyCols.mkString(","), nKeys, e.basedOn)
             }.toDF("key_columns", "n_keys", "based_on")
           case other => throw new NoSuchTableException(ident)
@@ -640,31 +640,27 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
-    if (Sources.eqOf(path, pinned).nonEmpty)
-      // pending equality deletes: every row must pass the per-entry
-      // broadcast anti-joins, which only the V1 wrap's indexed read
-      // composes today — the version temporarily trades the native
-      // batch scan (and a bucketed table its SPJ partitioning) for
-      // correctness; CALL g.system.purge_eq restores the fast paths
-      new GraftDvScanBuilder(spark, path, pinned, schema)
-    else Sources.bucketSpecOf(path) match {
+    Sources.bucketSpecOf(path) match {
       case Some((c, n)) =>
         // hash-bucketed: the scan reports KeyGroupedPartitioning so
         // co-bucketed joins plan shuffle-free (SPJ) and point
         // predicates on the bucket column prune whole buckets; it
-        // applies DVs itself (row-index + bitset), so merge-on-read
-        // deletes never cost the join its partitioning
-        new GraftBucketedScanBuilder(spark, path, pinned, schema, c, n)
-      case None if Sources.dvOf(path, pinned).nonEmpty =>
-        // the version carries deletion vectors: unpartitioned tables
-        // take the NATIVE DV batch scan (stats/bloom skipping, inline
-        // DV application, planner-visible statistics → a DV'd
+        // applies DVs and pending eq deletes itself (row-index + one
+        // skip bitset per file), so merge-on-read and CDC deletes never
+        // cost the join its partitioning
+        new GraftNativeScanBuilder(spark, path, pinned, schema, Some((c, n)))
+      case None if Sources.dvOf(path, pinned).nonEmpty ||
+          Sources.eqOf(path, pinned).nonEmpty =>
+        // the version carries deletion vectors or pending equality
+        // deletes: unpartitioned tables take the NATIVE scan
+        // (stats/bloom skipping, DV marks and memoized eq-retired
+        // positions applied inline, planner-visible statistics → a DV'd
         // dimension still broadcasts without AQE); partition/transform
         // layouts keep the V1 wrap, whose manifest-indexed inner read
         // reattaches partition values from the hive paths
         if (Sources.partitionColumnsOf(path).isEmpty &&
             Sources.partTransformOf(path).isEmpty)
-          new GraftDvBatchScanBuilder(spark, path, pinned, schema)
+          new GraftNativeScanBuilder(spark, path, pinned, schema, None)
         else new GraftDvScanBuilder(spark, path, pinned, schema)
       case None =>
         // dataSchema excludes identity-partition columns — they live in
@@ -993,15 +989,19 @@ object GraftTable {
   }
 }
 
-/** The DSv2 scan for a version carrying deletion vectors: a V1Scan
-  * whose rows come from the DV-applying indexed read
-  * ([[ManifestFileIndex.readVersionIndexed]]). Column pruning and
+/** The DSv2 scan for an identity- or transform-PARTITIONED version
+  * carrying deletion vectors or pending equality deletes (unpartitioned
+  * and bucketed layouts take the native [[GraftNativeScan]]): a V1Scan
+  * whose rows come from the
+  * DV- and eq-applying indexed read
+  * ([[ManifestFileIndex.readVersionIndexed]]), which reattaches
+  * partition values from the hive paths. Column pruning and
   * filter pushdown are honored by re-applying them INSIDE the wrapped
   * DataFrame — where they reach the parquet scan and the manifest
   * index — while every pushed filter is also reported residual, so
   * Spark re-evaluates it above and pushing stays a pure optimization.
   * The direct vectorized `ParquetScanBuilder` path returns as soon as
-  * purge/compaction absorbs the DVs. */
+  * purge/compaction absorbs the DVs and eq entries. */
 private[sources] class GraftDvScanBuilder(spark: SparkSession,
     table: String, version: Int, tableSchema: StructType)
   extends org.apache.spark.sql.connector.read.ScanBuilder
@@ -1041,23 +1041,14 @@ private[sources] class GraftDvScanBuilder(spark: SparkSession,
             Sources.versionBytes(table, version)
           override def buildScan()
               : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            val needMeta =
-              required.fieldNames.exists(GraftTable.metaNamesFor(table))
-            val needRid =
-              required.fieldNames.contains(RowIds.COL) &&
-                RowIds.enabled(table)
-            var df =
-              if (needRid)
-                // lineage: ids must fill from the physical column +
-                // file ranges BEFORE the DV/eq filters run
-                RowIds.indexedWithMeta(spark, table, version)
-              else ManifestFileIndex.readVersionIndexed(
-                spark, table, version)
+            // (no `_row_id`: lineage tables are flat, never here)
+            var df = ManifestFileIndex.readVersionIndexed(
+              spark, table, version)
             // a plain SELECT may request the table's _gfile/_gpos
             // metadata columns: serve them from the scan's own
             // _metadata probe (file_path normalized to the manifest
             // path — the same value the delta scan's rowId carries)
-            if (needMeta && !needRid)
+            if (required.fieldNames.exists(GraftTable.metaNamesFor(table)))
               df = GraftTable.withMetaColumns(df)
             pushed.flatMap(GraftTable.filterToColumn)
               .foreach(c => df = df.filter(c))

@@ -166,12 +166,11 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftCdfOffset].version
     val e = end.asInstanceOf[GraftCdfOffset].version
-    // one (entry, file) → positions memo for the WHOLE range: both
-    // sides are immutable, so a pair probed at version v must not
-    // re-probe at v+1 — with the union-batched probe this collapses
-    // the range's eq planning to one bounded job per planning step
+    // (entry, file) → positions answers come from the process-wide
+    // memo: both sides are immutable, so a pair probed at version v is
+    // not re-probed at v+1 (nor by the next drain or a catalog scan) —
+    // the range's eq planning costs one bounded job per planning step
     // that still has unresolved pairs
-    val eqMemo = Sources.newEqProbeMemo()
     (s + 1 to e).flatMap { v =>
       val before =
         if (v <= 1) Set.empty[String]
@@ -194,18 +193,9 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
       // files, and by the TO state's entries in arriving files — the
       // per-side eq filter batch readChanges applies relationally
       val retiredGone =
-        Sources.eqRetiredPositions(spark, table, goneFiles, eqPrev, eqMemo)
+        Sources.eqRetiredPositions(spark, table, goneFiles, eqPrev)
       val retiredAdded =
-        Sources.eqRetiredPositions(spark, table, addedFiles, eqCur, eqMemo)
-      def orBits(a: Option[java.util.BitSet],
-          b: Option[java.util.BitSet]): Option[Array[Byte]] =
-        (a, b) match {
-          case (None, None) => None
-          case (x, y) =>
-            val m = new java.util.BitSet()
-            x.foreach(m.or); y.foreach(m.or)
-            Some(m.toByteArray)
-        }
+        Sources.eqRetiredPositions(spark, table, addedFiles, eqCur)
       val grown = carried.flatMap { f =>
         val g = dvTo.getOrElse(f, new java.util.BitSet())
           .clone().asInstanceOf[java.util.BitSet]
@@ -223,11 +213,11 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
         if (eqNew.isEmpty) Nil
         else {
           val retiredNew =
-            Sources.eqRetiredPositions(spark, table, carried, eqNew, eqMemo)
+            Sources.eqRetiredPositions(spark, table, carried, eqNew)
           val retiredOld =
             if (retiredNew.isEmpty) Map.empty[String, java.util.BitSet]
             else Sources.eqRetiredPositions(spark, table,
-              retiredNew.keys.toSeq.sorted, eqOld, eqMemo)
+              retiredNew.keys.toSeq.sorted, eqOld)
           retiredNew.toSeq.sortBy(_._1).flatMap { case (f, bits) =>
             val b = bits.clone().asInstanceOf[java.util.BitSet]
             dvTo.get(f).foreach(b.andNot)
@@ -239,10 +229,10 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
         }
       addedFiles.map(f =>
         GraftCdfPartition(f, size(f), "insert", v,
-          skipDv = orBits(dvTo.get(f), retiredAdded.get(f)))) ++
+          skipDv = Sources.orBits(dvTo.get(f), retiredAdded.get(f)))) ++
         goneFiles.map(f =>
           GraftCdfPartition(f, size(f), "delete", v,
-            skipDv = orBits(dvFrom.get(f), retiredGone.get(f)))) ++
+            skipDv = Sources.orBits(dvFrom.get(f), retiredGone.get(f)))) ++
         grown ++ eqDeletes
     }.toArray
   }

@@ -134,24 +134,18 @@ private[sources] class GraftDeltaScan(spark: SparkSession, table: String,
   override def planInputPartitions(): Array[InputPartition] = {
     val dv = Sources.dvOf(table, version)
     val files = Sources.filesOf(table, version).sorted
-    // pending EQUALITY deletes fold into the same position space: one
-    // bounded key-probe job at planning time (key columns + row index
-    // of each entry's in-scope files, broadcast key join) turns the
-    // deferred key deletes into per-file skip bitsets, so eq-retired
-    // rows are never match candidates — SQL MERGE/UPDATE/DELETE work
-    // on an eq-pending table instead of refusing until purge_eq
+    // pending EQUALITY deletes fold into the same position space: the
+    // memoized key probe (at most one bounded job, for the (entry,
+    // file) pairs no earlier plan resolved) turns the deferred key
+    // deletes into per-file skip bitsets, so eq-retired rows are never
+    // match candidates — SQL MERGE/UPDATE/DELETE work on an eq-pending
+    // table instead of refusing until purge_eq
     val eqSkip = Sources.eqRetiredPositions(spark, table, files,
       Sources.eqOf(table, version))
     files.map { f =>
-      val bits = (dv.get(f), eqSkip.get(f)) match {
-        case (None, None) => None
-        case (a, b) =>
-          val m = new java.util.BitSet()
-          a.foreach(m.or); b.foreach(m.or)
-          Some(m.toByteArray)
-      }
       GraftDeltaPartition(f,
-        java.nio.file.Files.size(java.nio.file.Paths.get(f)), bits)
+        java.nio.file.Files.size(java.nio.file.Paths.get(f)),
+        Sources.orBits(dv.get(f), eqSkip.get(f)))
     }.toArray
   }
 

@@ -7,41 +7,50 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
-import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
+import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNull}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The catalog scan for HASH-BUCKETED graft tables (`PARTITIONED BY
-  * (bucket(n, k))`) — the piece that turns the on-disk `_b=<id>` layout
-  * into SHUFFLE-FREE JOINS:
+/** The NATIVE catalog scan: every graft table read that is neither a
+  * clean plain version (the stock parquet scan) nor an identity- or
+  * transform-partitioned version carrying deletes (the V1 wrap
+  * [[GraftDvScanBuilder]], which reattaches partition values). It
+  * serves
+  *  - HASH-BUCKETED tables (`PARTITIONED BY (bucket(n, k))`), turning
+  *    the on-disk `_b=<id>` layout into SHUFFLE-FREE JOINS: it reports
+  *    `KeyGroupedPartitioning(bucket(n, k), #buckets)`, which Catalyst
+  *    resolves through [[GraftBucketFunction]], so `EnsureRequirements`
+  *    plans two co-bucketed scans as co-partitioned (storage-
+  *    partitioned join, the DSv2 successor of hive bucketed joins).
+  *    Every input partition carries its bucket id as the partition
+  *    key, so Spark groups per-file partitions into one task per bucket
+  *    exactly when SPJ engages (`spark.sql.sources.v2.bucketing.enabled`)
+  *    and keeps per-file parallelism otherwise. Point predicates on the
+  *    bucket column PRUNE whole buckets driver-side;
+  *  - UNPARTITIONED versions carrying deletion vectors and/or pending
+  *    equality deletes, with planner-visible statistics (a DV'd
+  *    dimension broadcasts at PLAN time, not after AQE; the V1 wrap
+  *    cannot report statistics through `V1ScanWrapper`).
   *
-  *  - reports `KeyGroupedPartitioning(bucket(n, k), #buckets)`;
-  *    Catalyst resolves the transform through [[GraftBucketFunction]]
-  *    and `EnsureRequirements` then recognizes two co-bucketed scans as
-  *    co-partitioned — a sort-merge join of two 100 TB tables runs with
-  *    ZERO Exchange on either side (storage-partitioned join, the DSv2
-  *    successor of hive bucketed joins);
-  *  - every input partition carries its bucket id as the partition
-  *    key, so Spark groups the per-file partitions into one task per
-  *    bucket exactly when SPJ engages
-  *    (`spark.sql.sources.v2.bucketing.enabled`), and keeps per-file
-  *    parallelism otherwise;
-  *  - point predicates on the bucket column PRUNE whole buckets
-  *    driver-side (`WHERE k = 42` reads 1/n of the files before any
-  *    footer is opened), composing with the parquet row-group pruning
-  *    the pushed filters buy below.
-  *
-  * Executors read through Spark's own vectorized parquet reader
-  * function (the [[GraftCdfStream]] pattern); pushed filters reach the
-  * reader for row-group stat pruning and are ALSO left in the plan as
-  * residuals, so correctness never depends on parquet's evaluation.
+  * Both take the same tiers: bucket pruning, stats/bloom sidecar file
+  * skipping (pushed and runtime/DPP conjuncts), then one skip bitset
+  * per kept file — its DV marks OR the positions pending eq entries
+  * retire in it, memoized per (entry, file)
+  * ([[GraftNativeScan.withEqSkips]]). Planning an eq-pending version
+  * therefore starts at most one probe job, none once the memo holds
+  * every kept pair, and a bucketed table keeps SPJ. Executors read
+  * through Spark's own parquet reader function (the [[GraftCdfStream]]
+  * pattern); pushed filters reach the reader for row-group pruning and
+  * are ALSO left in the plan as residuals, so correctness never
+  * depends on parquet's evaluation. `_gfile`/`_gpos` and, on lineage
+  * tables, `_row_id` are synthesized reader-side.
   */
-private[sources] class GraftBucketedScanBuilder(spark: SparkSession,
+private[sources] class GraftNativeScanBuilder(spark: SparkSession,
     table: String, version: Int, schema: StructType,
-    bucketCol: String, numBuckets: Int)
+    bucket: Option[(String, Int)])
   extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
@@ -51,7 +60,7 @@ private[sources] class GraftBucketedScanBuilder(spark: SparkSession,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // everything is kept as a residual (Spark re-evaluates above the
     // scan); the conjuncts are handed to parquet for row-group pruning
-    // and mined for bucket pruning below
+    // and mined for bucket and stats/bloom pruning
     pushed = filters
     filters
   }
@@ -61,29 +70,25 @@ private[sources] class GraftBucketedScanBuilder(spark: SparkSession,
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Buckets that can hold rows passing ALL pushed conjuncts — None
-    * means no bucket-column point predicate, scan all. */
-  private def prunedBuckets: Option[Set[Int]] =
-    GraftBucketedScan.bucketsFor(pushed.toSeq, bucketCol, dt, numBuckets)
-
-  private def dt = schema(bucketCol).dataType
-
   override def build(): Scan =
-    new GraftBucketedScan(spark, table, version, schema, required,
-      pushed.toSeq, bucketCol, numBuckets, prunedBuckets)
+    new GraftNativeScan(spark, table, version, schema, required,
+      pushed.toSeq, bucket)
 }
 
-private[sources] case class GraftBucketPartition(path: String,
-    bytes: Long, bucketId: Int, dv: Option[Array[Byte]] = None)
+/** One data file of a native scan. `skip` holds the positions the file
+  * must not serve: its DV marks OR the rows pending eq entries retire
+  * in it. */
+private[sources] case class GraftFilePartition(path: String,
+    bytes: Long, bucketId: Int, skip: Option[Array[Byte]] = None)
   extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucketId))
 }
 
-private[sources] class GraftBucketedScan(spark: SparkSession,
+private[sources] class GraftNativeScan(spark: SparkSession,
     table: String, version: Int, dataSchema: StructType,
     required: StructType, filters: Seq[Filter],
-    bucketCol: String, numBuckets: Int, buckets: Option[Set[Int]])
+    bucket: Option[(String, Int)])
   extends Scan with Batch
   with SupportsReportPartitioning with SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
@@ -91,67 +96,91 @@ private[sources] class GraftBucketedScan(spark: SparkSession,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  /** Buckets that can hold rows passing ALL `fs` — None means no
+    * bucket-column point predicate (or no buckets): scan all. */
+  private def bucketsFor(fs: Seq[Filter]): Option[Set[Int]] =
+    bucket.flatMap { case (c, n) =>
+      GraftNativeScan.bucketsFor(fs, c, dataSchema(c).dataType, n)
+    }
+
+  private val buckets = bucketsFor(filters)
+
   /** No pushed conjuncts and no bucket pruning — the whole-version
     * read [[MetadataOnlyAggregates]] may answer from sidecars. */
   private[sources] def filterFree: Boolean =
     filters.isEmpty && buckets.isEmpty
 
-  override def description(): String =
-    s"graft-bucketed:$table@v$version bucket($numBuckets, $bucketCol)" +
-      buckets.fold("")(b => s" buckets=${b.toSeq.sorted.mkString(",")}")
+  override def description(): String = bucket match {
+    case Some((c, n)) =>
+      s"graft-bucketed:$table@v$version bucket($n, $c)" +
+        buckets.fold("")(b => s" buckets=${b.toSeq.sorted.mkString(",")}")
+    case None => s"graft-dv:$table@v$version"
+  }
 
   // ---- RUNTIME filtering (dynamic partition/file pruning) -----------
   //
   // The DPP handshake: at plan time the optimizer sees the join key in
   // `filterAttributes`; at execution, after the dimension side has
   // materialized (typically as the reused broadcast), BatchScanExec
-  // hands the collected key set back as an `In` conjunct. Two tiers of
-  // driver-side pruning re-run with it: the key set hashes to a BUCKET
-  // id set (whole 1/n slices of a 100 TB fact drop before any task
-  // launches), and the per-file stats/bloom sidecars drop files inside
-  // the kept buckets. Strictly conservative — both tiers only ever
-  // DROP files proven row-free for the keys.
+  // hands the collected key set back as an `In` conjunct. The pruning
+  // tiers re-run with it: the key set hashes to a BUCKET id set (whole
+  // 1/n slices of a 100 TB fact drop before any task launches), and
+  // the per-file stats/bloom sidecars drop files inside the kept
+  // buckets — Databricks' "dynamic file pruning", from metadata alone.
+  // Strictly conservative — both tiers only ever DROP files proven
+  // row-free for the keys.
   private var runtime: Seq[Filter] = Nil
-  private var partsCache: Array[GraftBucketPartition] = _
+  private var keptCache: Array[GraftFilePartition] = _
+  private var partsCache: Array[GraftFilePartition] = _
 
+  // only columns the scan outputs: the planner resolves every
+  // attribute named here against the pruned output and fails the
+  // query on one it cannot find
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    (bucketCol +: (Sources.statsColumnsOf(table) ++
-      Sources.bloomColumnsOf(table))).distinct
+    (bucket.map(_._1).toSeq ++ Sources.statsColumnsOf(table) ++
+      Sources.bloomColumnsOf(table)).distinct
+      .filter(required.fieldNames.contains)
       .map(Expressions.column).toArray
 
   override def filter(fs: Array[Filter]): Unit = {
     runtime = fs.toSeq
+    keptCache = null
     partsCache = null
   }
 
-  // one input partition per (bucket, file): full per-file parallelism
-  // on plain scans, grouped to one task per bucket when SPJ engages;
-  // pruning composes in tiers — bucket ids from point predicates on the
-  // bucket column, then per-file stats/bloom sidecars on everything else
   private lazy val dv = Sources.dvOf(table, version)
 
-  private def parts: Array[GraftBucketPartition] = {
-    if (partsCache == null) partsCache = {
+  // the files surviving bucket and stats/bloom pruning, with their DV
+  // marks — sidecar metadata only, all the planner's statistics and
+  // partitioning read; one input partition per file
+  private def kept: Array[GraftFilePartition] = {
+    if (keptCache == null) keptCache = {
       val statsKeep =
         Sources.filterKeeper(table, version, filters ++ runtime)
       val all = Sources.filesOf(table, version).filter(statsKeep).map { f =>
-        val b = GraftBucketedScan.bucketIdOf(f).getOrElse(
-          throw new IllegalStateException(
+        val b = if (bucket.isEmpty) 0 else GraftNativeScan.bucketIdOf(f)
+          .getOrElse(throw new IllegalStateException(
             s"bucketed table $table: data file outside a _b=<id> dir: $f " +
               "(the table has non-bucketed batches — it was written " +
               "outside the catalog commit path)"))
-        GraftBucketPartition(f,
+        GraftFilePartition(f,
           java.nio.file.Files.size(java.nio.file.Paths.get(f)), b,
           dv.get(f).map(_.toByteArray))
       }
-      val keep = Seq(buckets,
-        GraftBucketedScan.bucketsFor(runtime, bucketCol,
-          dataSchema(bucketCol).dataType, numBuckets))
-        .flatten.reduceOption(_ intersect _)
+      val keep = Seq(buckets, bucketsFor(runtime)).flatten
+        .reduceOption(_ intersect _)
       keep.fold(all)(ks => all.filter(p => ks.contains(p.bucketId)))
         .sortBy(p => (p.bucketId, p.path)).toArray
     }
+    keptCache
+  }
+
+  // the kept files with the eq-retired positions OR'd in — what the
+  // tasks read
+  private def parts: Array[GraftFilePartition] = {
+    if (partsCache == null)
+      partsCache = GraftNativeScan.withEqSkips(spark, table, version, kept)
     partsCache
   }
 
@@ -161,40 +190,48 @@ private[sources] class GraftBucketedScan(spark: SparkSession,
   override def planInputPartitions(): Array[InputPartition] =
     parts.toArray[InputPartition]
 
-  override def outputPartitioning(): Partitioning =
-    new KeyGroupedPartitioning(
-      Array(Expressions.bucket(numBuckets, bucketCol)),
-      parts.map(_.bucketId).distinct.length)
+  override def outputPartitioning(): Partitioning = bucket match {
+    case Some((c, n)) =>
+      new KeyGroupedPartitioning(Array(Expressions.bucket(n, c)),
+        kept.map(_.bucketId).distinct.length)
+    case None => new UnknownPartitioning(0)
+  }
 
+  // bytes, live rows and HLL-union NDV for EXACTLY the pruned file
+  // subset, from sidecar metadata — never a scan or a probe. Rows that
+  // pending eq entries retire still count: a conservative upper bound
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(parts.map(_.bytes).sum)
-    // exact live rows + HLL-union NDV for EXACTLY the pruned file
-    // subset this scan will read (sidecar metadata, never a scan)
+      OptionalLong.of(kept.map(_.bytes).sum)
     override def numRows(): OptionalLong =
-      Sources.rowsForFiles(table, version, parts.map(_.path).toSeq)
+      Sources.rowsForFiles(table, version, kept.map(_.path).toSeq)
         .map(OptionalLong.of).getOrElse(OptionalLong.empty())
     override def columnStats(): java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
       GraftTable.columnStatsForFiles(table, version,
-        parts.map(_.path).toSeq)
+        kept.map(_.path).toSeq)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftBucketedScan.readerFactory(spark, dataSchema, required, filters,
-      haveDv = dv.nonEmpty)
+    GraftNativeScan.readerFactory(spark, dataSchema, required, filters,
+      haveSkip = parts.exists(_.skip.isDefined),
+      // resolve the rid map ONLY when the query asked for the id — a
+      // plain scan must not pay (or depend on) sidecar derivation
+      rid = if (required.fieldNames.contains(RowIds.COL) &&
+          RowIds.enabled(table))
+        Some(RowIds.ridOf(table, version)._1)
+      else None)
 }
 
-private[sources] object GraftBucketedScan {
+private[sources] object GraftNativeScan {
   private val BucketDir = ".*/_b=(\\d+)/[^/]+$".r
 
   /** Buckets that can hold rows passing ALL the given conjuncts — None
     * means no bucket-column point predicate, scan all. Each conjunct
     * must hold for every surviving row, so intersecting per-conjunct
-    * bucket sets is lossless. Shared by the builder (pushed filters)
-    * and the scan's RUNTIME filtering (DPP in-sets from a joined
-    * dimension). */
+    * bucket sets is lossless. Applied to the pushed filters and to the
+    * RUNTIME (DPP) in-sets from a joined dimension. */
   def bucketsFor(filters: Seq[Filter], bucketCol: String,
       dt: org.apache.spark.sql.types.DataType,
       numBuckets: Int): Option[Set[Int]] = {
@@ -221,19 +258,36 @@ private[sources] object GraftBucketedScan {
     case _ => None
   }
 
-  /** The shared per-file reader construction for the native batch
-    * scans (bucketed and plain-DV): Spark's own parquet reader
+  /** `kept` with each file's eq-retired positions OR'd into its skip
+    * bitset. Only the files that survived every pruning tier are
+    * probed, and [[Sources.eqRetiredPositions]] answers from its
+    * process-wide memo, so a plan starts a probe job only when an
+    * (entry, file) pair is new. */
+  def withEqSkips(spark: SparkSession, table: String, version: Int,
+      kept: Array[GraftFilePartition]): Array[GraftFilePartition] = {
+    val eq = Sources.eqOf(table, version)
+    if (eq.isEmpty || kept.isEmpty) kept
+    else {
+      val retired = Sources.eqRetiredPositions(spark, table,
+        kept.map(_.path).toSeq, eq)
+      kept.map(p => retired.get(p.path).fold(p)(r => p.copy(skip =
+        Sources.orBits(p.skip.map(java.util.BitSet.valueOf), Some(r)))))
+    }
+  }
+
+  /** The per-file reader construction: Spark's own parquet reader
     * function built once driver-side — pushed conjuncts buy row-group
     * pruning, older-generation files missing ADD COLUMN fields
     * null-fill through schema clipping. The `_gfile`/`_gpos` metadata
     * columns are synthesized reader-side (file path from the
     * partition, position from the row-index generator column), never
     * read from parquet — schema clipping would null-fill them
-    * silently otherwise. DV'd positions drop inline via the indexed
-    * reader function (positions exact under row-group pruning). */
+    * silently otherwise. Skipped positions (DV marks, eq-retired rows)
+    * drop inline via the indexed reader function (positions exact
+    * under row-group pruning). */
   def readerFactory(spark: SparkSession, dataSchema: StructType,
-      required: StructType, filters: Seq[Filter], haveDv: Boolean,
-      rid: Option[Map[String, Long]] = None): PartitionReaderFactory = {
+      required: StructType, filters: Seq[Filter], haveSkip: Boolean,
+      rid: Option[Map[String, Long]]): PartitionReaderFactory = {
     // lineage tables additionally synthesize `_row_id`: the physical
     // column where a rewrite materialized it, the file range otherwise
     val needRid = rid.isDefined &&
@@ -262,7 +316,7 @@ private[sources] object GraftBucketedScan {
       spark.sessionState.newHadoopConf())
     val ridPos = if (needRid) dataFields.length else -1
     val readFuncIdx =
-      if (!haveDv && !hasMeta) readFunc
+      if (!haveSkip && !hasMeta) readFunc
       else new ParquetFileFormat().buildReaderWithPartitionValues(
         spark, fileSchema, StructType(Nil),
         StructType(dataFields ++
@@ -288,124 +342,12 @@ private[sources] object GraftBucketedScan {
         case n => (dataIdx(n), f.dataType)
       }
     }
-    new GraftBucketedReaderFactory(readFunc, readFuncIdx, fields, hasMeta,
+    new GraftNativeReaderFactory(readFunc, readFuncIdx, fields, hasMeta,
       ridPos, rid.getOrElse(Map.empty))
   }
 }
 
-/** The native DSv2 scan for a DV-carrying UNPARTITIONED table (the
-  * common dimension case): the same reader machinery as the bucketed
-  * scan — stats/bloom file skipping, inline DV application, metadata
-  * columns — minus the bucket grouping, PLUS planner-visible
-  * statistics. The V1-wrapped [[GraftDvScanBuilder]] stays for
-  * identity/transform-partitioned DV'd tables (their partition values
-  * live in paths and need the manifest index to reattach); it cannot
-  * report statistics through `V1ScanWrapper`, which is exactly why
-  * this scan exists: a nation-sized DV'd dimension must broadcast at
-  * PLAN time, not wait for AQE. */
-private[sources] class GraftDvBatchScanBuilder(spark: SparkSession,
-    table: String, version: Int, schema: StructType)
-  extends ScanBuilder
-  with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var required: StructType = schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // everything residual (Spark re-evaluates above); the conjuncts
-    // buy row-group pruning in the reader and stats/bloom file
-    // skipping below
-    pushed = filters
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    new GraftDvBatchScan(spark, table, version, schema, required,
-      pushed.toSeq)
-}
-
-private[sources] class GraftDvBatchScan(spark: SparkSession,
-    table: String, version: Int, dataSchema: StructType,
-    required: StructType, filters: Seq[Filter])
-  extends Scan with Batch with SupportsReportStatistics
-  with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
-
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = s"graft-dv:$table@v$version"
-
-  /** No pushed conjuncts — the whole-version read
-    * [[MetadataOnlyAggregates]] may answer from sidecars. */
-  private[sources] def filterFree: Boolean = filters.isEmpty
-
-  // runtime (DPP) file pruning: the join-key in-set collected at
-  // execution probes the same stats/bloom sidecars the pushed filters
-  // did — Databricks' "dynamic file pruning", from metadata alone
-  private var runtime: Seq[Filter] = Nil
-  private var partsCache: Array[GraftBucketPartition] = _
-
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    (Sources.statsColumnsOf(table) ++ Sources.bloomColumnsOf(table))
-      .distinct.map(Expressions.column).toArray
-
-  override def filter(fs: Array[Filter]): Unit = {
-    runtime = fs.toSeq
-    partsCache = null
-  }
-
-  private lazy val dv = Sources.dvOf(table, version)
-
-  private def parts: Array[GraftBucketPartition] = {
-    if (partsCache == null) partsCache = {
-      val keep = Sources.filterKeeper(table, version, filters ++ runtime)
-      Sources.filesOf(table, version).filter(keep).sorted.map { f =>
-        GraftBucketPartition(f,
-          java.nio.file.Files.size(java.nio.file.Paths.get(f)), 0,
-          dv.get(f).map(_.toByteArray))
-      }.toArray
-    }
-    partsCache
-  }
-
-  /** Post-runtime-filter planned file count — the spec/gate witness. */
-  private[graft] def plannedFileCount: Int = parts.length
-
-  override def planInputPartitions(): Array[InputPartition] =
-    parts.toArray[InputPartition]
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(parts.map(_.bytes).sum)
-    // exact live rows + HLL-union NDV for EXACTLY the pruned file
-    // subset this scan will read (sidecar metadata, never a scan)
-    override def numRows(): OptionalLong =
-      Sources.rowsForFiles(table, version, parts.map(_.path).toSeq)
-        .map(OptionalLong.of).getOrElse(OptionalLong.empty())
-    override def columnStats(): java.util.Map[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-      GraftTable.columnStatsForFiles(table, version,
-        parts.map(_.path).toSeq)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftBucketedScan.readerFactory(spark, dataSchema, required, filters,
-      haveDv = dv.nonEmpty,
-      // resolve the rid map ONLY when the query asked for the id — a
-      // plain scan must not pay (or depend on) sidecar derivation
-      rid = if (required.fieldNames.contains(RowIds.COL) &&
-          RowIds.enabled(table))
-        Some(RowIds.ridOf(table, version)._1)
-      else None)
-}
-
-private[sources] class GraftBucketedReaderFactory(
+private[sources] class GraftNativeReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     readFuncIdx: PartitionedFile => Iterator[InternalRow],
     fields: Array[(Int, org.apache.spark.sql.types.DataType)],
@@ -415,14 +357,14 @@ private[sources] class GraftBucketedReaderFactory(
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val gp = p.asInstanceOf[GraftBucketPartition]
+    val gp = p.asInstanceOf[GraftFilePartition]
     val pf = PartitionedFile(
       InternalRow.empty,
       org.apache.spark.paths.SparkPath.fromPathString(gp.path),
       0L, gp.bytes, Array.empty[String], 0L, gp.bytes,
       Map.empty[String, Any])
-    if (gp.dv.isEmpty && !hasMeta)
-      // fast path: no DV to apply, no metadata column to synthesize —
+    if (gp.skip.isEmpty && !hasMeta)
+      // fast path: no position to skip, no metadata column to synthesize —
       // the reader's rows ARE the output rows, zero copying
       new PartitionReader[InternalRow] {
         private val it = readFunc(pf)
@@ -433,10 +375,10 @@ private[sources] class GraftBucketedReaderFactory(
     else {
       // merge-on-read / metadata path: the indexed function appends the
       // row-index generator column (riding last, after the data fields
-      // and the optional physical lineage column); DV'd positions drop
-      // inline, the extraction plan maps data ordinals through and
+      // and the optional physical lineage column); skipped positions
+      // drop inline, the extraction plan maps data ordinals through and
       // fills -1/-2/-3 with index/path/lineage id
-      val bits = gp.dv.map(java.util.BitSet.valueOf)
+      val bits = gp.skip.map(java.util.BitSet.valueOf)
       val pathU = UTF8String.fromString(gp.path)
       val ridBase: Option[Long] = ridMap.get(gp.path)
       val rowIdxPos = fields.count(_._1 >= 0) + (if (ridPos >= 0) 1 else 0)
@@ -450,7 +392,7 @@ private[sources] class GraftBucketedReaderFactory(
               case Some(b) =>
                 val i = r.getLong(rowIdxPos)
                 require(i <= Int.MaxValue,
-                  s"row index $i overflows the DV bitset")
+                  s"row index $i overflows the skip bitset")
                 !b.get(i.toInt)
               case None => true
             }

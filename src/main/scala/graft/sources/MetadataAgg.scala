@@ -89,8 +89,7 @@ object MetadataOnlyAggregates extends Rule[LogicalPlan] {
         case pq: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
             if pq.partitionFilters.isEmpty && pq.dataFilters.isEmpty =>
           Some(sr.relation)
-        case b: GraftBucketedScan if b.filterFree => Some(sr.relation)
-        case d: GraftDvBatchScan if d.filterFree => Some(sr.relation)
+        case n: GraftNativeScan if n.filterFree => Some(sr.relation)
         case _ => None
       }
       case _ => None

@@ -17,10 +17,7 @@ object RuntimeScanWitness {
 
   def of(plan: SparkPlan): Seq[Witness] = nodes(plan).collect {
     case b: BatchScanExec => b.scan match {
-      case s: GraftBucketedScan =>
-        Seq(Witness(s.description(), s.plannedFileCount,
-          b.runtimeFilters.nonEmpty))
-      case s: GraftDvBatchScan =>
+      case s: GraftNativeScan =>
         Seq(Witness(s.description(), s.plannedFileCount,
           b.runtimeFilters.nonEmpty))
       case _ => Nil

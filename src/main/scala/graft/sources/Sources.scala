@@ -1255,11 +1255,90 @@ object Sources {
     }
 
   /** Total pending equality-delete keys for a version — the pressure
-    * gauge a table owner reads before scheduling [[purgeEq]], computed
-    * from the key parquets' footers (metadata-scale, no scan). */
+    * gauge a table owner reads before scheduling [[purgeEq]], summed
+    * from the key parquets' footer row counts (no scan, no Spark job). */
   def eqKeyCount(spark: SparkSession, table: String, version: Int): Long =
     eqOf(table, version).map(e =>
-      scala.util.Try(spark.read.parquet(e.dataPath).count()).getOrElse(0L)).sum
+      scala.util.Try(eqKeyFooter(e.dataPath)._2).getOrElse(0L)).sum
+
+  // dataPath -> (key schema, key count); key parquets are immutable
+  // (uuid-named, written once), so entries never go stale
+  private val eqKeyFooterCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (StructType, Long)]()
+
+  private def eqKeyFiles(dataPath: String): Seq[java.nio.file.Path] = {
+    val files = Option(new java.io.File(dataPath).listFiles()).toSeq
+      .flatten.map(_.toPath).filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.toString)
+    if (files.isEmpty) throw new IllegalStateException(
+      s"eq key set $dataPath holds no parquet file")
+    files
+  }
+
+  /** (schema, row count) of an eq entry's key parquet, read from its
+    * footers on the driver. Every key-set read passes this schema
+    * instead of letting Spark infer one, because inference is a Spark
+    * job per read. */
+  private[graft] def eqKeyFooter(dataPath: String): (StructType, Long) = {
+    val cached = eqKeyFooterCache.get(dataPath)
+    if (cached != null) return cached
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val footers = eqKeyFiles(dataPath).map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toString), conf))
+      try (r.getFooter.getFileMetaData, r.getRecordCount)
+      finally r.close()
+    }
+    val meta = footers.head._1
+    // Spark writes its own schema into the footer; the parquet type
+    // conversion is the fallback for foreign writers
+    val schema = Option(meta.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[StructType])
+      .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter().convert(meta.getSchema))
+    val out = (schema, footers.map(_._2).sum)
+    if (eqKeyFooterCache.size() >= fileSchemaCacheMax) eqKeyFooterCache.clear()
+    eqKeyFooterCache.put(dataPath, out)
+    out
+  }
+
+  /** An eq entry's key set as a DataFrame under its footer schema —
+    * building it starts no Spark job. */
+  private def eqKeys(spark: SparkSession, e: EqEntry): DataFrame =
+    spark.read.schema(eqKeyFooter(e.dataPath)._1).parquet(e.dataPath)
+
+  /** Each entry's key tuples (its `keyCols`, in order) by key parquet
+    * path, read on the driver through Spark's own parquet reader — one
+    * reader function per distinct key schema: the same rows a
+    * broadcast of the key set collects to the driver, without the
+    * broadcast's Spark job. */
+  private def eqKeyRows(spark: SparkSession, entries: Seq[EqEntry])
+      : Map[String, (StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])] =
+    entries.groupBy { e =>
+      val full = eqKeyFooter(e.dataPath)._1
+      (full, StructType(e.keyCols.map(full(_))))
+    }.toSeq.flatMap { case ((full, keySchema), es) =>
+      val read = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetFileFormat().buildReaderWithPartitionValues(
+          spark, full, StructType(Nil), keySchema, Nil,
+          Map(org.apache.spark.sql.execution.datasources.FileFormat
+            .OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf())
+      es.map { e =>
+        e.dataPath -> (keySchema, eqKeyFiles(e.dataPath).flatMap { p =>
+          val it = read(EqCheck.partitionedFile(p.toString,
+            java.nio.file.Files.size(p)))
+          // the vectorized reader reuses its row object: copy each one
+          try it.map(_.copy()).toVector
+          finally EqCheck.close(it)
+        })
+      }
+    }.toMap
 
   private[sources] def eqText(entries: Seq[EqEntry]): String =
     entries.map(e =>
@@ -1324,7 +1403,7 @@ object Sources {
         if (scope.isEmpty || !e.keyCols.forall(cols.contains)) acc
         else {
           val inScope = udf((p: String) => scope.contains(normalizePath(p)))
-          val keys = spark.read.parquet(e.dataPath)
+          val keys = eqKeys(spark, e)
           val keyCond = e.keyCols.map(k => acc(k) === keys(k)).reduce(_ && _)
           acc.join(broadcast(keys),
             keyCond && inScope(col("__eq_path")), "left_anti")
@@ -1354,8 +1433,7 @@ object Sources {
           else {
             val inScope = udf((p: String) => scope.contains(normalizePath(p)))
             val hit = s"__eq_hit_$i"
-            val keys = spark.read.parquet(e.dataPath)
-              .withColumn(hit, lit(1))
+            val keys = eqKeys(spark, e).withColumn(hit, lit(1))
             val keyCond = e.keyCols.map(k => acc(k) === keys(k)).reduce(_ && _)
             val joined = acc.join(broadcast(keys),
               keyCond && inScope(col("__eq_path")), "left_outer")
@@ -1370,31 +1448,57 @@ object Sources {
       .select(cols.map(col).toSeq: _*)
   }
 
-  /** Per-call memo type for [[eqRetiredPositions]]: (entry key parquet
-    * path, normalized data-file path) → retired positions. Sound to
-    * reuse across versions of one planning pass because both sides are
-    * immutable bytes — the CDF planner probes the same (entry, file)
-    * pair once per drained RANGE instead of once per version. */
-  private[sources] type EqProbeMemo =
-    scala.collection.mutable.Map[(String, String), java.util.BitSet]
-  private[sources] def newEqProbeMemo(): EqProbeMemo =
-    scala.collection.mutable.Map.empty
+  /** The process-wide memo of [[eqRetiredPositions]]: (entry key
+    * parquet path, normalized data-file path) → the positions the
+    * entry retires in that file, empty sets included ("probed, nothing
+    * retired"). Both sides are immutable bytes — key parquets and data
+    * files are uuid-named and written once, and an entry's scope is
+    * fixed at commit — so an answer never needs invalidating, and it
+    * holds for every version, plan, scan and thread that asks again.
+    * Bounded by a constant total of bitset bytes, least recently used
+    * first out; an evicted pair is re-probed on its next use. */
+  private[sources] object EqPositionMemo {
+    private val MaxBytes = 64L << 20
+    private val map = new java.util.LinkedHashMap[(String, String),
+      java.util.BitSet](64, 0.75f, true)
+    private var bytes = 0L
+
+    private def weight(k: (String, String), b: java.util.BitSet): Long =
+      64L + 2L * (k._1.length + k._2.length) + b.size() / 8
+
+    /** The memoized positions — shared, never to be mutated. */
+    def get(k: (String, String)): Option[java.util.BitSet] =
+      synchronized(Option(map.get(k)))
+
+    def put(k: (String, String), bits: java.util.BitSet): Unit =
+      synchronized {
+        val compact = java.util.BitSet.valueOf(bits.toLongArray)
+        Option(map.put(k, compact)).foreach(o => bytes -= weight(k, o))
+        bytes += weight(k, compact)
+        val it = map.entrySet().iterator()
+        while (bytes > MaxBytes && it.hasNext) {
+          val e = it.next()
+          bytes -= weight(e.getKey, e.getValue)
+          it.remove()
+        }
+      }
+  }
 
   /** Physical row positions retired by eq `entries` within exactly
-    * `files` — the POSITION form of [[eqRetired]], for consumers whose
-    * unit is a (file, bitset) partition (the streaming CDF). One
-    * bounded Spark job per entry: the entry's scoped files read with
-    * ONLY its key columns + the scan's row-index metadata, one
-    * broadcast semi-join against the key parquet, positions collected
-    * as bitsets (same driver footprint as the DV sidecars themselves).
-    * Per-generation safe: files whose footer schema predates a key
-    * column are skipped for that entry — the declared NULL-key-matches-
-    * nothing semantic, mirroring [[eqFilterEntries]]. Keys of the
-    * returned map are manifest paths. */
+    * `files` — the POSITION form of [[eqRetired]], for every consumer
+    * whose unit is a (file, skip bitset) partition: the catalog's
+    * native scans, the row-level delta scan and the streaming CDF.
+    * Answers come from [[EqPositionMemo]]; the (entry, file) pairs it
+    * lacks are probed together in ONE Spark job ([[probeEqPositions]]).
+    * No schema is inferred: key files use their footer schema, data
+    * files their writer-recorded `_COLS` schema ([[fileSchemaOf]]).
+    * Per-generation safe: files whose schema predates a key column are
+    * skipped for that entry — the declared NULL-key-matches-nothing
+    * semantic, mirroring [[eqFilterEntries]]. Keys of the returned map
+    * are the given (manifest) paths. */
   private[sources] def eqRetiredPositions(spark: SparkSession,
       table: String, files: Seq[String],
-      entries: Seq[EqEntry],
-      memo: EqProbeMemo = null): Map[String, java.util.BitSet] = {
+      entries: Seq[EqEntry]): Map[String, java.util.BitSet] = {
     if (files.isEmpty || entries.isEmpty)
       return Map.empty
     val byPath = files.map(f => normalizePath(f) -> f).toMap
@@ -1403,68 +1507,118 @@ object Sources {
       if (!bits.isEmpty)
         out.getOrElseUpdate(byPath.getOrElse(normF, normF),
           new java.util.BitSet()).or(bits)
-    // assemble every entry's probe as ONE union plan / ONE Spark job +
-    // ONE driver collect (was one job + collect PER entry — O(entries)
-    // small jobs at CDF planning time, the r10 verdict's top deferral)
-    val branches =
-      scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val branchProbe =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
-    entries.foreach { e =>
+    val toProbe = entries.flatMap { e =>
       val scoped = eqScope(table, e)
-      val target = files.filter(f => scoped.contains(normalizePath(f)))
-      if (target.nonEmpty) {
-        // generation split: only files whose footer carries every key
-        // column participate — resolved from the writer-recorded
-        // `_COLS` sidecars, so a wide CDF range costs zero driver-side
-        // footer opens ([[fileSchemaOf]])
-        val usable = target.filter(f =>
-          e.keyCols.forall(
-            fileSchemaOf(spark, f).fieldNames.contains))
-        val (known, toProbe) =
-          if (memo == null) (Seq.empty[String], usable)
-          else usable.partition(f =>
-            memo.contains((e.dataPath, normalizePath(f))))
-        known.foreach(f =>
-          addHit(normalizePath(f), memo((e.dataPath, normalizePath(f)))))
-        if (toProbe.nonEmpty) {
-          val i = branchProbe.length
-          branchProbe += ((e.dataPath, toProbe.map(normalizePath)))
-          val keys = spark.read.parquet(e.dataPath)
-          val probe = spark.read.parquet(toProbe: _*)
-            .select((e.keyCols.map(col) :+
-              col("_metadata.file_path").as("__p") :+
-              col("_metadata.row_index").as("__i")): _*)
-          val keyCond = e.keyCols.map(k => probe(k) === keys(k))
-            .reduce(_ && _)
-          branches += probe.join(broadcast(keys), keyCond, "left_semi")
-            .select(lit(i).as("__e"), col("__p"), col("__i"))
-        }
+      val usable = files.filter(f => scoped.contains(normalizePath(f)) &&
+        e.keyCols.forall(fileSchemaOf(spark, f).fieldNames.contains))
+      val missing = usable.filter { f =>
+        val hit = EqPositionMemo.get((e.dataPath, normalizePath(f)))
+        hit.foreach(addHit(normalizePath(f), _))
+        hit.isEmpty
       }
+      if (missing.isEmpty) None else Some(e -> missing)
     }
-    if (branches.nonEmpty) {
-      val hits = branches.reduce(_ unionByName _).collect()
-      val perPair = scala.collection.mutable
-        .Map.empty[(Int, String), java.util.BitSet]
-      hits.foreach { r =>
-        val i = r.getLong(2)
-        require(i <= Int.MaxValue,
-          s"row index $i overflows the eq position bitset")
-        perPair.getOrElseUpdate(
-          (r.getInt(0), normalizePath(r.getString(1))),
-          new java.util.BitSet()).set(i.toInt)
+    if (toProbe.nonEmpty)
+      probeEqPositions(spark, table, toProbe).foreach { case (k, bits) =>
+        EqPositionMemo.put(k, bits)
+        addHit(k._2, bits)
       }
-      branchProbe.zipWithIndex.foreach { case ((dataPath, probed), i) =>
-        probed.foreach { normF =>
-          // empty results memoize too — "probed, nothing retired" must
-          // not re-probe on the next version of the range
-          val bits = perPair.getOrElse((i, normF), new java.util.BitSet())
-          if (memo != null) memo((dataPath, normF)) = bits
-          addHit(normF, bits)
-        }
-      }
-    }
     out.toMap
+  }
+
+  /** [[eqRetiredPositions]]' probe: ONE Spark job answering every given
+    * (entry, file) pair, empty sets included, so "probed, nothing
+    * retired" memoizes too. Each file is read once — the key columns
+    * of every entry it is probed for, plus the parquet row index —
+    * through Spark's own parquet reader function, and each row is
+    * tested against each entry's key set. The sets are read on the
+    * driver (metadata-scale; a broadcast join collects them there too,
+    * at one extra job per entry) and ride the task closure. A plain
+    * RDD job, not a DataFrame union, so planning it costs no Catalyst
+    * pass over one scan per entry. */
+  private def probeEqPositions(spark: SparkSession, table: String,
+      pairs: Seq[(EqEntry, Seq[String])])
+      : Map[(String, String), java.util.BitSet] = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCoercion
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.{DataType, LongType, StructField}
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val keyRows = eqKeyRows(spark, pairs.map(_._1).distinct)
+    // one membership set per (entry, compared types): a widened key
+    // column compares in the wider type on both sides, as a join's
+    // type coercion would
+    val sets = scala.collection.mutable.ArrayBuffer.empty[Set[Any]]
+    val setIdx = scala.collection.mutable.Map.empty[(String, Seq[DataType]), Int]
+    def setOf(e: EqEntry, wide: Seq[DataType]): Int =
+      setIdx.getOrElseUpdate((e.dataPath, wide), {
+        val (ks, rows) = keyRows(e.dataPath)
+        sets += rows.map { r =>
+          val vs = ks.fields.indices.map(j => EqCheck.widen(
+            r.get(j, ks(j).dataType), ks(j).dataType, wide(j), tz))
+          if (vs.length == 1) vs.head else vs
+        }.toSet
+        sets.length - 1
+      })
+    val probes = pairs.flatMap { case (e, fs) => fs.map(_ -> e) }
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (f, fe) =>
+        val fileSchema = fileSchemaOf(spark, f)
+        val cols = fe.flatMap(_._2.keyCols).distinct
+        val checks = fe.map { case (_, e) =>
+          val from = e.keyCols.map(fileSchema(_).dataType)
+          val wide = from.zip(keyRows(e.dataPath)._1.fields).map {
+            case (a, k) => TypeCoercion.findWiderTypeForTwo(a, k.dataType)
+              .getOrElse(k.dataType)
+          }
+          EqCheck(e.dataPath, setOf(e, wide),
+            e.keyCols.map(cols.indexOf).toArray, from.zip(wide).toArray)
+        }
+        (StructType(cols.map(fileSchema(_))), f, checks)
+      }
+    // one reader function per read schema, built once on the driver
+    val readers = probes.map(_._1).distinct.map { rs =>
+      rs -> new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, rs, StructType(Nil), StructType(rs.fields :+ StructField(
+          ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType,
+          nullable = true)), Nil,
+        Map(org.apache.spark.sql.execution.datasources.FileFormat
+          .OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    }.toMap
+    val tasks = probes.map { case (rs, f, checks) =>
+      (readers(rs), f, java.nio.file.Files.size(java.nio.file.Paths.get(f)),
+        checks)
+    }
+    val keySets = sets.toVector
+    val sc = spark.sparkContext
+    val hits = withJobDescription(spark, s"eqprobe $table") {
+      sc.parallelize(tasks, math.max(1, math.min(tasks.length,
+          sc.defaultParallelism)))
+        .flatMap { case (read, f, len, checks) =>
+          EqCheck.probe(read, f, len, checks, keySets, tz) }
+        .collect()
+    }
+    val found = hits.map { case (dataPath, f, bits) =>
+      (dataPath, normalizePath(f)) -> java.util.BitSet.valueOf(bits)
+    }.toMap
+    pairs.flatMap { case (e, files) =>
+      files.map { f =>
+        val k = (e.dataPath, normalizePath(f))
+        k -> found.getOrElse(k, new java.util.BitSet())
+      }
+    }.toMap
+  }
+
+  /** A skip bitset's bytes: the OR of every given position set (DV
+    * marks, eq-retired positions), None when none is given. */
+  private[sources] def orBits(
+      sets: Option[java.util.BitSet]*): Option[Array[Byte]] = {
+    val present = sets.flatten
+    if (present.isEmpty) None
+    else {
+      val m = new java.util.BitSet()
+      present.foreach(m.or)
+      Some(m.toByteArray)
+    }
   }
 
   /** Equality-delete MERGE: the O(keys) CDC upsert commit. Semantics
@@ -3844,4 +3998,66 @@ private[graft] final class DvHolder(ser: Map[String, Array[Byte]])
       case Some(bits) => idx > Int.MaxValue || !bits.get(idx.toInt)
       case None => true
     }
+}
+
+/** One entry's membership test inside an eq probe task: which read
+  * columns form its key (`ords`), each as (file type, compared type),
+  * and which shipped key set to test against. */
+private[sources] case class EqCheck(dataPath: String, set: Int,
+    ords: Array[Int], types: Array[(org.apache.spark.sql.types.DataType,
+      org.apache.spark.sql.types.DataType)])
+
+private[sources] object EqCheck {
+  import org.apache.spark.sql.catalyst.InternalRow
+
+  /** `v` of type `from` as a comparable value of type `to`; floating
+    * zeros and NaNs are made canonical, as a join normalizes its keys. */
+  def widen(v: Any, from: org.apache.spark.sql.types.DataType,
+      to: org.apache.spark.sql.types.DataType, tz: String): Any =
+    (if (from == to) v
+     else org.apache.spark.sql.catalyst.expressions.Cast(
+       org.apache.spark.sql.catalyst.expressions.Literal(v, from), to,
+       Some(tz)).eval()) match {
+      case d: Double if d == 0.0d || d.isNaN => if (d.isNaN) Double.NaN else 0.0d
+      case f: Float if f == 0.0f || f.isNaN => if (f.isNaN) Float.NaN else 0.0f
+      case o => o
+    }
+
+  def partitionedFile(path: String, len: Long)
+      : org.apache.spark.sql.execution.datasources.PartitionedFile =
+    org.apache.spark.sql.execution.datasources.PartitionedFile(
+      InternalRow.empty,
+      org.apache.spark.paths.SparkPath.fromPathString(path),
+      0L, len, Array.empty[String], 0L, len, Map.empty[String, Any])
+
+  def close(it: Iterator[_]): Unit = it match {
+    case c: AutoCloseable => c.close()
+    case _ => ()
+  }
+
+  /** One probe task: read `f` once (the row index rides last) and set,
+    * per check, the positions whose key is in its set. A NULL key
+    * matches nothing. Returns (entry key path, file, positions). */
+  def probe(read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
+        Iterator[InternalRow], f: String, len: Long, checks: Seq[EqCheck],
+      sets: Vector[Set[Any]], tz: String): Seq[(String, String, Array[Long])] = {
+    val bits = checks.map(_ => new java.util.BitSet())
+    val it = read(partitionedFile(f, len))
+    try it.foreach { row =>
+      val i = row.getLong(row.numFields - 1)
+      require(i <= Int.MaxValue,
+        s"row index $i overflows the eq position bitset")
+      checks.zip(bits).foreach { case (c, b) =>
+        if (c.ords.forall(o => !row.isNullAt(o))) {
+          val vs = c.ords.indices.map { n =>
+            val (from, to) = c.types(n)
+            widen(row.get(c.ords(n), from), from, to, tz)
+          }
+          if (sets(c.set).contains(if (vs.length == 1) vs.head else vs))
+            b.set(i.toInt)
+        }
+      }
+    } finally close(it)
+    checks.zip(bits).map { case (c, b) => (c.dataPath, f, b.toLongArray) }
+  }
 }

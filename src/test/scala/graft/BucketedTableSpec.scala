@@ -310,6 +310,51 @@ class BucketedTableSpec extends SparkTestBase {
       === total - nDel)
   }
 
+  test("an eq-pending bucketed table keeps SPJ: the bucketed scan " +
+    "applies eq-retired positions inline, the join stays shuffle-free " +
+    "and equals the join after purge_eq") {
+    val (cat, wh) = freshCatalog()
+    orders.createOrReplaceTempView("bk_eq_o_src")
+    lineitem.createOrReplaceTempView("bk_eq_l_src")
+    spark.sql(s"""CREATE TABLE $cat.o (
+                 |  o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
+                 |PARTITIONED BY (bucket($N, o_orderkey))""".stripMargin)
+    spark.sql(s"""CREATE TABLE $cat.l (
+                 |  l_orderkey BIGINT, l_quantity DOUBLE,
+                 |  l_extendedprice DOUBLE)
+                 |PARTITIONED BY (bucket($N, l_orderkey))""".stripMargin)
+    spark.sql(s"INSERT INTO $cat.o SELECT * FROM bk_eq_o_src")
+    spark.sql(s"INSERT INTO $cat.l SELECT * FROM bk_eq_l_src")
+    val t = s"$wh/o"
+    val keys = orders.select("o_orderkey").orderBy("o_orderkey")
+      .limit(3).collect().map(_.getLong(0))
+    import spark.implicits._
+    val ch = Seq((keys(0), 7L, 1.5, "upsert"), (keys(1), 8L, 2.5, "upsert"),
+        (keys(2), 0L, 0.0, "delete"))
+      .toDF("o_orderkey", "o_custkey", "o_totalprice", "op")
+    Sources.mergeVersionEq(spark, t, ch, Seq("o_orderkey"))
+    assert(Sources.eqOf(t, Sources.latestVersion(t)).nonEmpty)
+    val q =
+      s"""SELECT /*+ MERGE(l) */ o.o_orderkey, o.o_custkey, o.o_totalprice,
+         |       l.l_quantity, l.l_extendedprice
+         |FROM $cat.o o JOIN $cat.l l ON o.o_orderkey = l.l_orderkey""".stripMargin
+    withConf(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val spj = spark.sql(q)
+      val rows = spj.collect().map(_.toString).sorted.toSeq
+      assert(shuffleCount(spj) === 0,
+        s"expected a shuffle-free SPJ plan, got\n${spj.queryExecution.executedPlan}")
+      assert(rows.exists(_.startsWith(s"[${keys(0)},7,1.5,")) &&
+        !rows.exists(_.startsWith(s"[${keys(2)},")))
+      spark.sql(s"CALL $cat.system.purge_eq('o')")
+      assert(Sources.eqOf(t, Sources.latestVersion(t)).isEmpty)
+      assert(spark.sql(q).collect().map(_.toString).sorted.toSeq === rows,
+        "the eq-pending join must equal the join after purge_eq")
+    }
+  }
+
   test("rewrites preserve the bucket layout: DELETE re-buckets survivors, " +
     "compaction re-buckets globally; guards refuse layout-corrupting " +
     "writers") {

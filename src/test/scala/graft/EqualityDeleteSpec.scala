@@ -45,6 +45,46 @@ class EqualityDeleteSpec extends SparkTestBase {
     acc.get()
   }
 
+  /** Spark jobs started while `body` runs (suites run one at a time,
+    * so every job in the window is the body's). */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftTestBridge.waitForListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftTestBridge.waitForListeners(sc)
+      (out, n.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A fresh `g`-style catalog over its own warehouse: (name, dir). */
+  private def freshCatalog(prefix: String): (String, String) = {
+    val wh = java.nio.file.Files.createTempDirectory(prefix).toString
+    val cat = s"$prefix${math.abs(wh.hashCode)}".replace("-", "")
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    (cat, wh)
+  }
+
+  /** `cat.t` created with the orders columns and loaded from `rows` in
+    * one commit; returns the table dir. */
+  private def catalogOrders(cat: String, wh: String,
+      rows: org.apache.spark.sql.DataFrame): String = {
+    val view = s"${cat}_src"
+    rows.createOrReplaceTempView(view)
+    spark.sql(s"CREATE TABLE $cat.t (o_orderkey BIGINT, o_custkey BIGINT," +
+      " o_totalprice DOUBLE, o_orderpriority STRING)")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM $view")
+    s"$wh/t"
+  }
+
   private def changes(upserts: Seq[(Long, Long, Double, String)],
       deletes: Seq[Long]) = {
     import spark.implicits._
@@ -593,5 +633,143 @@ class EqualityDeleteSpec extends SparkTestBase {
     assert(after === before,
       s"CDF range opened ${after - before} parquet footers driver-side " +
         "— per-file schemas must come from the _COLS sidecars")
+  }
+
+  test("building Sources.readVersion over three pending eq entries " +
+    "starts no Spark job (key sets read under their footer schema)") {
+    // a declared-schema (catalog) table: its data files need no
+    // inference either, so every job would be the eq entries'
+    val (cat, wh) = freshCatalog("eqbuild")
+    val t = catalogOrders(cat, wh, ordersBase)
+    val keys = ordersBase.select("o_orderkey").orderBy("o_orderkey")
+      .limit(3).collect().map(_.getLong(0))
+    keys.foreach(k => Sources.mergeVersionEq(spark, t,
+      changes(Seq((k, 1L, 1.0, s"B-$k")), Nil), Seq("o_orderkey")))
+    val v = Sources.latestVersion(t)
+    assert(Sources.eqOf(t, v).length === 3)
+    val (df, jobs) = jobsDuring(Sources.readVersion(spark, t))
+    assert(jobs === 0, s"building the frame started $jobs Spark jobs")
+    assert(df.count() === ordersBase.count())
+    assert(df.filter(col("o_orderpriority").startsWith("B-")).count() === 3L)
+    assert(Sources.eqKeyCount(spark, t, v) === 3L)
+    spark.sql(s"DROP TABLE $cat.t")
+  }
+
+  test("catalog lookups on an eq-pending table plan with at most one " +
+    "Spark job, and none while the memo holds the kept (entry, file) " +
+    "pairs") {
+    val (cat, wh) = freshCatalog("eqbudget")
+    // one base file: every lookup keeps it, plus the upsert batches
+    // whose stats cover its key
+    val table = catalogOrders(cat, wh, ordersBase.coalesce(1))
+    val keys = ordersBase.select("o_orderkey").orderBy("o_orderkey")
+      .limit(6).collect().map(_.getLong(0))
+    Sources.deleteWhereDv(spark, table, col("o_orderkey") === keys(3))
+    Sources.mergeVersionEq(spark, table,
+      changes(Seq((keys(0), 1L, 1.0, "J-1")), Seq(keys(1))),
+      Seq("o_orderkey"))
+    Sources.mergeVersionEq(spark, table,
+      changes(Seq((keys(2), 2L, 2.0, "J-2")), Nil), Seq("o_orderkey"))
+    Sources.mergeVersionEq(spark, table,
+      changes(Seq((keys(0), 3L, 3.0, "J-3")), Nil), Seq("o_orderkey"))
+    assert(Sources.dvOf(table, Sources.latestVersion(table)).nonEmpty)
+    assert(Sources.eqOf(table, Sources.latestVersion(table)).length === 3)
+    def lookup(k: Long) = spark.sql(
+      s"SELECT o_orderkey, o_custkey, o_orderpriority FROM $cat.t " +
+        s"WHERE o_orderkey = $k")
+    def check(k: Long): Unit = {
+      val expected = Sources.readVersion(spark, table)
+        .filter(col("o_orderkey") === k)
+        .select("o_orderkey", "o_custkey", "o_orderpriority")
+        .collect().map(_.toString).sorted.toSeq
+      assert(lookup(k).collect().map(_.toString).sorted.toSeq === expected,
+        s"lookup of $k")
+    }
+    val (_, first) = jobsDuring(lookup(keys(0)).queryExecution.executedPlan)
+    assert(first <= 1, s"first eq-pending plan started $first jobs")
+    val (_, second) = jobsDuring(lookup(keys(4)).queryExecution.executedPlan)
+    assert(second === 0, s"a plan with nothing new started $second jobs")
+    Sources.mergeVersionEq(spark, table,
+      changes(Seq((keys(4), 4L, 4.0, "J-4")), Nil), Seq("o_orderkey"))
+    val (_, third) = jobsDuring(lookup(keys(4)).queryExecution.executedPlan)
+    assert(third <= 1, s"a plan after one new entry started $third jobs")
+    keys.foreach(check)
+    assert(lookup(keys(0)).head().getString(2) === "J-3", "LWW")
+    assert(lookup(keys(1)).isEmpty && lookup(keys(3)).isEmpty)
+    spark.sql(s"DROP TABLE $cat.t")
+  }
+
+  test("the eq position memo is sound: every VERSION AS OF equals " +
+    "readVersion through eq merges, DV deletes, purge and compaction; " +
+    "_gfile/_gpos/_row_id match the physical rows; concurrent plans " +
+    "agree") {
+    val (cat, wh) = freshCatalog("eqmemo")
+    val small = ordersBase.orderBy("o_orderkey").limit(300)
+    val table = catalogOrders(cat, wh, small.coalesce(2))
+    graft.sources.RowIds.enableRowIds(table)
+    val keys = small.select("o_orderkey").collect().map(_.getLong(0))
+    def eqMerge(tag: String, ups: Seq[Long], dels: Seq[Long]): Unit =
+      Sources.mergeVersionEq(spark, table,
+        changes(ups.map(k => (k, 9L, 9.0, s"$tag-$k")), dels),
+        Seq("o_orderkey"))
+    eqMerge("A", keys.slice(0, 5), Seq(keys(5)))
+    Sources.deleteWhereDv(spark, table, col("o_orderkey") === keys(10))
+    eqMerge("B", keys.slice(3, 8), Seq(keys(20)))
+    Sources.purgeEq(spark, table)
+    eqMerge("C", keys.slice(30, 34), Seq(keys(40)))
+    Sources.compactVersion(spark, table, 1000L)
+    eqMerge("D", keys.slice(31, 33) ++ keys.slice(50, 52), Seq(keys(60)))
+    Sources.deleteWhereDv(spark, table, col("o_orderkey") === keys(70))
+    val head = Sources.latestVersion(table)
+    assert(Sources.eqOf(table, head).nonEmpty)
+    val dataCols = Seq("o_orderkey", "o_custkey", "o_totalprice",
+      "o_orderpriority")
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    (1 to head).foreach { v =>
+      assert(sorted(spark.sql(s"SELECT ${dataCols.mkString(", ")} " +
+          s"FROM $cat.t VERSION AS OF $v")) ===
+        sorted(Sources.readVersion(spark, table, v).select(dataCols.map(col): _*)),
+        s"VERSION AS OF $v")
+    }
+    // metadata columns: every served row's (file, position) is where
+    // that exact row physically sits (row contents are unique here)
+    Seq(head - 1, head).foreach { v =>
+      val physical = manifestFiles(table, v).map(f =>
+        spark.read.parquet(f).select(dataCols.map(col) :+
+          lit(f).as("_gfile") :+ col("_metadata.row_index").as("_gpos"): _*))
+        .reduce(_ unionByName _)
+      val expected = physical.join(
+        Sources.readVersion(spark, table, v).select(dataCols.map(col): _*),
+        dataCols, "left_semi")
+      assert(sorted(spark.sql(s"SELECT ${dataCols.mkString(", ")}, " +
+          s"_gfile, _gpos FROM $cat.t VERSION AS OF $v")) ===
+        sorted(expected.select((dataCols :+ "_gfile" :+ "_gpos").map(col): _*)),
+        s"_gfile/_gpos at v$v")
+      assert(sorted(spark.sql(s"SELECT o_orderkey, _row_id FROM $cat.t " +
+          s"VERSION AS OF $v")) ===
+        sorted(graft.sources.RowIds.readVersionWithRowIds(spark, table, v)
+          .select("o_orderkey", "_row_id")),
+        s"_row_id at v$v")
+    }
+    // two threads plan the same table while a brand-new entry's pairs
+    // are still unprobed: both must serve the merged state
+    eqMerge("E", keys.slice(100, 104), Seq(keys(110)))
+    val q = s"SELECT ${dataCols.mkString(", ")} FROM $cat.t " +
+      s"WHERE o_orderkey BETWEEN ${keys(95)} AND ${keys(115)}"
+    val expected = sorted(Sources.readVersion(spark, table)
+      .filter(col("o_orderkey").between(keys(95), keys(115)))
+      .select(dataCols.map(col): _*))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val answers = Seq.fill(2)(pool.submit(
+        new java.util.concurrent.Callable[Seq[String]] {
+          override def call(): Seq[String] = sorted(spark.sql(q))
+        })).map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      answers.foreach(a => assert(a === expected))
+      assert(expected.exists(_.contains("E-")) &&
+        !expected.exists(_.startsWith(s"[${keys(110)},")))
+    } finally pool.shutdown()
+    spark.sql(s"DROP TABLE $cat.t")
   }
 }

@@ -77,7 +77,7 @@ class RuntimeFilterSpec extends SparkTestBase {
                  |TBLPROPERTIES ('stats.columns' = 'o_orderkey',
                  |  'bloom.columns' = 'o_orderkey')""".stripMargin)
     // range-cluster on the key so per-file intervals are tight, then
-    // 8 files; a DV delete routes reads through GraftDvBatchScan
+    // 8 files; a DV delete routes reads through GraftNativeScan
     spark.sql(s"""INSERT INTO $cat.dfp
                  |SELECT /*+ REPARTITION_BY_RANGE(8, o_orderkey) */ *
                  |FROM rtf_src2""".stripMargin)
@@ -102,6 +102,34 @@ class RuntimeFilterSpec extends SparkTestBase {
     val exp = Tables.orders(spark, sf)
       .filter(col("o_orderkey").isin(1L, 2L, 4L) &&
         not(pmod(col("o_orderkey"), lit(97)) === 5))
+      .agg(count(lit(1)), sum("o_totalprice")).head()
+    assert(got.getLong(0) == exp.getLong(0))
+    assert(math.abs(got.getDouble(1) - exp.getDouble(1)) < 1e-6)
+  }
+
+  test("a DV table joined without selecting its stats/bloom columns " +
+    "plans: runtime-filter attributes name only the scan's output") {
+    val cat = freshCatalog()
+    Tables.orders(spark, sf)
+      .select("o_orderkey", "o_custkey", "o_totalprice")
+      .createOrReplaceTempView("rtf_src3")
+    spark.sql(s"""CREATE TABLE $cat.dfo (
+                 |  o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
+                 |TBLPROPERTIES ('stats.columns' = 'o_orderkey')""".stripMargin)
+    spark.sql(s"INSERT INTO $cat.dfo SELECT * FROM rtf_src3")
+    spark.sql(s"DELETE FROM $cat.dfo WHERE o_orderkey % 97 = 5")
+    Tables.customer(spark, sf).select("c_custkey", "c_nationkey")
+      .createOrReplaceTempView("rtf_dim3")
+    // the scan outputs o_custkey/o_totalprice only: its stats column
+    // o_orderkey must not be offered as a runtime-filter attribute
+    val got = spark.sql(
+      s"""SELECT count(*) AS n, sum(f.o_totalprice) AS s
+         |FROM $cat.dfo f JOIN rtf_dim3 d ON f.o_custkey = d.c_custkey
+         |WHERE d.c_nationkey = 3""".stripMargin).head()
+    val exp = Tables.orders(spark, sf)
+      .filter(not(pmod(col("o_orderkey"), lit(97)) === 5))
+      .join(Tables.customer(spark, sf).filter(col("c_nationkey") === 3),
+        col("o_custkey") === col("c_custkey"))
       .agg(count(lit(1)), sum("o_totalprice")).head()
     assert(got.getLong(0) == exp.getLong(0))
     assert(math.abs(got.getDouble(1) - exp.getDouble(1)) < 1e-6)
