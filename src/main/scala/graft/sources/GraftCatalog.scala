@@ -1143,24 +1143,23 @@ private[sources] class GraftBatchWrite(spark: SparkSession, table: String,
   import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
   private val batchDir = java.nio.file.Paths.get(table, "data",
     s"batch-rlo-${java.util.UUID.randomUUID().toString.take(12)}")
+  // every file is new after a whole-table-group rewrite: the sidecars
+  // are the writers' own lines, for every column the base covers
+  private val cover = Sources.sidecarCover(table, basedOn)
+  private val spec = GraftDataWriterFactory.statsSpec(spark, schema, cover)
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory = {
     java.nio.file.Files.createDirectories(batchDir)
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConf())
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[org.apache.spark.sql.catalyst.InternalRow])
-    val owf = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, schema)
-    new GraftDataWriterFactory(owf,
-      new SerializableConf(job.getConfiguration), batchDir.toString, schema)
+    GraftDataWriterFactory(spark, batchDir.toString, schema, spec)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect {
-      case GraftWriteMessage(fs) => fs
+      case GraftWriteMessage(fs, _) => fs
     }.flatten.toSeq.sorted
+    // the files' footer shape, so readers never infer it
+    Sources.recordFileCols(files, schema)
     val next =
       try Sources.publishReplacing(table, basedOn, files)
       catch {
@@ -1170,22 +1169,30 @@ private[sources] class GraftBatchWrite(spark: SparkSession, table: String,
     // a rewrite that deletes everything publishes an EMPTY version:
     // pin the write schema or the table has no schema source left
     if (files.isEmpty) Sources.publishSchema(table, next, schema)
-    // self-maintaining skipping holds through rewrites too (all files
-    // are new after a whole-table-group rewrite: nothing to carry)
-    val cols = Sources.statsColumnsOf(table)
-      .filter(schema.fieldNames.contains(_))
-    val bcols = Sources.bloomColumnsOf(table)
-      .filter(schema.fieldNames.contains(_))
-    if (files.nonEmpty)
-      Sources.commitSidecars(spark, table, next, cols, bcols, -1)
+    else Sources.commitSidecars(table, next, -1,
+      GraftWriteMessage.lines(spec, messages), cover)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     Sources.deleteTree(batchDir)
 }
 
-private[graft] case class GraftWriteMessage(files: Seq[String])
+/** A DSv2 write task's files and, per file, the statistics its writer
+  * accumulated ([[FileStatsSpec]]). */
+private[graft] case class GraftWriteMessage(files: Seq[String],
+    stats: Seq[FileStats] = Nil)
   extends org.apache.spark.sql.connector.write.WriterCommitMessage
+
+private[graft] object GraftWriteMessage {
+  /** The sidecar lines of every file the messages' tasks wrote. */
+  def lines(spec: FileStatsSpec,
+      messages: Iterable[org.apache.spark.sql.connector.write.WriterCommitMessage])
+      : SidecarLines =
+    if (spec == null || spec.isEmpty) SidecarLines.empty
+    else spec.render(messages.collect {
+      case GraftWriteMessage(_, st) => st
+    }.flatten.toSeq, identity)
+}
 
 /** Ships the prepared Hadoop job configuration to executor tasks
   * (Hadoop's Configuration is not Serializable; its own
@@ -1206,7 +1213,8 @@ private[sources] class SerializableConf(
 
 private[sources] class GraftDataWriterFactory(
     owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: SerializableConf, dir: String, schema: StructType)
+    conf: SerializableConf, dir: String, schema: StructType,
+    spec: FileStatsSpec)
   extends org.apache.spark.sql.connector.write.DataWriterFactory {
 
   import org.apache.spark.sql.catalyst.InternalRow
@@ -1244,24 +1252,30 @@ private[sources] class GraftDataWriterFactory(
       // writer's job. All emitted rows are survivors to write; the op
       // value only selects metadata handling upstream.
       private val shifted = new OffsetRow(1)
+      private val stats =
+        if (spec.isEmpty) None else Some(spec.newAccumulator())
 
       override def write(row: InternalRow): Unit = {
         if (out == null) {
           path = f"$dir/$stem-$partitionId%05d-$taskId${owf.getFileExtension(ctx)}"
           out = owf.newInstance(path, schema, ctx)
         }
-        if (row.numFields == schema.length) out.write(row)
-        else {
-          require(row.numFields == schema.length + 1,
-            s"row has ${row.numFields} fields for a ${schema.length}-column write")
-          shifted.target(row)
-          out.write(shifted)
-        }
+        val data =
+          if (row.numFields == schema.length) row
+          else {
+            require(row.numFields == schema.length + 1,
+              s"row has ${row.numFields} fields for a ${schema.length}-column write")
+            shifted.target(row)
+            shifted
+          }
+        out.write(data)
+        stats.foreach(_.add(data))
       }
 
       override def commit(): WriterCommitMessage = {
         if (out != null) out.close()
-        GraftWriteMessage(if (path == null) Nil else Seq(path))
+        if (path == null) GraftWriteMessage(Nil, Nil)
+        else GraftWriteMessage(Seq(path), stats.map(_.result(path)).toSeq)
       }
 
       override def abort(): Unit = {
@@ -1272,6 +1286,29 @@ private[sources] class GraftDataWriterFactory(
 
       override def close(): Unit = ()
     }
+}
+
+private[sources] object GraftDataWriterFactory {
+
+  /** The per-file statistics a DSv2 write of `schema` accumulates. */
+  def statsSpec(spark: SparkSession, schema: StructType,
+      cover: StatsCover): FileStatsSpec =
+    new FileStatsSpec(schema, cover,
+      spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** A factory writing parquet files of `schema` into `dir` through
+    * Spark's own parquet `OutputWriter`, prepared on the driver. */
+  def apply(spark: SparkSession, dir: String, schema: StructType,
+      spec: FileStatsSpec): GraftDataWriterFactory = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[org.apache.spark.sql.catalyst.InternalRow])
+    val owf = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, schema)
+    new GraftDataWriterFactory(owf,
+      new SerializableConf(job.getConfiguration), dir, schema, spec)
+  }
 }
 
 /** A reusable view of an [[org.apache.spark.sql.catalyst.InternalRow]]
@@ -1353,24 +1390,13 @@ private[sources] class GraftWriteBuilder(table: String,
           // writer knowing anything; compaction re-clusters globally
           val toRelease =
             scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
-          val v =
-            try Sources.commitVersion(
-              Sources.clusterByLayout(data, table, toRelease), table,
-              overwrite = replace)
-            finally toRelease.foreach(_.unpersist(false))
-          // self-maintaining skipping: `stats.columns` tables harvest
-          // the min/max sidecar on EVERY commit — incremental
-          // (carryFrom copies the carried files' stats forward, only
-          // the new batch is scanned) for appends, fresh for overwrite
-          val cols = Sources.statsColumnsOf(table)
-            .filter(data.schema.fieldNames.contains(_))
-          // `bloom.columns`: per-file bloom sidecar for point-predicate
-          // skipping on non-clustering columns — rides the SAME scan as
-          // the stats (fused sidecar pass), same incremental carry
-          val bcols = Sources.bloomColumnsOf(table)
-            .filter(data.schema.fieldNames.contains(_))
-          Sources.commitSidecars(data.sparkSession, table, v, cols, bcols,
-            if (replace) -1 else v - 1)
+          // self-maintaining skipping: the commit's write job computes
+          // the `stats.columns`/`bloom.columns` sidecar lines of the
+          // files it writes; appends carry the rest forward
+          try Sources.commitVersion(
+            Sources.clusterByLayout(data, table, toRelease), table,
+            overwrite = replace)
+          finally toRelease.foreach(_.unpersist(false))
           ()
         }
 
@@ -1416,17 +1442,17 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
   private val streamDir = java.nio.file.Paths.get(table, "data",
     s"stream-${java.util.UUID.randomUUID().toString.take(12)}")
 
+  // the epoch's sidecar cover, fixed when its writer factory is made
+  @volatile private var cover = StatsCover.empty
+  @volatile private var spec: FileStatsSpec = _
+
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     java.nio.file.Files.createDirectories(streamDir)
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConf())
-    job.setOutputKeyClass(classOf[Void])
-    job.setOutputValueClass(classOf[org.apache.spark.sql.catalyst.InternalRow])
-    val owf = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, schema)
-    val factory = new GraftDataWriterFactory(owf,
-      new SerializableConf(job.getConfiguration), streamDir.toString, schema)
+    cover = Sources.sidecarCover(table, Sources.latestVersion(table))
+    spec = GraftDataWriterFactory.statsSpec(spark, schema, cover)
+    val factory =
+      GraftDataWriterFactory(spark, streamDir.toString, schema, spec)
     (partitionId: Int, taskId: Long, epochId: Long) =>
       factory.createEpochWriter(partitionId, taskId, epochId)
   }
@@ -1438,7 +1464,7 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect {
-      case GraftWriteMessage(fs) => fs
+      case GraftWriteMessage(fs, _) => fs
     }.flatten.toSeq.sorted
     if (Sources.appliedVersion(table, queryId) >= epochId) {
       deleteAll(files) // a replay of an epoch the ledger holds
@@ -1450,26 +1476,19 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
       // unreferenced parquet under data/ forever, since vacuum only
       // sweeps manifest-referenced files) and records no entry, so the
       // retry is never mistaken for a duplicate
+      // the epoch's sidecar lines ride the publish
       val v =
         try Sources.commitVersionFiles(table, files, Some(schema),
-          txn = Some(queryId -> epochId))
+          txn = Some(queryId -> epochId),
+          fresh = GraftWriteMessage.lines(spec, messages), cover = cover)
         catch { case e: Throwable => deleteAll(files); throw e }
       if (!Sources.filesOf(table, v).contains(files.head))
         deleteAll(files) // a racing run of this query published first
-      else {
-        // skipping sidecars only: a failure here leaves the committed
-        // epoch readable, and its replay a plain duplicate
-        val cols = Sources.statsColumnsOf(table)
-          .filter(schema.fieldNames.contains(_))
-        val bcols = Sources.bloomColumnsOf(table)
-          .filter(schema.fieldNames.contains(_))
-        Sources.commitSidecars(spark, table, v, cols, bcols, v - 1)
-      }
     }
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    deleteAll(messages.collect { case GraftWriteMessage(fs) => fs }
+    deleteAll(messages.collect { case GraftWriteMessage(fs, _) => fs }
       .flatten.toSeq)
 }

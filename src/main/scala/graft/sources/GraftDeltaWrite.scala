@@ -268,7 +268,7 @@ private[sources] class GraftDeltaWrite(spark: SparkSession, table: String,
     new GraftDeltaBatchWrite(spark, table, rowSchema, basedOn, lineage)
 }
 
-private[sources] case class GraftDeltaMessage(files: Seq[String],
+private[sources] case class GraftDeltaMessage(written: GraftWriteMessage,
     dv: Map[String, Array[Byte]]) extends WriterCommitMessage
 
 private[sources] class GraftDeltaBatchWrite(spark: SparkSession,
@@ -278,6 +278,10 @@ private[sources] class GraftDeltaBatchWrite(spark: SparkSession,
 
   private val batchDir = java.nio.file.Paths.get(table, "data",
     s"batch-delta-${java.util.UUID.randomUUID().toString.take(12)}")
+  // the appended files' sidecar lines ride their writers; base files
+  // carry theirs
+  private val cover = Sources.sidecarCover(table, basedOn)
+  private var spec: FileStatsSpec = _
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory = {
@@ -292,22 +296,16 @@ private[sources] class GraftDeltaBatchWrite(spark: SparkSession,
         if (!lineage) rowSchema
         else StructType(rowSchema.fields :+
           StructField(RowIds.COL, LongType, nullable = true))
-      val job = org.apache.hadoop.mapreduce.Job.getInstance(
-        spark.sessionState.newHadoopConf())
-      job.setOutputKeyClass(classOf[Void])
-      job.setOutputValueClass(classOf[InternalRow])
-      val owf = new ParquetFileFormat()
-        .prepareWrite(spark, job, Map.empty, writeSchema)
-      Some(new GraftDataWriterFactory(owf,
-        new SerializableConf(job.getConfiguration), batchDir.toString,
-        writeSchema))
+      spec = GraftDataWriterFactory.statsSpec(spark, writeSchema, cover)
+      Some(GraftDataWriterFactory(spark, batchDir.toString, writeSchema,
+        spec))
     } else None
     new GraftDeltaWriterFactory(inner, lineage)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.collect { case m: GraftDeltaMessage => m }
-    val newFiles = msgs.flatMap(_.files).toSeq.sorted
+    val newFiles = msgs.flatMap(_.written.files).toSeq.sorted
     val deletes = scala.collection.mutable.Map.empty[String, java.util.BitSet]
     msgs.foreach(_.dv.foreach { case (f, bytes) =>
       val b = java.util.BitSet.valueOf(bytes)
@@ -335,7 +333,8 @@ private[sources] class GraftDeltaBatchWrite(spark: SparkSession,
           "graft table is not supported — use Sources.mergeVersionDv " +
           "(layout-aware keyed merge-on-read) or DELETE + INSERT")
     }
-    try Sources.commitDelta(spark, table, basedOn, deletes.toMap, newFiles)
+    try Sources.commitDelta(table, basedOn, deletes.toMap, newFiles,
+      GraftWriteMessage.lines(spec, msgs.map(_.written)), cover)
     catch {
       case e: java.util.ConcurrentModificationException =>
         Sources.deleteTree(batchDir); throw e
@@ -395,13 +394,11 @@ private[sources] class GraftDeltaWriterImpl(
       else null)
   }
 
-  override def commit(): WriterCommitMessage = {
-    val files = inner.map(_.commit()).collect {
-      case GraftWriteMessage(fs) => fs
-    }.getOrElse(Seq.empty)
-    GraftDeltaMessage(files,
+  override def commit(): WriterCommitMessage =
+    GraftDeltaMessage(inner.map(_.commit()).collect {
+      case m: GraftWriteMessage => m
+    }.getOrElse(GraftWriteMessage(Nil, Nil)),
       dv.map { case (f, b) => f -> b.toByteArray }.toMap)
-  }
 
   override def abort(): Unit = inner.foreach(_.abort())
   override def close(): Unit = inner.foreach(_.close())

@@ -490,11 +490,14 @@ object Sources {
     // returns the head version
     val head = latestVersion(table)
     if (txnApplied(table, head, txn)) return head
-    val files = writeBatch(df, table)
+    val cover = sidecarCover(table, head)
+    val written = writeBatch(df, table, cover)
+    val files = written.files
     def dropBatch(): Unit = files.headOption.foreach(f =>
       deleteBatchDir(java.nio.file.Paths.get(f).getParent))
     try publishNextVersion(table, files, overwrite,
-      batchSchema = Some(df.schema), txn = txn).getOrElse {
+      batchSchema = Some(df.schema), txn = txn,
+      fresh = written.lines, cover = cover).getOrElse {
       dropBatch() // a racing run of the same consumer applied it first
       latestVersion(table)
     }
@@ -515,31 +518,30 @@ object Sources {
     * returned (the files stay the caller's to delete). With no files it
     * publishes a manifest-only version — the head's exact file set,
     * schema and skipping sidecars under a new number — the bookmark a
-    * consumer whose drain changed nothing uses to record its `txn`. */
-  def commitVersionFiles(table: String, files: Seq[String],
+    * consumer whose drain changed nothing uses to record its `txn`.
+    * `fresh` carries the files' sidecar lines from their writers. */
+  private[graft] def commitVersionFiles(table: String, files: Seq[String],
       batchSchema: Option[StructType] = None,
-      txn: Option[(String, Long)] = None): Int = {
+      txn: Option[(String, Long)] = None,
+      fresh: SidecarLines = SidecarLines.empty,
+      cover: StatsCover = StatsCover.empty): Int = {
     batchSchema.foreach(s =>
       requireNoForgedRowIds(table, s, "commitVersionFiles"))
     // pre-written epoch files share dirs across epochs — record their
     // footer shape per file so CDF readers never re-open the footers
     batchSchema.foreach(recordFileCols(files, _))
     publishNextVersion(table, files, overwrite = false,
-      batchSchema = batchSchema, txn = txn)
+      batchSchema = batchSchema, txn = txn, fresh = fresh, cover = cover)
       .getOrElse(latestVersion(table))
   }
 
   /** Write `df` as an immutable, uniquely-named batch directory under
-    * the table and return its file list — the data half of every
-    * commit path. */
-  private def writeBatch(df: DataFrame, table: String): Seq[String] = {
-    val batch = java.nio.file.Paths.get(table, "data",
-      s"batch-${java.util.UUID.randomUUID().toString.take(12)}")
-    writePartitionedBatch(df, table, batch.toString)
-    // recursive walk (partitioned batches nest c=v/ dirs); a
-    // 0-partition input (e.g. TRUNCATE's empty frame) yields Nil
-    batchParquetFiles(batch)
-  }
+    * the table — the data half of every commit path. */
+  private def writeBatch(df: DataFrame, table: String,
+      cover: StatsCover): WrittenBatch =
+    writePartitionedBatch(df, table, java.nio.file.Paths.get(table, "data",
+      s"batch-${java.util.UUID.randomUUID().toString.take(12)}").toString,
+      cover)
 
   /** Recursively delete a directory tree (a rejected/orphaned batch
     * dir, a dropped table, a dropped namespace) — partitioned writes
@@ -567,7 +569,9 @@ object Sources {
     * with a racing commit — they DETECT the conflict instead. */
   private def publishNextVersion(table: String, newFiles: Seq[String],
       overwrite: Boolean, batchSchema: Option[StructType] = None,
-      txn: Option[(String, Long)] = None): Option[Int] = {
+      txn: Option[(String, Long)] = None,
+      fresh: SidecarLines = SidecarLines.empty,
+      cover: StatsCover = StatsCover.empty): Option[Int] = {
     var attempt = 0
     while (true) {
       val prev = latestVersion(table)
@@ -620,7 +624,8 @@ object Sources {
         publishManifest(table, next, carried ++ newFiles, staged, txn)
         promoteStaged(table, next, staged)
         declaredNext.foreach(publishSchema(table, next, _))
-        if (bookmark) copyStatsSidecar(table, prev, next)
+        commitSidecars(table, next,
+          if (overwrite || prev == 0) -1 else prev, fresh, cover)
         return Some(next)
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -868,9 +873,7 @@ object Sources {
       // generation — the declared read widens narrow generations
       // through the parquet reader's type promotion instead
       applyEq(spark,
-        applyDv(declaredSchema(table, v)
-          .fold(spark.read)(sc => spark.read.schema(sc))
-          .parquet(files: _*), dvOf(table, v)), table, v)
+        applyDv(readFiles(spark, table, v, files), dvOf(table, v)), table, v)
   }
 
   // ---- deletion vectors: merge-on-read row-level deletes -------------
@@ -1006,9 +1009,20 @@ object Sources {
     // previous DV (or a pending eq entry) already deleted — marking a
     // dead row would double-count here and double-delete in the CDF;
     // partition-aware so the predicate may reference partition columns
-    val matched = applyEq(spark,
-        applyDv(readFileSubset(spark, table, v, candidates), prevDv),
-        table, v)
+    val scan = readFileSubset(spark, table, v, candidates)
+    val live =
+      if (partitionColumnsOf(table).isEmpty && partTransformOf(table).isEmpty) {
+        // the native scan's skip bitset per file: DV marks OR the
+        // memoized eq-retired positions — at most one probe job, however
+        // many entries are pending
+        val eqPos = eqRetiredPositions(spark, table, candidates, eqOf(table, v))
+        dvFilter(scan, candidates.flatMap { f =>
+          val n = normalizePath(f)
+          orBits(prevDv.get(n), eqPos.get(f))
+            .map(b => n -> java.util.BitSet.valueOf(b))
+        }.toMap, keepDeleted = false)
+      } else applyEq(spark, applyDv(scan, prevDv), table, v)
+    val matched = live
       .filter(coalesce(cond, lit(false)))
       .select(col("_metadata.file_path").as("__p"),
         col("_metadata.row_index").as("__i"))
@@ -1132,11 +1146,11 @@ object Sources {
     * the carried DV sidecar — the driver half of the SQL
     * MERGE/UPDATE/DELETE merge-on-read path ([[GraftDeltaBatchWrite]]).
     * Conflict-detecting (a racing commit fails the publish loudly);
-    * schema, stats, and blooms carry forward, only the appended batch
-    * is scanned. */
-  private[sources] def commitDelta(spark: SparkSession, table: String,
+    * schema, stats, and blooms carry forward; the appended files' lines
+    * come from their writers (`fresh`). */
+  private[sources] def commitDelta(table: String,
       basedOn: Int, deletes: Map[String, java.util.BitSet],
-      newFiles: Seq[String]): Int = {
+      newFiles: Seq[String], fresh: SidecarLines, cover: StatsCover): Int = {
     val files = filesOf(table, basedOn)
     val known = files.toSet
     deletes.keys.foreach(f => require(known.contains(f),
@@ -1155,11 +1169,7 @@ object Sources {
       "delta-write", dv = merged.toMap,
       eq = carriedEq(table, basedOn, files))
     declaredSchema(table, basedOn).foreach(publishSchema(table, next, _))
-    val schemaCols = schemaOf(spark, table, basedOn).fieldNames.toSet
-    val statCols = statsColumnsOf(table).filter(schemaCols.contains)
-    val bloomCols = bloomColumnsOf(table).filter(schemaCols.contains)
-    // one scan builds stats + blooms together (fused sidecar pass)
-    commitSidecars(spark, table, next, statCols, bloomCols, basedOn)
+    commitSidecars(table, next, basedOn, fresh, cover)
     next
   }
 
@@ -1185,8 +1195,9 @@ object Sources {
       table, v)
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-purge-${java.util.UUID.randomUUID().toString.take(8)}")
-    writePartitionedBatch(survivors, table, batch.toString)
-    val newFiles = batchParquetFiles(batch)
+    val cover = sidecarCover(table, v)
+    val written = writePartitionedBatch(survivors, table, batch.toString, cover)
+    val newFiles = written.files
     val next =
       // pending eq entries of the untouched files ride the claim
       try publishIfLatestWith(table, v, carried ++ newFiles, "dv-purge",
@@ -1196,11 +1207,7 @@ object Sources {
           deleteBatchDir(batch); throw e
       }
     rewriteSchemaCarry(spark, table, v, next)
-    val stattedCols = statsOf(table, v).keys.map(_._2).toSeq.distinct ++
-      statsOfString(table, v).keys.map(_._2).toSeq.distinct
-    val bloomCols = bloomsOf(table, v).keys.map(_._2).toSeq.distinct
-    if ((carried ++ newFiles).nonEmpty)
-      commitSidecars(spark, table, next, stattedCols.distinct, bloomCols, v)
+    commitSidecars(table, next, v, written.lines, cover)
     // no DV publish: every DV'd file was rewritten — the new version is
     // clean and reads on the untouched vectorized fast path again
     // (pending eq entries DID carry for the untouched files — staged
@@ -1694,8 +1701,15 @@ object Sources {
       evolveSchema(targetSchema0, changes.drop(opCol).schema, Map.empty))
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-eqmerge-${java.util.UUID.randomUUID().toString.take(8)}")
-    val newFiles =
-      if (!hasUpserts) Seq.empty[String]
+    // stats/blooms: carried files carry; the appended batch's lines ride
+    // its write. The key columns join the cover only where the table
+    // already keeps skipping sidecars — a bare table's eq merge stays
+    // bare
+    val cover0 = sidecarCover(table, v)
+    val cover =
+      if (cover0.stats.isEmpty) cover0 else cover0.withStats(keyCols)
+    val written =
+      if (!hasUpserts) WrittenBatch(Nil, SidecarLines.empty)
       else {
         // the upsert row count already rode the key write (upObs) —
         // size the batch's file count by DATA, not core count: without
@@ -1704,9 +1718,9 @@ object Sources {
         writePartitionedBatch(
           alignToSchema(upserts, targetSchema, Map.empty)
             .coalesce(batchFileCount(spark, obsLong(upObs, "nu"))),
-          table, batch.toString)
-        batchParquetFiles(batch)
+          table, batch.toString, cover)
       }
+    val newFiles = written.files
     // the new eq entry (and carried DV + prior entries) ride the CLAIM
     // itself: a concurrent committer that loses the race on v+1 and
     // retries its carry pass against this version can never read the
@@ -1730,19 +1744,7 @@ object Sources {
       case None =>
         declaredSchema(table, v).foreach(publishSchema(table, next, _))
     }
-    // stats/blooms: carried files carry; ONLY the appended batch is
-    // scanned, and only when the table already keeps skipping sidecars
-    // — a bare table's eq merge touches zero data files beyond its own
-    // batch write
-    val schemaCols = schemaOf(spark, table, v).fieldNames.toSet
-    val statCols =
-      if (statsOf(table, v).nonEmpty || statsOfString(table, v).nonEmpty ||
-          statsColumnsOf(table).nonEmpty)
-        (keyCols ++ statsColumnsOf(table))
-          .distinct.filter(schemaCols.contains)
-      else Seq.empty[String]
-    val bloomCols = bloomColumnsOf(table).filter(schemaCols.contains)
-    commitSidecars(spark, table, next, statCols, bloomCols, v)
+    commitSidecars(table, next, v, written.lines, cover)
     (next, nKeys)
   }
 
@@ -1778,8 +1780,9 @@ object Sources {
       table, v)
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-eqpurge-${java.util.UUID.randomUUID().toString.take(8)}")
-    writePartitionedBatch(survivors, table, batch.toString)
-    val newFiles = batchParquetFiles(batch)
+    val cover = sidecarCover(table, v)
+    val written = writePartitionedBatch(survivors, table, batch.toString, cover)
+    val newFiles = written.files
     // rewritten files' DVs are absorbed with their eq entries; carried
     // (out-of-scope) files keep theirs — staged with the claim; no eq
     // rides: every in-scope file was rewritten, the version is clean
@@ -1791,11 +1794,7 @@ object Sources {
           deleteBatchDir(batch); throw e
       }
     rewriteSchemaCarry(spark, table, v, next)
-    val stattedCols = statsOf(table, v).keys.map(_._2).toSeq.distinct ++
-      statsOfString(table, v).keys.map(_._2).toSeq.distinct
-    val bloomCols = bloomsOf(table, v).keys.map(_._2).toSeq.distinct
-    if ((carried ++ newFiles).nonEmpty)
-      commitSidecars(spark, table, next, stattedCols.distinct, bloomCols, v)
+    commitSidecars(table, next, v, written.lines, cover)
     (next, affected.length)
   }
 
@@ -1835,10 +1834,35 @@ object Sources {
   }
 
   /** Effective schema of `version`: the pinned sidecar, else the head
-    * data file's footer (pre-evolution versions). */
+    * data file's footer (pre-evolution versions). Starts no Spark job. */
   def schemaOf(spark: SparkSession, table: String, version: Int): StructType =
     declaredSchema(table, version).getOrElse(
-      spark.read.parquet(filesOf(table, version).head).schema)
+      footerSchema(spark, filesOf(table, version).head))
+
+  /** The schema `spark.read.parquet(file)` infers, without the inference
+    * job: the writer-recorded footer schema ([[fileSchemaOf]]) made
+    * nullable, as every file-source read makes it. */
+  private[sources] def footerSchema(spark: SparkSession,
+      file: String): StructType = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
+    def nullable(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) =>
+        MapType(nullable(k), nullable(v), valueContainsNull = true)
+      case other => other
+    }
+    nullable(fileSchemaOf(spark, file)).asInstanceOf[StructType]
+  }
+
+  /** `files` of `version` as one flat read under the version's declared
+    * schema, else under the first file's footer schema — what schema
+    * inference would pick, without its job. */
+  private def readFiles(spark: SparkSession, table: String, version: Int,
+      files: Seq[String]): DataFrame =
+    spark.read.schema(declaredSchema(table, version)
+      .getOrElse(footerSchema(spark, files.head))).parquet(files: _*)
 
   /** Evolve `prev` (the table's declared schema) by `cur` (the incoming
     * batch's): kept fields widen losslessly or keep their type,
@@ -1928,8 +1952,10 @@ object Sources {
     require(lost.isEmpty,
       s"evolving commit on $table would rename pending equality-delete " +
         s"key column(s) ${lost.mkString(", ")} — purge_eq first")
-    val v = publishNextVersion(table, writeBatch(df, table),
-      overwrite = false).get
+    val cover = sidecarCover(table, prevV)
+    val written = writeBatch(df, table, cover)
+    val v = publishNextVersion(table, written.files, overwrite = false,
+      fresh = written.lines, cover = cover).get
     publishSchema(table, v, declared)
     v
   }
@@ -1969,273 +1995,143 @@ object Sources {
       .reduce(_ unionByName _)
   }
 
-  /** Mergeable per-file Bloom builder for the FUSED sidecar pass: the
-    * same `spark.util.sketch.BloomFilter` commitBlooms builds, run as
-    * an Aggregator inside commitStats' per-file groupBy so ONE scan of
-    * a commit's new files yields stats + NDV + blooms together (one
-    * job fewer per commit, engine-wide — guide §1.2 "don't compute
-    * things twice"). */
-  private class BloomAgg(expected: Long, fpp: Double)
-      extends org.apache.spark.sql.expressions.Aggregator[String,
-        org.apache.spark.util.sketch.BloomFilter, Array[Byte]] {
-    override def zero: org.apache.spark.util.sketch.BloomFilter =
-      org.apache.spark.util.sketch.BloomFilter.create(expected, fpp)
-    override def reduce(b: org.apache.spark.util.sketch.BloomFilter,
-        a: String): org.apache.spark.util.sketch.BloomFilter = {
-      if (a != null) b.putString(a)
-      b
-    }
-    override def merge(x: org.apache.spark.util.sketch.BloomFilter,
-        y: org.apache.spark.util.sketch.BloomFilter)
-        : org.apache.spark.util.sketch.BloomFilter = {
-      x.mergeInPlace(y)
-      x
-    }
-    override def finish(b: org.apache.spark.util.sketch.BloomFilter)
-        : Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      b.writeTo(bos)
-      bos.toByteArray
-    }
-    override def bufferEncoder
-        : org.apache.spark.sql.Encoder[
-          org.apache.spark.util.sketch.BloomFilter] =
-      org.apache.spark.sql.Encoders.kryo[
-        org.apache.spark.util.sketch.BloomFilter]
-    override def outputEncoder
-        : org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
+  // ---- skipping sidecars: `v<N>.stats`, `v<N>.ndv`, `v<N>.bloom` -------
+  //
+  // One line per (file, column): min/max for data skipping (`.stats`),
+  // the row count and an HLL sketch for the planner (`.ndv`), a bloom
+  // filter for point-predicate skipping (`.bloom`). A data file is
+  // immutable, so its lines are computed ONCE — by the job that writes
+  // it ([[FileStats]]) — and every later commit that keeps the file
+  // copies them forward verbatim. No commit path scans data for them;
+  // [[commitStats]] is the explicit backfill for files no sidecar covers.
+
+  /** The raw lines of `version`'s `kind` sidecar; empty if it has none. */
+  private def sidecarRaw(table: String, version: Int,
+      kind: String): Seq[String] = {
+    val p = java.nio.file.Paths.get(table, s"v$version.$kind")
+    if (version < 1 || !java.nio.file.Files.exists(p)) Nil
+    else sidecarLines(p)
   }
 
-  /** One scan for every sidecar a commit needs: stats (+NDV) and —
-    * when `bloomCols` is non-empty — bloom filters ride the same
-    * per-file aggregate job. Falls through to the single-sided writers
-    * when only one side is declared. */
-  private[sources] def commitSidecars(spark: SparkSession, table: String,
-      version: Int, statCols: Seq[String], bloomCols: Seq[String],
-      carryFrom: Int): Unit =
-    if (statCols.nonEmpty)
-      commitStats(spark, table, version, statCols, carryFrom = carryFrom,
-        bloomCols = bloomCols)
-    else if (bloomCols.nonEmpty)
-      commitBlooms(spark, table, version, bloomCols, carryFrom = carryFrom)
+  /** (file, column) of one sidecar line: `.ndv` lines lead with their
+    * `R`/`H` tag (an `R` line covers no column). */
+  private def lineKey(kind: String, line: String): Option[(String, String)] = {
+    val fs = line.split("\t", 4)
+    if (kind != "ndv") fs.lift(0).zip(fs.lift(1))
+    else if (fs(0) == "H") fs.lift(1).zip(fs.lift(2))
+    else None
+  }
 
-  /** Per-file min/max column statistics for a version, persisted as a
-    * `v<N>.stats` sidecar next to the manifest — the data-skipping half
-    * of the minimal table format (what Delta/Iceberg keep per file in
-    * the commit log). Stats are harvested in ONE Spark job over the
-    * version's files (`groupBy(input_file_name())`), at commit time —
-    * when the data is already hot — never at read time.
+  /** The columns a commit based on `base` covers: the declared
+    * `stats.columns`/`bloom.columns` plus every column `base`'s sidecars
+    * already cover, so coverage never shrinks. */
+  private[sources] def sidecarCover(table: String, base: Int): StatsCover = {
+    def covered(kinds: String*): Seq[String] = kinds.flatMap(k =>
+      sidecarRaw(table, base, k).flatMap(lineKey(k, _)).map(_._2)).distinct
+    StatsCover((statsColumnsOf(table) ++ covered("stats", "ndv")).distinct,
+      (bloomColumnsOf(table) ++ covered("bloom")).distinct)
+  }
+
+  /** Publish `version`'s skipping sidecars: the lines of `carryFrom`
+    * (-1: none) for every file the version keeps, plus the `fresh` lines
+    * of the files the commit wrote. Scans nothing. A sidecar kind the
+    * `cover` declares is written even when empty, as a marker that the
+    * table keeps it. */
+  private[sources] def commitSidecars(table: String, version: Int,
+      carryFrom: Int, fresh: SidecarLines, cover: StatsCover): Unit = {
+    val keep = filesOf(table, version).map(normalizePath).toSet --
+      fresh.files.map(normalizePath)
+    def carried(kind: String): Seq[String] =
+      sidecarRaw(table, carryFrom, kind).filter { l =>
+        val f = l.split("\t", 3)
+        keep(normalizePath(if (kind == "ndv") f(1) else f(0)))
+      }
+    writeSidecar(table, version, "stats", carried("stats") ++ fresh.stats,
+      cover.stats.nonEmpty)
+    writeSidecar(table, version, "ndv", carried("ndv") ++ fresh.ndv,
+      force = false)
+    writeSidecar(table, version, "bloom", carried("bloom") ++ fresh.bloom,
+      cover.blooms.nonEmpty)
+  }
+
+  private def writeSidecar(table: String, version: Int, kind: String,
+      lines: Seq[String], force: Boolean): Unit =
+    if (lines.nonEmpty || force) {
+      val dir = java.nio.file.Paths.get(table)
+      val tmp = java.nio.file.Files.createTempFile(dir, s".$kind$version", ".tmp")
+      java.nio.file.Files.write(tmp, lines.sorted.mkString("\n").getBytes("UTF-8"))
+      java.nio.file.Files.move(tmp, dir.resolve(s"v$version.$kind"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+
+  /** Backfill `version`'s sidecars for `cols` (min/max + NDV) and
+    * `bloomCols`: files whose lines in `carryFrom` (default: the version
+    * itself) already cover every requested column keep them; the rest
+    * are read in ONE scan through the same per-file accumulator the
+    * writers use ([[FileStatsSpec]]), over the requested columns plus
+    * every column the sidecars already cover. The explicit form of what
+    * every commit does as it writes — for files committed before their
+    * table declared `stats.columns`, and for `ANALYZE`.
     *
-    * [[readVersionPruned]] then answers a range predicate by dropping
-    * every file whose [min, max] interval misses the query range BEFORE
-    * `spark.read` ever sees it. Parquet row-group stats do this within
-    * a file the scan already opened; manifest stats skip the file open
-    * (and at cluster scale, the task) entirely. Composed with
-    * [[writeRangeLayout]] / [[writeZOrderLayout]] — which make per-file
-    * intervals disjoint/tight — a selective range query touches O(1)
-    * files out of thousands; on unclustered data intervals all overlap
-    * and pruning honestly degrades to reading everything (kept-file
-    * count is returned so callers can SEE the clustering payoff).
-    * Files without a stats row (e.g. committed before stats existed)
-    * are always kept — pruning is an optimization, never a filter.
-    *
-    * Values are stored as decimal strings and compared as BigDecimal:
-    * exact for every integer/decimal clustering key (the only sane
-    * Z-order/range keys; float keys would inherit float comparison
-    * anyway).
-    */
+    * The `.stats` lines are the data-skipping half of the table format
+    * (what Delta/Iceberg keep per file in the commit log):
+    * [[readVersionPruned]] drops every file whose [min, max] interval
+    * misses a range predicate before `spark.read` sees it, and composed
+    * with [[writeRangeLayout]] / [[writeZOrderLayout]] — which make
+    * per-file intervals tight — a selective range query touches O(1)
+    * files. Files without a stats line are always kept: pruning is an
+    * optimization, never a filter. Numeric bounds are stored as plain
+    * decimal strings (never rounded: a rounded max below the true max
+    * would prune files that match); string bounds as `S:`+base64, and
+    * only when ASCII, where Spark's UTF-8 binary order and the driver's
+    * UTF-16 compare agree. */
   def commitStats(spark: SparkSession, table: String, version: Int,
       cols: Seq[String], carryFrom: Int = -1,
-      bloomCols: Seq[String] = Nil, bloomExpectedPerFile: Long = 100000L,
-      bloomFpp: Double = 0.01): Unit = {
-    val files = filesOf(table, version)
-    // incremental: a file already covered by `carryFrom`'s sidecar is
-    // immutable (batch dirs never rewrite), so its stats copy forward
-    // without touching the data — what makes per-commit stats O(delta)
-    val carried: Map[(String, String), (BigDecimal, BigDecimal)] =
-      if (carryFrom > 0) statsOf(table, carryFrom) else Map.empty
-    val carriedStr: Map[(String, String), (String, String)] =
-      if (carryFrom > 0) statsOfString(table, carryFrom) else Map.empty
-    val (have, need) = files.partition(f =>
-      cols.forall(c => carried.contains((f, c)) ||
-        carriedStr.contains((f, c))))
-    // the bloom side of the FUSED pass: carried filters copy forward,
-    // only uncovered files scan — same carry discipline as stats
-    val carriedBloom: Map[(String, String), Array[Byte]] =
-      if (bloomCols.nonEmpty && carryFrom > 0) bloomsOf(table, carryFrom)
-      else Map.empty
-    val (bloomHave, bloomNeed) =
-      if (bloomCols.isEmpty) (Seq.empty[String], Seq.empty[String])
-      else files.partition(f =>
-        bloomCols.forall(c => carriedBloom.contains((f, c))))
-    val scanFiles = (need ++ bloomNeed).distinct
-    val needNorm = need.map(normalizePath).toSet
-    val bloomNeedNorm = bloomNeed.map(normalizePath).toSet
-    val bloomByNorm = bloomNeed.map(f => normalizePath(f) -> f).toMap
-    var computedBloom = Seq.empty[((String, String), Array[Byte])]
-    val computed =
-      if (scanFiles.isEmpty) (Seq.empty[String], Seq.empty[String]) else {
-      // DECLARED-schema read (commitBlooms' rule): a mixed-generation
-      // scan set must not lose evolved columns to one file's footer
-      val df = declaredSchema(table, version)
-        .fold(spark.read)(sc => spark.read.schema(sc))
-        .parquet(scanFiles: _*)
-      // partition columns live in paths, not data files — a declared
-      // stats column absent from the files is skipped (its pruning is
-      // the partition filter's job), never an unresolved-column crash
-      val presentCols = cols.filter(df.schema.fieldNames.contains(_))
-      val strCols = presentCols.filter(c =>
-        df.schema.fields.exists(f => f.name == c &&
-          f.dataType == org.apache.spark.sql.types.StringType)).toSet
-      // numeric min/max rendered as plain strings, NOT rounded through a
-      // fixed decimal scale: a half-up-rounded stored max below the true
-      // max would let pruning drop files that contain matching rows (the
-      // one bug class a stats sidecar must never have). BigDecimal
-      // parses the full double/decimal/integer renderings exactly;
-      // unparseable values (NaN/Infinity) and all-NULL files simply get
-      // no stats row — unstatted means never pruned.
-      //
-      // STRING columns (the lang/source/category predicates that
-      // dominate text-corpus scans) get tagged `S:`+base64 lines — a
-      // pre-string reader's BigDecimal parse fails on the tag and
-      // degrades to "no stats" (never a wrong prune). ASCII-only guard:
-      // Spark computes string min/max in UTF-8 binary order while the
-      // driver-side prune compares UTF-16 code units; the two agree
-      // exactly on ASCII and can diverge beyond it, so non-ASCII bounds
-      // are simply not written (conservative, file always read).
-      val aggs = presentCols.flatMap(c => Seq(
-        org.apache.spark.sql.functions.min(col(c))
-          .cast("string").as(s"min_$c"),
-        org.apache.spark.sql.functions.max(col(c))
-          .cast("string").as(s"max_$c")))
-      // CBO harvest riding the SAME job: per-file row counts + one
-      // mergeable HLL sketch per column (Datasketches — union across
-      // files at read time gives the version's NDV without rescanning;
-      // cast-to-string is injective per column type, so NDV survives).
-      // These feed the DSv2 Statistics the planner sees (numRows +
-      // columnStats.distinctCount) — join reordering and broadcast
-      // decisions get real cardinalities before AQE ever runs.
-      val ndvAggs =
-        Seq(org.apache.spark.sql.functions.count(lit(1)).as("__nrows")) ++
-          presentCols.map(c => org.apache.spark.sql.functions
-            .hll_sketch_agg(col(c).cast("string"), 12).as(s"__hll_$c"))
-      // bloom builders ride the SAME per-file aggregate (appended after
-      // the positional stats/NDV aggs; accessed by name)
-      val bloomPresent =
-        bloomCols.filter(df.schema.fieldNames.contains(_))
-      val bloomAggs = bloomPresent.map(c =>
-        org.apache.spark.sql.functions.udaf(
-          new BloomAgg(bloomExpectedPerFile, bloomFpp),
-          org.apache.spark.sql.Encoders.STRING)
-          .apply(col(c).cast("string")).as(s"__bl_$c"))
-      def asciiOk(s: String) = s.forall(_ < 128) && s.length <= 256
-      def b64(s: String) = java.util.Base64.getEncoder
-        .encodeToString(s.getBytes("UTF-8"))
-      if (aggs.isEmpty && bloomAggs.isEmpty)
-        (Seq.empty[String], Seq.empty[String])
-      else {
-        val allAggs = aggs ++ ndvAggs ++ bloomAggs
-        val rows = withJobDescription(spark, s"stats $table") {
-          df.groupBy(
-            org.apache.spark.sql.functions.input_file_name().as("file"))
-            .agg(allAggs.head, allAggs.tail: _*)
-            .collect().toSeq
-        }
-        computedBloom = rows.flatMap { r =>
-          val norm = normalizePath(r.getString(0))
-          if (!bloomNeedNorm.contains(norm)) Nil
-          else bloomPresent.map(c =>
-            (bloomByNorm.getOrElse(norm, norm), c) ->
-              r.getAs[Array[Byte]](s"__bl_$c"))
-        }
-        // files scanned only for their blooms keep their carried stats
-        // lines — don't emit duplicates for them
-        val statRows = rows.filter(r =>
-          needNorm.contains(normalizePath(r.getString(0))))
-        val statLines = statRows.flatMap { r =>
-          // normalizePath, not a bare scheme strip: hive partition
-          // values with spaces render percent-encoded from
-          // input_file_name() while manifests store the raw form — an
-          // encoded sidecar key would silently miss every lookup
-          val file = normalizePath(r.getString(0))
-          presentCols.zipWithIndex.flatMap { case (c, i) =>
-            (Option(r.getString(1 + 2 * i)), Option(r.getString(2 + 2 * i))) match {
-              case (Some(lo), Some(hi)) if strCols.contains(c) =>
-                if (asciiOk(lo) && asciiOk(hi))
-                  Some(s"$file\t$c\tS:${b64(lo)}\tS:${b64(hi)}")
-                else None
-              case (Some(lo), Some(hi))
-                  if scala.util.Try(BigDecimal(lo)).isSuccess &&
-                    scala.util.Try(BigDecimal(hi)).isSuccess =>
-                Some(s"$file\t$c\t$lo\t$hi")
-              case _ => None
-            }
-          }
-        }
-        val base = 1 + 2 * presentCols.length
-        val ndvLines = statRows.flatMap { r =>
-          val file = normalizePath(r.getString(0))
-          val enc = java.util.Base64.getEncoder
-          Seq(s"R\t$file\t${r.getLong(base)}") ++
-            presentCols.zipWithIndex.flatMap { case (c, j) =>
-              Option(r.getAs[Array[Byte]](base + 1 + j))
-                .map(sk => s"H\t$file\t$c\t${enc.encodeToString(sk)}")
-            }
-        }
-        (statLines, ndvLines)
-      }
+      bloomCols: Seq[String] = Nil): Unit = {
+    val base = if (carryFrom > 0) carryFrom else version
+    val covered = sidecarCover(table, base)
+    val cover = StatsCover((covered.stats ++ cols).distinct,
+      (covered.blooms ++ bloomCols).distinct)
+    def pairs(kinds: String*): Set[(String, String)] = kinds.flatMap(k =>
+      sidecarRaw(table, base, k).flatMap(lineKey(k, _)))
+      .map { case (f, c) => (normalizePath(f), c) }.toSet
+    val statted = pairs("stats")
+    val bloomed = pairs("bloom")
+    val need = filesOf(table, version).filterNot { f =>
+      val n = normalizePath(f)
+      cols.forall(c => statted((n, c))) && bloomCols.forall(c => bloomed((n, c)))
     }
-    val (computedStats, computedNdv) = computed
-    val carriedLines = have.flatMap(f => cols.flatMap { c =>
-      carried.get((f, c)).map { case (lo, hi) => s"$f\t$c\t$lo\t$hi" }
-        .orElse(carriedStr.get((f, c)).map { case (lo, hi) =>
-          val enc = java.util.Base64.getEncoder
-          s"$f\t$c\tS:${enc.encodeToString(lo.getBytes("UTF-8"))}" +
-            s"\tS:${enc.encodeToString(hi.getBytes("UTF-8"))}"
-        })
-    })
-    val lines = (carriedLines ++ computedStats).sorted
-    val dir = java.nio.file.Paths.get(table)
-    val tmp = java.nio.file.Files.createTempFile(dir, s".s$version", ".tmp")
-    java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, dir.resolve(s"v$version.stats"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    // the NDV/rowcount sidecar, same carry discipline: covered files'
-    // entries copy forward untouched
-    val (ndvRowsC, ndvSketchC) =
-      if (carryFrom > 0) ndvOf(table, carryFrom)
-      else (Map.empty[String, Long], Map.empty[(String, String), Array[Byte]])
-    val enc = java.util.Base64.getEncoder
-    val ndvCarried = have.flatMap { f =>
-      ndvRowsC.get(f).map(n => s"R\t$f\t$n").toSeq ++
-        cols.flatMap(c => ndvSketchC.get((f, c))
-          .map(sk => s"H\t$f\t$c\t${enc.encodeToString(sk)}"))
+    commitSidecars(table, version, base,
+      scanFileStats(spark, table, version, need, cover), cover)
+  }
+
+  /** [[commitStats]]' scan: one job over `files` under the declared
+    * schema (a mixed-generation set must not lose evolved columns to one
+    * file's footer), one accumulator per (task, file). */
+  private def scanFileStats(spark: SparkSession, table: String,
+      version: Int, files: Seq[String], cover: StatsCover): SidecarLines = {
+    if (files.isEmpty || cover.isEmpty) return SidecarLines.empty
+    val df = readFiles(spark, table, version, files)
+    val spec = new FileStatsSpec(df.schema, cover,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    if (spec.isEmpty) return SidecarLines.empty
+    val fileOrd = df.schema.length
+    val partials = withJobDescription(spark, s"stats $table") {
+      df.select(df.columns.map(df(_)).toSeq :+ input_file_name(): _*)
+        .queryExecution.toRdd.mapPartitions { rows =>
+          val open = scala.collection.mutable.LinkedHashMap
+            .empty[String, FileStatsAccumulator]
+          rows.foreach(r => open.getOrElseUpdate(
+            r.getUTF8String(fileOrd).toString, spec.newAccumulator()).add(r))
+          open.iterator.map { case (f, a) => a.result(f) }
+        }.collect().toSeq
     }
-    val ndvAll = (ndvCarried ++ computedNdv).sorted
-    if (ndvAll.nonEmpty) {
-      val tmpN = java.nio.file.Files.createTempFile(dir, s".n$version", ".tmp")
-      java.nio.file.Files.write(tmpN, ndvAll.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmpN, dir.resolve(s"v$version.ndv"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    // the bloom sidecar of the fused pass — same lines/atomic-move
-    // contract as commitBlooms
-    if (bloomCols.nonEmpty) {
-      val encB = java.util.Base64.getEncoder
-      val bLines = (bloomHave.flatMap(f => bloomCols.flatMap(c =>
-        carriedBloom.get((f, c)).map(bytes => (f, c) -> bytes))) ++
-        computedBloom)
-        .map { case ((f, c), bytes) =>
-          s"$f\t$c\t${encB.encodeToString(bytes)}"
-        }.sorted
-      val tmpB = java.nio.file.Files.createTempFile(dir, s".b$version", ".tmp")
-      java.nio.file.Files.write(tmpB, bLines.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmpB, dir.resolve(s"v$version.bloom"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    val byPath = files.map(f => normalizePath(f) -> f).toMap
+    spec.render(
+      partials.groupBy(s => normalizePath(s.file)).values
+        .map(_.reduce(spec.merge)).toSeq,
+      f => byPath.getOrElse(normalizePath(f), normalizePath(f)))
   }
 
   /** The `v<N>.ndv` sidecar: per-file row counts and per-(file, col)
@@ -2321,85 +2217,12 @@ object Sources {
     * on a high-cardinality column that is NOT the clustering key hits
     * every file's [min, max] interval, but a per-file Bloom answers
     * "definitely absent" for all but the files that contain (or
-    * falsely claim) the key — Delta's bloom filter index, derived here
-    * from one distributed `aggregateByKey` over the version's files
-    * (BloomFilter is mergeable, so the build is map-side combinable;
-    * at 100 TB each file's bloom is built by the tasks that would read
-    * it anyway at commit time). False positives only ever KEEP a file;
-    * absence of a sidecar or a column keeps the file too — pruning is
-    * an optimization, never a filter. `carryFrom` copies immutable
-    * files' blooms forward, so per-commit cost is O(delta). */
-  def commitBlooms(spark: SparkSession, table: String, version: Int,
-      cols: Seq[String], expectedPerFile: Long = 100000L,
-      fpp: Double = 0.01, carryFrom: Int = -1): Unit = {
-    import org.apache.spark.util.sketch.BloomFilter
-    val files = filesOf(table, version)
-    val carried: Map[(String, String), Array[Byte]] =
-      if (carryFrom > 0) bloomsOf(table, carryFrom) else Map.empty
-    val (have, need) = files.partition(f =>
-      cols.forall(c => carried.contains((f, c))))
-    val computed: Seq[((String, String), Array[Byte])] =
-      if (need.isEmpty) Seq.empty
-      else {
-        // DECLARED-schema read, like deleteWhere/mergeVersion: a
-        // mixed-generation `need` set must not lose evolved columns to
-        // one file's footer inference
-        val df = declaredSchema(table, version)
-          .fold(spark.read)(sc => spark.read.schema(sc)).parquet(need: _*)
-        val present = cols.filter(df.schema.fieldNames.contains(_))
-        if (present.isEmpty) Seq.empty
-        else {
-          // ONE job and ONE scan of the `need` files builds every
-          // column's filters together (this previously ran one
-          // RDD job + full re-scan PER column — 2 bloom columns on a
-          // store meant 2 extra jobs per merge, engine-wide)
-          val perFile = withJobDescription(spark, s"blooms $table") {
-            df.select((org.apache.spark.sql.functions.input_file_name()
-              .as("f") +: present.map(c => col(c).cast("string").as(c)))
-              .toIndexedSeq: _*)
-            // normalizePath (not a scheme strip): percent-encoded hive
-            // partition dirs must land under the manifest's raw key
-            .rdd.map(r => (normalizePath(r.getString(0)), r))
-            .aggregateByKey(
-              Array.fill(present.size)(
-                BloomFilter.create(expectedPerFile, fpp)))(
-              (bs, r) => {
-                var i = 0
-                while (i < bs.length) {
-                  if (!r.isNullAt(i + 1)) bs(i).putString(r.getString(i + 1))
-                  i += 1
-                }
-                bs
-              },
-              (a, b) => {
-                var i = 0
-                while (i < a.length) { a(i).mergeInPlace(b(i)); i += 1 }
-                a
-              })
-            .collect().toSeq
-          }
-          perFile.flatMap { case (f, bs) =>
-            present.zipWithIndex.map { case (c, i) =>
-              val bos = new java.io.ByteArrayOutputStream()
-              bs(i).writeTo(bos)
-              (f, c) -> bos.toByteArray
-            }
-          }
-        }
-      }
-    val lines = (have.flatMap(f => cols.flatMap(c =>
-      carried.get((f, c)).map(bytes => (f, c) -> bytes))) ++ computed)
-      .map { case ((f, c), bytes) =>
-        s"$f\t$c\t${java.util.Base64.getEncoder.encodeToString(bytes)}"
-      }.sorted
-    val dir = java.nio.file.Paths.get(table)
-    val tmp = java.nio.file.Files.createTempFile(dir, s".b$version", ".tmp")
-    java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, dir.resolve(s"v$version.bloom"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** (file, col) -> serialized bloom for a version; malformed lines
+    * falsely claim) the key — Delta's bloom filter index, built by the
+    * job that writes each file ([[FileStats]]). False positives only
+    * ever KEEP a file; absence of a sidecar or a column keeps the file
+    * too — pruning is an optimization, never a filter.
+    *
+    * (file, col) -> serialized bloom for a version; malformed lines
     * degrade to "no bloom" (file kept), same contract as stats. */
   def bloomsOf(table: String,
       version: Int): Map[(String, String), Array[Byte]] = {
@@ -2612,8 +2435,12 @@ object Sources {
     val rewritten = survivors.unionByName(upserts)
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-merge-${java.util.UUID.randomUUID().toString.take(8)}")
-    writePartitionedBatch(rewritten, table, batch.toString)
-    val newFiles = batchParquetFiles(batch)
+    // stats for the merge key PLUS every declared and already-covered
+    // column: the next merge prunes its rewrite set by the key's
+    // intervals, and untouched files carry their lines forward
+    val cover = sidecarCover(table, v).withStats(Seq(key))
+    val written = writePartitionedBatch(rewritten, table, batch.toString, cover)
+    val newFiles = written.files
     // conflict-DETECTING publish: the untouched list was computed
     // against v — a blind next-number retry after a racing commit would
     // silently drop the racer's files, so a lost race must fail loudly
@@ -2629,18 +2456,7 @@ object Sources {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    // stats for the merge key PLUS every declared stats column — a
-    // merge that recorded only the key would silently drop the other
-    // columns' skipping metadata for this version; reads stay correct
-    // but the NEXT commit's carryFrom would miss and rescan the table
-    val schemaCols = schemaOf(spark, table, v).fieldNames.toSet
-    val statCols = (Seq(key) ++ statsColumnsOf(table))
-      .distinct.filter(schemaCols.contains)
-    // the bloom sidecar rides the SAME scan: untouched files carry
-    // their filters forward, rewritten files get fresh ones (mirrors
-    // GraftBatchWrite)
-    val bloomCols = bloomColumnsOf(table).filter(schemaCols.contains)
-    commitSidecars(spark, table, next, statCols, bloomCols, v)
+    commitSidecars(table, next, v, written.lines, cover)
     rewriteSchemaCarry(spark, table, v, next)
     (next, affected.length, untouched.length)
   }
@@ -2728,8 +2544,12 @@ object Sources {
       evolveSchema(targetSchema0, changes.drop(opCol).schema, Map.empty))
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-dvmerge-${java.util.UUID.randomUUID().toString.take(8)}")
-    val newFiles =
-      if (!hasUpserts) Seq.empty[String]
+    // carried files carry their stats/blooms; the appended batch's
+    // lines ride its write (a DV'd file's interval stays conservative —
+    // it may cover deleted rows, which can only keep extra files)
+    val cover = sidecarCover(table, v).withStats(Seq(key))
+    val written =
+      if (!hasUpserts) WrittenBatch(Nil, SidecarLines.empty)
       else {
         // file count sized by the key probe's distinct-key count (≈
         // upsert rows for one-row-per-key change sets), never by the
@@ -2739,9 +2559,9 @@ object Sources {
           if (keysHint >= 0)
             aligned.coalesce(batchFileCount(spark, keysHint))
           else aligned,
-          table, batch.toString)
-        batchParquetFiles(batch)
+          table, batch.toString, cover)
       }
+    val newFiles = written.files
     val next =
       // merged DV + carried eq entries ride the claim (every base
       // file carries)
@@ -2757,14 +2577,7 @@ object Sources {
       case None =>
         declaredSchema(table, v).foreach(publishSchema(table, next, _))
     }
-    // carried files carry their stats/blooms; only the appended batch
-    // is scanned (a DV'd file's interval stays conservative — it may
-    // cover deleted rows, which can only keep extra files, never lose)
-    val schemaCols = schemaOf(spark, table, v).fieldNames.toSet
-    val statCols = (Seq(key) ++ statsColumnsOf(table))
-      .distinct.filter(schemaCols.contains)
-    val bloomCols = bloomColumnsOf(table).filter(schemaCols.contains)
-    commitSidecars(spark, table, next, statCols, bloomCols, v)
+    commitSidecars(table, next, v, written.lines, cover)
     (next, matched.length.toLong, true)
   }
 
@@ -2939,8 +2752,9 @@ object Sources {
     }
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-${java.util.UUID.randomUUID().toString.take(12)}")
-    writePartitionedBatch(df.observe(obs, aggs.head, aggs.tail: _*),
-      table, batch.toString)
+    val cover = sidecarCover(table, latestVersion(table))
+    val written = writePartitionedBatch(
+      df.observe(obs, aggs.head, aggs.tail: _*), table, batch.toString, cover)
     val violations = checks.map { case (name, _) =>
       name -> obs.get(name).asInstanceOf[Long] }.toMap
     if (violations.valuesIterator.exists(_ > 0L)) {
@@ -2949,9 +2763,9 @@ object Sources {
       deleteBatchDir(batch)
       Left(violations)
     } else {
-      val newFiles = batchParquetFiles(batch)
-      try Right(publishNextVersion(table, newFiles, overwrite,
-        batchSchema = Some(df.schema)).get)
+      try Right(publishNextVersion(table, written.files, overwrite,
+        batchSchema = Some(df.schema), fresh = written.lines,
+        cover = cover).get)
       catch { case e: IllegalArgumentException =>
         deleteBatchDir(batch) // incompatible-schema rejection: no strand
         throw e
@@ -2996,21 +2810,15 @@ object Sources {
     next
   }
 
+  /** Carry `from`'s skipping sidecars to `to`, a version with the
+    * identical file set. DV and eq state is NOT carried here: it is
+    * correctness-bearing and rides each commit's atomic staged-sidecar
+    * claim instead (a post-claim copy re-opens the carry-pass TOCTOU
+    * that protocol closes). */
   private[sources] def copyStatsSidecar(table: String, from: Int,
-      to: Int): Unit = {
-    // bloom + ndv sidecars travel with stats — every caller has an
-    // identical file set, so all stay valid verbatim. DV and eq are
-    // NOT copied here: they are correctness-bearing and ride each
-    // commit's atomic staged-sidecar claim instead (a post-claim copy
-    // re-opens the carry-pass TOCTOU this protocol closes).
-    Seq("stats", "bloom", "ndv").foreach { kind =>
-      val src = java.nio.file.Paths.get(table, s"v$from.$kind")
-      if (java.nio.file.Files.exists(src))
-        java.nio.file.Files.copy(src,
-          java.nio.file.Paths.get(table, s"v$to.$kind"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+      to: Int): Unit =
+    commitSidecars(table, to, from, SidecarLines.empty,
+      sidecarCover(table, from))
 
   /** Per-table properties sidecar (`table.properties`, JSON) — catalog
     * metadata like `stats.columns` that must outlive any one session.
@@ -3202,61 +3010,72 @@ object Sources {
     * partitioning — the ONE physical-batch writer every commit and
     * rewrite path routes through, so a partitioned table can never
     * accumulate mixed flat/hive batches (which would make partition
-    * inference throw on read). */
+    * inference throw on read). The write job also computes each file's
+    * sidecar lines for the `cover` columns ([[FileStatsTracker]]). */
   private def writePartitionedBatch(df: DataFrame, table: String,
-      batchPath: String): Unit = {
+      batchPath: String, cover: StatsCover): WrittenBatch = {
     // job label only (guide §1.5) — identifies batch-write jobs in the
     // UI/profiler; the caller's own label is restored after
     withJobDescription(df.sparkSession, s"batchwrite $table") {
-      writePartitionedBatch0(df, table, batchPath)
+      writePartitionedBatch0(df, table, batchPath, cover)
     }
   }
 
   private def writePartitionedBatch0(df: DataFrame, table: String,
-      batchPath: String): Unit = bucketSpecOf(table) match {
-    case Some((c, n)) =>
-      require(df.schema.fieldNames.contains(c),
-        s"bucketed table $table: batch is missing bucket column $c")
-      // hash-bucket layout: the id lives in `_b=<id>` DIR NAMES (parsed
-      // back by the SPJ scan), never in data files; repartition on it
-      // first so one commit writes ~one file per bucket instead of
-      // tasks x buckets small files
-      df.withColumn("_b", bucketIdColumn(col(c), n))
-        .repartition(n, col("_b"))
-        .write.mode(SaveMode.ErrorIfExists).partitionBy("_b")
-        .parquet(batchPath)
-      recordBatchCols(batchPath, df.schema) // _b lives in dir names only
-    case None => partTransformOf(table) match {
-      case Some(t) =>
-        require(df.schema.fieldNames.contains(t.column),
-          s"transform-partitioned table $table: batch is missing " +
-            s"source column ${t.column}")
-        // hidden transform layout: the derived value lives in `_pt=<v>`
-        // DIR NAMES only (recomputed from the source column on every
-        // write, so rewrites can never desynchronize it) — data files
-        // keep the full declared schema including the source column.
-        // Pre-shuffle on the derived value (the bucket branch's move):
-        // without it every task writes every _pt dir it sees — an
-        // hours(ts) commit from 32 tasks over a month fragments into
-        // tasks × dirs small files; with it one exchange yields ~one
-        // file per partition dir per commit (Delta's optimized write)
-        df.withColumn("_pt",
-            transformColumn(t, col(t.column), df.schema(t.column).dataType))
-          .repartition(col("_pt"))
-          .write.mode(SaveMode.ErrorIfExists).partitionBy("_pt")
-          .parquet(batchPath)
-        recordBatchCols(batchPath, df.schema) // _pt in dir names only
-      case None =>
-        val parts = partitionColumnsOf(table)
-          .filter(df.schema.fieldNames.contains(_))
-        val w = df.write.mode(SaveMode.ErrorIfExists)
-        (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-          .parquet(batchPath)
-        // hive layout moves the partition columns out of data files
-        recordBatchCols(batchPath, StructType(
-          df.schema.filterNot(f => parts.contains(f.name))))
+      batchPath: String, cover: StatsCover): WrittenBatch = {
+    // (laid-out frame, directory partition columns, data-file schema)
+    val (laid, dirCols, fileSchema) = bucketSpecOf(table) match {
+      case Some((c, n)) =>
+        require(df.schema.fieldNames.contains(c),
+          s"bucketed table $table: batch is missing bucket column $c")
+        // hash-bucket layout: the id lives in `_b=<id>` DIR NAMES (parsed
+        // back by the SPJ scan), never in data files; repartition on it
+        // first so one commit writes ~one file per bucket instead of
+        // tasks x buckets small files
+        (df.withColumn("_b", bucketIdColumn(col(c), n))
+          .repartition(n, col("_b")), Seq("_b"), df.schema)
+      case None => partTransformOf(table) match {
+        case Some(t) =>
+          require(df.schema.fieldNames.contains(t.column),
+            s"transform-partitioned table $table: batch is missing " +
+              s"source column ${t.column}")
+          // hidden transform layout: the derived value lives in `_pt=<v>`
+          // DIR NAMES only (recomputed from the source column on every
+          // write, so rewrites can never desynchronize it) — data files
+          // keep the full declared schema including the source column.
+          // Pre-shuffle on the derived value (the bucket branch's move):
+          // without it every task writes every _pt dir it sees — an
+          // hours(ts) commit from 32 tasks over a month fragments into
+          // tasks × dirs small files; with it one exchange yields ~one
+          // file per partition dir per commit (Delta's optimized write)
+          (df.withColumn("_pt",
+              transformColumn(t, col(t.column), df.schema(t.column).dataType))
+            .repartition(col("_pt")), Seq("_pt"), df.schema)
+        case None =>
+          // hive layout moves the partition columns out of data files
+          val parts = partitionColumnsOf(table)
+            .filter(df.schema.fieldNames.contains(_))
+          (df, parts, StructType(df.schema.filterNot(f => parts.contains(f.name))))
+      }
     }
+    val spec = new FileStatsSpec(fileSchema, cover,
+      df.sparkSession.sessionState.conf.sessionLocalTimeZone)
+    val tracker =
+      if (spec.isEmpty) None else Some(new FileStatsTracker(spec, dirCols.length))
+    org.apache.spark.sql.graftbridge.Bridge.writeParquet(laid, batchPath,
+      dirCols, tracker.toSeq)
+    recordBatchCols(batchPath, fileSchema)
+    // recursive walk (partitioned batches nest c=v/ dirs); a
+    // 0-partition input (e.g. TRUNCATE's empty frame) yields Nil
+    val files = batchParquetFiles(java.nio.file.Paths.get(batchPath))
+    WrittenBatch(files, tracker.fold(SidecarLines.empty)(t =>
+      spec.render(t.collected,
+        rel => java.nio.file.Paths.get(batchPath, rel).toString)))
   }
+
+  /** A just-written batch: its parquet files and their sidecar lines. */
+  private[sources] case class WrittenBatch(files: Seq[String],
+      lines: SidecarLines)
 
   /** List the parquet files of a just-written batch dir (recursive —
     * partitioned batches nest `c=v/` directories). */
@@ -3280,8 +3099,7 @@ object Sources {
   private[sources] def readFileSubset(spark: SparkSession, table: String,
       version: Int, files: Seq[String]): DataFrame =
     if (partitionColumnsOf(table).isEmpty)
-      declaredSchema(table, version)
-        .fold(spark.read)(s => spark.read.schema(s)).parquet(files: _*)
+      readFiles(spark, table, version, files)
     else
       // partition-aware: a restricted manifest index serves the subset
       // as ONE relation with partition columns reattached from the
@@ -3362,8 +3180,9 @@ object Sources {
       .filter(!coalesce(cond, lit(false)))
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-delete-${java.util.UUID.randomUUID().toString.take(8)}")
-    writePartitionedBatch(survivors, table, batch.toString)
-    val newFiles = batchParquetFiles(batch)
+    val cover = sidecarCover(table, v)
+    val written = writePartitionedBatch(survivors, table, batch.toString, cover)
+    val newFiles = written.files
     val next =
       // rewritten files' DVs/eq absorb; carried files' ride the claim
       try publishIfLatestWith(table, v, carried ++ newFiles, "delete",
@@ -3382,11 +3201,7 @@ object Sources {
           .filterNot(_.name == RowIds.COL)))
     else
       rewriteSchemaCarry(spark, table, v, next)
-    val stattedCols = statsOf(table, v).keys.map(_._2).toSeq.distinct ++
-      statsOfString(table, v).keys.map(_._2).toSeq.distinct
-    val bloomCols = bloomsOf(table, v).keys.map(_._2).toSeq.distinct
-    commitSidecars(spark, table, next, stattedCols.distinct,
-      if ((carried ++ newFiles).nonEmpty) bloomCols else Nil, v)
+    commitSidecars(table, next, v, written.lines, cover)
     (next, affected.length, carried.length)
   }
 
@@ -3439,8 +3254,9 @@ object Sources {
     }.toSeq: _*)
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-update-${java.util.UUID.randomUUID().toString.take(8)}")
-    writePartitionedBatch(rewritten, table, batch.toString)
-    val newFiles = batchParquetFiles(batch)
+    val cover = sidecarCover(table, v)
+    val written = writePartitionedBatch(rewritten, table, batch.toString, cover)
+    val newFiles = written.files
     val next =
       // rewritten files' DVs/eq absorb; carried files' ride the claim
       try publishIfLatestWith(table, v, carried ++ newFiles, "update",
@@ -3451,11 +3267,7 @@ object Sources {
           deleteBatchDir(batch); throw e
       }
     rewriteSchemaCarry(spark, table, v, next)
-    val stattedCols = statsOf(table, v).keys.map(_._2).toSeq.distinct ++
-      statsOfString(table, v).keys.map(_._2).toSeq.distinct
-    val bloomCols = bloomsOf(table, v).keys.map(_._2).toSeq.distinct
-    commitSidecars(spark, table, next, stattedCols.distinct,
-      if ((carried ++ newFiles).nonEmpty) bloomCols else Nil, v)
+    commitSidecars(table, next, v, written.lines, cover)
     val updated = Option(obs.get.getOrElse("updated", null)) match {
       case Some(n: Number) => n.longValue()
       case _ => 0L
@@ -3880,9 +3692,11 @@ object Sources {
         df
       else df.repartition(nFiles)
     }
-    val newFiles =
-      try writeBatch(compacted, table)
+    val cover = sidecarCover(table, v)
+    val written =
+      try writeBatch(compacted, table, cover)
       finally toRelease.foreach(_.unpersist(false))
+    val newFiles = written.files
     val next =
       try publishIfLatest(table, v, newFiles, "compaction")
       catch {
@@ -3893,19 +3707,10 @@ object Sources {
       }
     rewriteSchemaCarry(spark, table, v, next)
     // no DV carry: compaction reads through readVersion (DVs applied)
-    // and rewrites every file — the new version is clean by definition
-    //
-    // RE-HARVEST skipping sidecars: every file is new, so "carry" has
-    // nothing to carry — without this a whole-table OPTIMIZE would
-    // silently drop stats/bloom file skipping until the next ANALYZE
-    // (the scoped form already re-stats; this one must too)
-    val stattedCols = (statsOf(table, v).keys.map(_._2).toSeq ++
-      statsOfString(table, v).keys.map(_._2).toSeq ++
-      statsColumnsOf(table)).distinct
-    val bloomCols = (bloomsOf(table, v).keys.map(_._2).toSeq ++
-      bloomColumnsOf(table)).distinct
-    if (newFiles.nonEmpty)
-      commitSidecars(spark, table, next, stattedCols, bloomCols, v)
+    // and rewrites every file — the new version is clean by definition,
+    // and its sidecars are the write's own lines for every covered
+    // column, so OPTIMIZE never drops file skipping
+    if (newFiles.nonEmpty) commitSidecars(table, next, -1, written.lines, cover)
     (next, before, filesOf(table, next).length)
   }
 
@@ -3959,11 +3764,11 @@ object Sources {
     }
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-opt-${java.util.UUID.randomUUID().toString.take(8)}")
-    val newFiles =
-      try {
-        writePartitionedBatch(compacted, table, batch.toString)
-        batchParquetFiles(batch)
-      } finally toRelease.foreach(_.unpersist(false))
+    val cover = sidecarCover(table, v)
+    val written =
+      try writePartitionedBatch(compacted, table, batch.toString, cover)
+      finally toRelease.foreach(_.unpersist(false))
+    val newFiles = written.files
     val next =
       // scoped files' DV marks are applied and absorbed; carried files
       // keep theirs (and their pending eq entries) — staged at claim
@@ -3976,11 +3781,7 @@ object Sources {
           deleteBatchDir(batch); throw e
       }
     rewriteSchemaCarry(spark, table, v, next)
-    val stattedCols = statsOf(table, v).keys.map(_._2).toSeq.distinct ++
-      statsOfString(table, v).keys.map(_._2).toSeq.distinct
-    val bloomCols = bloomsOf(table, v).keys.map(_._2).toSeq.distinct
-    if ((carried ++ newFiles).nonEmpty)
-      commitSidecars(spark, table, next, stattedCols.distinct, bloomCols, v)
+    commitSidecars(table, next, v, written.lines, cover)
     (next, affected.length, newFiles.length)
   }
 }

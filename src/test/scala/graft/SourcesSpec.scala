@@ -346,10 +346,16 @@ class SourcesSpec extends SparkTestBase {
     val none = Sources.readVersionPruned(spark, table, "o_orderkey",
       BigDecimal(-500), BigDecimal(-100))
     assert(none.count() === 0 && none.columns.sameElements(full.columns))
-    // append WITHOUT stats: pruning must keep the un-statted files (a
-    // file with no stats row can never be skipped), result stays exact
+    // an append carries v1's stats forward and adds its own file's
+    // lines, written by its write job
     val v2 = Sources.commitVersion(
       orders.filter(col("o_orderkey") < 50), table)
+    assert(Sources.pruneFiles(table, v2, "o_orderkey", lo, hi)._2.nonEmpty,
+      "the append's stats sidecar covers every file")
+    // a version WITHOUT a stats sidecar (written before the table kept
+    // stats): pruning must keep the un-statted files (a file with no
+    // stats row can never be skipped), result stays exact
+    java.nio.file.Files.delete(java.nio.file.Paths.get(table, s"v$v2.stats"))
     val (kept2, skipped2) = Sources.pruneFiles(table, v2, "o_orderkey", lo, hi)
     assert(skipped2.isEmpty, "no v2 stats sidecar -> nothing may be skipped")
     val pruned2 = Sources.readVersionPruned(spark, table, "o_orderkey", lo, hi)
