@@ -44,7 +44,11 @@ private[graft] final case class FileStats(file: String, rows: Long,
 
 /** Rendered sidecar lines for the `files` a commit wrote or scanned. */
 private[graft] final case class SidecarLines(files: Set[String],
-    stats: Seq[String], ndv: Seq[String], bloom: Seq[String])
+    stats: Seq[String], ndv: Seq[String], bloom: Seq[String]) {
+  def ++(o: SidecarLines): SidecarLines =
+    SidecarLines(files ++ o.files, stats ++ o.stats, ndv ++ o.ndv,
+      bloom ++ o.bloom)
+}
 
 private[graft] object SidecarLines {
   val empty: SidecarLines = SidecarLines(Set.empty, Nil, Nil, Nil)
@@ -118,7 +122,8 @@ private[graft] final class FileStatsSpec(schema: StructType,
     }
 
   /** The sidecar lines of `stats`, keyed by `pathOf(stats.file)`. A file
-    * with no rows gets none (the aggregate saw no group for it). */
+    * with no rows gets only its row count line (the aggregate sees no
+    * group for it), which still marks it as covered. */
   def render(stats: Seq[FileStats], pathOf: String => String): SidecarLines = {
     val agg = hllAgg(0)
     val enc = java.util.Base64.getEncoder
@@ -147,7 +152,8 @@ private[graft] final class FileStatsSpec(schema: StructType,
         }
       }
     }
-    val ndvLines = live.flatMap { case (f, s) =>
+    val empty = stats.filter(_.rows == 0).map(s => s"R\t${pathOf(s.file)}\t0")
+    val ndvLines = empty ++ live.flatMap { case (f, s) =>
       s"R\t$f\t${s.rows}" +: statCols.indices.map { j =>
         // the final phase of hll_sketch_agg: an empty buffer merged
         // with the deserialized partial, then evaluated

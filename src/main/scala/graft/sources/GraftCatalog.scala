@@ -1476,7 +1476,8 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
       // unreferenced parquet under data/ forever, since vacuum only
       // sweeps manifest-referenced files) and records no entry, so the
       // retry is never mistaken for a duplicate
-      // the epoch's sidecar lines ride the publish
+      // the epoch's sidecar lines ride the publish; writing them cannot
+      // fail it, so a published epoch's files are never deleted here
       val v =
         try Sources.commitVersionFiles(table, files, Some(schema),
           txn = Some(queryId -> epochId),

@@ -620,19 +620,25 @@ object Sources {
           dvText(dv).getBytes("UTF-8"))) else Map.empty[String, String]) ++
           (if (eq.nonEmpty) Map("eq" -> stageSidecar(table, "eq",
             eqText(eq).getBytes("UTF-8"))) else Map.empty[String, String])
-      try {
-        publishManifest(table, next, carried ++ newFiles, staged, txn)
-        promoteStaged(table, next, staged)
-        declaredNext.foreach(publishSchema(table, next, _))
+      val claimed =
+        try {
+          publishManifest(table, next, carried ++ newFiles, staged, txn)
+          promoteStaged(table, next, staged)
+          declaredNext.foreach(publishSchema(table, next, _))
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            discardStaged(table, staged)
+            attempt += 1
+            require(attempt < 64,
+              s"publishNextVersion: lost the publish race $attempt times on $table")
+            false
+        }
+      if (claimed) {
+        // outside the claim: `next` is published whatever happens here
         commitSidecars(table, next,
           if (overwrite || prev == 0) -1 else prev, fresh, cover)
         return Some(next)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          discardStaged(table, staged)
-          attempt += 1
-          require(attempt < 64,
-            s"publishNextVersion: lost the publish race $attempt times on $table")
       }
     }
     None // unreachable
@@ -2034,17 +2040,46 @@ object Sources {
 
   /** Publish `version`'s skipping sidecars: the lines of `carryFrom`
     * (-1: none) for every file the version keeps, plus the `fresh` lines
-    * of the files the commit wrote. Scans nothing. A sidecar kind the
-    * `cover` declares is written even when empty, as a marker that the
-    * table keeps it. */
+    * of the files the commit wrote. A kept file `carryFrom` counts no
+    * rows for (committed before its table covered any column, or carried
+    * from a version whose own sidecars were never written, e.g. by a
+    * racing commit that had not written them yet) is read once through
+    * the writers' accumulator ([[scanFileStats]]), so coverage lost on
+    * one commit comes back on the next; otherwise nothing is scanned.
+    * Runs after `version` is published and never fails its commit: the
+    * sidecars only prune, so on an error the version stays readable,
+    * unpruned, until the next commit restores its lines. */
   private[sources] def commitSidecars(table: String, version: Int,
-      carryFrom: Int, fresh: SidecarLines, cover: StatsCover): Unit = {
+      carryFrom: Int, fresh: SidecarLines, cover: StatsCover): Unit =
+    try {
+      val wrote = fresh.files.map(normalizePath)
+      val counted = sidecarRaw(table, carryFrom, "ndv").flatMap { l =>
+        val fs = l.split("\t", 3)
+        if (fs(0) == "R") fs.lift(1).map(normalizePath) else None
+      }.toSet
+      val lost = if (cover.isEmpty) Nil else filesOf(table, version)
+        .filterNot { f => val n = normalizePath(f); wrote(n) || counted(n) }
+      val scanned = if (lost.isEmpty) SidecarLines.empty
+        else scanFileStats(SparkSession.active, table, version, lost, cover)
+      writeSidecars(table, version, carryFrom, fresh ++ scanned, cover)
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(
+          s"[graft] $table v$version committed without skipping sidecars: $e")
+    }
+
+  /** [[commitSidecars]]' write: `carryFrom`'s lines of every file not in
+    * `fresh`, plus `fresh`. A sidecar kind the `cover` declares is
+    * written even when empty, as a marker that the table keeps it. */
+  private def writeSidecars(table: String, version: Int, carryFrom: Int,
+      fresh: SidecarLines, cover: StatsCover): Unit = {
     val keep = filesOf(table, version).map(normalizePath).toSet --
       fresh.files.map(normalizePath)
     def carried(kind: String): Seq[String] =
       sidecarRaw(table, carryFrom, kind).filter { l =>
-        val f = l.split("\t", 3)
-        keep(normalizePath(if (kind == "ndv") f(1) else f(0)))
+        val fs = l.split("\t", 3)
+        (if (kind == "ndv") fs.lift(1) else fs.lift(0))
+          .exists(f => keep(normalizePath(f)))
       }
     writeSidecar(table, version, "stats", carried("stats") ++ fresh.stats,
       cover.stats.nonEmpty)
@@ -2059,16 +2094,17 @@ object Sources {
     if (lines.nonEmpty || force) {
       val dir = java.nio.file.Paths.get(table)
       val tmp = java.nio.file.Files.createTempFile(dir, s".$kind$version", ".tmp")
-      java.nio.file.Files.write(tmp, lines.sorted.mkString("\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, dir.resolve(s"v$version.$kind"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      try {
+        java.nio.file.Files.write(tmp, lines.sorted.mkString("\n").getBytes("UTF-8"))
+        java.nio.file.Files.move(tmp, dir.resolve(s"v$version.$kind"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      } finally java.nio.file.Files.deleteIfExists(tmp)
     }
 
-  /** Backfill `version`'s sidecars for `cols` (min/max + NDV) and
-    * `bloomCols`: files whose lines in `carryFrom` (default: the version
-    * itself) already cover every requested column keep them; the rest
-    * are read in ONE scan through the same per-file accumulator the
+  /** Backfill `version`'s sidecars for `cols` (min/max + NDV): files
+    * whose lines already cover every requested column keep them; the
+    * rest are read in ONE scan through the same per-file accumulator the
     * writers use ([[FileStatsSpec]]), over the requested columns plus
     * every column the sidecars already cover. The explicit form of what
     * every commit does as it writes — for files committed before their
@@ -2087,22 +2123,16 @@ object Sources {
     * only when ASCII, where Spark's UTF-8 binary order and the driver's
     * UTF-16 compare agree. */
   def commitStats(spark: SparkSession, table: String, version: Int,
-      cols: Seq[String], carryFrom: Int = -1,
-      bloomCols: Seq[String] = Nil): Unit = {
-    val base = if (carryFrom > 0) carryFrom else version
-    val covered = sidecarCover(table, base)
-    val cover = StatsCover((covered.stats ++ cols).distinct,
-      (covered.blooms ++ bloomCols).distinct)
-    def pairs(kinds: String*): Set[(String, String)] = kinds.flatMap(k =>
-      sidecarRaw(table, base, k).flatMap(lineKey(k, _)))
+      cols: Seq[String]): Unit = {
+    val cover = sidecarCover(table, version).withStats(cols)
+    val statted = sidecarRaw(table, version, "stats")
+      .flatMap(lineKey("stats", _))
       .map { case (f, c) => (normalizePath(f), c) }.toSet
-    val statted = pairs("stats")
-    val bloomed = pairs("bloom")
     val need = filesOf(table, version).filterNot { f =>
       val n = normalizePath(f)
-      cols.forall(c => statted((n, c))) && bloomCols.forall(c => bloomed((n, c)))
+      cols.forall(c => statted((n, c)))
     }
-    commitSidecars(table, version, base,
+    writeSidecars(table, version, version,
       scanFileStats(spark, table, version, need, cover), cover)
   }
 
@@ -2128,9 +2158,13 @@ object Sources {
         }.collect().toSeq
     }
     val byPath = files.map(f => normalizePath(f) -> f).toMap
-    spec.render(
-      partials.groupBy(s => normalizePath(s.file)).values
-        .map(_.reduce(spec.merge)).toSeq,
+    val merged = partials.groupBy(s => normalizePath(s.file)).values
+      .map(_.reduce(spec.merge)).toSeq
+    // a file without rows yields no partial; its row count is still 0
+    val seen = merged.map(s => normalizePath(s.file)).toSet
+    val empty = byPath.keys.filterNot(seen).map(f =>
+      FileStats(f, 0L, Array.empty, Array.empty, Array.empty, Array.empty))
+    spec.render(merged ++ empty,
       f => byPath.getOrElse(normalizePath(f), normalizePath(f)))
   }
 

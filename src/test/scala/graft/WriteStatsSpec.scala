@@ -212,6 +212,75 @@ class WriteStatsSpec extends SparkTestBase {
     assertSidecarsMatch(s"$wh/st")
   }
 
+  /** Make writing `t`'s `v<v>.stats` fail: a non-empty directory
+    * stands where the sidecar's atomic move lands. */
+  private def blockStats(t: String, v: Int): java.nio.file.Path = {
+    val d = java.nio.file.Paths.get(t, s"v$v.stats")
+    java.nio.file.Files.createDirectories(d.resolve("block"))
+    d
+  }
+
+  test("a sidecar write that fails after the publish fails neither the " +
+    "commit nor the streaming epoch, and the next commit restores it") {
+    val t = fresh("ws-fault")
+    Sources.writeTableProperties(t, declared)
+    Sources.commitVersion(rows(), t)
+    val block = blockStats(t, 2)
+    assert(Sources.commitVersion(rows(1000L), t) === 2)
+    assert(Sources.readVersion(spark, t, 2).count() === 400)
+    Sources.deleteTree(block)
+    assert(Sources.statsOf(t, 2).isEmpty)
+    Sources.commitVersion(rows(2000L), t)
+    assertSidecarsMatch(t)
+
+    val wh = java.nio.file.Files.createTempDirectory("ws-fcat").toString
+    spark.conf.set("spark.sql.catalog.wsf", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.wsf.warehouse", wh)
+    spark.sql("CREATE TABLE wsf.st (k BIGINT, s STRING, x DOUBLE, " +
+      "dt DATE, dec DECIMAL(10,2), n BIGINT, z INT, ts TIMESTAMP, p BIGINT) " +
+      s"TBLPROPERTIES ('stats.columns' = '${statCols.mkString(",")}')")
+    val st = s"$wh/st"
+    val epoch = Sources.latestVersion(st) + 1
+    blockStats(st, epoch)
+    val landing = java.nio.file.Files.createTempDirectory("ws-fland").toString
+    rows().coalesce(1).write.mode("append").parquet(landing)
+    val q = spark.readStream.schema(spark.read.parquet(landing).schema)
+      .parquet(landing).writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$landing-ckpt")
+      .toTable("wsf.st")
+    q.awaitTermination()
+    assert(q.exception.isEmpty)
+    assert(Sources.latestVersion(st) === epoch)
+    val files = manifestFiles(st, epoch)
+    assert(files.nonEmpty && files.forall(f =>
+      java.nio.file.Files.exists(java.nio.file.Paths.get(f))),
+      "the published epoch's files are kept")
+    assert(Sources.readVersion(spark, st, epoch).count() === 200)
+  }
+
+  test("a commit reads once the kept files its base has no lines for, " +
+    "and skips malformed carried lines") {
+    val t = fresh("ws-restore")
+    Sources.writeTableProperties(t, declared)
+    Sources.commitVersion(rows().repartition(2), t)
+    // a base whose `.ndv` a racing commit never saw, and a torn line
+    java.nio.file.Files.delete(java.nio.file.Paths.get(t, "v1.ndv"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(t, "v1.stats"),
+      "\ntorn".getBytes("UTF-8"), java.nio.file.StandardOpenOption.APPEND)
+    java.nio.file.Files.write(java.nio.file.Paths.get(t, "v1.ndv"),
+      "R".getBytes("UTF-8"))
+    Sources.commitVersion(rows(1000L), t)
+    assertSidecarsMatch(t)
+    // covered now: the next append scans nothing
+    val bare = fresh("ws-restore-bare")
+    Sources.commitVersion(rows().repartition(2), bare)
+    Sources.commitVersion(rows(1000L), bare)
+    val (_, bareJobs) = jobsDuring(Sources.commitVersion(rows(3000L), bare))
+    val (_, jobs) = jobsDuring(Sources.commitVersion(rows(3000L), t))
+    assert(jobs === bareJobs)
+    assertSidecarsMatch(t)
+  }
+
   test("schemaOf and building readVersion on a commitVersion table " +
     "start no job and return the inferred schema") {
     val t = fresh("ws-schema")
