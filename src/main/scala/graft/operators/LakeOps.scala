@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Query, Tables}
 import graft.Canon.dsum
-import graft.sources.{ManifestFileIndex, Refs, Sources}
+import graft.sources.{Refs, Sources}
 import org.apache.spark.sql.functions._
 
 /** The versioned-table ("lake") lifecycle as an ORACLE-GATED query —
@@ -17,7 +17,7 @@ object LakeOps {
     * sidecar, then one copy-on-write MERGE (every key ≡ 0 (mod 100)
     * upserted with a rewritten priority, every key ≡ 1 (mod 100)
     * deleted), then the final version read back through the
-    * stats-skipping [[ManifestFileIndex]] scan and aggregated. The
+    * stats-skipping [[graft.sources.ManifestFileIndex]] scan and aggregated. The
     * oracle never sees the table machinery — it states the same end
     * state RELATIONALLY over the raw `orders` fixture, so a hash match
     * proves commit + merge + carry + indexed-read compose to exactly
@@ -62,7 +62,7 @@ object LakeOps {
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
             col("o_orderpriority"), lit("delete").as("op")))
       Sources.mergeVersion(s, table, changes, "o_orderkey")
-      ManifestFileIndex.readVersionIndexed(s, table)
+      Sources.readVersion(s, table)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           dsum(col("o_totalprice")).as("sum_price"),
@@ -290,7 +290,7 @@ object LakeOps {
         if (usedDv && nf(vFinal) == nf(vAppend)) 1L else 0L
       val nV1 = Sources.readVersion(s, table, v1).count()
       val dvRows = Sources.dvRowCount(table, vFinal)
-      ManifestFileIndex.readVersionIndexed(s, table)
+      Sources.readVersion(s, table)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           dsum(col("o_totalprice")).as("sum_price"))
@@ -617,7 +617,7 @@ object LakeOps {
         Sources.purgeDv(s, table)
         (stable, dvr)
       } finally { orders.unpersist(); () }
-      ManifestFileIndex.readVersionIndexed(s, table)
+      Sources.readVersion(s, table)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           dsum(col("o_totalprice")).as("sum_price"))
@@ -968,7 +968,7 @@ object LakeOps {
     * file lands under a `_pt=yyyy-MM` dir, the derived value never in
     * data files or the schema — then a point DELETE goes merge-on-read
     * (DV sidecar; layout untouched), and the final monthly rollup
-    * filters on the RAW timestamp: [[ManifestFileIndex]]'s transform
+    * filters on the RAW timestamp: [[graft.sources.ManifestFileIndex]]'s transform
     * keeper converts the `ets >=` bound to a window test against each
     * file's `_pt` segment and drops whole months driver-side
     * (numFiles-asserted in TransformPartitionSpec; here the
@@ -1082,8 +1082,8 @@ object LakeOps {
     * Scale note: this is the 100 TB streaming-CDC shape — commit cost
     * O(change keys) instead of [[Sources.mergeVersionDv]]'s
     * O(candidate-file rows) write-time position scan; readers pay a
-    * broadcast anti-join per pending entry until the (bounded,
-    * schedulable) purge rewrite reclaims the fast path. */
+    * key-set test per in-scope row and pending entry until the
+    * (bounded, schedulable) purge rewrite reclaims the fast path. */
   val q220 = Query(
     "q220_equality_deletes",
     (s, dir) => {
@@ -1153,7 +1153,7 @@ object LakeOps {
       val clean =
         if (Sources.eqOf(table, Sources.latestVersion(table)).isEmpty) 1L
         else 0L
-      ManifestFileIndex.readVersionIndexed(s, table)
+      Sources.readVersion(s, table)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           dsum(col("o_totalprice")).as("sum_price"))
@@ -1630,7 +1630,7 @@ object LakeOps {
       Refs.dropBranch(table, "audit")
       val tagStable =
         if (Refs.readRef(s, table, "pre-wap").count() == nBase) 1L else 0L
-      ManifestFileIndex.readVersionIndexed(s, table)
+      Sources.readVersion(s, table)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           dsum(col("o_totalprice")).as("sum_price"))

@@ -883,7 +883,7 @@ object GraftTable {
                   RowIds.enabled(table))
                 RowIds.indexedWithMeta(spark, table, version)
               else withMetaColumns(
-                ManifestFileIndex.readVersionIndexed(spark, table, version))
+                Sources.readVersion(spark, table, version))
             filters.foreach { e =>
               val byName = e.transform {
                 case a: org.apache.spark.sql.catalyst.expressions
@@ -992,10 +992,9 @@ object GraftTable {
 /** The DSv2 scan for an identity- or transform-PARTITIONED version
   * carrying deletion vectors or pending equality deletes (unpartitioned
   * and bucketed layouts take the native [[GraftNativeScan]]): a V1Scan
-  * whose rows come from the
-  * DV- and eq-applying indexed read
-  * ([[ManifestFileIndex.readVersionIndexed]]), which reattaches
-  * partition values from the hive paths. Column pruning and
+  * whose rows come from [[Sources.readVersion]] — the manifest index
+  * read, which reattaches partition values from the hive paths, under
+  * the one DV and eq delete filter. Column pruning and
   * filter pushdown are honored by re-applying them INSIDE the wrapped
   * DataFrame — where they reach the parquet scan and the manifest
   * index — while every pushed filter is also reported residual, so
@@ -1042,7 +1041,7 @@ private[sources] class GraftDvScanBuilder(spark: SparkSession,
           override def buildScan()
               : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
             // (no `_row_id`: lineage tables are flat, never here)
-            var df = ManifestFileIndex.readVersionIndexed(
+            var df = Sources.readVersion(
               spark, table, version)
             // a plain SELECT may request the table's _gfile/_gpos
             // metadata columns: serve them from the scan's own

@@ -60,7 +60,7 @@ class GraftCdfDataSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     GraftCdfDataSource.cdfSchema(
-      Sources.schemaOf(SparkSession.active, tableOf(options),
+      ManifestFileIndex.servedSchema(SparkSession.active, tableOf(options),
         Sources.latestVersion(tableOf(options))))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -82,8 +82,9 @@ private[sources] class GraftCdfTable(spark: SparkSession, table: String,
     startingVersion: Int) extends Table
   with org.apache.spark.sql.connector.catalog.SupportsRead {
 
+  // what readVersion serves: identity partition columns included
   private val dataSchema =
-    Sources.schemaOf(spark, table, Sources.latestVersion(table))
+    ManifestFileIndex.servedSchema(spark, table, Sources.latestVersion(table))
 
   override def name(): String = s"graft-cdf:$table"
   override def schema(): StructType = GraftCdfDataSource.cdfSchema(dataSchema)
@@ -159,7 +160,8 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
     *    carried files, as `onlyDv` delete partitions — the deferred
     *    position lookup the eq commit skipped, resolved here by
     *    [[Sources.eqRetiredPositions]] (key columns + row-index only,
-    *    broadcast key join, bounded by in-scope files, never O(table)).
+    *    tested against the driver-read key sets, bounded by in-scope
+    *    files, never O(table)).
     *
     * Versions without eq entries keep the pure-metadata planning path:
     * the key probe never runs. */
@@ -238,29 +240,42 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
+    // identity partition columns come from each file's path, through
+    // the rule the manifest index uses, cast to the served type; the
+    // file holds the rest
+    val pathSchema = StructType(ManifestFileIndex.partitionSchemaOf(table,
+      Sources.latestVersion(table)).filter(f =>
+        dataSchema.fieldNames.contains(f.name)))
+    val partSchema = StructType(pathSchema.map(f => dataSchema(f.name)))
+    val fileSchema = StructType(dataSchema.filterNot(f =>
+      partSchema.fieldNames.contains(f.name)))
     // Spark's own parquet reader function: built once on the driver
-    // (it broadcasts the hadoop conf itself), serialized to tasks
-    val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, dataSchema, StructType(Nil), dataSchema, Nil,
-      // row-based iteration: this reader feeds a JoinedRow per record,
-      // not a ColumnarBatch consumer
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+    // (it broadcasts the hadoop conf itself), serialized to tasks;
+    // row-based iteration: this reader feeds a JoinedRow per record,
+    // not a ColumnarBatch consumer
+    def reader(required: StructType) =
+      new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, fileSchema, partSchema, required, Nil,
+        Map(org.apache.spark.sql.execution.datasources.FileFormat
+          .OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
     // DV-aware variant: data columns + the reader's row-index generator
     // column, so position bitsets filter rows exactly as the sidecar
     // recorded them (only built for partitions that carry a bitset)
-    val idxSchema = StructType(dataSchema.fields :+
+    val readFuncIdx = reader(StructType(fileSchema.fields :+
       org.apache.spark.sql.types.StructField(
         ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-        org.apache.spark.sql.types.LongType, nullable = true))
-    val readFuncIdx = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, dataSchema, StructType(Nil), idxSchema, Nil,
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-    new GraftCdfReaderFactory(readFunc, readFuncIdx,
-      dataSchema.fields.map(_.dataType))
+        org.apache.spark.sql.types.LongType, nullable = true)))
+    // output column i's ordinal in a read row: file columns, [the row
+    // index,] partition columns
+    def ords(idx: Int) = dataSchema.fieldNames.map { n =>
+      if (partSchema.fieldNames.contains(n))
+        fileSchema.length + idx + partSchema.fieldIndex(n)
+      else fileSchema.fieldIndex(n)
+    }
+    new GraftCdfReaderFactory(reader(fileSchema), readFuncIdx,
+      dataSchema.fields.map(_.dataType), pathSchema, partSchema,
+      ords(0), ords(1), spark.sessionState.conf.sessionLocalTimeZone)
   }
 
   override def commit(end: Offset): Unit = ()
@@ -270,27 +285,43 @@ private[sources] class GraftCdfStream(spark: SparkSession, table: String,
 private[sources] class GraftCdfReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     readFuncIdx: PartitionedFile => Iterator[InternalRow],
-    dataTypes: Array[org.apache.spark.sql.types.DataType])
+    dataTypes: Array[org.apache.spark.sql.types.DataType],
+    pathSchema: StructType, partSchema: StructType,
+    ords: Array[Int], ordsIdx: Array[Int], tz: String)
   extends PartitionReaderFactory {
 
   private def nDataCols: Int = dataTypes.length
 
+  /** The data columns of read row `r`, in schema order, copied. */
+  private def project(r: InternalRow, at: Array[Int]): InternalRow = {
+    val out = new GenericInternalRow(nDataCols)
+    var i = 0
+    while (i < nDataCols) {
+      out.update(i, if (r.isNullAt(at(i))) null else r.get(at(i), dataTypes(i)))
+      i += 1
+    }
+    out
+  }
+
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GraftCdfPartition]
-    val pf = PartitionedFile(
-      InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPathString(gp.path),
-      0L, gp.bytes, Array.empty[String], 0L, gp.bytes,
-      Map.empty[String, Any])
+    val pv = ManifestFileIndex.partitionValues(gp.path, pathSchema)
+    val pf = EqCheck.partitionedFile(gp.path, gp.bytes,
+      InternalRow.fromSeq(pathSchema.fields.toSeq.indices.map(i =>
+        EqCheck.widen(pv.get(i, pathSchema(i).dataType),
+          pathSchema(i).dataType, partSchema(i).dataType, tz))))
     val meta = new GenericInternalRow(Array[Any](
       UTF8String.fromString(gp.changeType), gp.version.toLong))
     val joined = new JoinedRow
     if (gp.skipDv.isEmpty && gp.onlyDv.isEmpty)
       // clean file: the fast path, no row-index column, no copies
+      // unless partition columns need reordering
       new PartitionReader[InternalRow] {
         private val it = readFunc(pf)
         override def next(): Boolean = it.hasNext
-        override def get(): InternalRow = joined(it.next(), meta)
+        override def get(): InternalRow = joined(
+          if (partSchema.isEmpty) it.next() else project(it.next(), ords),
+          meta)
         override def close(): Unit = ()
       }
     else {
@@ -300,13 +331,14 @@ private[sources] class GraftCdfReaderFactory(
       // delete emission of a grown DV); the index column never leaves
       val skip = gp.skipDv.map(java.util.BitSet.valueOf)
       val only = gp.onlyDv.map(java.util.BitSet.valueOf)
+      val idxOrd = ordsIdx.length - partSchema.length
       new PartitionReader[InternalRow] {
         private val it = readFuncIdx(pf)
         private var cur: InternalRow = _
         override def next(): Boolean = {
           while (it.hasNext) {
             val r = it.next()
-            val i = r.getLong(nDataCols)
+            val i = r.getLong(idxOrd)
             val keep = (i <= Int.MaxValue) && {
               val pos = i.toInt
               skip.forall(!_.get(pos)) && only.forall(_.get(pos))
@@ -315,17 +347,7 @@ private[sources] class GraftCdfReaderFactory(
           }
           false
         }
-        override def get(): InternalRow = {
-          // copy the data prefix (drop the trailing row-index column)
-          val out = new GenericInternalRow(nDataCols)
-          var i = 0
-          while (i < nDataCols) {
-            out.update(i, if (cur.isNullAt(i)) null
-              else cur.get(i, dataTypes(i)))
-            i += 1
-          }
-          joined(out, meta)
-        }
+        override def get(): InternalRow = joined(project(cur, ordsIdx), meta)
         override def close(): Unit = ()
       }
     }

@@ -120,8 +120,8 @@ object GraftDataSource {
 }
 
 /** The read relation for a DV'd version: rows come from the
-  * stats-skipping indexed scan with the deletion-vector filter applied
-  * ([[ManifestFileIndex.readVersionIndexed]]). `PrunedFilteredScan`, so
+  * stats-skipping indexed scan with the delete filter applied
+  * ([[Sources.readVersion]]). `PrunedFilteredScan`, so
   * Catalyst still hands down the query's column set and predicates —
   * re-applied INSIDE the wrapped DataFrame, where they reach the
   * parquet scan (pushdown) and the manifest index (file skipping); the
@@ -145,7 +145,7 @@ private[sources] class DvRelation(
   override def buildScan(requiredColumns: Array[String],
       filters: Array[org.apache.spark.sql.sources.Filter])
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    var df = ManifestFileIndex.readVersionIndexed(spark, table, version)
+    var df = Sources.readVersion(spark, table, version)
     filters.flatMap(GraftTable.filterToColumn)
       .foreach(c => df = df.filter(c))
     df.select(requiredColumns.toIndexedSeq.map(

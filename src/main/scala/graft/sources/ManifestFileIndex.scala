@@ -35,8 +35,8 @@ import org.apache.spark.sql.types.{ByteType, DateType, DecimalType, DoubleType, 
   * involved. Parquet row-group stats can only prune within a file a
   * task already opened.
   */
-class ManifestFileIndex(spark: SparkSession, table: String,
-    version: Int = -1, only: Option[Set[String]] = None)
+class ManifestFileIndex(spark: SparkSession, private val table: String,
+    version: Int = -1, private val only: Option[Set[String]] = None)
   extends PartitioningAwareFileIndex(spark, Map.empty, None,
     FileStatusCache.getOrCreate(spark)) {
   // PartitioningAwareFileIndex (not the bare FileIndex trait) so ONE
@@ -71,55 +71,12 @@ class ManifestFileIndex(spark: SparkSession, table: String,
   // strings. Catalyst's partitionFilters then drop whole directories
   // before stats pruning even looks.
   private lazy val spec: PartitionSpec = {
-    val partCols = Sources.partitionColumnsOf(table)
-    if (partCols.isEmpty) PartitionSpec.emptySpec
-    else {
-      val declared = Sources.declaredSchema(table, v)
-        .map(_.fields.map(f => f.name -> f.dataType).toMap)
-        .getOrElse(Map.empty)
-      val colTypes: Seq[(String, org.apache.spark.sql.types.DataType)] =
-        partCols.map { c =>
-          c -> (declared.get(c) match {
-            case Some(t @ (ByteType | ShortType | IntegerType | LongType)) => t
-            case Some(org.apache.spark.sql.types.StringType) =>
-              org.apache.spark.sql.types.StringType
-            case _ => org.apache.spark.sql.types.StringType
-          })
-        }
-      def segValue(dir: Path, c: String): Option[String] = {
-        var p = dir
-        while (p != null) {
-          val n = p.getName
-          if (n.startsWith(s"$c=")) return Some(
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(n.substring(c.length + 1)))
-          p = p.getParent
-        }
-        None
-      }
-      def convert(raw: Option[String],
-          t: org.apache.spark.sql.types.DataType): Any = raw match {
-        case None | Some("__HIVE_DEFAULT_PARTITION__") => null
-        case Some(s) => t match {
-          case ByteType => s.toByte
-          case ShortType => s.toShort
-          case IntegerType => s.toInt
-          case LongType => s.toLong
-          case _ => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        }
-      }
-      val dirs = statuses.map(_.getPath.getParent).distinct
-      val partitions = dirs.map { d =>
+    val partSchema = ManifestFileIndex.partitionSchemaOf(table, v)
+    if (partSchema.isEmpty) PartitionSpec.emptySpec
+    else PartitionSpec(partSchema,
+      statuses.map(_.getPath.getParent).distinct.map(d =>
         org.apache.spark.sql.execution.datasources.PartitionPath(
-          InternalRow.fromSeq(colTypes.map { case (c, t) =>
-            convert(segValue(d, c), t) }),
-          d)
-      }
-      PartitionSpec(
-        StructType(colTypes.map { case (c, t) =>
-          org.apache.spark.sql.types.StructField(c, t) }),
-        partitions)
-    }
+          ManifestFileIndex.partitionValues(d.toUri.getPath, partSchema), d)))
   }
   private val stats = Sources.statsOf(table, v)
   private val strStats = Sources.statsOfString(table, v)
@@ -130,6 +87,15 @@ class ManifestFileIndex(spark: SparkSession, table: String,
       k -> org.apache.spark.util.sketch.BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(bytes))
     }
+
+  // two reads of one version (or one file subset of it) plan equal, so
+  // `persist` and exchange reuse match them — the base class compares
+  // by reference
+  override def equals(o: Any): Boolean = o match {
+    case m: ManifestFileIndex => m.table == table && m.v == v && m.only == only
+    case _ => false
+  }
+  override def hashCode: Int = (table, v, only).hashCode
 
   override def rootPaths: Seq[Path] = Seq(new Path(table))
   override def partitionSpec(): PartitionSpec = spec
@@ -510,40 +476,80 @@ class ManifestFileIndex(spark: SparkSession, table: String,
 
 object ManifestFileIndex {
 
-  /** Read `table` at `version` through the stats-skipping index. The
-    * returned DataFrame is a normal parquet-backed relation — every
-    * later `.filter` the optimizer can push down prunes manifest files
-    * at planning time. */
-  def readVersionIndexed(spark: SparkSession, table: String,
-      version: Int = -1): DataFrame = {
-    val v = if (version < 0) Sources.latestVersion(table) else version
-    // DV + equality-delete application ABOVE the indexed scan: deleted
-    // positions filter out via the scan's own _metadata probe, eq key
-    // sets via broadcast anti-joins, while file skipping, pushdown, and
-    // the vectorized reader all stay intact (clean versions skip both
-    // entirely)
-    Sources.applyEq(spark,
-      Sources.applyDv(frameForFiles(spark, table, v, None),
-        Sources.dvOf(table, v)), table, v)
+  /** The identity partition columns of `table` (`partition.columns`)
+    * with the types their path values take: the declared integral or
+    * string type, else string. Empty for every other layout. */
+  private[sources] def partitionSchemaOf(table: String,
+      version: Int): StructType = {
+    val partCols = Sources.partitionColumnsOf(table)
+    if (partCols.isEmpty) return StructType(Nil)
+    val declared = Sources.declaredSchema(table, version)
+      .map(_.fields.map(f => f.name -> f.dataType).toMap)
+      .getOrElse(Map.empty)
+    StructType(partCols.map(c =>
+      org.apache.spark.sql.types.StructField(c, declared.get(c) match {
+        case Some(t @ (ByteType | ShortType | IntegerType | LongType)) => t
+        case _ => StringType
+      })))
   }
 
+  /** The identity-partition values a data file or directory path holds
+    * in its `c=v` segments, typed by `partSchema`: NULL where a segment
+    * is absent or holds the hive default. The one path-to-value rule of
+    * the index's partition spec, the eq probe and the change stream. */
+  private[sources] def partitionValues(path: String,
+      partSchema: StructType): InternalRow = {
+    val segs = path.split('/')
+    InternalRow.fromSeq(partSchema.fields.toSeq.map { f =>
+      segs.reverseIterator.find(_.startsWith(s"${f.name}=")).map(n =>
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(n.substring(f.name.length + 1))) match {
+        case None | Some("__HIVE_DEFAULT_PARTITION__") => null
+        case Some(s) => f.dataType match {
+          case ByteType => s.toByte
+          case ShortType => s.toShort
+          case IntegerType => s.toInt
+          case LongType => s.toLong
+          case _ => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+        }
+      }
+    })
+  }
+
+  /** The schema a read of `version` serves: the declared schema (else
+    * the head file's footer), with identity partition columns the
+    * footer lacks appended in their path types. */
+  private[sources] def servedSchema(spark: SparkSession, table: String,
+      version: Int): StructType =
+    withPartitionColumns(Sources.schemaOf(spark, table, version),
+      partitionSchemaOf(table, version))
+
+  private def withPartitionColumns(base: StructType,
+      partSchema: StructType): StructType =
+    StructType(base.fields ++
+      partSchema.fields.filterNot(f => base.fieldNames.contains(f.name)))
+
   /** The manifest-pinned HadoopFsRelation as a DataFrame, optionally
-    * restricted to a FILE SUBSET (`only`) — the partition-aware reader
-    * shared by the indexed read, the rewrite paths' survivor scans, and
-    * the DV candidate scan. Partitioned tables serve their partition
+    * restricted to a FILE SUBSET (`only`) — the one reader behind every
+    * DataFrame read of a version ([[Sources.readVersion]], the rewrite
+    * survivor scans, the DV candidate scan, the change feed, the lineage
+    * readers). It lists nothing and infers nothing: files come from the
+    * manifest, the schema is `schema` (default: the version's declared
+    * or footer schema). Partitioned tables serve their partition
     * columns from the hive paths (cast to the declared types, declared
-    * column order); NO deletion-vector filter here — callers decide. */
+    * column order); NO delete filter here — callers apply
+    * [[Sources.readRows]]. */
   private[sources] def frameForFiles(spark: SparkSession, table: String,
-      version: Int, only: Option[Set[String]]): DataFrame = {
+      version: Int, only: Option[Set[String]],
+      schema: Option[StructType] = None): DataFrame = {
     val index = new ManifestFileIndex(spark, table, version, only)
     val partSchema = index.partitionSchema
     val partNames = partSchema.fieldNames.toSet
     // API tables without a declared-schema sidecar fall back to a data
     // file's footer, which never contains the partition columns (they
     // live in paths) — append them so the served schema is complete
-    val declared0 = Sources.schemaOf(spark, table, version)
-    val declared = StructType(declared0.fields ++
-      partSchema.fields.filterNot(f => declared0.fieldNames.contains(f.name)))
+    val declared = withPartitionColumns(
+      schema.getOrElse(Sources.schemaOf(spark, table, version)), partSchema)
     val dataSchema = StructType(
       declared.fields.filterNot(f => partNames.contains(f.name)))
     val relation = HadoopFsRelation(index, partSchema, dataSchema, None,

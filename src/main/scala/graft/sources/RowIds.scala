@@ -249,57 +249,54 @@ object RowIds {
     val v = if (version < 0) Sources.latestVersion(table) else version
     require(v > 0, s"$table has no committed versions")
     val files = Sources.filesOf(table, v)
-    val base = Sources.declaredSchema(table, v)
-      .getOrElse(Sources.schemaOf(spark, table, v))
-    val schema = schemaWithRowId(base)
+    val schema = schemaWithRowId(Sources.schemaOf(spark, table, v))
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val (rid, _) = ridOf(table, v)
-    val filled = fill(spark.read.schema(schema).parquet(files: _*), rid)
-    Sources.applyEq(spark,
-      Sources.applyDv(filled, Sources.dvOf(table, v)), table, v)
+    liveAt(spark, table, v, files)
   }
 
-  /** Rewrite-path survivor read: the file subset under the declared
-    * schema PLUS each row's id (materialized column or file range) —
-    * what every copy-on-write rewrite of a lineage table must feed its
-    * writer so survivors keep their identity. Flat tables only (the
-    * [[enableRowIds]] envelope). */
+  /** [[Sources.readRows]] under the version's schema plus [[COL]],
+    * with `_row_id` filled. */
+  private def rowsAt(spark: SparkSession, table: String, version: Int,
+      files: Seq[String], dv: Map[String, java.util.BitSet],
+      eq: Seq[Sources.EqEntry], mode: Sources.DeleteMode): DataFrame =
+    fill(Sources.readRows(spark, table, version, Some(files), dv, eq, mode,
+      Some(schemaWithRowId(Sources.schemaOf(spark, table, version)))),
+      ridOf(table, version)._1)
+
+  /** [[rowsAt]] under the version's own delete state: its live rows. */
+  private def liveAt(spark: SparkSession, table: String, version: Int,
+      files: Seq[String]): DataFrame =
+    rowsAt(spark, table, version, files, Sources.dvOf(table, version),
+      Sources.eqOf(table, version), Sources.DeleteMode.Live)
+
+  /** Rewrite-path survivor read: the live rows of the file subset
+    * under the declared schema PLUS each row's id (materialized column
+    * or file range) — what every copy-on-write rewrite of a lineage
+    * table must feed its writer so survivors keep their identity. */
   private[sources] def readFileSubsetWithRowIds(spark: SparkSession,
-      table: String, version: Int, files: Seq[String]): DataFrame = {
-    val base = Sources.declaredSchema(table, version)
-      .getOrElse(Sources.schemaOf(spark, table, version))
-    val (rid, _) = ridOf(table, version)
-    fill(spark.read.schema(schemaWithRowId(base)).parquet(files: _*), rid)
-  }
+      table: String, version: Int, files: Seq[String]): DataFrame =
+    liveAt(spark, table, version, files)
 
-  /** The SQL read stacks' lineage frame: the version's files under the
-    * declared schema + physical `_row_id`, with `_gfile`/`_gpos`
-    * attached and the id filled BEFORE the DV/eq filters run (metadata
-    * columns stop resolving after the eq anti-joins). Flat tables only
-    * (the [[enableRowIds]] envelope), so a plain multi-file read is the
-    * partition-correct read. */
+  /** The SQL read stacks' lineage frame: the version's live rows under
+    * the declared schema + physical `_row_id`, with `_gfile`/`_gpos`
+    * attached. Flat tables only (the [[enableRowIds]] envelope). */
   private[sources] def indexedWithMeta(spark: SparkSession, table: String,
       version: Int): DataFrame = {
     val v = if (version < 0) Sources.latestVersion(table) else version
     val files = Sources.filesOf(table, v)
-    val base = Sources.declaredSchema(table, v)
-      .getOrElse(Sources.schemaOf(spark, table, v))
-    val full = StructType(schemaWithRowId(base).fields ++ Seq(
-      StructField("_gfile", org.apache.spark.sql.types.StringType),
-      StructField("_gpos", LongType)))
+    val full = StructType(
+      schemaWithRowId(Sources.schemaOf(spark, table, v)).fields ++ Seq(
+        StructField("_gfile", org.apache.spark.sql.types.StringType),
+        StructField("_gpos", LongType)))
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    val (rid, _) = ridOf(table, v)
     val norm = udf((p: String) => Sources.normalizePath(p))
-    val tagged = spark.read.schema(schemaWithRowId(base)).parquet(files: _*)
+    liveAt(spark, table, v, files)
       .withColumn("_gfile", norm(col("_metadata.file_path")))
       .withColumn("_gpos", col("_metadata.row_index"))
-    Sources.applyEq(spark,
-      Sources.applyDv(fill(tagged, rid), Sources.dvOf(table, v)),
-      table, v)
   }
 
   /** The NET change feed between two versions of a lineage table —
@@ -324,84 +321,26 @@ object RowIds {
     * the id — never O(table) beyond what the rewrites themselves
     * touched. Departing content reads at `fromVersion`'s delete state,
     * arriving at `toVersion`'s, both aligned to the `toVersion` schema
-    * (evolution-safe). */
+    * (evolution-safe); every side is one delete-filtered read
+    * ([[Sources.readRows]]), as in [[Sources.readChanges]]. */
   def readChangesLineage(spark: SparkSession, table: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
     require(enabled(table), s"$table does not declare rowids.enabled")
     // fromVersion 0 = "since before the table existed": everything at
     // `toVersion` is an insert (the stream-bootstrap shape)
-    val before =
-      if (fromVersion <= 0) Set.empty[String]
-      else Sources.filesOf(table, fromVersion).toSet
-    val after = Sources.filesOf(table, toVersion).toSet
-    val gone = (before -- after).toSeq.sorted
-    val added = (after -- before).toSeq.sorted
-    val dvFrom =
-      if (fromVersion <= 0) Map.empty[String, java.util.BitSet]
-      else Sources.dvOf(table, fromVersion)
-    val dvTo = Sources.dvOf(table, toVersion)
-    val ridFrom = ridOf(table, fromVersion)._1
-    val ridTo = ridOf(table, toVersion)._1
-    val baseTo = Sources.declaredSchema(table, toVersion)
-      .getOrElse(Sources.schemaOf(spark, table, toVersion))
-    def baseAt(v: Int) = Sources.declaredSchema(table, v)
-      .getOrElse(Sources.schemaOf(spark, table, v))
-    def readIds(fs: Seq[String], rid: Map[String, Long], v: Int) =
-      fill(spark.read.schema(schemaWithRowId(baseAt(v)))
-        .parquet(fs: _*), rid)
-    // departures: rows of gone files live at `from` …
-    val depGone =
-      if (gone.isEmpty) None
-      else Some(Sources.eqFilterEntries(spark,
-        Sources.applyDv(readIds(gone, ridFrom, fromVersion), dvFrom),
-        table, fromVersion, Sources.eqOf(table, fromVersion)))
-    // … plus carried files' newly-marked DV positions …
-    val dvDelta: Map[String, java.util.BitSet] =
-      (before & after).toSeq.flatMap { f =>
-        val grown = dvTo.getOrElse(f, new java.util.BitSet())
-          .clone().asInstanceOf[java.util.BitSet]
-        dvFrom.get(f).foreach(grown.andNot)
-        if (grown.isEmpty) None else Some(f -> grown)
-      }.toMap
-    val depDv =
-      if (dvDelta.isEmpty) None
-      else Some(Sources.dvFilter(
-        readIds(dvDelta.keys.toSeq.sorted, ridTo, toVersion),
-        dvDelta, keepDeleted = true))
-    // … plus rows new eq entries retired from carried in-scope files
-    val eqFromPaths =
-      (if (fromVersion <= 0) Seq.empty
-       else Sources.eqOf(table, fromVersion)).map(_.dataPath).toSet
-    val (eqOld, eqNew) = Sources.eqOf(table, toVersion)
-      .partition(e => eqFromPaths.contains(e.dataPath))
-    val depEq =
-      if (eqNew.isEmpty) None
-      else {
-        val afterNorm = after.map(Sources.normalizePath)
-        val scoped = eqNew.map(e => Sources.eqScope(table, e))
-          .reduce(_ | _) & afterNorm & before.map(Sources.normalizePath)
-        if (scoped.isEmpty) None
-        else {
-          val scopedFiles = after.toSeq.filter(f =>
-            scoped.contains(Sources.normalizePath(f))).sorted
-          val live = Sources.eqFilterEntries(spark,
-            Sources.applyDv(readIds(scopedFiles, ridTo, toVersion), dvTo),
-            table, toVersion, eqOld)
-          Some(Sources.eqRetired(spark, live, table, afterNorm, eqNew))
-        }
-      }
-    val arr =
-      if (added.isEmpty) None
-      else Some(Sources.eqFilterEntries(spark,
-        Sources.applyDv(readIds(added, ridTo, toVersion), dvTo),
-        table, toVersion, Sources.eqOf(table, toVersion)))
+    val baseTo = Sources.schemaOf(spark, table, toVersion)
     val dataCols = baseTo.fieldNames.filterNot(_ == COL).toSeq
-    def shaped(df: DataFrame, tag: String) =
-      Sources.alignToSchema(df, schemaWithRowId(baseTo), Map.empty)
+    def shaped(p: Sources.ChangePart, tag: String) =
+      Sources.alignToSchema(
+        rowsAt(spark, table, p.version, p.files, p.dv, p.eq, p.mode),
+        schemaWithRowId(baseTo), Map.empty)
         .select(struct(dataCols.map(col): _*).as(tag), col(COL))
-    val depAll = Seq(depGone, depDv, depEq).flatten
-      .map(shaped(_, "pre")).reduceOption(_ unionByName _)
-    val arrAll = arr.map(shaped(_, "post"))
+    // departures (gone files, grown DVs, rows new eq entries retired)
+    // and arrivals (added files)
+    val (dep, arr) =
+      Sources.changeParts(table, fromVersion, toVersion).partition(_.change == "delete")
+    val depAll = dep.map(shaped(_, "pre")).reduceOption(_ unionByName _)
+    val arrAll = arr.map(shaped(_, "post")).reduceOption(_ unionByName _)
     val empty = {
       val fields = org.apache.spark.sql.types.StructType(
         baseTo.fields.filterNot(_.name == COL) :+
@@ -437,8 +376,8 @@ object RowIds {
   }
 }
 
-/** Broadcast-friendly (file -> first_row_id) probe, the
-  * [[DvHolder]] shape: normalized-path lookup, null on unknown files
+/** Broadcast-friendly (file -> first_row_id) probe: a
+  * normalized-path lookup, null on unknown files
   * (their rows keep a NULL id rather than inventing one). */
 private[graft] final class RidHolder(m: Map[String, Long])
   extends Serializable {

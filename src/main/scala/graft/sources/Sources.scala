@@ -849,15 +849,22 @@ object Sources {
          else Map.empty[String, Array[Byte]]), txn)
 
   /** Read `table` at `version` (default: latest) by its pinned file
-    * list. An empty table (version 0) is an error by design — there is
-    * no schema to serve. Deleted-row positions recorded in the
-    * version's DV sidecar ([[deleteWhereDv]]) are filtered out. */
+    * list, through the stats-skipping manifest index: every later
+    * `.filter` the optimizer pushes down prunes manifest files at
+    * planning time. An empty table (version 0) is an error by design —
+    * there is no schema to serve. Rows the version's DV sidecar
+    * ([[deleteWhereDv]]) marks and rows its pending equality deletes
+    * ([[mergeVersionEq]]) retire are filtered out ([[readRows]]).
+    * The schema is the DECLARED one where it exists: after a type
+    * widening, file generations mix (int32 and int64 cnt), and the
+    * declared read widens narrow generations through the parquet
+    * reader's type promotion. Building the frame starts no Spark job. */
   def readVersion(spark: SparkSession, table: String,
       version: Int = -1): DataFrame = {
     val v = if (version < 0) latestVersion(table) else version
     require(v > 0, s"$table has no committed versions")
-    val files = filesOf(table, v)
-    if (files.isEmpty)
+    if (filesOf(table, v).nonEmpty) readLive(spark, table, v)
+    else
       // an emptied version (delete-all / TRUNCATE / CREATE) serves its
       // pinned declared schema as an empty relation
       declaredSchema(table, v) match {
@@ -866,20 +873,6 @@ object Sources {
         case None => throw new IllegalArgumentException(
           s"$table v$v has an empty file list and no declared schema")
       }
-    else if (partitionColumnsOf(table).nonEmpty)
-      // partitioned: the manifest index reattaches partition columns
-      // from the hive paths (a flat read would null them)
-      applyEq(spark,
-        applyDv(ManifestFileIndex.frameForFiles(spark, table, v, None),
-          dvOf(table, v)), table, v)
-    else
-      // DECLARED schema where one exists: after a type widening, file
-      // generations mix (int32 and int64 cnt); footer inference would
-      // pick whichever file lists first and crash on the other
-      // generation — the declared read widens narrow generations
-      // through the parquet reader's type promotion instead
-      applyEq(spark,
-        applyDv(readFiles(spark, table, v, files), dvOf(table, v)), table, v)
   }
 
   // ---- deletion vectors: merge-on-read row-level deletes -------------
@@ -960,33 +953,91 @@ object Sources {
         .getOrElse(p.replaceFirst("^file:/+", "/"))
     }.getOrElse(p.replaceFirst("^file:/+", "/"))
 
-  /** Filter `df` (a file-sourced scan of this table's parquet) down to
-    * rows NOT marked deleted in `dv`. The probe is one broadcast-held
-    * bitset lookup on the scan's own (file_path, row_index) metadata —
-    * no join, no shuffle; files without a DV entry pass through on the
-    * map-side fast path. Kept out of the plan entirely when `dv` is
-    * empty, so clean versions keep the untouched vectorized scan. */
-  private[graft] def applyDv(df: DataFrame,
-      dv: Map[String, java.util.BitSet]): DataFrame =
-    dvFilter(df, dv, keepDeleted = false)
+  /** `version`'s live rows of `files` (default: all of them) under its
+    * own DV and eq state ([[readRows]]) — what every DataFrame read of a
+    * version and every rewrite's survivor scan serves. Building it
+    * starts no Spark job. */
+  private[sources] def readLive(spark: SparkSession, table: String,
+      version: Int, files: Option[Seq[String]] = None): DataFrame =
+    readRows(spark, table, version, files, dvOf(table, version),
+      eqOf(table, version))
 
-  /** The shared DV row filter: `keepDeleted = false` keeps live rows
-    * (every read path), `true` keeps exactly the marked rows (the CDF's
-    * delete emission for a grown DV). */
-  private[sources] def dvFilter(df: DataFrame, dv: Map[String, java.util.BitSet],
-      keepDeleted: Boolean): DataFrame =
-    if (dv.isEmpty) df
-    else {
-      val holder = new DvHolder(dv.map { case (f, b) => f -> b.toByteArray })
-      val keep =
-        if (keepDeleted) udf((p: String, i: Long) => !holder.alive(p, i))
-        else udf((p: String, i: Long) => holder.alive(p, i))
-      val cols = df.columns
-      df.withColumn("__dv_path", col("_metadata.file_path"))
-        .withColumn("__dv_idx", col("_metadata.row_index"))
-        .filter(keep(col("__dv_path"), col("__dv_idx")))
-        .select(cols.map(col).toSeq: _*)
+  /** What [[readRows]] keeps of a scan. */
+  private[sources] sealed trait DeleteMode
+  private[sources] object DeleteMode {
+    /** Rows neither DV-marked nor held by an in-scope entry: every read. */
+    case object Live extends DeleteMode
+    /** Live rows that an in-scope entry of `by` holds: the change
+      * feed's eq deletes. */
+    final case class RetiredBy(by: Seq[EqEntry]) extends DeleteMode
+    /** Exactly the DV-marked rows: the change feed's grown-DV deletes. */
+    case object Marked extends DeleteMode
+  }
+
+  /** The files `only` of `version` (None: all of them) through the one
+    * reader, [[ManifestFileIndex.frameForFiles]] under `schema`
+    * (default: the version's), and the one delete filter: one row
+    * predicate ([[DeleteFilter]]) over the scan's `_metadata.file_path`/
+    * `row_index` and the entries' key columns. A row is dead when `dv`
+    * marks its position, or when an entry of `eq` whose scope holds the
+    * row's file holds its key — matched by [[EqCheck]], the rule the
+    * position probe uses. `mode` picks what is kept. An entry
+    * skips a file whose recorded columns (`_COLS`, plus the identity
+    * partition columns) predate one of its keys; such a file serves the
+    * key as NULL, and a NULL key matches nothing. Key sets are read on
+    * the driver, so building the frame starts no Spark job, and the
+    * predicate runs inside the scan's own stage, so executing it starts
+    * none either. A scan with nothing to drop gets no filter. */
+  private[sources] def readRows(spark: SparkSession, table: String,
+      version: Int, only: Option[Seq[String]],
+      dv: Map[String, java.util.BitSet], eq: Seq[EqEntry],
+      mode: DeleteMode = DeleteMode.Live,
+      schema: Option[StructType] = None): DataFrame = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    val df = ManifestFileIndex.frameForFiles(spark, table, version,
+      only.map(_.toSet), schema)
+    val files = only.getOrElse(filesOf(table, version))
+    val norm = files.map(normalizePath).distinct
+    val marks = norm.flatMap(f => dv.get(f).map(f -> _.toByteArray)).toMap
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    val partCols = partitionColumnsOf(table).toSet
+    def scoped(e: EqEntry): Option[(EqEntry, Set[String])] =
+      if (!e.keyCols.forall(types.contains)) None
+      else {
+        val scope = eqScope(table, e)
+        val hit = norm.filter(f => scope.contains(f) && e.keyCols.forall(k =>
+          partCols(k) || fileSchemaOf(spark, f).fieldNames.contains(k))).toSet
+        if (hit.isEmpty) None else Some(e -> hit)
+      }
+    val drop = if (mode == DeleteMode.Marked) Nil else eq.flatMap(scoped)
+    val need = mode match {
+      case DeleteMode.RetiredBy(by) => by.flatMap(scoped)
+      case _ => Nil
     }
+    mode match {
+      case DeleteMode.Live if marks.isEmpty && drop.isEmpty => return df
+      case DeleteMode.RetiredBy(_) if need.isEmpty => return df.filter(lit(false))
+      case DeleteMode.Marked if marks.isEmpty => return df.filter(lit(false))
+      case _ => ()
+    }
+    val keyCols = (drop ++ need).flatMap(_._1.keyCols).distinct
+    val sets = new EqSets(spark, (drop ++ need).map(_._1))
+    def checks(es: Seq[(EqEntry, Set[String])]) = es.map { case (e, hit) =>
+      sets.check(e, e.keyCols.map(types), e.keyCols.map(keyCols.indexOf)) -> hit
+    }
+    val (dropChecks, needChecks) = (checks(drop), checks(need))
+    val spec = new DeleteSpec(
+      (table, files, dvText(dv.filter(kv => marks.contains(kv._1))),
+        drop.map(_._1.dataPath), need.map(_._1.dataPath), mode.toString),
+      marks,
+      norm.map(f => f -> ((dropChecks.filter(_._2(f)).map(_._1).toArray,
+        needChecks.filter(_._2(f)).map(_._1).toArray))).toMap,
+      sets.sets, sets.tz, mode)
+    df.filter(org.apache.spark.sql.GraftColumnBridge.column(DeleteFilter(
+      (Seq(UnresolvedAttribute(Seq("_metadata", "file_path")),
+        UnresolvedAttribute(Seq("_metadata", "row_index"))) ++
+        keyCols.map(UnresolvedAttribute.quoted)).toIndexedSeq, spec)))
+  }
 
   // (DV carry for append paths is computed by [[carriedDv]] and staged
   // WITH the manifest claim — see the staged-sidecar protocol above.)
@@ -1013,22 +1064,11 @@ object Sources {
     val prevDv = dvOf(table, v)
     // candidate scan: matching rows' (file, position), minus rows the
     // previous DV (or a pending eq entry) already deleted — marking a
-    // dead row would double-count here and double-delete in the CDF;
-    // partition-aware so the predicate may reference partition columns
-    val scan = readFileSubset(spark, table, v, candidates)
-    val live =
-      if (partitionColumnsOf(table).isEmpty && partTransformOf(table).isEmpty) {
-        // the native scan's skip bitset per file: DV marks OR the
-        // memoized eq-retired positions — at most one probe job, however
-        // many entries are pending
-        val eqPos = eqRetiredPositions(spark, table, candidates, eqOf(table, v))
-        dvFilter(scan, candidates.flatMap { f =>
-          val n = normalizePath(f)
-          orBits(prevDv.get(n), eqPos.get(f))
-            .map(b => n -> java.util.BitSet.valueOf(b))
-        }.toMap, keepDeleted = false)
-      } else applyEq(spark, applyDv(scan, prevDv), table, v)
-    val matched = live
+    // dead row would double-count here and double-delete in the CDF.
+    // The one reader serves partition columns, so the predicate may
+    // reference them on every layout, and the delete filter runs in the
+    // scan's own job
+    val matched = readLive(spark, table, v, Some(candidates))
       .filter(coalesce(cond, lit(false)))
       .select(col("_metadata.file_path").as("__p"),
         col("_metadata.row_index").as("__i"))
@@ -1196,9 +1236,7 @@ object Sources {
     // eq-deleted rows of a rewritten file must not resurrect (the new
     // files fall outside every entry's scope) — apply pending eq sets
     // here; carried files keep their entries (staged with the claim)
-    val survivors = applyEq(spark,
-      applyDv(readFileSubsetForRewrite(spark, table, v, affected), dv),
-      table, v)
+    val survivors = readLiveForRewrite(spark, table, v, affected)
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-purge-${java.util.UUID.randomUUID().toString.take(8)}")
     val cover = sidecarCover(table, v)
@@ -1240,9 +1278,12 @@ object Sources {
   //    parquet of keys plus the appended upsert batch. NO base data
   //    file is opened at commit time (EqualityDeleteSpec pins this
   //    with an input-metrics listener);
-  //  - every reader drops in-scope rows matching a key set via a
-  //    broadcast anti-join per entry — the read tax that [[purgeEq]]
-  //    (and any full rewrite, e.g. compaction) reclaims;
+  //  - every reader drops in-scope rows matching a key set: DataFrame
+  //    reads through the one row filter ([[readRows]]) testing each
+  //    row's key against the driver-read key sets, position consumers
+  //    through memoized skip bitsets ([[eqRetiredPositions]]) — the
+  //    read tax that [[purgeEq]] (and any full rewrite, e.g.
+  //    compaction) reclaims;
   //  - [[vacuumVersions]] retains expired manifests that are still
   //    pinned as a kept version's scope (the manifest file only — its
   //    data files follow the normal liveness rule).
@@ -1320,11 +1361,6 @@ object Sources {
     out
   }
 
-  /** An eq entry's key set as a DataFrame under its footer schema —
-    * building it starts no Spark job. */
-  private def eqKeys(spark: SparkSession, e: EqEntry): DataFrame =
-    spark.read.schema(eqKeyFooter(e.dataPath)._1).parquet(e.dataPath)
-
   /** Each entry's key tuples (its `keyCols`, in order) by key parquet
     * path, read on the driver through Spark's own parquet reader — one
     * reader function per distinct key schema: the same rows a
@@ -1352,6 +1388,41 @@ object Sources {
         })
       }
     }.toMap
+
+  /** The membership sets of some eq entries, built on the driver from
+    * [[eqKeyRows]]: one set per (entry, compared types) — a widened key
+    * column compares in the wider type on both sides, as a join's type
+    * coercion would — and one [[EqCheck]] per use. The position probe
+    * and the delete filter both match through it. */
+  private[sources] final class EqSets(spark: SparkSession,
+      entries: Seq[EqEntry]) {
+    import org.apache.spark.sql.types.DataType
+    val tz: String = spark.sessionState.conf.sessionLocalTimeZone
+    private val keyRows = eqKeyRows(spark, entries.distinct)
+    private val built = scala.collection.mutable.ArrayBuffer.empty[Set[Any]]
+    private val setIdx =
+      scala.collection.mutable.Map.empty[(String, Seq[DataType]), Int]
+
+    def sets: Vector[Set[Any]] = built.toVector
+
+    /** `e`'s check against the row columns at `ords`, of types `from`. */
+    def check(e: EqEntry, from: Seq[DataType], ords: Seq[Int]): EqCheck = {
+      val (ks, rows) = keyRows(e.dataPath)
+      val wide = from.zip(ks.fields).map { case (a, k) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCoercion
+          .findWiderTypeForTwo(a, k.dataType).getOrElse(k.dataType)
+      }
+      val set = setIdx.getOrElseUpdate((e.dataPath, wide), {
+        built += rows.map { r =>
+          val vs = ks.fields.indices.map(j => EqCheck.widen(
+            r.get(j, ks(j).dataType), ks(j).dataType, wide(j), tz))
+          if (vs.length == 1) vs.head else vs
+        }.toSet
+        built.length - 1
+      })
+      EqCheck(e.dataPath, set, ords.toArray, from.zip(wide).toArray)
+    }
+  }
 
   private[sources] def eqText(entries: Seq[EqEntry]): String =
     entries.map(e =>
@@ -1385,80 +1456,6 @@ object Sources {
       keptFiles: Seq[String]): Map[String, java.util.BitSet] = {
     val kept = keptFiles.toSet
     dvOf(table, from).filter { case (f, _) => kept(f) }
-  }
-
-  /** Drop rows of in-scope files whose key tuple appears in a pending
-    * equality-delete set — the read half of the eq design: one
-    * BROADCAST anti-join per entry (key sets are metadata-scale), with
-    * the file-scope test riding the join condition so out-of-scope
-    * rows (each entry's own upserts and everything appended later)
-    * never match. `df` must be a file-sourced scan of this version's
-    * parquet (the probe reads `_metadata.file_path`). */
-  private[sources] def applyEq(spark: SparkSession, df: DataFrame,
-      table: String, version: Int): DataFrame =
-    eqFilterEntries(spark, df, table, version, eqOf(table, version))
-
-  /** [[applyEq]]'s core over an explicit entry list — [[readChanges]]
-    * needs to apply the from-time subset against the to-time frame. */
-  private[sources] def eqFilterEntries(spark: SparkSession, df: DataFrame,
-      table: String, version: Int, entries: Seq[EqEntry]): DataFrame = {
-    if (entries.isEmpty) df
-    else {
-      val current = filesOf(table, version).map(normalizePath).toSet
-      val cols = df.columns
-      val tagged = df.withColumn("__eq_path", col("_metadata.file_path"))
-      entries.foldLeft(tagged) { (acc, e) =>
-        val scope = eqScope(table, e) & current
-        // a generation predating a key column serves it as NULL, and a
-        // NULL key matches nothing — skipping the entry for such a
-        // frame (readVersionEvolved applies per generation) IS the
-        // declared semantic, not a hole
-        if (scope.isEmpty || !e.keyCols.forall(cols.contains)) acc
-        else {
-          val inScope = udf((p: String) => scope.contains(normalizePath(p)))
-          val keys = eqKeys(spark, e)
-          val keyCond = e.keyCols.map(k => acc(k) === keys(k)).reduce(_ && _)
-          acc.join(broadcast(keys),
-            keyCond && inScope(col("__eq_path")), "left_anti")
-        }
-      }.select(cols.map(col).toSeq: _*)
-    }
-  }
-
-  /** Exactly the rows a set of eq `entries` retires from `df` — the
-    * CDF's delete-emission helper ([[readChanges]]): marker left-outer
-    * joins instead of anti (a row matching several entries must still
-    * appear once, with its original multiplicity). */
-  private[sources] def eqRetired(spark: SparkSession, df: DataFrame, table: String,
-      currentFiles: Set[String], entries: Seq[EqEntry]): DataFrame = {
-    val cols = df.columns
-    val tagged = df.withColumn("__eq_path", col("_metadata.file_path"))
-    val (marked, names) =
-      entries.zipWithIndex.foldLeft((tagged, Seq.empty[String])) {
-        case ((acc, ns), (e, i)) =>
-          val scope = eqScope(table, e) & currentFiles
-          // mirror eqFilterEntries' per-generation skip: a frame whose
-          // footer schema predates a later-added key column serves it
-          // as NULL (matches nothing) — skipping the entry IS the
-          // declared semantic, and joining on the absent column would
-          // throw AnalysisException instead
-          if (scope.isEmpty || !e.keyCols.forall(cols.contains)) (acc, ns)
-          else {
-            val inScope = udf((p: String) => scope.contains(normalizePath(p)))
-            val hit = s"__eq_hit_$i"
-            val keys = eqKeys(spark, e).withColumn(hit, lit(1))
-            val keyCond = e.keyCols.map(k => acc(k) === keys(k)).reduce(_ && _)
-            val joined = acc.join(broadcast(keys),
-              keyCond && inScope(col("__eq_path")), "left_outer")
-            // shed the keys-side columns (same names as the row's own)
-            (e.keyCols.foldLeft(joined)((d, k) => d.drop(keys(k))),
-              ns :+ hit)
-          }
-      }
-    if (names.isEmpty) df.filter(lit(false))
-    else marked
-      .filter(names.map(n => col(n) === 1).reduce(_ || _))
-      .select(cols.map(col).toSeq: _*)
   }
 
   /** The process-wide memo of [[eqRetiredPositions]]: (entry key
@@ -1498,23 +1495,25 @@ object Sources {
   }
 
   /** Physical row positions retired by eq `entries` within exactly
-    * `files` — the POSITION form of [[eqRetired]], for every consumer
-    * whose unit is a (file, skip bitset) partition: the catalog's
-    * native scans, the row-level delta scan and the streaming CDF.
-    * Answers come from [[EqPositionMemo]]; the (entry, file) pairs it
-    * lacks are probed together in ONE Spark job ([[probeEqPositions]]).
-    * No schema is inferred: key files use their footer schema, data
-    * files their writer-recorded `_COLS` schema ([[fileSchemaOf]]).
-    * Per-generation safe: files whose schema predates a key column are
-    * skipped for that entry — the declared NULL-key-matches-nothing
-    * semantic, mirroring [[eqFilterEntries]]. Keys of the returned map
-    * are the given (manifest) paths. */
+    * `files` — the POSITION form of [[readRows]]'s eq rule, for
+    * every consumer whose unit is a (file, skip bitset) partition: the
+    * catalog's native scans, the row-level delta scan and the streaming
+    * CDF. Answers come from [[EqPositionMemo]]; the (entry, file) pairs
+    * it lacks are probed together in ONE Spark job
+    * ([[probeEqPositions]]). No schema is inferred: key files use their
+    * footer schema, data files their writer-recorded `_COLS` schema
+    * ([[fileSchemaOf]]) plus the identity partition columns, whose
+    * values come from the path. Per-generation safe: files whose schema
+    * predates a key column are skipped for that entry, as in
+    * [[readRows]]. Keys of the returned map are the given
+    * (manifest) paths. */
   private[sources] def eqRetiredPositions(spark: SparkSession,
       table: String, files: Seq[String],
       entries: Seq[EqEntry]): Map[String, java.util.BitSet] = {
     if (files.isEmpty || entries.isEmpty)
       return Map.empty
     val byPath = files.map(f => normalizePath(f) -> f).toMap
+    val partCols = partitionColumnsOf(table).toSet
     val out = scala.collection.mutable.Map.empty[String, java.util.BitSet]
     def addHit(normF: String, bits: java.util.BitSet): Unit =
       if (!bits.isEmpty)
@@ -1523,7 +1522,8 @@ object Sources {
     val toProbe = entries.flatMap { e =>
       val scoped = eqScope(table, e)
       val usable = files.filter(f => scoped.contains(normalizePath(f)) &&
-        e.keyCols.forall(fileSchemaOf(spark, f).fieldNames.contains))
+        e.keyCols.forall(k =>
+          partCols(k) || fileSchemaOf(spark, f).fieldNames.contains(k)))
       val missing = usable.filter { f =>
         val hit = EqPositionMemo.get((e.dataPath, normalizePath(f)))
         hit.foreach(addHit(normalizePath(f), _))
@@ -1542,72 +1542,58 @@ object Sources {
   /** [[eqRetiredPositions]]' probe: ONE Spark job answering every given
     * (entry, file) pair, empty sets included, so "probed, nothing
     * retired" memoizes too. Each file is read once — the key columns
-    * of every entry it is probed for, plus the parquet row index —
-    * through Spark's own parquet reader function, and each row is
-    * tested against each entry's key set. The sets are read on the
-    * driver (metadata-scale; a broadcast join collects them there too,
-    * at one extra job per entry) and ride the task closure. A plain
-    * RDD job, not a DataFrame union, so planning it costs no Catalyst
-    * pass over one scan per entry. */
+    * of every entry it is probed for, plus the parquet row index, with
+    * identity-partition key columns taken from the path — through
+    * Spark's own parquet reader function, and each row is tested
+    * against each entry's key set ([[EqSets]], read on the driver,
+    * riding the task closure). A plain RDD job, not a DataFrame union,
+    * so planning it costs no Catalyst pass over one scan per entry. */
   private def probeEqPositions(spark: SparkSession, table: String,
       pairs: Seq[(EqEntry, Seq[String])])
       : Map[(String, String), java.util.BitSet] = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCoercion
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.types.{DataType, LongType, StructField}
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val keyRows = eqKeyRows(spark, pairs.map(_._1).distinct)
-    // one membership set per (entry, compared types): a widened key
-    // column compares in the wider type on both sides, as a join's
-    // type coercion would
-    val sets = scala.collection.mutable.ArrayBuffer.empty[Set[Any]]
-    val setIdx = scala.collection.mutable.Map.empty[(String, Seq[DataType]), Int]
-    def setOf(e: EqEntry, wide: Seq[DataType]): Int =
-      setIdx.getOrElseUpdate((e.dataPath, wide), {
-        val (ks, rows) = keyRows(e.dataPath)
-        sets += rows.map { r =>
-          val vs = ks.fields.indices.map(j => EqCheck.widen(
-            r.get(j, ks(j).dataType), ks(j).dataType, wide(j), tz))
-          if (vs.length == 1) vs.head else vs
-        }.toSet
-        sets.length - 1
-      })
+    import org.apache.spark.sql.types.{LongType, StructField}
+    val sets = new EqSets(spark, pairs.map(_._1))
+    val partSchema = ManifestFileIndex.partitionSchemaOf(table,
+      latestVersion(table))
+    val partCols = partSchema.fieldNames.toSet
     val probes = pairs.flatMap { case (e, fs) => fs.map(_ -> e) }
       .groupBy(_._1).toSeq.sortBy(_._1).map { case (f, fe) =>
         val fileSchema = fileSchemaOf(spark, f)
-        val cols = fe.flatMap(_._2.keyCols).distinct
+        // read row: data key columns, the row index, partition key columns
+        val (pcols, dcols) = fe.flatMap(_._2.keyCols).distinct.partition(partCols)
+        val ps = StructType(pcols.map(partSchema(_)))
+        def ord(c: String) =
+          if (partCols(c)) dcols.length + 1 + pcols.indexOf(c)
+          else dcols.indexOf(c)
+        def typeOf(c: String) =
+          if (partCols(c)) partSchema(c).dataType else fileSchema(c).dataType
         val checks = fe.map { case (_, e) =>
-          val from = e.keyCols.map(fileSchema(_).dataType)
-          val wide = from.zip(keyRows(e.dataPath)._1.fields).map {
-            case (a, k) => TypeCoercion.findWiderTypeForTwo(a, k.dataType)
-              .getOrElse(k.dataType)
-          }
-          EqCheck(e.dataPath, setOf(e, wide),
-            e.keyCols.map(cols.indexOf).toArray, from.zip(wide).toArray)
-        }
-        (StructType(cols.map(fileSchema(_))), f, checks)
+          sets.check(e, e.keyCols.map(typeOf), e.keyCols.map(ord)) }
+        ((StructType(dcols.map(fileSchema(_))), ps), f,
+          ManifestFileIndex.partitionValues(f, ps), dcols.length, checks)
       }
     // one reader function per read schema, built once on the driver
-    val readers = probes.map(_._1).distinct.map { rs =>
-      rs -> new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, rs, StructType(Nil), StructType(rs.fields :+ StructField(
+    val readers = probes.map(_._1).distinct.map { case k @ (rs, ps) =>
+      k -> new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, rs, ps, StructType(rs.fields :+ StructField(
           ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType,
           nullable = true)), Nil,
         Map(org.apache.spark.sql.execution.datasources.FileFormat
           .OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
     }.toMap
-    val tasks = probes.map { case (rs, f, checks) =>
-      (readers(rs), f, java.nio.file.Files.size(java.nio.file.Paths.get(f)),
-        checks)
+    val tasks = probes.map { case (k, f, pv, idxOrd, checks) =>
+      (readers(k), f, java.nio.file.Files.size(java.nio.file.Paths.get(f)),
+        pv, idxOrd, checks)
     }
-    val keySets = sets.toVector
+    val (keySets, tz) = (sets.sets, sets.tz)
     val sc = spark.sparkContext
     val hits = withJobDescription(spark, s"eqprobe $table") {
       sc.parallelize(tasks, math.max(1, math.min(tasks.length,
           sc.defaultParallelism)))
-        .flatMap { case (read, f, len, checks) =>
-          EqCheck.probe(read, f, len, checks, keySets, tz) }
+        .flatMap { case (read, f, len, pv, idxOrd, checks) =>
+          EqCheck.probe(read, f, len, pv, idxOrd, checks, keySets, tz) }
         .collect()
     }
     val found = hits.map { case (dataPath, f, bits) =>
@@ -1642,8 +1628,8 @@ object Sources {
     * keys as an equality-delete parquet scoped to the pre-commit
     * manifest, appends the upsert rows, and publishes both as sidecar
     * metadata. Write cost O(change keys); the deferred position work
-    * moves to readers (broadcast anti-join per pending entry) until
-    * [[purgeEq]] absorbs it. Returns (version, retired key count).
+    * moves to readers (a key-set membership test per in-scope row,
+    * [[readRows]]) until [[purgeEq]] absorbs it. Returns (version, retired key count).
     * `txn` (consumer, position) is recorded in the same commit; a head
     * that already records it makes the merge a no-op returning
     * (head, 0). */
@@ -1698,8 +1684,7 @@ object Sources {
     // session opt-in, a batch carrying NEW columns evolves the target
     // instead of silently dropping them.
     val targetSchema0 =
-      if (files.nonEmpty)
-        readFileSubset(spark, table, v, Seq(files.head)).schema
+      if (files.nonEmpty) ManifestFileIndex.servedSchema(spark, table, v)
       else schemaOf(spark, table, v)
     val evolved = mergeEvolution(spark, table, v,
       StructType(changes.drop(opCol).schema.fields), targetSchema0)
@@ -1781,9 +1766,7 @@ object Sources {
       return (next, 0)
     }
     val dv = dvOf(table, v)
-    val survivors = applyEq(spark,
-      applyDv(readFileSubsetForRewrite(spark, table, v, affected), dv),
-      table, v)
+    val survivors = readLiveForRewrite(spark, table, v, affected)
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-eqpurge-${java.util.UUID.randomUUID().toString.take(8)}")
     val cover = sidecarCover(table, v)
@@ -1861,14 +1844,6 @@ object Sources {
     }
     nullable(fileSchemaOf(spark, file)).asInstanceOf[StructType]
   }
-
-  /** `files` of `version` as one flat read under the version's declared
-    * schema, else under the first file's footer schema — what schema
-    * inference would pick, without its job. */
-  private def readFiles(spark: SparkSession, table: String, version: Int,
-      files: Seq[String]): DataFrame =
-    spark.read.schema(declaredSchema(table, version)
-      .getOrElse(footerSchema(spark, files.head))).parquet(files: _*)
 
   /** Evolve `prev` (the table's declared schema) by `cur` (the incoming
     * batch's): kept fields widen losslessly or keep their type,
@@ -1952,7 +1927,7 @@ object Sources {
       if (prevV == 0) df.schema
       else evolveSchema(schemaOf(df.sparkSession, table, prevV), df.schema, renames)
     // same guard as alterSchema: an evolution must not rename a pending
-    // eq entry's key column out from under its read-time anti-join
+    // eq entry's key column out from under its read-time key match
     val pendingKeys = eqOf(table, prevV).flatMap(_.keyCols).toSet
     val lost = pendingKeys -- declared.fieldNames.toSet
     require(lost.isEmpty,
@@ -1980,26 +1955,31 @@ object Sources {
     val v = if (version < 0) latestVersion(table) else version
     require(v > 0, s"$table has no committed versions")
     val declared = schemaOf(spark, table, v)
-    val renames = declared.fields.flatMap { f =>
-      if (f.metadata.contains(RenamedFrom))
-        Some(f.metadata.getString(RenamedFrom) -> f.name)
-      else None
-    }.toMap
-    val dv = dvOf(table, v)
-    filesOf(table, v)
+    val files = filesOf(table, v)
+    val (dv, eq) = (dvOf(table, v), eqOf(table, v))
+    files
       // generation key from the writer-recorded sidecar, not a footer
       // open per file; a recorded/probed nullability drift can only
       // SPLIT a generation (each split is aligned independently and
       // unioned — correct either way), never merge two
       .groupBy(f => fileSchemaOf(spark, f))
       .values.toSeq
-      // DV/eq filters BEFORE alignment: the probes need the file
-      // scan's own _metadata columns, which the aligning select drops
-      .map(g => alignToSchema(
-        applyEq(spark, applyDv(spark.read.parquet(g: _*), dv), table, v),
-        declared, renames))
+      // each generation under its recorded footer schema (no inference
+      // job), filtered BEFORE alignment: the filter reads the scan's own
+      // _metadata columns, which the aligning select drops
+      .map(g => alignToSchema(readRows(spark, table, v, Some(g), dv, eq,
+          schema = Some(footerSchema(spark, g.head))),
+        declared, renamesOf(declared)))
       .reduce(_ unionByName _)
   }
+
+  /** `old -> new` for every column of `schema` recorded as renamed. */
+  private def renamesOf(schema: StructType): Map[String, String] =
+    schema.fields.flatMap { f =>
+      if (f.metadata.contains(RenamedFrom))
+        Some(f.metadata.getString(RenamedFrom) -> f.name)
+      else None
+    }.toMap
 
   // ---- skipping sidecars: `v<N>.stats`, `v<N>.ndv`, `v<N>.bloom` -------
   //
@@ -2142,7 +2122,8 @@ object Sources {
   private def scanFileStats(spark: SparkSession, table: String,
       version: Int, files: Seq[String], cover: StatsCover): SidecarLines = {
     if (files.isEmpty || cover.isEmpty) return SidecarLines.empty
-    val df = readFiles(spark, table, version, files)
+    val df = ManifestFileIndex.frameForFiles(spark, table, version,
+      Some(files.toSet))
     val spec = new FileStatsSpec(df.schema, cover,
       spark.sessionState.conf.sessionLocalTimeZone)
     if (spec.isEmpty) return SidecarLines.empty
@@ -2261,7 +2242,7 @@ object Sources {
   def bloomsOf(table: String,
       version: Int): Map[(String, String), Array[Byte]] = {
     val p = java.nio.file.Paths.get(table, s"v$version.bloom")
-    if (!java.nio.file.Files.exists(p)) Map.empty
+    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
     else scala.jdk.CollectionConverters.ListHasAsScala(
       java.nio.file.Files.readAllLines(p)).asScala
       .filter(_.nonEmpty)
@@ -2434,12 +2415,9 @@ object Sources {
         // DV'd/eq-deleted rows are already deleted: the rewrite drops
         // them for good (untouched files keep their entries via
         // carryDv/carryEq)
-        applyEq(spark,
-          applyDv(readFileSubsetForRewrite(spark, table, v, affected),
-            dvOf(table, v)),
-          table, v)
+        readLiveForRewrite(spark, table, v, affected)
       else if (files.nonEmpty)
-        readFileSubset(spark, table, v, Seq(files.head))
+        ManifestFileIndex.frameForFiles(spark, table, v, Some(Set(files.head)))
           .filter(org.apache.spark.sql.functions.lit(false))
       else
         // merging into an emptied (delete-all/TRUNCATE) version: the
@@ -2535,9 +2513,7 @@ object Sources {
     // collect, minus rows the previous DV already deleted
     val matched =
       if (affected.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else applyEq(spark,
-          applyDv(readFileSubset(spark, table, v, affected), prevDv),
-          table, v)
+      else readLive(spark, table, v, Some(affected))
         .select(col(key), col("_metadata.file_path").as("__p"),
           col("_metadata.row_index").as("__i"))
         .join(changes.filter(col(key).isNotNull).select(key).distinct(),
@@ -2569,8 +2545,7 @@ object Sources {
     // mergeSchema session opt-in, a batch carrying NEW columns evolves
     // the target instead of silently dropping them.
     val targetSchema0 =
-      if (files.nonEmpty)
-        readFileSubset(spark, table, v, Seq(files.head)).schema
+      if (files.nonEmpty) ManifestFileIndex.servedSchema(spark, table, v)
       else schemaOf(spark, table, v)
     val evolved = mergeEvolution(spark, table, v,
       StructType(changes.drop(opCol).schema.fields), targetSchema0)
@@ -2616,10 +2591,12 @@ object Sources {
   }
 
   /** (file, col) -> (min, max) stats for a version, or empty if the
-    * version has no stats sidecar. */
+    * version has no stats sidecar — or something other than a file
+    * stands in its place: every read plans through these maps, and
+    * skipping is an optimization, never a reason to fail a read. */
   def statsOf(table: String, version: Int): Map[(String, String), (BigDecimal, BigDecimal)] = {
     val p = java.nio.file.Paths.get(table, s"v$version.stats")
-    if (!java.nio.file.Files.exists(p)) Map.empty
+    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
     else scala.jdk.CollectionConverters.ListHasAsScala(
       java.nio.file.Files.readAllLines(p)).asScala
       .filter(_.nonEmpty)
@@ -2638,7 +2615,7 @@ object Sources {
   def statsOfString(table: String,
       version: Int): Map[(String, String), (String, String)] = {
     val p = java.nio.file.Paths.get(table, s"v$version.stats")
-    if (!java.nio.file.Files.exists(p)) Map.empty
+    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
     else scala.jdk.CollectionConverters.ListHasAsScala(
       java.nio.file.Files.readAllLines(p)).asScala
       .filter(_.nonEmpty)
@@ -2685,10 +2662,7 @@ object Sources {
       // the pruned read serves the same delete state as readVersion:
       // DV positions AND pending eq entries both filter (the scope
       // intersection handles the file subset)
-      val df = applyEq(spark,
-        applyDv(declaredSchema(table, v)
-          .fold(spark.read)(sc => spark.read.schema(sc))
-          .parquet(kept: _*), dvOf(table, v)), table, v)
+      val df = readLive(spark, table, v, Some(kept))
       // bounds cast to the COLUMN's type on the literal side, so the
       // residual range predicate still pushes down to the parquet scan
       val dt = df.schema(column).dataType
@@ -2728,9 +2702,7 @@ object Sources {
         // their partition columns reattached from the paths (a flat
         // read would null them and the residual IN would silently
         // drop every row)
-        applyEq(spark,
-          applyDv(readFileSubset(spark, table, v, kept),
-            dvOf(table, v)), table, v)
+        readLive(spark, table, v, Some(kept))
     (df.filter(col(column).isin(values: _*)), kept.length, files.length)
   }
 
@@ -3122,35 +3094,17 @@ object Sources {
       .map(_.toString).toSeq.sorted
   }
 
-  /** Read an explicit FILE SUBSET of a version under the declared
-    * schema, with partition-column values reattached from the paths —
-    * the reader every rewrite path (delete survivors, merge base, DV
-    * candidates, purge) must use on a partitioned table, because a
-    * plain `spark.read.parquet(files)` would surface the partition
-    * columns as NULL (they live in directory names, not data files)
-    * and a rewrite would PERSIST those nulls. Non-partitioned tables
-    * take the direct multi-file read unchanged. */
-  private[sources] def readFileSubset(spark: SparkSession, table: String,
-      version: Int, files: Seq[String]): DataFrame =
-    if (partitionColumnsOf(table).isEmpty)
-      readFiles(spark, table, version, files)
-    else
-      // partition-aware: a restricted manifest index serves the subset
-      // as ONE relation with partition columns reattached from the
-      // hive paths (a flat multi-file read would surface them as NULL
-      // and a rewrite would persist the nulls)
-      ManifestFileIndex.frameForFiles(spark, table, version,
-        Some(files.toSet))
-
-  /** The subset read every copy-on-write REWRITE must use: lineage
+  /** The survivor read every copy-on-write REWRITE feeds its writer:
+    * the live rows of `files` ([[readLive]] — partition columns from
+    * the paths, or a rewrite would persist them as NULL; DV'd and
+    * eq-deleted rows dropped, or it would resurrect them). Lineage
     * tables ([[RowIds.enabled]]) read survivors WITH their row ids so
-    * the rewrite materializes them into the new files; everything
-    * else takes the plain declared-schema subset read. */
-  private[sources] def readFileSubsetForRewrite(spark: SparkSession,
+    * the rewrite materializes them into the new files. */
+  private[sources] def readLiveForRewrite(spark: SparkSession,
       table: String, version: Int, files: Seq[String]): DataFrame =
     if (RowIds.enabled(table))
       RowIds.readFileSubsetWithRowIds(spark, table, version, files)
-    else readFileSubset(spark, table, version, files)
+    else readLive(spark, table, version, Some(files))
 
   /** Schema carry for a rewrite commit: the declared schema where one
     * exists; on a lineage table WITHOUT one, pin the pre-rewrite
@@ -3207,10 +3161,7 @@ object Sources {
     // deleted — the rewrite must not resurrect them (carried files keep
     // their DV/eq entries); partition-aware subset read, or a
     // partitioned rewrite would persist NULL partition columns
-    val survivors = applyEq(spark,
-        applyDv(readFileSubsetForRewrite(spark, table, v, affected),
-          dvOf(table, v)),
-        table, v)
+    val survivors = readLiveForRewrite(spark, table, v, affected)
       .filter(!coalesce(cond, lit(false)))
     val batch = java.nio.file.Paths.get(table, "data",
       s"batch-delete-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -3263,10 +3214,7 @@ object Sources {
     val files = filesOf(table, v)
     val (affected, carried) = files.partition(fileMayMatch)
     if (affected.isEmpty) return (v, 0L, 0, carried.length)
-    val base = applyEq(spark,
-      applyDv(readFileSubsetForRewrite(spark, table, v, affected),
-        dvOf(table, v)),
-      table, v)
+    val base = readLiveForRewrite(spark, table, v, affected)
     sets.keys.foreach(c => require(base.columns.contains(c),
       s"updateWhere: $table has no column $c"))
     val hit = coalesce(cond, lit(false))
@@ -3320,85 +3268,74 @@ object Sources {
     * as deletes and their new rows as inserts (an unchanged row inside
     * a rewritten file appears as delete+insert of equal rows — a
     * keyed consumer applies it as a no-op upsert, the standard CDF
-    * contract); carried files contribute NOTHING, which is the point —
-    * feed size is O(changed files), not O(table).
+    * contract); carried files contribute only the rows a DV mark or an
+    * eq entry newly deleted ([[changeParts]]), which is the point —
+    * feed size is O(changed files), not O(table). Building the feed
+    * starts no Spark job.
     */
   def readChanges(spark: SparkSession, table: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
-    val before = filesOf(table, fromVersion).toSet
-    val after = filesOf(table, toVersion).toSet
-    val gone = (before -- after).toSeq.sorted
-    val added = (after -- before).toSeq.sorted
-    val dvFrom = dvOf(table, fromVersion)
-    val dvTo = dvOf(table, toVersion)
-    // DV view of the feed: a departing file's rows already DV-deleted at
-    // `from` were emitted in an earlier delta — don't re-delete them; an
-    // arriving file's rows DV-deleted at `to` never became visible — don't
-    // insert them; and a CARRIED file whose DV grew contributes exactly
-    // the newly-marked positions as deletes (the merge-on-read commit's
-    // whole delta — still O(changed rows), never O(table))
-    // each side reads under ITS version's full delete state (DV + eq):
-    // a departing file's eq-dead rows were emitted as deletes when
-    // their entry arrived — re-emitting them on departure would double-
-    // delete; an arriving file can likewise already sit inside a
-    // later-range entry's scope
-    def read(fs: Seq[String], dv: Map[String, java.util.BitSet],
-        atVersion: Int, change: String): Option[DataFrame] =
-      if (fs.isEmpty) None
-      else Some(
-        eqFilterEntries(spark, applyDv(spark.read.parquet(fs: _*), dv),
-          table, atVersion, eqOf(table, atVersion))
-        .withColumn("_change_type", org.apache.spark.sql.functions.lit(change)))
-    val dvDelta: Map[String, java.util.BitSet] =
-      (before & after).toSeq.flatMap { f =>
-        val grown = dvTo.getOrElse(f, new java.util.BitSet())
-          .clone().asInstanceOf[java.util.BitSet]
-        dvFrom.get(f).foreach(grown.andNot)
-        if (grown.isEmpty) None else Some(f -> grown)
-      }.toMap
-    val dvDeletes: Option[DataFrame] =
-      if (dvDelta.isEmpty) None
-      else Some(dvFilter(spark.read.parquet(dvDelta.keys.toSeq.sorted: _*),
-        dvDelta, keepDeleted = true)
-        .withColumn("_change_type", org.apache.spark.sql.functions.lit("delete")))
-    // equality-delete view of the feed: entries ADDED in (from, to]
-    // retire the still-live rows of their in-scope carried files —
-    // emitted as deletes. "Still-live" means live under the FROM-time
-    // delete state (dvTo on carried files equals dvFrom + the dvDelta
-    // already emitted above; OLD eq entries' rows were dead at `from`),
-    // so: read the new entries' scoped files, apply dvTo and the old
-    // entries, keep exactly the rows the new key sets hit. This is the
-    // deferred-position trade made explicit — the CDF pays the scan the
-    // eq COMMIT skipped, still bounded by in-scope files, never O(table).
-    val eqFromPaths = eqOf(table, fromVersion).map(_.dataPath).toSet
-    val eqToAll = eqOf(table, toVersion)
-    val (eqOld, eqNew) = eqToAll.partition(e => eqFromPaths.contains(e.dataPath))
-    val eqDeletes: Option[DataFrame] =
-      if (eqNew.isEmpty) None
-      else {
-        val afterNorm = after.map(normalizePath)
-        val scoped = eqNew.map(e => eqScope(table, e))
-          .reduce(_ | _) & afterNorm & before.map(normalizePath)
-        if (scoped.isEmpty) None
-        else {
-          val scopedFiles = after.toSeq.filter(f =>
-            scoped.contains(normalizePath(f))).sorted
-          val live = eqFilterEntries(spark,
-            applyDv(spark.read.parquet(scopedFiles: _*), dvTo),
-            table, toVersion, eqOld)
-          val retired = eqRetired(spark, live, table, afterNorm, eqNew)
-          Some(retired.withColumn("_change_type",
-            org.apache.spark.sql.functions.lit("delete")))
-        }
-      }
-    val parts = Seq(read(gone, dvFrom, fromVersion, "delete"), dvDeletes,
-      eqDeletes, read(added, dvTo, toVersion, "insert")).flatten
-    if (parts.nonEmpty) parts.reduce(_ unionByName _)
-    else
-      readVersion(spark, table, toVersion)
-        .withColumn("_change_type",
-          org.apache.spark.sql.functions.lit("insert"))
-        .filter(org.apache.spark.sql.functions.lit(false))
+    // every part reads through the one reader at the version that holds
+    // its files, then aligns to the to-version schema: a range across
+    // an evolution mixes file generations
+    val target = ManifestFileIndex.servedSchema(spark, table, toVersion)
+    changeParts(table, fromVersion, toVersion).map(p =>
+      alignToSchema(readRows(spark, table, p.version, Some(p.files), p.dv,
+          p.eq, p.mode), target, renamesOf(target))
+        .withColumn("_change_type", lit(p.change)))
+      .reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        target.add("_change_type", org.apache.spark.sql.types.StringType)))
+  }
+
+  /** One part of a change feed: `files` read at `version` through the
+    * delete filter over `dv`/`eq` in `mode`, emitted as `change`. */
+  private[sources] case class ChangePart(version: Int, files: Seq[String],
+      dv: Map[String, java.util.BitSet], eq: Seq[EqEntry], mode: DeleteMode,
+      change: String)
+
+  /** The parts of the change feed between two versions ([[readChanges]],
+    * [[RowIds.readChangesLineage]]); `from <= 0` is "before the table
+    * existed". Each side reads under ITS version's full delete state:
+    *  - departing files at `from`, minus rows already dead there (their
+    *    deletes were emitted when the DV mark or eq entry arrived);
+    *  - carried files whose DV grew: exactly the newly-marked rows (a
+    *    merge-on-read commit's whole delta, O(changed rows));
+    *  - carried files in the scope of an entry ADDED in (from, to]: the
+    *    rows it retires that were still live — not DV'd at `to` (dvTo
+    *    holds dvFrom plus the grown marks above) and not held by an older
+    *    entry. The feed pays the scan the eq COMMIT skipped, bounded by
+    *    in-scope files;
+    *  - arriving files at `to`, minus rows dead at `to` (they never
+    *    became visible). */
+  private[sources] def changeParts(table: String, from: Int,
+      to: Int): Seq[ChangePart] = {
+    val (before, dvFrom, eqFrom) =
+      if (from <= 0) (Set.empty[String], Map.empty[String, java.util.BitSet],
+        Seq.empty[EqEntry])
+      else (filesOf(table, from).toSet, dvOf(table, from), eqOf(table, from))
+    val after = filesOf(table, to).toSet
+    val (dvTo, eqTo) = (dvOf(table, to), eqOf(table, to))
+    val carried = (before & after).toSeq.sorted
+    val grown = carried.flatMap { f =>
+      val g = dvTo.getOrElse(f, new java.util.BitSet())
+        .clone().asInstanceOf[java.util.BitSet]
+      dvFrom.get(f).foreach(g.andNot)
+      if (g.isEmpty) None else Some(f -> g)
+    }.toMap
+    val (eqOld, eqNew) =
+      eqTo.partition(e => eqFrom.exists(_.dataPath == e.dataPath))
+    val scoped = eqNew.flatMap(eqScope(table, _)).toSet
+    Seq(
+      ChangePart(from, (before -- after).toSeq.sorted, dvFrom, eqFrom,
+        DeleteMode.Live, "delete"),
+      ChangePart(to, grown.keys.toSeq.sorted, grown, Nil,
+        DeleteMode.Marked, "delete"),
+      ChangePart(to, carried.filter(f => scoped(normalizePath(f))), dvTo,
+        eqOld, DeleteMode.RetiredBy(eqNew), "delete"),
+      ChangePart(to, (after -- before).toSeq.sorted, dvTo, eqTo,
+        DeleteMode.Live, "insert")).filter(_.files.nonEmpty)
   }
 
   /** The table's commit log as a DataFrame — DESCRIBE HISTORY for the
@@ -3768,9 +3705,7 @@ object Sources {
     val (affected, carried) = files.partition(fileMayMatch)
     if (affected.isEmpty) return (v, 0, 0)
     val dv = dvOf(table, v)
-    val scoped = applyEq(spark,
-      applyDv(readFileSubsetForRewrite(spark, table, v, affected), dv),
-      table, v)
+    val scoped = readLiveForRewrite(spark, table, v, affected)
     val rows = scoped.count()
     val nFiles = math.max(1,
       math.ceil(rows.toDouble / targetRecordsPerFile).toInt)
@@ -3820,27 +3755,24 @@ object Sources {
   }
 }
 
-/** Executor-side deletion-vector probe: ships the serialized bitsets
-  * once per task (closure broadcast), deserializes them LAZILY per JVM
-  * (transient), and answers "is (file, position) live" with one hash
-  * probe + one bit test — no join, no shuffle, no per-row decode. */
-private[graft] final class DvHolder(ser: Map[String, Array[Byte]])
-  extends Serializable {
-  @transient private lazy val sets: Map[String, java.util.BitSet] =
-    ser.map { case (f, b) => f -> java.util.BitSet.valueOf(b) }
-  def alive(path: String, idx: Long): Boolean =
-    sets.get(Sources.normalizePath(path)) match {
-      case Some(bits) => idx > Int.MaxValue || !bits.get(idx.toInt)
-      case None => true
-    }
-}
-
-/** One entry's membership test inside an eq probe task: which read
-  * columns form its key (`ords`), each as (file type, compared type),
-  * and which shipped key set to test against. */
+/** One entry's membership test, shared by the eq probe task and the
+  * delete filter: which row columns form its key (`ords`), each as
+  * (row type, compared type), and which shipped key set to test. */
 private[sources] case class EqCheck(dataPath: String, set: Int,
     ords: Array[Int], types: Array[(org.apache.spark.sql.types.DataType,
-      org.apache.spark.sql.types.DataType)])
+      org.apache.spark.sql.types.DataType)]) {
+
+  /** Whether `row`'s key is in the set. A NULL key matches nothing. */
+  def hits(row: org.apache.spark.sql.catalyst.InternalRow,
+      sets: Vector[Set[Any]], tz: String): Boolean =
+    ords.forall(o => !row.isNullAt(o)) && {
+      val vs = ords.indices.map { n =>
+        val (from, to) = types(n)
+        EqCheck.widen(row.get(ords(n), from), from, to, tz)
+      }
+      sets(set).contains(if (vs.length == 1) vs.head else vs)
+    }
+}
 
 private[sources] object EqCheck {
   import org.apache.spark.sql.catalyst.InternalRow
@@ -3858,10 +3790,11 @@ private[sources] object EqCheck {
       case o => o
     }
 
-  def partitionedFile(path: String, len: Long)
+  def partitionedFile(path: String, len: Long,
+      partitionValues: InternalRow = InternalRow.empty)
       : org.apache.spark.sql.execution.datasources.PartitionedFile =
     org.apache.spark.sql.execution.datasources.PartitionedFile(
-      InternalRow.empty,
+      partitionValues,
       org.apache.spark.paths.SparkPath.fromPathString(path),
       0L, len, Array.empty[String], 0L, len, Map.empty[String, Any])
 
@@ -3870,29 +3803,114 @@ private[sources] object EqCheck {
     case _ => ()
   }
 
-  /** One probe task: read `f` once (the row index rides last) and set,
-    * per check, the positions whose key is in its set. A NULL key
-    * matches nothing. Returns (entry key path, file, positions). */
+  /** One probe task: read `f` once, with partition values `pv` (its
+    * row index at `idxOrd`), and set, per check, the positions whose
+    * key is in its set. Returns (entry key path, file, positions). */
   def probe(read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
-        Iterator[InternalRow], f: String, len: Long, checks: Seq[EqCheck],
+        Iterator[InternalRow], f: String, len: Long, pv: InternalRow,
+      idxOrd: Int, checks: Seq[EqCheck],
       sets: Vector[Set[Any]], tz: String): Seq[(String, String, Array[Long])] = {
     val bits = checks.map(_ => new java.util.BitSet())
-    val it = read(partitionedFile(f, len))
+    val it = read(partitionedFile(f, len, pv))
     try it.foreach { row =>
-      val i = row.getLong(row.numFields - 1)
+      val i = row.getLong(idxOrd)
       require(i <= Int.MaxValue,
         s"row index $i overflows the eq position bitset")
       checks.zip(bits).foreach { case (c, b) =>
-        if (c.ords.forall(o => !row.isNullAt(o))) {
-          val vs = c.ords.indices.map { n =>
-            val (from, to) = c.types(n)
-            widen(row.get(c.ords(n), from), from, to, tz)
-          }
-          if (sets(c.set).contains(if (vs.length == 1) vs.head else vs))
-            b.set(i.toInt)
-        }
+        if (c.hits(row, sets, tz)) b.set(i.toInt)
       }
     } finally close(it)
     checks.zip(bits).map { case (c, b) => (c.dataPath, f, b.toLongArray) }
   }
+}
+
+/** The delete filter's state, built on the driver by
+  * [[Sources.readRows]] and shipped with the plan: per normalized
+  * file, its DV marks and the [[EqCheck]]s of the entries that reach
+  * it — `drop` (the row is dead if one hits) and `need` (in
+  * [[Sources.DeleteMode.RetiredBy]], the row is kept only if one hits).
+  * Equal by `id` — the table, files, DV text, entries and mode it was
+  * built from — so two reads of one version plan equal. */
+private[sources] final class DeleteSpec(val id: Any,
+    marks: Map[String, Array[Byte]],
+    checks: Map[String, (Array[EqCheck], Array[EqCheck])],
+    sets: Vector[Set[Any]], tz: String, mode: Sources.DeleteMode)
+  extends Serializable {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.unsafe.types.UTF8String
+
+  @transient private lazy val bits: Map[String, java.util.BitSet] =
+    marks.map { case (f, b) => f -> java.util.BitSet.valueOf(b) }
+  // rows arrive file by file: resolve a path once per run of its rows
+  @transient private lazy val last =
+    new ThreadLocal[(UTF8String, java.util.BitSet, Array[EqCheck],
+      Array[EqCheck])]
+
+  private def fileOf(path: UTF8String) = {
+    val hit = last.get()
+    if (hit != null && hit._1 == path) hit
+    else {
+      val f = Sources.normalizePath(path.toString)
+      val (drop, need) = checks.getOrElse(f, (Array.empty[EqCheck],
+        Array.empty[EqCheck]))
+      val st = (path.clone(), bits.getOrElse(f, null), drop, need)
+      last.set(st)
+      st
+    }
+  }
+
+  def keep(path: UTF8String, idx: Long, keys: => InternalRow): Boolean = {
+    val (_, dv, drop, need) = fileOf(path)
+    val marked = dv != null && idx <= Int.MaxValue && dv.get(idx.toInt)
+    lazy val k = keys
+    mode match {
+      case Sources.DeleteMode.Marked => marked
+      case Sources.DeleteMode.Live => !marked && !drop.exists(_.hits(k, sets, tz))
+      case Sources.DeleteMode.RetiredBy(_) => !marked && need.nonEmpty &&
+        !drop.exists(_.hits(k, sets, tz)) && need.exists(_.hits(k, sets, tz))
+    }
+  }
+
+  override def toString: String = s"deletes(${checks.size} files)"
+
+  override def equals(o: Any): Boolean = o match {
+    case s: DeleteSpec => s.id == id
+    case _ => false
+  }
+  override val hashCode: Int = id.hashCode
+}
+
+/** The one delete filter as a Catalyst predicate: children are the
+  * scan's `_metadata.file_path`, `_metadata.row_index` and the key
+  * columns, evaluated to the same `InternalRow` values the eq probe
+  * reads. Interpreted inside generated code (`CodegenFallback`). */
+private[sources] case class DeleteFilter(
+    children: IndexedSeq[org.apache.spark.sql.catalyst.expressions.Expression],
+    spec: DeleteSpec)
+  extends org.apache.spark.sql.catalyst.expressions.Expression
+  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  import org.apache.spark.sql.catalyst.InternalRow
+
+  override def nullable: Boolean = false
+  override def dataType: org.apache.spark.sql.types.DataType =
+    org.apache.spark.sql.types.BooleanType
+
+  override def eval(input: InternalRow): Any = {
+    def keys = {
+      val r = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(children.length - 2)
+      var i = 2
+      while (i < children.length) {
+        r.update(i - 2, children(i).eval(input)); i += 1
+      }
+      r
+    }
+    spec.keep(children(0).eval(input)
+      .asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      children(1).eval(input).asInstanceOf[Long], keys)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : DeleteFilter = copy(children = c)
 }

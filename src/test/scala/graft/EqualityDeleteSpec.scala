@@ -1,12 +1,12 @@
 package graft
 
-import graft.sources.{ManifestFileIndex, Sources}
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** Equality deletes ([[Sources.mergeVersionEq]]): the O(keys) CDC
   * upsert commit — retired keys land as a scoped sidecar entry with NO
   * base-file scan at write time (input-metrics-witnessed), every read
-  * stack anti-joins them out, appends carry them, last-writer-wins
+  * stack filters them out, appends carry them, last-writer-wins
   * composes across commits, [[Sources.purgeEq]] absorbs them, vacuum
   * retains their scope manifests. */
 class EqualityDeleteSpec extends SparkTestBase {
@@ -169,18 +169,15 @@ class EqualityDeleteSpec extends SparkTestBase {
     assert(g1.length === 1 && g1.head.getString(3) === "GEN-A")
     assert(!head.exists(_.getLong(0) == keys(2)))
     // every read stack serves the same state
-    val indexed = ManifestFileIndex.readVersionIndexed(spark, t)
+    val indexed = Sources.readVersion(spark, t)
       .orderBy("o_orderkey").collect()
     assert(indexed.toSeq === head.sortBy(_.getLong(0)).toSeq)
-    // the read tax is a broadcast HASH anti-join per entry — the key
-    // equality must reach the join as its hash key (the scope probe
-    // rides as an extra condition), never degrade to a nested loop
+    // the read tax is one row filter over the scan for every entry —
+    // a key-set membership test, never a join per entry
     val plan = Sources.readVersion(spark, t)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("LeftAnti"), s"expected broadcast anti-joins:\n$plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      "an eq entry must never plan as a nested loop")
+    assert(plan.contains("deletefilter"), s"expected the delete filter:\n$plan")
+    assert(!plan.contains("Join"), s"an eq entry must never plan a join:\n$plan")
   }
 
   test("purgeEq rewrites ONLY in-scope files, drops the sidecar, " +
@@ -559,7 +556,7 @@ class EqualityDeleteSpec extends SparkTestBase {
     assert(Sources.eqOf(table, Sources.latestVersion(table)).nonEmpty,
       "the DML commits must CARRY the pending entries")
     // renaming/dropping the pending entry's KEY column would skip the
-    // anti-join at read time and resurrect the deleted rows — refused
+    // key match at read time and resurrect the deleted rows — refused
     // on both schema-change paths (SQL DROP COLUMN and the evolving
     // commit's rename); a NON-key change stays allowed
     val exAlter = intercept[Exception] {

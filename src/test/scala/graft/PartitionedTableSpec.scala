@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ManifestFileIndex, Sources}
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** Identity-partitioned graft tables: hive-laid-out batch dirs, a real
@@ -67,9 +67,9 @@ class PartitionedTableSpec extends SparkTestBase {
     // partition pruning, numFiles-asserted: one prio out of nPrio
     val one = orders.select("prio").distinct().orderBy("prio")
       .head().getString(0)
-    val all = ManifestFileIndex.readVersionIndexed(spark, t)
+    val all = Sources.readVersion(spark, t)
     val total = scannedFiles({ val d = all; d.collect(); d })
-    val prunedDf = ManifestFileIndex.readVersionIndexed(spark, t)
+    val prunedDf = Sources.readVersion(spark, t)
       .filter(col("prio") === one)
     prunedDf.collect()
     val pruned = scannedFiles(prunedDf)

@@ -369,7 +369,6 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("ManifestFileIndex: user filters prune manifest files inside the scan") {
-    import graft.sources.ManifestFileIndex
     val table = tmp("vindex") + "/orders_idx"
     val orders = Tables.orders(spark, sf)
     val v1 = Sources.commitVersion(
@@ -389,11 +388,11 @@ class SourcesSpec extends SparkTestBase {
       go(df.queryExecution.executedPlan)
     }
 
-    val base = ManifestFileIndex.readVersionIndexed(spark, table)
+    val base = Sources.readVersion(spark, table)
     assert(base.count() === orders.count()) // unfiltered: everything
 
     // a plain user filter — no pruning API in sight — skips files
-    val filtered = ManifestFileIndex.readVersionIndexed(spark, table)
+    val filtered = Sources.readVersion(spark, table)
       .filter(col("o_orderkey") >= 100 && col("o_orderkey") <= 300)
     val expected = orders
       .filter(col("o_orderkey") >= 100 && col("o_orderkey") <= 300)
@@ -406,7 +405,7 @@ class SourcesSpec extends SparkTestBase {
     assert(numFiles >= 1)
 
     // a filter on an UN-statted column must not prune (and stays correct)
-    val byPrio = ManifestFileIndex.readVersionIndexed(spark, table)
+    val byPrio = Sources.readVersion(spark, table)
       .filter(col("o_orderpriority") === "1-URGENT")
     byPrio.collect()
     assert(byPrio.count() ===
@@ -415,7 +414,7 @@ class SourcesSpec extends SparkTestBase {
 
     // version pinning: an overwrite commit does not disturb the pinned index
     Sources.commitVersion(orders.limit(10), table, overwrite = true)
-    assert(ManifestFileIndex.readVersionIndexed(spark, table, v1).count()
+    assert(Sources.readVersion(spark, table, v1).count()
       === orders.count())
   }
 
@@ -435,8 +434,8 @@ class SourcesSpec extends SparkTestBase {
         .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count()
       val pruned = Sources.readVersionPruned(spark, table, "o_orderkey",
         BigDecimal(lo), BigDecimal(hi), v).count()
-      val indexed = graft.sources.ManifestFileIndex
-        .readVersionIndexed(spark, table, v)
+      val indexed = graft.sources.Sources
+        .readVersion(spark, table, v)
         .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi).count()
       pruned == expect && indexed == expect
     }
@@ -563,7 +562,7 @@ class SourcesSpec extends SparkTestBase {
       BigDecimal(0), BigDecimal(1))
     assert(skippedN.isEmpty && keptN.nonEmpty)
     // a null inside an IN-list must not break planning and must not prune
-    val got = graft.sources.ManifestFileIndex.readVersionIndexed(spark, table, v)
+    val got = graft.sources.Sources.readVersion(spark, table, v)
       .filter(col("k").isin(1L, null))
     assert(got.count() === 1)
   }

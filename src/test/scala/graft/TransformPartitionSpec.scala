@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ManifestFileIndex, Sources}
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** HIDDEN partition transforms ([[Sources.PartTransform]]):
@@ -98,11 +98,11 @@ class TransformPartitionSpec extends SparkTestBase {
     val pruned2 = scannedFiles(pruned2Df)
     assert(pruned2 < total2 && pruned2 >= 1,
       s"v2 day pruning: scanned $pruned2 of $total2 files")
-    // v1 stack (USING graft / readVersionIndexed) prunes the same way
-    val v1All = ManifestFileIndex.readVersionIndexed(spark, t)
+    // v1 stack (USING graft / readVersion) prunes the same way
+    val v1All = Sources.readVersion(spark, t)
     v1All.collect()
     val v1Total = scannedFiles(v1All)
-    val v1Pruned = ManifestFileIndex.readVersionIndexed(spark, t)
+    val v1Pruned = Sources.readVersion(spark, t)
       .filter(col("ets") === lit("2024-01-10 12:00:00").cast("timestamp"))
     v1Pruned.collect()
     val v1Scanned = scannedFiles(v1Pruned)
