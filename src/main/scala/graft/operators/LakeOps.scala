@@ -190,8 +190,8 @@ object LakeOps {
       s.sql(s"""INSERT INTO $cat.orders_dml
                |SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority
                |FROM dml_orders_src WHERE o_orderkey % 2 = 1""".stripMargin)
-      // standard-SQL MERGE through SupportsDelta: the delta scan
-      // serves (row, file, position), matched rows become DV marks +
+      // standard-SQL MERGE through SupportsDelta: the native target
+      // scan serves (row, file, position), matched rows become DV marks +
       // one appended batch — merge-on-read, never a table rewrite
       s.sql(s"""MERGE INTO $cat.orders_dml t
                |USING (SELECT o_orderkey FROM dml_orders_src
@@ -1007,10 +1007,10 @@ object LakeOps {
       s.sql(s"INSERT INTO $cat.ev SELECT * FROM xform_events_src")
       // pruning witness on the EXECUTED pre-delete plan (the q212
       // device): the raw-ts predicate must scan strictly fewer files
-      // than the table holds. Computed BEFORE the DV delete because a
-      // DV-carrying version reads through the V1 wrap, whose inner
-      // (equally pruned) scan is invisible to the outer plan walk —
-      // TransformPartitionSpec covers the post-DV read stack.
+      // than the table holds. Computed BEFORE the DV delete: the walk
+      // counts the stock parquet scan of the clean version; the
+      // DV-carrying version plans through GraftNativeScan, whose
+      // window pruning NativeScanSpec witnesses.
       val probe = s.sql(
         s"""SELECT ets, user_id, value FROM $cat.ev
            |WHERE ets >= TIMESTAMP '2024-02-01 00:00:00'""".stripMargin)
@@ -1188,9 +1188,9 @@ object LakeOps {
   /** Q226 — SQL row-level DML on an EQ-PENDING table, oracle-gated:
     * the gap q220 left open. A CDC-fed table carries pending equality
     * deletes most of the time, and until this round MERGE/UPDATE/DELETE
-    * refused on it until `purge_eq`. Now the delta scan resolves the
+    * refused on it until `purge_eq`. Now the target scan resolves the
     * pending key sets into per-file skip bitsets at planning time
-    * ([[graft.sources.GraftDeltaScan]] + `Sources.eqRetiredPositions` —
+    * ([[graft.sources.GraftNativeScan]] + `Sources.eqRetiredPositions` —
     * key columns + row index of each entry's in-scope files, probed
     * against the key sets once per (entry, file)), so eq-retired rows
     * are never match

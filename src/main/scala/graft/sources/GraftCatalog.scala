@@ -577,12 +577,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
-/** One committed version of a graft table on the DSv2 surface: Spark's
-  * v2 parquet SCAN (composed, not inherited — extending `FileTable`
-  * trips the analyzer's `FallBackFileSourceV2` rule, which rewrites
-  * INSERTs into any FileTable back to a raw directory write and would
-  * bypass the manifest commit entirely) over the manifest-pinned
-  * stats-skipping file index, a V1-fallback OCC write, and
+/** One committed version of a graft table on the DSv2 surface: two
+  * read routes — Spark's v2 parquet SCAN over the manifest-pinned
+  * stats-skipping file index for clean versions (composed, not
+  * inherited — extending `FileTable` trips the analyzer's
+  * `FallBackFileSourceV2` rule, which rewrites INSERTs into any
+  * FileTable back to a raw directory write and would bypass the
+  * manifest commit entirely), and [[GraftNativeScan]] for every other
+  * read. Writes are a V1-fallback OCC commit, row-level SQL DML and
   * file-granular SQL DELETE. */
 class GraftTable(spark: SparkSession, path: String, version: Int)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
@@ -604,7 +606,10 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
     m
   }
 
-  override lazy val schema: StructType = Sources.schemaOf(spark, path, pinned)
+  // the served schema: identity partition columns an API-written table
+  // keeps only in its paths included, as [[Sources.readVersion]] serves
+  override lazy val schema: StructType =
+    ManifestFileIndex.servedSchema(spark, path, pinned)
 
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] = {
@@ -639,49 +644,39 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : org.apache.spark.sql.connector.read.ScanBuilder =
-    Sources.bucketSpecOf(path) match {
-      case Some((c, n)) =>
-        // hash-bucketed: the scan reports KeyGroupedPartitioning so
-        // co-bucketed joins plan shuffle-free (SPJ) and point
-        // predicates on the bucket column prune whole buckets; it
-        // applies DVs and pending eq deletes itself (row-index + one
-        // skip bitset per file), so merge-on-read and CDC deletes never
-        // cost the join its partitioning
-        new GraftNativeScanBuilder(spark, path, pinned, schema, Some((c, n)))
-      case None if Sources.dvOf(path, pinned).nonEmpty ||
-          Sources.eqOf(path, pinned).nonEmpty =>
-        // the version carries deletion vectors or pending equality
-        // deletes: unpartitioned tables take the NATIVE scan
-        // (stats/bloom skipping, DV marks and memoized eq-retired
-        // positions applied inline, planner-visible statistics → a DV'd
-        // dimension still broadcasts without AQE); partition/transform
-        // layouts keep the V1 wrap, whose manifest-indexed inner read
-        // reattaches partition values from the hive paths
-        if (Sources.partitionColumnsOf(path).isEmpty &&
-            Sources.partTransformOf(path).isEmpty)
-          new GraftNativeScanBuilder(spark, path, pinned, schema, None)
-        else new GraftDvScanBuilder(spark, path, pinned, schema)
-      case None =>
-        // dataSchema excludes identity-partition columns — they live in
-        // the hive paths and the scan serves them from partition values
-        val partNames = Sources.partitionColumnsOf(path).toSet
-        val dataSchema = StructType(
-          schema.fields.filterNot(f => partNames.contains(f.name)))
-        val plain =
-          new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
-            spark, fileIndex, schema, dataSchema,
-            new CaseInsensitiveStringMap(util.Map.of()))
-        // the router keeps the stock vectorized builder on the common
-        // path (catalyst filter pushdown delegated verbatim) and swaps
-        // in the _metadata-probing scan only when the query actually
-        // references _gfile/_gpos — which ParquetScanBuilder would
-        // otherwise null-fill silently
-        new org.apache.spark.sql.graftbridge.MetaRoutingScanBuilder(
-          plain, GraftTable.metaNamesFor(path),
-          (req, exprs) => GraftTable.metaColumnScan(spark, path, pinned,
-            req, exprs))
+      : org.apache.spark.sql.connector.read.ScanBuilder = {
+    val bucket = Sources.bucketSpecOf(path)
+    // the native scan (bucket, partition, stats/bloom pruning; DV marks
+    // and memoized eq-retired positions applied inline; partition
+    // values and metadata columns served reader-side)
+    def native = new GraftNativeScanBuilder(spark, path, pinned, schema,
+      bucket)
+    if (bucket.nonEmpty || Sources.dvOf(path, pinned).nonEmpty ||
+        Sources.eqOf(path, pinned).nonEmpty)
+      // hash-bucketed (KeyGroupedPartitioning, so co-bucketed joins plan
+      // shuffle-free and bucket-column point predicates prune whole
+      // buckets — merge-on-read and CDC deletes never cost the join its
+      // partitioning), or a version carrying deletes, on any layout
+      native
+    else {
+      // a clean version: Spark's own vectorized builder. dataSchema
+      // excludes identity-partition columns — they live in the hive
+      // paths and the scan serves them from partition values
+      val partNames = Sources.partitionColumnsOf(path).toSet
+      val dataSchema = StructType(
+        schema.fields.filterNot(f => partNames.contains(f.name)))
+      val plain =
+        new org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder(
+          spark, fileIndex, schema, dataSchema,
+          new CaseInsensitiveStringMap(util.Map.of()))
+      // the router keeps the stock builder on the common path and swaps
+      // in the native scan only when the query references
+      // _gfile/_gpos/_row_id — which ParquetScanBuilder would otherwise
+      // null-fill silently
+      new org.apache.spark.sql.graftbridge.MetaRoutingScanBuilder(
+        plain, GraftTable.metaNamesFor(path), () => native)
     }
+  }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new GraftWriteBuilder(path, info)
@@ -702,21 +697,21 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    // pending equality deletes are no bar: the delta scan resolves
-    // them into per-file skip bitsets at planning time
-    // ([[GraftDeltaScan.planInputPartitions]]), so eq-retired rows are
-    // never match candidates — a CDC-fed table stays DML-able between
+    // pending equality deletes are no bar: the target scan (the native
+    // scan) resolves them into per-file skip bitsets at planning time
+    // ([[GraftNativeScan.withEqSkips]]), so eq-retired rows are never
+    // match candidates — a CDC-fed table stays DML-able between
     // purge_eq runs
     () => new GraftDeltaOperation(spark, path, this, info.command())
 
   /** The row identity the delta operations key on — Iceberg's
     * `_file`/`_pos` contract: manifest path + physical parquet row
-    * index (the DV sidecar's position space). Served by EVERY read
-    * stack: the row-level delta scan natively, the bucketed scan via
-    * its extraction plan, the DV scan and the plain parquet path via
-    * the `_metadata` probe (the plain path routes through
-    * [[org.apache.spark.sql.graftbridge.MetaRoutingScanBuilder]] only
-    * when the columns are actually referenced). */
+    * index (the DV sidecar's position space). Served by one scan,
+    * [[GraftNativeScan]], through its extraction plan: a clean version
+    * routes a query that references them from the stock parquet path
+    * to it ([[org.apache.spark.sql.graftbridge.MetaRoutingScanBuilder]]),
+    * and every other read and the row-level target scan is native
+    * already. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(
@@ -759,15 +754,14 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val cond = filters.flatMap(GraftTable.filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val v = Sources.latestVersion(path)
-    val num = Sources.statsOf(path, v)
-    val str = Sources.statsOfString(path, v)
     // merge-on-read by default: a point/narrow DELETE commits only a
     // DV sidecar (zero data-file rewrite); deleteWhereDv itself falls
     // back to the copy-on-write rewrite when the match set is too wide
-    // for commit metadata — the right cost model at both extremes
-    Sources.deleteWhereDv(spark, path, cond,
-      file => filters.forall(f => GraftTable.fileMayMatch(f, file, num, str)))
+    // for commit metadata — the right cost model at both extremes. The
+    // candidate scan skips the files whose stats or blooms prove no row
+    // can match
+    Sources.deleteWhereDv(spark, path, cond, Sources.filterKeeper(path,
+      Sources.latestVersion(path), filters.toSeq))
   }
 
   override def truncateTable(): Boolean = {
@@ -783,8 +777,8 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
 object GraftTable {
 
   /** The table's advertised metadata columns (Iceberg's `_file`/`_pos`
-    * contract restated): every read stack serves them, not only the
-    * row-level-operation scan. */
+    * contract restated): every catalog read serves them, not only the
+    * row-level-operation target scan. */
   private[sources] val metaColumnNames: Set[String] = Set("_gfile", "_gpos")
 
   /** This table's metadata-column names — the static pair plus
@@ -792,28 +786,6 @@ object GraftTable {
   private[sources] def metaNamesFor(table: String): Set[String] =
     if (RowIds.enabled(table)) metaColumnNames + RowIds.COL
     else metaColumnNames
-
-  /** The planner-facing statistics every graft scan reports, all from
-    * sidecar metadata (never a scan): manifest bytes, exact live row
-    * count (per-file counts minus DV cardinalities — pending eq rows
-    * stay counted, a conservative upper bound), and per-column NDV
-    * from unioning the commit-time HLL sketches. Real cardinalities
-    * reach join reordering and broadcast decisions BEFORE AQE runs. */
-  private[sources] def graftStatistics(table: String, version: Int)
-      : org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(Sources.versionBytes(table, version))
-      override def numRows(): java.util.OptionalLong =
-        Sources.versionRows(table, version)
-          .map(java.util.OptionalLong.of)
-          .getOrElse(java.util.OptionalLong.empty())
-      override def columnStats(): java.util.Map[
-          org.apache.spark.sql.connector.expressions.NamedReference,
-          org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-        GraftTable.columnStatsForFiles(table, version,
-          Sources.filesOf(table, version))
-    }
 
   /** The `columnStats` map for a (possibly pruned) file subset —
     * HLL-union NDV per fully-covered column. */
@@ -834,70 +806,6 @@ object GraftTable {
     }
     m
   }
-
-  /** Append `_gfile`/`_gpos` to a parquet-backed frame of this table
-    * from the scan's own `_metadata` probe — file_path normalized to
-    * the manifest path so values match the DV sidecar key space and
-    * the delta scan's rowId. */
-  private[sources] def withMetaColumns(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val norm = org.apache.spark.sql.functions.udf(
-      (p: String) => Sources.normalizePath(p))
-    df.withColumn("_gfile", norm(col("_metadata.file_path")))
-      .withColumn("_gpos", col("_metadata.row_index"))
-  }
-
-  /** The meta-capable fallback scan for a plain (unbucketed, DV-less)
-    * table when `_gfile`/`_gpos` are referenced: the indexed read plus
-    * the `_metadata` probe, wrapped as a V1 scan. Re-applies EVERY
-    * catalyst conjunct the router collected — the stock builder had
-    * consumed partition filters as non-residual, so the swapped scan
-    * must evaluate them itself (rebound by NAME: the pushed
-    * expressions carry foreign exprIds). The inner DataFrame plans
-    * through the optimizer, so the re-applied filters still reach the
-    * parquet scan and the manifest index for pruning. */
-  private[sources] def metaColumnScan(spark: SparkSession, table: String,
-      version: Int, required: StructType,
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.connector.read.Scan =
-    new org.apache.spark.sql.connector.read.V1Scan
-      with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-      override def estimateStatistics()
-          : org.apache.spark.sql.connector.read.Statistics =
-        GraftTable.graftStatistics(table, version)
-      override def readSchema(): StructType = required
-      override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-          with org.apache.spark.sql.sources.TableScan](
-          context: org.apache.spark.sql.SQLContext): T =
-        (new org.apache.spark.sql.sources.BaseRelation
-            with org.apache.spark.sql.sources.TableScan {
-          override def sqlContext: org.apache.spark.sql.SQLContext = context
-          override def schema: StructType = required
-          override def buildScan()
-              : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            // the lineage frame (rid resolution + per-row fill) only
-            // when the query asked for the id; _gfile/_gpos alone take
-            // the plain probe
-            var df =
-              if (required.fieldNames.contains(RowIds.COL) &&
-                  RowIds.enabled(table))
-                RowIds.indexedWithMeta(spark, table, version)
-              else withMetaColumns(
-                Sources.readVersion(spark, table, version))
-            filters.foreach { e =>
-              val byName = e.transform {
-                case a: org.apache.spark.sql.catalyst.expressions
-                    .AttributeReference =>
-                  org.apache.spark.sql.catalyst.analysis
-                    .UnresolvedAttribute.quoted(a.name)
-              }
-              df = df.filter(
-                org.apache.spark.sql.GraftColumnBridge.column(byName))
-            }
-            df.select(required.fieldNames.toIndexedSeq.map(col): _*).rdd
-          }
-        }).asInstanceOf[T]
-    }
 
   /** V1 `Filter` → `Column`, total over the shapes Spark pushes for
     * DELETE; a None makes `canDeleteWhere` refuse (Spark then reports
@@ -925,136 +833,6 @@ object GraftTable {
     case _ => None
   }
 
-  /** Conservative per-file reachability of a delete predicate from the
-    * stats sidecar: false ONLY when stats prove no row of `file` can
-    * match `f` — those files are carried untouched (the file-granular
-    * half of SQL DELETE). Unknown shapes and unstatted columns return
-    * true (file rewritten; correctness never depends on stats). */
-  private[sources] def fileMayMatch(f: Filter, file: String,
-      num: Map[(String, String), (BigDecimal, BigDecimal)],
-      str: Map[(String, String), (String, String)]): Boolean = {
-    def numBound(a: String): Option[(BigDecimal, BigDecimal)] =
-      num.get((file, a))
-    def toBig(v: Any): Option[BigDecimal] = v match {
-      case null => None
-      case x: Byte => Some(BigDecimal(x.toInt))
-      case x: Short => Some(BigDecimal(x.toInt))
-      case x: Int => Some(BigDecimal(x))
-      case x: Long => Some(BigDecimal(x))
-      case x: Float => Some(BigDecimal(x.toDouble))
-      case x: Double => Some(BigDecimal(x))
-      case x: java.math.BigDecimal => Some(BigDecimal(x))
-      case _ => None
-    }
-    def cmp(a: String, v: Any)(
-        possible: ((BigDecimal, BigDecimal), BigDecimal) => Boolean): Boolean =
-      (numBound(a), toBig(v)) match {
-        case (Some(b), Some(x)) => possible(b, x)
-        case _ => v match {
-          case s: String => str.get((file, a)) match {
-            case Some((mn, mx)) => possibleStr(f, mn, mx, s)
-            case None => true
-          }
-          case _ => true
-        }
-      }
-    def possibleStr(f: Filter, mn: String, mx: String, s: String): Boolean =
-      f match {
-        case sources.EqualTo(_, _) => mn.compareTo(s) <= 0 && mx.compareTo(s) >= 0
-        case sources.GreaterThan(_, _) => mx.compareTo(s) > 0
-        case sources.GreaterThanOrEqual(_, _) => mx.compareTo(s) >= 0
-        case sources.LessThan(_, _) => mn.compareTo(s) < 0
-        case sources.LessThanOrEqual(_, _) => mn.compareTo(s) <= 0
-        case _ => true
-      }
-    f match {
-      case sources.EqualTo(a, v) =>
-        cmp(a, v) { case ((mn, mx), x) => mn <= x && x <= mx }
-      case sources.GreaterThan(a, v) =>
-        cmp(a, v) { case ((_, mx), x) => mx > x }
-      case sources.GreaterThanOrEqual(a, v) =>
-        cmp(a, v) { case ((_, mx), x) => mx >= x }
-      case sources.LessThan(a, v) =>
-        cmp(a, v) { case ((mn, _), x) => mn < x }
-      case sources.LessThanOrEqual(a, v) =>
-        cmp(a, v) { case ((mn, _), x) => mn <= x }
-      case sources.In(a, vs) =>
-        vs.exists(v => cmp(a, v) { case ((mn, mx), x) => mn <= x && x <= mx })
-      case sources.And(l, r) =>
-        fileMayMatch(l, file, num, str) && fileMayMatch(r, file, num, str)
-      case sources.Or(l, r) =>
-        fileMayMatch(l, file, num, str) || fileMayMatch(r, file, num, str)
-      case _ => true
-    }
-  }
-}
-
-/** The DSv2 scan for an identity- or transform-PARTITIONED version
-  * carrying deletion vectors or pending equality deletes (unpartitioned
-  * and bucketed layouts take the native [[GraftNativeScan]]): a V1Scan
-  * whose rows come from [[Sources.readVersion]] — the manifest index
-  * read, which reattaches partition values from the hive paths, under
-  * the one DV and eq delete filter. Column pruning and
-  * filter pushdown are honored by re-applying them INSIDE the wrapped
-  * DataFrame — where they reach the parquet scan and the manifest
-  * index — while every pushed filter is also reported residual, so
-  * Spark re-evaluates it above and pushing stays a pure optimization.
-  * The direct vectorized `ParquetScanBuilder` path returns as soon as
-  * purge/compaction absorbs the DVs and eq entries. */
-private[sources] class GraftDvScanBuilder(spark: SparkSession,
-    table: String, version: Int, tableSchema: StructType)
-  extends org.apache.spark.sql.connector.read.ScanBuilder
-  with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-  with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = tableSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftTable.filterToColumn(f).isDefined)
-    filters // ALL residual: Spark re-evaluates, pushing is advisory
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): org.apache.spark.sql.connector.read.Scan =
-    new org.apache.spark.sql.connector.read.V1Scan
-      with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-      override def readSchema(): StructType = required
-      // manifest-known physical size → the planner sees a DV'd
-      // dimension's true bytes and can broadcast WITHOUT AQE (the V1
-      // wrap would otherwise report the huge V1 default)
-      override def estimateStatistics()
-          : org.apache.spark.sql.connector.read.Statistics =
-        GraftTable.graftStatistics(table, version)
-      override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-          with org.apache.spark.sql.sources.TableScan](
-          context: org.apache.spark.sql.SQLContext): T =
-        (new org.apache.spark.sql.sources.BaseRelation
-            with org.apache.spark.sql.sources.TableScan {
-          override def sqlContext: org.apache.spark.sql.SQLContext = context
-          override def schema: StructType = required
-          override def sizeInBytes: Long =
-            Sources.versionBytes(table, version)
-          override def buildScan()
-              : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-            // (no `_row_id`: lineage tables are flat, never here)
-            var df = Sources.readVersion(
-              spark, table, version)
-            // a plain SELECT may request the table's _gfile/_gpos
-            // metadata columns: serve them from the scan's own
-            // _metadata probe (file_path normalized to the manifest
-            // path — the same value the delta scan's rowId carries)
-            if (required.fieldNames.exists(GraftTable.metaNamesFor(table)))
-              df = GraftTable.withMetaColumns(df)
-            pushed.flatMap(GraftTable.filterToColumn)
-              .foreach(c => df = df.filter(c))
-            df.select(required.fieldNames.toIndexedSeq.map(col): _*).rdd
-          }
-        }).asInstanceOf[T]
-    }
 }
 
 /** A driver-computed metadata relation (version history / file

@@ -29,8 +29,10 @@ import org.apache.spark.sql.types.StructType
   * DataFrame form `spark.read.format("graft").option("versionAsOf", 3)
   * .load(path)` resolves through the same provider.
   *
-  * The served schema is the version's DECLARED schema
-  * ([[Sources.schemaOf]]): after an additive evolution, files that
+  * The served schema is the version's DECLARED schema plus the
+  * identity partition columns its paths carry
+  * ([[ManifestFileIndex.servedSchema]]; a clean relation serves them
+  * after the data columns): after an additive evolution, files that
   * predate a column read as nulls (the parquet reader's missing-column
   * contract). A RENAMED column's pre-rename files need per-generation
   * alignment ([[Sources.readVersionEvolved]]) — plain parquet files
@@ -111,9 +113,14 @@ object GraftDataSource {
     if (Sources.dvOf(table, v).nonEmpty || Sources.eqOf(table, v).nonEmpty)
       new DvRelation(spark, table, v)
     else {
+      // identity partition columns come from the index's partition
+      // spec (the hive paths), as in ManifestFileIndex.frameForFiles;
+      // the data schema is the served schema without them
       val index = new ManifestFileIndex(spark, table, v)
-      val schema = Sources.schemaOf(spark, table, v)
-      HadoopFsRelation(index, StructType(Nil), schema, None,
+      val partNames = index.partitionSchema.fieldNames.toSet
+      val dataSchema = StructType(ManifestFileIndex.servedSchema(spark,
+        table, v).fields.filterNot(f => partNames.contains(f.name)))
+      HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
         new ParquetFileFormat, Map.empty[String, String])(spark)
     }
   }
@@ -134,7 +141,9 @@ private[sources] class DvRelation(
   with org.apache.spark.sql.sources.PrunedFilteredScan {
 
   override def sqlContext: SQLContext = spark.sqlContext
-  override val schema: StructType = Sources.schemaOf(spark, table, version)
+  // what Sources.readVersion serves: identity partition columns included
+  override val schema: StructType =
+    ManifestFileIndex.servedSchema(spark, table, version)
 
   // the manifest knows the version's exact physical size — without the
   // override the V1 default (spark.sql.defaultSizeInBytes = huge) makes

@@ -4,21 +4,23 @@ import java.util.OptionalLong
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.connector.expressions.Expressions
-import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
+import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.ConjunctScanBuilder
 import org.apache.spark.sql.sources.{EqualTo, Filter, In, IsNull}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The NATIVE catalog scan: every graft table read that is neither a
-  * clean plain version (the stock parquet scan) nor an identity- or
-  * transform-partitioned version carrying deletes (the V1 wrap
-  * [[GraftDvScanBuilder]], which reattaches partition values). It
-  * serves
+/** The NATIVE catalog scan: every graft table read that is not a clean
+  * version served by the stock vectorized parquet path. It serves
+  *  - versions carrying deletion vectors and/or pending equality
+  *    deletes, on every layout (flat, hash-bucketed, identity- and
+  *    transform-partitioned), with planner-visible statistics (a DV'd
+  *    dimension broadcasts at PLAN time, not after AQE);
   *  - HASH-BUCKETED tables (`PARTITIONED BY (bucket(n, k))`), turning
   *    the on-disk `_b=<id>` layout into SHUFFLE-FREE JOINS: it reports
   *    `KeyGroupedPartitioning(bucket(n, k), #buckets)`, which Catalyst
@@ -30,49 +32,40 @@ import org.apache.spark.unsafe.types.UTF8String
   *    exactly when SPJ engages (`spark.sql.sources.v2.bucketing.enabled`)
   *    and keeps per-file parallelism otherwise. Point predicates on the
   *    bucket column PRUNE whole buckets driver-side;
-  *  - UNPARTITIONED versions carrying deletion vectors and/or pending
-  *    equality deletes, with planner-visible statistics (a DV'd
-  *    dimension broadcasts at PLAN time, not after AQE; the V1 wrap
-  *    cannot report statistics through `V1ScanWrapper`).
+  *  - plain selects of `_gfile`/`_gpos`/`_row_id` on clean versions
+  *    (swapped in by [[org.apache.spark.sql.graftbridge.MetaRoutingScanBuilder]]);
+  *  - the target scan of SQL UPDATE/MERGE/DELETE ([[GraftDeltaOperation]]).
   *
-  * Both take the same tiers: bucket pruning, stats/bloom sidecar file
-  * skipping (pushed and runtime/DPP conjuncts), then one skip bitset
-  * per kept file — its DV marks OR the positions pending eq entries
-  * retire in it, memoized per (entry, file)
+  * Every layout takes the same tiers: on partitioned layouts the
+  * manifest index's own partition and `_pt` window pruning
+  * ([[ManifestFileIndex.keptFiles]]), bucket pruning, stats/bloom
+  * sidecar file skipping (pushed and runtime/DPP conjuncts), then one
+  * skip bitset per kept file — its DV marks OR the positions pending eq
+  * entries retire in it, memoized per (entry, file)
   * ([[GraftNativeScan.withEqSkips]]). Planning an eq-pending version
   * therefore starts at most one probe job, none once the memo holds
   * every kept pair, and a bucketed table keeps SPJ. Executors read
   * through Spark's own parquet reader function (the [[GraftCdfStream]]
-  * pattern); pushed filters reach the reader for row-group pruning and
-  * are ALSO left in the plan as residuals, so correctness never
-  * depends on parquet's evaluation. `_gfile`/`_gpos` and, on lineage
-  * tables, `_row_id` are synthesized reader-side.
+  * pattern); pushed data-column conjuncts reach the reader for
+  * row-group pruning, and EVERY conjunct is left in the plan as a
+  * residual, so correctness never depends on parquet's evaluation or
+  * on pruning. Identity-partition values come from each file's path
+  * (the rule the index uses, cast to the served type); `_gfile`/`_gpos`
+  * and, on lineage tables, `_row_id` are synthesized reader-side.
   */
 private[sources] class GraftNativeScanBuilder(spark: SparkSession,
     table: String, version: Int, schema: StructType,
     bucket: Option[(String, Int)])
-  extends ScanBuilder
-  with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+  extends ConjunctScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // everything is kept as a residual (Spark re-evaluates above the
-    // scan); the conjuncts are handed to parquet for row-group pruning
-    // and mined for bucket and stats/bloom pruning
-    pushed = filters
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def build(): Scan =
     new GraftNativeScan(spark, table, version, schema, required,
-      pushed.toSeq, bucket)
+      conjuncts, bucket)
 }
 
 /** One data file of a native scan. `skip` holds the positions the file
@@ -87,7 +80,7 @@ private[sources] case class GraftFilePartition(path: String,
 
 private[sources] class GraftNativeScan(spark: SparkSession,
     table: String, version: Int, dataSchema: StructType,
-    required: StructType, filters: Seq[Filter],
+    required: StructType, conjuncts: Seq[Expression],
     bucket: Option[(String, Int)])
   extends Scan with Batch
   with SupportsReportPartitioning with SupportsReportStatistics
@@ -95,6 +88,16 @@ private[sources] class GraftNativeScan(spark: SparkSession,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+
+  // the conjuncts as V1 filters: bucket and stats/bloom pruning, and
+  // the parquet reader's row-group pruning
+  private val filters: Seq[Filter] = ConjunctScanBuilder.translate(conjuncts)
+
+  // identity partition columns in their path types; a partitioned
+  // layout plans its files through the manifest index
+  private val partSchema = ManifestFileIndex.partitionSchemaOf(table, version)
+  private val partitioned =
+    partSchema.nonEmpty || Sources.partTransformOf(table).isDefined
 
   /** Buckets that can hold rows passing ALL `fs` — None means no
     * bucket-column point predicate (or no buckets): scan all. */
@@ -108,7 +111,7 @@ private[sources] class GraftNativeScan(spark: SparkSession,
   /** No pushed conjuncts and no bucket pruning — the whole-version
     * read [[MetadataOnlyAggregates]] may answer from sidecars. */
   private[sources] def filterFree: Boolean =
-    filters.isEmpty && buckets.isEmpty
+    conjuncts.isEmpty && buckets.isEmpty
 
   override def description(): String = bucket match {
     case Some((c, n)) =>
@@ -151,22 +154,29 @@ private[sources] class GraftNativeScan(spark: SparkSession,
 
   private lazy val dv = Sources.dvOf(table, version)
 
-  // the files surviving bucket and stats/bloom pruning, with their DV
-  // marks — sidecar metadata only, all the planner's statistics and
-  // partitioning read; one input partition per file
+  // the sizes of the files the partition and `_pt` window pruning
+  // keep; None on flat and bucketed layouts, which list no file status
+  private lazy val layoutKept: Option[Map[String, Long]] =
+    if (partitioned)
+      Some(ManifestFileIndex.keptFiles(spark, table, version, conjuncts))
+    else None
+
+  // the files surviving partition, bucket and stats/bloom pruning, with
+  // their DV marks — sidecar metadata only, all the planner's
+  // statistics and partitioning read; one input partition per file
   private def kept: Array[GraftFilePartition] = {
     if (keptCache == null) keptCache = {
       val statsKeep =
         Sources.filterKeeper(table, version, filters ++ runtime)
-      val all = Sources.filesOf(table, version).filter(statsKeep).map { f =>
+      val all = Sources.filesOf(table, version).filter(statsKeep).flatMap { f =>
+        val bytes = layoutKept.fold(Option(
+          java.nio.file.Files.size(java.nio.file.Paths.get(f))))(_.get(f))
         val b = if (bucket.isEmpty) 0 else GraftNativeScan.bucketIdOf(f)
           .getOrElse(throw new IllegalStateException(
             s"bucketed table $table: data file outside a _b=<id> dir: $f " +
               "(the table has non-bucketed batches — it was written " +
               "outside the catalog commit path)"))
-        GraftFilePartition(f,
-          java.nio.file.Files.size(java.nio.file.Paths.get(f)), b,
-          dv.get(f).map(_.toByteArray))
+        bytes.map(GraftFilePartition(f, _, b, dv.get(f).map(_.toByteArray)))
       }
       val keep = Seq(buckets, bucketsFor(runtime)).flatten
         .reduceOption(_ intersect _)
@@ -214,8 +224,8 @@ private[sources] class GraftNativeScan(spark: SparkSession,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftNativeScan.readerFactory(spark, dataSchema, required, filters,
-      haveSkip = parts.exists(_.skip.isDefined),
+    GraftNativeScan.readerFactory(spark, dataSchema, partSchema, required,
+      filters, haveSkip = parts.exists(_.skip.isDefined),
       // resolve the rid map ONLY when the query asked for the id — a
       // plain scan must not pay (or depend on) sidecar derivation
       rid = if (required.fieldNames.contains(RowIds.COL) &&
@@ -276,74 +286,86 @@ private[sources] object GraftNativeScan {
   }
 
   /** The per-file reader construction: Spark's own parquet reader
-    * function built once driver-side — pushed conjuncts buy row-group
-    * pruning, older-generation files missing ADD COLUMN fields
-    * null-fill through schema clipping. The `_gfile`/`_gpos` metadata
-    * columns are synthesized reader-side (file path from the
-    * partition, position from the row-index generator column), never
-    * read from parquet — schema clipping would null-fill them
-    * silently otherwise. Skipped positions (DV marks, eq-retired rows)
-    * drop inline via the indexed reader function (positions exact
-    * under row-group pruning). */
+    * function built once driver-side — pushed data-column conjuncts buy
+    * row-group pruning, older-generation files missing ADD COLUMN
+    * fields null-fill through schema clipping. Identity-partition
+    * columns (`partSchema`, in path types) are never read from or
+    * pushed to parquet: the reader appends each file's path values,
+    * cast to the served type. The `_gfile`/`_gpos` metadata columns are
+    * synthesized reader-side (file path from the partition, position
+    * from the row-index generator column), never read from parquet —
+    * schema clipping would null-fill them silently otherwise. Skipped
+    * positions (DV marks, eq-retired rows) drop inline via the indexed
+    * reader function (positions exact under row-group pruning). */
   def readerFactory(spark: SparkSession, dataSchema: StructType,
-      required: StructType, filters: Seq[Filter], haveSkip: Boolean,
+      partSchema: StructType, required: StructType, filters: Seq[Filter],
+      haveSkip: Boolean,
       rid: Option[Map[String, Long]]): PartitionReaderFactory = {
+    import org.apache.spark.sql.types.{LongType, StructField}
     // lineage tables additionally synthesize `_row_id`: the physical
     // column where a rewrite materialized it, the file range otherwise
     val needRid = rid.isDefined &&
       required.fieldNames.contains(RowIds.COL)
     def isMeta(n: String): Boolean =
       GraftTable.metaColumnNames(n) || (needRid && n == RowIds.COL)
+    val isPart = partSchema.fieldNames.toSet
     val hasMeta = required.fieldNames.exists(isMeta)
-    val dataFields = required.fields.filterNot(f => isMeta(f.name))
-    val dataStruct = StructType(dataFields)
-    // never push an id predicate into the parquet reader: files that
-    // predate materialization hold NULLs in the physical column, and a
-    // row-group prune on those would drop rows whose SYNTHESIZED id
-    // matches (Spark re-evaluates all conjuncts above the scan)
+    val dataFields = required.fields.filterNot(f => isMeta(f.name) || isPart(f.name))
+    // the requested partition columns, served-typed, and their path types
+    val partFields = required.fields.filter(f => isPart(f.name))
+    val pathSchema = StructType(partFields.map(f => partSchema(f.name)))
+    // parquet sees data-column conjuncts only: never a partition column
+    // (not in the file), a metadata column, or an id predicate — files
+    // that predate materialization hold NULLs in the physical column,
+    // and a row-group prune on those would drop rows whose SYNTHESIZED
+    // id matches (Spark re-evaluates all conjuncts above the scan)
     val safeFilters =
-      if (!needRid) filters
-      else filters.filterNot(_.references.contains(RowIds.COL))
-    val fileSchema =
-      if (!needRid) dataSchema
-      else StructType(dataSchema.fields.filterNot(_.name == RowIds.COL) :+
-        org.apache.spark.sql.types.StructField(RowIds.COL,
-          org.apache.spark.sql.types.LongType, nullable = true))
-    val readFunc = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, fileSchema, StructType(Nil), dataStruct, safeFilters,
-      Map(org.apache.spark.sql.execution.datasources.FileFormat
-        .OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
-    val ridPos = if (needRid) dataFields.length else -1
-    val readFuncIdx =
-      if (!haveSkip && !hasMeta) readFunc
-      else new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, fileSchema, StructType(Nil),
-        StructType(dataFields ++
-          (if (needRid) Seq(org.apache.spark.sql.types.StructField(
-            RowIds.COL, org.apache.spark.sql.types.LongType,
-            nullable = true)) else Nil) :+
-          org.apache.spark.sql.types.StructField(
-            ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-            org.apache.spark.sql.types.LongType, nullable = true)),
+      filters.filterNot(_.references.exists(r => isPart(r) || isMeta(r)))
+    // the physical lineage column, read NULLABLE: files that predate
+    // materialization lack it
+    val ridField =
+      if (needRid) Seq(StructField(RowIds.COL, LongType, nullable = true))
+      else Nil
+    val fileSchema = StructType(dataSchema.fields.filterNot(f =>
+      isPart(f.name) || isMeta(f.name)) ++ ridField)
+    def reader(fields: Seq[StructField]) =
+      new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, fileSchema, StructType(partFields), StructType(fields),
         safeFilters,
         Map(org.apache.spark.sql.execution.datasources.FileFormat
           .OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
-    // per-output-field extraction plan: data ordinal, or a metadata tag
-    // (-1 = row index, -2 = file path, -3 = lineage id) — the delta
-    // scan's shape
+    // the plain function's rows are the data fields then the partition
+    // fields: when that IS the requested order and nothing is
+    // synthesized, a clean file's rows are the output rows
+    val inOrder = !hasMeta && required.fieldNames.sameElements(
+      (dataFields ++ partFields).map(_.name))
+    val readFunc = reader(dataFields)
+    // the indexed function's rows: data fields, the optional physical
+    // lineage column, the row-index generator column, partition fields
+    val ridPos = if (needRid) dataFields.length else -1
+    val rowIdxPos = dataFields.length + (if (needRid) 1 else 0)
+    val readFuncIdx =
+      if (!haveSkip && inOrder) readFunc
+      else reader(dataFields ++ ridField :+
+        StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+          LongType, nullable = true))
+    // per-output-field extraction plan over an indexed row: its ordinal,
+    // or a metadata tag (-1 = row index, -2 = file path, -3 = lineage id)
     val dataIdx = dataFields.map(_.name).zipWithIndex.toMap
+    val partIdx = partFields.map(_.name).zipWithIndex.toMap
     val fields = required.fields.map { f =>
       f.name match {
         case "_gpos" => (-1, f.dataType)
         case "_gfile" => (-2, f.dataType)
         case n if needRid && n == RowIds.COL => (-3, f.dataType)
+        case n if isPart(n) => (rowIdxPos + 1 + partIdx(n), f.dataType)
         case n => (dataIdx(n), f.dataType)
       }
     }
-    new GraftNativeReaderFactory(readFunc, readFuncIdx, fields, hasMeta,
-      ridPos, rid.getOrElse(Map.empty))
+    new GraftNativeReaderFactory(readFunc, readFuncIdx, fields, inOrder,
+      rowIdxPos, ridPos, rid.getOrElse(Map.empty), pathSchema,
+      StructType(partFields), spark.sessionState.conf.sessionLocalTimeZone)
   }
 }
 
@@ -351,21 +373,26 @@ private[sources] class GraftNativeReaderFactory(
     readFunc: PartitionedFile => Iterator[InternalRow],
     readFuncIdx: PartitionedFile => Iterator[InternalRow],
     fields: Array[(Int, org.apache.spark.sql.types.DataType)],
-    hasMeta: Boolean,
-    ridPos: Int = -1,
-    ridMap: Map[String, Long] = Map.empty)
+    inOrder: Boolean, rowIdxPos: Int, ridPos: Int,
+    ridMap: Map[String, Long], pathSchema: StructType,
+    partSchema: StructType, tz: String)
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val gp = p.asInstanceOf[GraftFilePartition]
-    val pf = PartitionedFile(
-      InternalRow.empty,
-      org.apache.spark.paths.SparkPath.fromPathString(gp.path),
-      0L, gp.bytes, Array.empty[String], 0L, gp.bytes,
-      Map.empty[String, Any])
-    if (gp.skip.isEmpty && !hasMeta)
-      // fast path: no position to skip, no metadata column to synthesize —
-      // the reader's rows ARE the output rows, zero copying
+    // the file's identity-partition values: its path's, in the served type
+    val pv =
+      if (pathSchema.isEmpty) InternalRow.empty
+      else {
+        val raw = ManifestFileIndex.partitionValues(gp.path, pathSchema)
+        InternalRow.fromSeq(pathSchema.fields.toSeq.indices.map(i =>
+          EqCheck.widen(raw.get(i, pathSchema(i).dataType),
+            pathSchema(i).dataType, partSchema(i).dataType, tz)))
+      }
+    val pf = EqCheck.partitionedFile(gp.path, gp.bytes, pv)
+    if (gp.skip.isEmpty && inOrder)
+      // fast path: no position to skip, no column to synthesize or
+      // reorder — the reader's rows ARE the output rows, zero copying
       new PartitionReader[InternalRow] {
         private val it = readFunc(pf)
         override def next(): Boolean = it.hasNext
@@ -373,15 +400,13 @@ private[sources] class GraftNativeReaderFactory(
         override def close(): Unit = ()
       }
     else {
-      // merge-on-read / metadata path: the indexed function appends the
-      // row-index generator column (riding last, after the data fields
-      // and the optional physical lineage column); skipped positions
-      // drop inline, the extraction plan maps data ordinals through and
-      // fills -1/-2/-3 with index/path/lineage id
+      // merge-on-read / metadata path: the indexed function's rows carry
+      // the row-index generator column; skipped positions drop inline,
+      // the extraction plan maps ordinals through and fills -1/-2/-3
+      // with index/path/lineage id
       val bits = gp.skip.map(java.util.BitSet.valueOf)
       val pathU = UTF8String.fromString(gp.path)
       val ridBase: Option[Long] = ridMap.get(gp.path)
-      val rowIdxPos = fields.count(_._1 >= 0) + (if (ridPos >= 0) 1 else 0)
       new PartitionReader[InternalRow] {
         private val it = readFuncIdx(pf)
         private var cur: InternalRow = _

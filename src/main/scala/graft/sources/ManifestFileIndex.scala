@@ -516,6 +516,30 @@ object ManifestFileIndex {
     })
   }
 
+  /** The files of `version` that the index's [[listFiles]] keeps for
+    * the Catalyst `conjuncts` of a scan over the served schema, with
+    * their sizes: identity-partition pruning on the conjuncts that
+    * reference partition columns only, then the `_pt` window rule and
+    * stats/bloom skipping on the rest — the planner's call, made by a
+    * DSv2 scan. A partition conjunct whose served type differs from the
+    * path type compares through a cast, as [[frameForFiles]]' projection
+    * compares it. */
+  private[sources] def keptFiles(spark: SparkSession, table: String,
+      version: Int, conjuncts: Seq[Expression]): Map[String, Long] = {
+    val index = new ManifestFileIndex(spark, table, version)
+    val part = index.partitionSchema
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val (partFilters, dataFilters) = conjuncts.filter(_.deterministic)
+      .partition(e => e.references.nonEmpty &&
+        e.references.forall(a => part.fieldNames.contains(a.name)))
+    val pathTyped = partFilters.map(_.transform {
+      case a: AttributeReference if a.dataType != part(a.name).dataType =>
+        Cast(a.withDataType(part(a.name).dataType), a.dataType, tz)
+    })
+    index.listFiles(pathTyped, dataFilters).flatMap(_.files)
+      .map(st => st.getPath.toUri.getPath -> st.getLen).toMap
+  }
+
   /** The schema a read of `version` serves: the declared schema (else
     * the head file's footer), with identity partition columns the
     * footer lacks appended in their path types. */

@@ -279,26 +279,6 @@ object RowIds {
       table: String, version: Int, files: Seq[String]): DataFrame =
     liveAt(spark, table, version, files)
 
-  /** The SQL read stacks' lineage frame: the version's live rows under
-    * the declared schema + physical `_row_id`, with `_gfile`/`_gpos`
-    * attached. Flat tables only (the [[enableRowIds]] envelope). */
-  private[sources] def indexedWithMeta(spark: SparkSession, table: String,
-      version: Int): DataFrame = {
-    val v = if (version < 0) Sources.latestVersion(table) else version
-    val files = Sources.filesOf(table, v)
-    val full = StructType(
-      schemaWithRowId(Sources.schemaOf(spark, table, v)).fields ++ Seq(
-        StructField("_gfile", org.apache.spark.sql.types.StringType),
-        StructField("_gpos", LongType)))
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    val norm = udf((p: String) => Sources.normalizePath(p))
-    liveAt(spark, table, v, files)
-      .withColumn("_gfile", norm(col("_metadata.file_path")))
-      .withColumn("_gpos", col("_metadata.row_index"))
-  }
-
   /** The NET change feed between two versions of a lineage table —
     * what [[Sources.readChanges]]'s file-granular contract cannot say:
     * candidate departing rows (gone files, grown DVs, new eq entries)

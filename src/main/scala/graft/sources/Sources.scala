@@ -1497,8 +1497,8 @@ object Sources {
   /** Physical row positions retired by eq `entries` within exactly
     * `files` — the POSITION form of [[readRows]]'s eq rule, for
     * every consumer whose unit is a (file, skip bitset) partition: the
-    * catalog's native scans, the row-level delta scan and the streaming
-    * CDF. Answers come from [[EqPositionMemo]]; the (entry, file) pairs
+    * catalog's native scan (reads and the SQL UPDATE/MERGE/DELETE
+    * target scan) and the streaming CDF. Answers come from [[EqPositionMemo]]; the (entry, file) pairs
     * it lacks are probed together in ONE Spark job
     * ([[probeEqPositions]]). No schema is inferred: key files use their
     * footer schema, data files their writer-recorded `_COLS` schema

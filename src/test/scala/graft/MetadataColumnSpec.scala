@@ -6,10 +6,13 @@ import org.apache.spark.sql.functions._
 /** The table-wide `_gfile`/`_gpos` metadata columns
   * ([[graft.sources.GraftTable.metadataColumns]]): advertised through
   * `SupportsMetadataColumns` for the row-level delta operations, they
-  * must ALSO be servable by a plain SELECT on every read stack — the
-  * stock parquet path (routed through `MetaRoutingScanBuilder`), the
-  * DV-applying scan, and the bucketed scan — with values in the DV
-  * sidecar's key space (manifest path + physical row index). */
+  * must ALSO be servable by a plain SELECT of every version — all
+  * through the native scan: a clean version's query that references
+  * them is routed there from the stock parquet path
+  * (`MetaRoutingScanBuilder`, which keeps every conjunct residual, so
+  * a partition predicate is never lost), and DV-carrying and bucketed
+  * versions plan through it anyway — with values in the DV sidecar's
+  * key space (manifest path + physical row index). */
 class MetadataColumnSpec extends SparkTestBase {
 
   private def tmp(name: String): String = {

@@ -4,8 +4,8 @@ import graft.sources.{RowIds, Sources}
 import org.apache.spark.sql.functions._
 
 /** The SQL surface of row lineage: `CALL system.enable_rowids`, the
-  * `_row_id` metadata column on every read stack a flat lineage table
-  * takes (plain routed scan, native DV scan, eq-pending V1 wrap), and
+  * `_row_id` metadata column on every version of a flat lineage table
+  * (clean, DV-carrying, eq-pending — all served by the native scan), and
   * the `` t$rid `` inventory table. */
 class SqlLineageSpec extends SparkTestBase {
 

@@ -90,9 +90,9 @@ class StatisticsSpec extends SparkTestBase {
       assert(broadcastJoins(factJoin) === 0 && sortMergeJoins(factJoin) === 1,
         s"fact-fact must not broadcast at an 8 KB threshold:\n" +
           factJoin.queryExecution.executedPlan)
-      // DV the dimension: the read routes through the V1 wrap, whose
-      // BaseRelation/Scan now report the manifest size — still a
-      // planner-side broadcast
+      // DV the dimension: the read plans through the native scan,
+      // whose statistics report the kept files' manifest size — still
+      // a planner-side broadcast
       val t = s"$wh/dim"
       val (_, marked, usedDv) = Sources.deleteWhereDv(spark, t,
         col("n_nationkey") === 0L)
