@@ -924,7 +924,8 @@ object LakeOps {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.readAllLines(
           java.nio.file.Paths.get(t, s"v$v.manifest")).asScala.toSet
-          .filter(_.nonEmpty)
+          // data files only — `#` trailers are commit metadata
+          .filter(l => l.nonEmpty && !l.startsWith("#"))
       }
       val carried =
         if (manifest(vBase).subsetOf(manifest(vM))) 1L else 0L

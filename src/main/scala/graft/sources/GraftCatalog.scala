@@ -906,54 +906,6 @@ private[sources] class GraftMetaReaderFactory
   }
 }
 
-/** A real DSv2 `BatchWrite` over the format: executors stream
-  * `InternalRow`s through Spark's own parquet `OutputWriter` (obtained
-  * from `ParquetFileFormat.prepareWrite` on the driver and shipped to
-  * tasks), each task commits its file names, and the driver publish is
-  * one conflict-detecting manifest swap naming exactly the committed
-  * files — the two-phase protocol every DSv2 sink implements, here
-  * ending in a versioned-table commit instead of a directory rename. */
-private[sources] class GraftBatchWrite(spark: SparkSession, table: String,
-    schema: StructType, basedOn: Int)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-
-  import org.apache.spark.sql.connector.write.{DataWriterFactory, PhysicalWriteInfo, WriterCommitMessage}
-  private val batchDir = java.nio.file.Paths.get(table, "data",
-    s"batch-rlo-${java.util.UUID.randomUUID().toString.take(12)}")
-  // every file is new after a whole-table-group rewrite: the sidecars
-  // are the writers' own lines, for every column the base covers
-  private val cover = Sources.sidecarCover(table, basedOn)
-  private val spec = GraftDataWriterFactory.statsSpec(spark, schema, cover)
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    java.nio.file.Files.createDirectories(batchDir)
-    GraftDataWriterFactory(spark, batchDir.toString, schema, spec)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case GraftWriteMessage(fs, _) => fs
-    }.flatten.toSeq.sorted
-    // the files' footer shape, so readers never infer it
-    Sources.recordFileCols(files, schema)
-    val next =
-      try Sources.publishReplacing(table, basedOn, files)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          abort(messages); throw e
-      }
-    // a rewrite that deletes everything publishes an EMPTY version:
-    // pin the write schema or the table has no schema source left
-    if (files.isEmpty) Sources.publishSchema(table, next, schema)
-    else Sources.commitSidecars(table, next, -1,
-      GraftWriteMessage.lines(spec, messages), cover)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    Sources.deleteTree(batchDir)
-}
-
 /** A DSv2 write task's files and, per file, the statistics its writer
   * accumulated ([[FileStatsSpec]]). */
 private[graft] case class GraftWriteMessage(files: Seq[String],
@@ -1253,8 +1205,9 @@ private[graft] class GraftStreamingWrite(spark: SparkSession,
       // unreferenced parquet under data/ forever, since vacuum only
       // sweeps manifest-referenced files) and records no entry, so the
       // retry is never mistaken for a duplicate
-      // the epoch's sidecar lines ride the publish; writing them cannot
-      // fail it, so a published epoch's files are never deleted here
+      // the epoch's sidecar lines ride the publish: staging them fails
+      // it only before the link, so a published epoch's files are never
+      // deleted here
       val v =
         try Sources.commitVersionFiles(table, files, Some(schema),
           txn = Some(queryId -> epochId),

@@ -15,15 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * BRANCHES implement WAP (write-audit-publish): a branch is a FULL
   * graft table directory under `<table>/branches/<name>/` whose v1
   * manifest lists the parent head's files verbatim — fork cost is one
-  * manifest + sidecar copy, zero data movement, and every Sources
-  * commit path (append, CoW/MoR merge, DV delete, compaction) works on
-  * the branch unchanged because it IS a table. Main readers never see
+  * manifest link carrying the head's sidecars, zero data movement, and
+  * every Sources commit path (append, CoW/MoR merge, DV delete,
+  * compaction) works on the branch unchanged because it IS a table. Main readers never see
   * branch commits (separate manifest chain). PUBLISH fast-forwards
   * main to the branch head as one conflict-detected metadata commit:
   * branch-local batch directories RENAME into the parent's data pool
   * (same-filesystem rename — no bytes copied, compensated on a lost
-  * race), the rewritten file list publishes as main's next version,
-  * and the branch head's sidecars carry over with their paths mapped.
+  * race), and the rewritten file list publishes as main's next version
+  * with the branch head's sidecars, paths mapped, riding the same link.
   * A main commit after the fork fails the publish loudly — WAP is
   * fast-forward-only; re-fork and re-apply to rebase.
   *
@@ -136,9 +136,11 @@ object Refs {
   }
 
   /** Fork the head as branch `name`: publish the head's exact file
-    * list as the branch's v1 with the head's sidecars — one manifest
-    * write, zero data movement. Returns the branch table directory
-    * (every [[Sources]] API works on it directly). */
+    * list as the branch's v1, its DV marks, declared schema and skipping
+    * lines riding the same link ([[Sources.publish]], which resolves
+    * each through the head's manifest) — one manifest link, zero data
+    * movement. Returns the branch table directory (every [[Sources]]
+    * API works on it directly). */
   def createBranch(table: String, name: String): String = {
     val v = Sources.latestVersion(table)
     require(v > 0, s"$table has no committed versions to branch")
@@ -151,19 +153,6 @@ object Refs {
       !java.nio.file.Files.exists(forkFile(bd)),
       s"branch '$name' already exists on $table")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(bd))
-    Sources.publishManifest(bd, 1, Sources.filesOf(table, v))
-    // the head's declared schema + skipping sidecars + DVs hold
-    // verbatim on the identical file list (a sidecar-less version's
-    // branch infers from footers exactly like its parent)
-    Sources.declaredSchema(table, v)
-      .foreach(Sources.publishSchema(bd, 1, _))
-    Seq("stats", "bloom", "dv", "ndv").foreach { kind =>
-      val src = java.nio.file.Paths.get(table, s"v$v.$kind")
-      if (java.nio.file.Files.exists(src))
-        java.nio.file.Files.copy(src,
-          java.nio.file.Paths.get(bd, s"v1.$kind"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
     // table properties (partition/bucket/layout contracts) govern the
     // branch's own commits identically
     val props = java.nio.file.Paths.get(table, "table.properties")
@@ -171,6 +160,13 @@ object Refs {
       java.nio.file.Files.copy(props,
         java.nio.file.Paths.get(bd, "table.properties"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // the head's DVs, declared schema and skipping lines hold verbatim
+    // on the identical file list (a sidecar-less version's branch infers
+    // from footers exactly like its parent)
+    Sources.publish(bd, 0, "branch", Sources.filesOf(table, v))(
+      dv = Sources.dvOf(table, v), schema = Sources.declaredSchema(table, v),
+      carryFrom = -1, fresh = Sources.linesOf(table, v),
+      cover = StatsCover.empty)
     val tmp = java.nio.file.Files.createTempFile(
       java.nio.file.Paths.get(bd), ".fork", ".tmp")
     java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
@@ -182,11 +178,12 @@ object Refs {
 
   /** FAST-FORWARD PUBLISH: make the branch head main's next version as
     * one metadata commit. Branch-local batch directories rename into
-    * the parent's data pool (no bytes move), the mapped file list
+    * the parent's data pool (no bytes move), and the mapped file list
     * publishes conflict-detected against the fork base — a main commit
     * since the fork fails LOUDLY before anything is touched (re-fork
-    * to rebase) — and the branch head's sidecars carry with their
-    * paths mapped. Returns main's new version. */
+    * to rebase) — with the branch head's DV marks, declared schema and
+    * skipping lines, paths mapped, riding the same link. Returns main's
+    * new version. */
   def publishBranch(table: String, name: String): Int = {
     val bd = branchDir(table, name)
     val bh = Sources.latestVersion(bd)
@@ -204,9 +201,6 @@ object Refs {
           "and re-apply the branch's changes")
     val branchData = s"$bd/data/"
     val mainData = s"$table/data/"
-    // force any crash-pending staged sidecar of the branch head to its
-    // canonical name before the text-copy below looks for it
-    Sources.dvOf(bd, bh)
     val head = Sources.filesOf(bd, bh)
     // branch-local files group into immutable batch dirs (UUID-named:
     // no collision in the parent pool); carried parent files pass through
@@ -215,6 +209,8 @@ object Refs {
     def mapPath(p: String): String =
       if (p.startsWith(branchData)) mainData + p.stripPrefix(branchData)
       else p
+    // sidecar lines key on absolute file paths
+    def mapLine(l: String): String = l.replace(branchData, mainData)
     val moved = scala.collection.mutable.Buffer.empty[(java.nio.file.Path, java.nio.file.Path)]
     // journal the move list BEFORE touching anything: a crash mid-move
     // leaves a record [[repairPublish]] uses to un-move on next entry
@@ -231,18 +227,18 @@ object Refs {
           java.nio.file.Files.move(from, to)
           moved += ((from, to))
         }
-        // the branch head's DV sidecar (paths mapped into the parent
-        // pool) rides the claim atomically — a racing committer's carry
-        // pass can never see the published version without its deletes
-        val dvBytes: Map[String, Array[Byte]] = {
-          val src = java.nio.file.Paths.get(bd, s"v$bh.dv")
-          if (!java.nio.file.Files.exists(src)) Map.empty
-          else Map("dv" -> new String(
-            java.nio.file.Files.readAllBytes(src), "UTF-8")
-            .replace(branchData, mainData).getBytes("UTF-8"))
-        }
-        Sources.publishIfLatestStaged(table, forkBase,
-          head.map(mapPath), "branch publish", dvBytes)
+        // the branch head's sidecars (paths mapped into the parent pool)
+        // ride the claim — a racing committer's carry pass can never see
+        // the published version without its deletes
+        val lines = Sources.linesOf(bd, bh)
+        Sources.publish(table, forkBase, "branch publish",
+            head.map(mapPath))(
+          dv = Sources.dvOf(bd, bh).map { case (f, b) => mapPath(f) -> b },
+          schema = Sources.declaredSchema(bd, bh), carryFrom = -1,
+          fresh = SidecarLines(lines.files.map(mapPath),
+            lines.stats.map(mapLine), lines.ndv.map(mapLine),
+            lines.bloom.map(mapLine)),
+          cover = StatsCover.empty)
       } catch {
         case e: Throwable =>
           // ANY pre-publish failure (lost race, IO error, collision):
@@ -257,35 +253,22 @@ object Refs {
     // a failure here must NOT un-move (main already references the
     // moved files)
     java.nio.file.Files.deleteIfExists(journal)
-    // branch-head sidecars carry with their paths mapped (text formats
-    // all key lines by absolute file path; dv rode the claim above)
-    Sources.declaredSchema(bd, bh)
-      .foreach(Sources.publishSchema(table, next, _))
-    Seq("stats", "bloom", "ndv").foreach { kind =>
-      val src = java.nio.file.Paths.get(bd, s"v$bh.$kind")
-      if (java.nio.file.Files.exists(src)) {
-        val text = new String(
-          java.nio.file.Files.readAllBytes(src), "UTF-8")
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(table, s"v$next.$kind"),
-          text.replace(branchData, mainData).getBytes("UTF-8"))
+    // keep the branch HEAD readable post-publish: re-point its path-keyed
+    // sidecars and its manifest at the moved locations (the one
+    // sanctioned manifest rewrite — same version, same files, new
+    // paths, the same `#` trailers; intermediate branch versions become
+    // history-only).
+    Seq("stats", "bloom", "dv", "ndv").foreach { kind =>
+      Sources.resolveSidecar(bd, bh, kind).foreach { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        java.nio.file.Files.write(p, mapLine(text).getBytes("UTF-8"))
       }
     }
-    // keep the branch HEAD readable post-publish: re-point its
-    // manifest and path-keyed sidecars at the moved locations (the
-    // one sanctioned manifest rewrite — same version, same files,
-    // new paths; intermediate branch versions become history-only).
     java.nio.file.Files.write(
       java.nio.file.Paths.get(bd, s"v$bh.manifest"),
-      head.map(mapPath).mkString("\n").getBytes("UTF-8"))
-    Seq("stats", "bloom", "dv", "ndv").foreach { kind =>
-      val p = java.nio.file.Paths.get(bd, s"v$bh.$kind")
-      if (java.nio.file.Files.exists(p)) {
-        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        java.nio.file.Files.write(p,
-          text.replace(branchData, mainData).getBytes("UTF-8"))
-      }
-    }
+      Sources.manifestLines(bd, bh).map(l =>
+        if (l.startsWith("#")) l else mapPath(l))
+        .mkString("\n").getBytes("UTF-8"))
     // mark published; drop_branch reclaims the chain
     java.nio.file.Files.write(
       java.nio.file.Paths.get(bd, "published.as"),

@@ -385,7 +385,7 @@ object Sources {
       .sorted
   }
 
-  private def manifestLines(table: String, version: Int): Seq[String] =
+  private[sources] def manifestLines(table: String, version: Int): Seq[String] =
     scala.jdk.CollectionConverters.ListHasAsScala(
       java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get(table, s"v$version.manifest"))).asScala.toSeq
@@ -403,7 +403,7 @@ object Sources {
   // of the commit that applies it — Delta's SetTransaction (appId,
   // version) riding the log entry it guards. The position and the data
   // it covers publish in ONE atomic manifest link, so no crash window
-  // exists between "applied" and "recorded". [[publishManifest]] copies
+  // exists between "applied" and "recorded". [[publish]] copies
   // the previous version's entries forward and replaces only the
   // committing consumer's, so every commit path (compaction, purge,
   // rollback, merges) keeps the ledger without per-path code. For a
@@ -472,7 +472,7 @@ object Sources {
     *
     * Optimistic concurrency: the data batch is written ONCE (immutable,
     * uniquely named), then the manifest publish claims the next version
-    * number atomically ([[publishManifest]]); if a concurrent committer
+    * number atomically ([[publish]]); if a concurrent committer
     * claimed it first, the commit RE-READS the new latest file set and
     * retries with the next number — append commits commute (each
     * retry re-carries the winner's files, so no commit is ever lost)
@@ -559,146 +559,182 @@ object Sources {
   private def deleteBatchDir(path: java.nio.file.Path): Unit =
     deleteTree(path)
 
-  /** The ONE contended-publish loop shared by every commutable commit
-    * path ([[commitVersion]], [[commitVersionChecked]]): claim
-    * latest+1, and on losing the race re-read the new latest (append
-    * re-carries the winner's files; overwrite still replaces whatever
-    * is latest) and try the next number. Bounded so pathological
-    * contention fails loudly instead of livelocking. NOT used by
-    * [[mergeVersion]]/[[rollbackTo]], whose semantics do not commute
-    * with a racing commit — they DETECT the conflict instead. */
+  /** The contended-publish loop of the commutable commit paths
+    * ([[commitVersion]], [[commitVersionFiles]], [[commitVersionChecked]],
+    * [[commitVersionEvolving]]): a retry loop over [[publish]]. Each
+    * attempt rebuilds the version against the re-read head — an append
+    * re-carries the winner's files with their DV and eq state, declared
+    * schema and skipping lines; an overwrite still replaces whatever is
+    * latest — and a lost claim tries the next number. The lost-coverage
+    * scan runs at most once per file across attempts (`scanned`): data
+    * files are immutable. Bounded so pathological contention fails
+    * loudly instead of livelocking. `declared` fixes the version's
+    * declared schema (the evolving commit's); otherwise an append onto
+    * a declared head re-declares it evolved by `batchSchema` (strict: a
+    * narrowing batch is rejected before anything is published), and an
+    * overwrite declares nothing — the batch footer IS the schema —
+    * unless it is empty and has no footer to fall back to. The merges
+    * and rewrites call [[publish]] directly: their file lists are
+    * derived from one version and do not commute with a racing commit. */
   private def publishNextVersion(table: String, newFiles: Seq[String],
       overwrite: Boolean, batchSchema: Option[StructType] = None,
+      declared: Option[StructType] = None,
       txn: Option[(String, Long)] = None,
       fresh: SidecarLines = SidecarLines.empty,
       cover: StatsCover = StatsCover.empty): Option[Int] = {
+    val scanned = new ScanMemo
     var attempt = 0
     while (true) {
       val prev = latestVersion(table)
-      val next = prev + 1
       // the ledger check runs per attempt against the version the claim
       // builds on: of two racing runs of one consumer only one applies
       if (txnApplied(table, prev, txn)) return None
-      // a manifest-only append (a consumer's bookmark) re-publishes the
-      // head's file set, so its schema and skipping sidecars carry too
-      val bookmark = newFiles.isEmpty && !overwrite && prev > 0
-      val carried = if (overwrite || prev == 0) Nil else filesOf(table, prev)
-      // Declared-schema carry-forward: once a table has been evolved
-      // (some prior version pinned a sidecar), a PLAIN append must not
-      // silently revert the read surface to "footer of the first data
-      // file" — with mixed file generations that is an arbitrary
-      // generation, and evolved columns can vanish from SQL reads. So
-      // an append onto a declared version re-declares: previous schema
-      // evolved by the incoming batch's (strict — a narrowing batch is
-      // REJECTED here, before any manifest is published, same contract
-      // as commitVersionEvolving). Overwrites replace the file set
-      // wholesale, so the batch footer IS the schema — no sidecar.
-      // Computed before the publish so an incompatible batch fails
-      // without claiming a version number.
-      val declaredNext: Option[StructType] =
-        if (overwrite || prev == 0)
-          // an EMPTY replacing/first version has no data-file footer to
-          // fall back to — pin the batch schema or the table becomes
-          // unreadable (schemaOf would .head an empty file list)
-          if (newFiles.isEmpty) batchSchema else None
-        else if (bookmark) declaredSchema(table, prev)
-        else batchSchema.flatMap(bs =>
-          declaredSchema(table, prev).map(ds =>
-            evolveSchema(ds, bs, Map.empty)))
-      // DV + eq carry: an APPEND keeps the previous files in the
-      // manifest, so their deleted rows must stay deleted in the new
-      // version; an overwrite replaces the file set and starts clean.
-      // STAGED before the claim (recomputed per attempt against the
-      // re-read latest) so a concurrent carry pass can never observe
-      // the claimed manifest without its delete state.
-      val dv = if (overwrite || prev == 0) Map.empty[String, java.util.BitSet]
-        else carriedDv(table, prev, carried)
-      val eq = if (overwrite || prev == 0) Nil
-        else carriedEq(table, prev, carried)
-      val staged =
-        (if (dv.nonEmpty) Map("dv" -> stageSidecar(table, "dv",
-          dvText(dv).getBytes("UTF-8"))) else Map.empty[String, String]) ++
-          (if (eq.nonEmpty) Map("eq" -> stageSidecar(table, "eq",
-            eqText(eq).getBytes("UTF-8"))) else Map.empty[String, String])
-      val claimed =
-        try {
-          publishManifest(table, next, carried ++ newFiles, staged, txn)
-          promoteStaged(table, next, staged)
-          declaredNext.foreach(publishSchema(table, next, _))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            discardStaged(table, staged)
-            attempt += 1
-            require(attempt < 64,
-              s"publishNextVersion: lost the publish race $attempt times on $table")
-            false
-        }
-      if (claimed) {
-        // outside the claim: `next` is published whatever happens here
-        commitSidecars(table, next,
-          if (overwrite || prev == 0) -1 else prev, fresh, cover)
-        return Some(next)
+      val replace = overwrite || prev == 0
+      val carried = if (replace) Nil else filesOf(table, prev)
+      val schema = declared.orElse(
+        if (replace) batchSchema.filter(_ => newFiles.isEmpty)
+        // a manifest-only append (a consumer's bookmark) re-publishes
+        // the head's file set, so its schema carries as it is
+        else if (newFiles.isEmpty) declaredSchema(table, prev)
+        else batchSchema.flatMap(bs => declaredSchema(table, prev)
+          .map(evolveSchema(_, bs, Map.empty))))
+      try return Some(publish(table, prev,
+          if (overwrite) "overwrite" else "append", carried ++ newFiles)(
+        dv = if (replace) Map.empty else carriedDv(table, prev, carried),
+        eq = if (replace) Nil else carriedEq(table, prev, carried),
+        schema = schema, carryFrom = if (replace) -1 else prev,
+        fresh = fresh, cover = cover, txn = txn, scanned = scanned))
+      catch {
+        case _: java.util.ConcurrentModificationException =>
+          attempt += 1
+          require(attempt < 64,
+            s"publishNextVersion: lost the publish race $attempt times on $table")
       }
     }
     None // unreachable
   }
 
-  /** Publish `files` as version latest+1, REQUIRING that `basedOn` is
-    * still the latest — the conflict-DETECTING publish for operations
-    * whose file list was derived from a specific version and is stale
-    * the moment anyone else commits (merge's carried list, rollback's
-    * restore target). A lost race surfaces as ConcurrentModification
-    * with a clear retry instruction, never a silent lost update and
-    * never a raw filesystem exception. */
-  private[sources] def publishIfLatest(table: String, basedOn: Int,
-      files: Seq[String], op: String): Int = {
-    val next = basedOn + 1
-    try {
-      publishManifest(table, next, files)
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$op on $table was based on v$basedOn but another commit " +
-            s"claimed v$next first; re-read the table and retry the $op")
-    }
-  }
-
   /** Re-publish `version`'s exact file list as the new latest —
-    * rollback with zero data movement. Conflict-detecting: if another
-    * commit lands while rolling back, the rollback FAILS (restoring
-    * over an unseen commit would silently discard it). */
-  def rollbackTo(table: String, version: Int): Int = {
-    // the restored version's DV + eq state rides the claim (staged) —
-    // a racing committer's carry pass must never see the rolled-back
-    // manifest without its delete sidecars
-    val next = publishIfLatestWith(table, latestVersion(table),
-      filesOf(table, version), "rollback",
-      dv = dvOf(table, version), eq = eqOf(table, version))
-    // a rollback restores the old SCHEMA contract too, or readers of
-    // the restored file set would see a later declared schema — and
-    // the old stats sidecar (identical file set, identical stats)
-    declaredSchema(table, version).foreach(publishSchema(table, next, _))
-    copyStatsSidecar(table, version, next)
+    * rollback with zero data movement. The restored version's DV and eq
+    * state, declared schema and skipping lines ride the claim, so
+    * readers of the restored file set see its own schema contract.
+    * Conflict-detecting: if another commit lands while rolling back,
+    * the rollback FAILS (restoring over an unseen commit would silently
+    * discard it). */
+  def rollbackTo(table: String, version: Int): Int =
+    publish(table, latestVersion(table), "rollback", filesOf(table, version))(
+      dv = dvOf(table, version), eq = eqOf(table, version),
+      schema = declaredSchema(table, version), carryFrom = version,
+      cover = sidecarCover(table, version))
+
+  // ---- the one publish: a version is its manifest ---------------------
+  //
+  // Everything a version owns publishes with ONE atomic manifest link:
+  // its file list, and the sidecars it carries — DV and eq state, the
+  // declared schema, the stats/NDV/bloom lines — each written BEFORE the
+  // link under a uniquely-named staged file that a `#sidecar <ext>
+  // <name>` trailer names, plus the `#txn` ledger and a `#commit <op>`
+  // record. A reader that can see the manifest can therefore always
+  // resolve the version's complete metadata; no crash between the link
+  // and a later write can leave a version without its schema, its
+  // deletes or its skipping lines, and no racing committer's carry pass
+  // can see the claimed version without them (the classic sidecar
+  // TOCTOU). After the link only the promote renames (staged name to
+  // canonical `v<N>.<ext>`) and the lineage id cache write run; a reader
+  // repairs an interrupted promote on first resolve
+  // ([[resolveSidecar]]). Delta's log entry is the model: `metaData` and
+  // each file's `add.stats` in one atomic commit file.
+
+  /** Publish `files` as version `basedOn + 1` of `table`, REQUIRING that
+    * `basedOn` is still the latest: a lost race surfaces as
+    * ConcurrentModification with a clear retry instruction — never a
+    * silent lost update, never a raw filesystem exception — after the
+    * staged sidecars are discarded. Anything failing before the link
+    * (staging, the lost-coverage scan) fails the commit with nothing
+    * published.
+    *
+    * By default the version carries `basedOn`'s declared schema
+    * ([[carriedSchema]]) and, over `cover`, `carryFrom`'s stats/NDV/bloom
+    * lines for every file it keeps; `fresh` holds the lines of the files
+    * the commit wrote. A kept file `carryFrom` counts no rows for
+    * (committed before its table covered any column, or carried from a
+    * version whose lines were lost) is read once through the writers'
+    * accumulator ([[scanFileStats]]), so lost coverage comes back on the
+    * next commit; otherwise nothing is scanned. `op` names the commit in
+    * its `#commit` record ([[history]]). */
+  private[sources] def publish(table: String, basedOn: Int, op: String,
+      files: Seq[String])(
+      dv: Map[String, java.util.BitSet] = Map.empty,
+      eq: Seq[EqEntry] = Nil,
+      schema: Option[StructType] = carriedSchema(table, basedOn, files),
+      carryFrom: Int = basedOn,
+      fresh: SidecarLines = SidecarLines.empty,
+      cover: StatsCover = sidecarCover(table, basedOn),
+      txn: Option[(String, Long)] = None,
+      scanned: ScanMemo = new ScanMemo): Int = {
+    val next = basedOn + 1
+    val content = (if (dv.isEmpty) Nil else Seq("dv" -> dvText(dv))) ++
+      (if (eq.isEmpty) Nil else Seq("eq" -> eqText(eq))) ++
+      schema.map(s => "schema" -> s.json) ++ sidecarTexts(skippingLines(
+        table, files, carryFrom, fresh, cover, scanned), cover)
+    val staged = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    try {
+      content.foreach { case (ext, text) =>
+        staged(ext) = stageSidecar(table, ext, text.getBytes("UTF-8")) }
+      linkManifest(table, next, files, staged.toMap, op, txn)
+    } catch {
+      case e: Throwable =>
+        discardStaged(table, staged.toMap)
+        e match {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            throw new java.util.ConcurrentModificationException(
+              s"$op on $table was based on v$basedOn but another commit " +
+                s"claimed v$next first; re-read the table and retry the $op")
+          case _ => throw e
+        }
+    }
+    promoteStaged(table, next, staged.toMap)
+    // row-lineage tables persist the version's id assignment eagerly
+    // (deterministic derivation makes this a best-effort cache write —
+    // a crash here self-heals on the next read); disabled tables pay
+    // one properties-file probe
+    if (RowIds.enabled(table)) RowIds.ensure(table, next)
     next
   }
 
-  /** Atomically publish `files` as the `version` manifest, or throw
+  /** The declared schema a version carries from `base` by default: the
+    * base's own. A base without one pins its effective schema (minus
+    * the internal `_row_id` column) when the version would otherwise
+    * lose its schema source: an emptied version has no data file whose
+    * footer could serve it, and on a lineage table a rewrite's
+    * materialized ids must never leak into footer-inferred reads. */
+  private def carriedSchema(table: String, base: Int,
+      files: Seq[String]): Option[StructType] =
+    declaredSchema(table, base).orElse {
+      if (base < 1 || filesOf(table, base).isEmpty ||
+          (files.nonEmpty && !RowIds.enabled(table))) None
+      else Some(StructType(schemaOf(SparkSession.active, table, base)
+        .fields.filterNot(_.name == RowIds.COL)))
+    }
+
+  /** Link `files` as the `version` manifest, or throw
     * `FileAlreadyExistsException` if that version was already claimed.
     *
     * The content is written to a temp file first, then HARD-LINKED to
     * the manifest name: link creation is the one filesystem primitive
     * that both fails atomically when the target exists (the version
     * claim — O_EXCL semantics) and exposes only complete content to
-    * readers (the link points at fully-written bytes). The previous
-    * `Files.move` without REPLACE_EXISTING looked equivalent but its
-    * exists-check + rename is NOT atomic on POSIX — two racing
-    * committers could both pass the check and the second rename would
-    * silently OVERWRITE the first manifest, losing a commit. */
-  private[sources] def publishManifest(table: String, version: Int,
-      files: Seq[String], sidecars: Map[String, String] = Map.empty,
-      txn: Option[(String, Long)] = None): Unit = {
+    * readers (the link points at fully-written bytes). A `Files.move`
+    * without REPLACE_EXISTING looks equivalent but its exists-check +
+    * rename is NOT atomic on POSIX — two racing committers could both
+    * pass the check and the second rename would silently OVERWRITE the
+    * first manifest, losing a commit. Trailers name the staged
+    * sidecars, carry the `#txn` ledger forward from the previous
+    * version with the committing consumer's entry replaced, and record
+    * the operation. */
+  private def linkManifest(table: String, version: Int,
+      files: Seq[String], sidecars: Map[String, String], op: String,
+      txn: Option[(String, Long)]): Unit = {
     txn.foreach { case (c, n) =>
       require(c.nonEmpty && !c.exists(ch => ch == '\t' || ch == '\n') &&
         n >= 0, s"invalid ledger entry ($c, $n) for $table")
@@ -706,40 +742,15 @@ object Sources {
     val dir = java.nio.file.Paths.get(table)
     java.nio.file.Files.createDirectories(dir)
     val tmp = java.nio.file.Files.createTempFile(dir, s".v$version", ".tmp")
-    // trailer lines point at PRE-STAGED sidecar files (see
-    // [[stageSidecar]]) so a reader that can see this manifest can
-    // always resolve complete DV/eq state — the claim and its
-    // correctness-bearing sidecars publish as one atomic unit. The
-    // `#txn` ledger carries forward from the previous version with the
-    // committing consumer's entry replaced.
     val ledger = (txnsOf(table, version - 1) ++ txn).toSeq.sortBy(_._1)
     val lines = files ++ sidecars.toSeq.sortBy(_._1)
       .map { case (ext, name) => s"#sidecar\t$ext\t$name" } ++
-      ledger.map { case (c, n) => s"#txn\t$c\t$n" }
+      ledger.map { case (c, n) => s"#txn\t$c\t$n" } :+ s"#commit\t$op"
     java.nio.file.Files.write(tmp,
       lines.mkString("\n").getBytes("UTF-8"))
     try java.nio.file.Files.createLink(dir.resolve(s"v$version.manifest"), tmp)
     finally java.nio.file.Files.deleteIfExists(tmp)
-    // row-lineage tables persist the version's id assignment eagerly
-    // (deterministic derivation makes this a best-effort cache write —
-    // a crash here self-heals on the next read); disabled tables pay
-    // one properties-file probe
-    if (RowIds.enabled(table)) RowIds.ensure(table, version)
   }
-
-  // ---- staged sidecars: closing the claim→sidecar publish window -----
-  //
-  // A committer that writes its DV/eq sidecars AFTER claiming the
-  // manifest leaves a window in which a racing committer's carry pass
-  // reads the claimed version WITHOUT its sidecars — the brand-new
-  // delete entries silently drop out of every later version and the
-  // retired rows resurrect (the classic sidecar TOCTOU). Closed here
-  // by inverting the order: sidecar CONTENT is written to a
-  // uniquely-named staged file BEFORE the claim, the manifest carries a
-  // `#sidecar <ext> <name>` trailer naming it, and the atomic manifest
-  // link publishes both at once. After a successful claim the staged
-  // file is renamed to the canonical `v<N>.<ext>`; if the committer
-  // dies in between, any reader repairs the rename on first resolve.
 
   /** Write sidecar bytes under a unique staged name (returns it). */
   private def stageSidecar(table: String, ext: String,
@@ -773,27 +784,40 @@ object Sources {
       }.toMap
   }
 
-  /** Resolve a version's sidecar file: the canonical `v<N>.<ext>` if
-    * present, else the manifest's staged pointer (repair-renaming it to
-    * canonical opportunistically — racing the committer's own rename is
-    * benign, ATOMIC_MOVE of the same source lets exactly one win). A
-    * pointer whose file exists neither staged nor canonical fails
-    * loudly: the version's deletes are lost, and reading it as "no
-    * deletes" would bring the deleted rows back. */
-  private def resolveSidecar(table: String, version: Int,
+  /** Sidecar kinds that only prune: a lost one reads as "no lines". */
+  private val skippingKinds = Set("stats", "ndv", "bloom")
+
+  /** Resolve a version's sidecar file — every metadata reader comes
+    * through here, so only the writers' promote and the sweeps name
+    * the canonical `v<N>.<ext>` files too. The canonical file if it is a
+    * regular file (anything else standing there counts as absent),
+    * else the manifest's staged pointer, repair-renaming it to canonical
+    * opportunistically (racing the committer's own rename is benign:
+    * ATOMIC_MOVE of the same source lets exactly one win). A version
+    * whose manifest names no pointer falls back to the canonical file
+    * alone (tables written before the pointers). A sidecar that exists
+    * neither staged nor canonical FAILS LOUDLY for the schema, DV and eq
+    * kinds — reading them as absent would change the version's columns
+    * or bring its deleted rows back — and reads as "no lines" for the
+    * stats, NDV and bloom kinds, which only prune. */
+  private[sources] def resolveSidecar(table: String, version: Int,
       ext: String): Option[java.nio.file.Path] = {
     val canonical = java.nio.file.Paths.get(table, s"v$version.$ext")
-    if (java.nio.file.Files.exists(canonical)) Some(canonical)
-    else sidecarPointersOf(table, version).get(ext).map { name =>
-      val staged = java.nio.file.Paths.get(table, name)
-      if (java.nio.file.Files.exists(staged))
-        scala.util.Try(java.nio.file.Files.move(staged, canonical,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE))
-      if (java.nio.file.Files.exists(canonical)) canonical
-      else if (java.nio.file.Files.exists(staged)) staged
+    def regular(p: java.nio.file.Path) = java.nio.file.Files.isRegularFile(p)
+    if (regular(canonical)) return Some(canonical)
+    val pointer = sidecarPointersOf(table, version).get(ext)
+    val staged = pointer.map(java.nio.file.Paths.get(table, _))
+    staged.filter(regular).foreach(s => scala.util.Try(
+      java.nio.file.Files.move(s, canonical,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)))
+    if (regular(canonical)) Some(canonical)
+    else staged.filter(regular).orElse {
+      if (skippingKinds(ext) ||
+          (pointer.isEmpty && !java.nio.file.Files.exists(canonical))) None
       else throw new IllegalStateException(
-        s"$table v$version points at its $ext sidecar $name, which " +
-          "exists neither staged nor canonical — its deletes are lost")
+        s"$table v$version points at its $ext sidecar " +
+          s"${pointer.getOrElse(s"v$version.$ext")}, which exists neither " +
+          s"staged nor canonical as a file — its $ext state is lost")
     }
   }
 
@@ -811,42 +835,6 @@ object Sources {
       java.nio.file.Files.deleteIfExists(
         java.nio.file.Paths.get(table, name))
     }
-
-  /** [[publishIfLatest]] with sidecar content published atomically with
-    * the claim (ext -> serialized bytes). On a lost race the staged
-    * files are deleted before the conflict surfaces. */
-  private[sources] def publishIfLatestStaged(table: String, basedOn: Int,
-      files: Seq[String], op: String,
-      sidecarBytes: Map[String, Array[Byte]],
-      txn: Option[(String, Long)] = None): Int = {
-    val staged = sidecarBytes.map { case (ext, bytes) =>
-      ext -> stageSidecar(table, ext, bytes) }
-    val next = basedOn + 1
-    try {
-      publishManifest(table, next, files, staged, txn)
-      promoteStaged(table, next, staged)
-      next
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        discardStaged(table, staged)
-        throw new java.util.ConcurrentModificationException(
-          s"$op on $table was based on v$basedOn but another commit " +
-            s"claimed v$next first; re-read the table and retry the $op")
-    }
-  }
-
-  /** The common conflict-detecting publish with DV + eq entries riding
-    * the claim — every row-delete-bearing commit path routes here. */
-  private[sources] def publishIfLatestWith(table: String, basedOn: Int,
-      files: Seq[String], op: String,
-      dv: Map[String, java.util.BitSet] = Map.empty,
-      eq: Seq[EqEntry] = Nil,
-      txn: Option[(String, Long)] = None): Int =
-    publishIfLatestStaged(table, basedOn, files, op,
-      (if (dv.nonEmpty) Map("dv" -> dvText(dv).getBytes("UTF-8"))
-       else Map.empty[String, Array[Byte]]) ++
-        (if (eq.nonEmpty) Map("eq" -> eqText(eq).getBytes("UTF-8"))
-         else Map.empty[String, Array[Byte]]), txn)
 
   /** Read `table` at `version` (default: latest) by its pinned file
     * list, through the stats-skipping manifest index: every later
@@ -924,17 +912,12 @@ object Sources {
   def dvRowCount(table: String, version: Int): Long =
     dvOf(table, version).valuesIterator.map(_.cardinality().toLong).sum
 
-  /** Publish `dv` as the version's DV sidecar (atomic move, same
-    * protocol as stats). An empty map publishes nothing — absence IS
-    * the clean state. */
+  /** `dv` as DV sidecar text, one line per file ([[publish]] stages
+    * it; an empty map publishes nothing — absence IS the clean state). */
   private[sources] def dvText(dv: Map[String, java.util.BitSet]): String =
     dv.toSeq.sortBy(_._1).map { case (f, bits) =>
       s"$f\t${java.util.Base64.getEncoder.encodeToString(bits.toByteArray)}"
     }.mkString("\n")
-
-  // (DV sidecars are no longer written post-claim — content is staged
-  // before the manifest claim and published atomically with it via
-  // [[publishIfLatestWith]]/[[publishNextVersion]].)
 
   /** `file:`-scheme scan paths normalized to the absolute form
     * manifests store (`_metadata.file_path` renders `file:///x`,
@@ -1090,11 +1073,9 @@ object Sources {
       merged.getOrElseUpdate(f, new java.util.BitSet()).set(i.toInt)
     }
     // same file list, new version: the whole commit is sidecar metadata
-    // (merged DV + carried eq ride the claim atomically)
-    val next = publishIfLatestWith(table, v, files, "dv-delete",
+    // (merged DV + carried eq, schema and skipping lines)
+    val next = publish(table, v, "dv-delete", files)(
       dv = merged.toMap, eq = eqOf(table, v))
-    declaredSchema(table, v).foreach(publishSchema(table, next, _))
-    copyStatsSidecar(table, v, next) // identical files: stats/bloom hold
     (next, matched.length.toLong, true)
   }
 
@@ -1211,12 +1192,9 @@ object Sources {
       }
     }
     // merged DV + carried eq ride the claim (base files all carry)
-    val next = publishIfLatestWith(table, basedOn, files ++ newFiles,
-      "delta-write", dv = merged.toMap,
-      eq = carriedEq(table, basedOn, files))
-    declaredSchema(table, basedOn).foreach(publishSchema(table, next, _))
-    commitSidecars(table, next, basedOn, fresh, cover)
-    next
+    publish(table, basedOn, "delta-write", files ++ newFiles)(
+      dv = merged.toMap, eq = carriedEq(table, basedOn, files),
+      fresh = fresh, cover = cover)
   }
 
   /** REORG PURGE: rewrite ONLY the DV'd files with their deletions
@@ -1242,20 +1220,17 @@ object Sources {
     val cover = sidecarCover(table, v)
     val written = writePartitionedBatch(survivors, table, batch.toString, cover)
     val newFiles = written.files
+    // no DV rides: every DV'd file was rewritten — the new version is
+    // clean and reads on the untouched vectorized fast path again;
+    // pending eq entries of the untouched files ride the claim
     val next =
-      // pending eq entries of the untouched files ride the claim
-      try publishIfLatestWith(table, v, carried ++ newFiles, "dv-purge",
-        eq = carriedEq(table, v, carried))
+      try publish(table, v, "dv-purge", carried ++ newFiles)(
+        eq = carriedEq(table, v, carried), fresh = written.lines,
+        cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    rewriteSchemaCarry(spark, table, v, next)
-    commitSidecars(table, next, v, written.lines, cover)
-    // no DV publish: every DV'd file was rewritten — the new version is
-    // clean and reads on the untouched vectorized fast path again
-    // (pending eq entries DID carry for the untouched files — staged
-    // with the claim above)
     (next, affected.length)
   }
 
@@ -1715,27 +1690,21 @@ object Sources {
     // the new eq entry (and carried DV + prior entries) ride the CLAIM
     // itself: a concurrent committer that loses the race on v+1 and
     // retries its carry pass against this version can never read the
-    // manifest without the brand-new entry — the silent-resurrection
-    // TOCTOU the post-claim publishEq form had
+    // manifest without the brand-new entry. Evolution PINS the new
+    // declared schema (old versions keep theirs — time travel reads the
+    // pre-evolution shape forever)
     val next =
-      try publishIfLatestWith(table, v, files ++ newFiles, "eq-merge",
+      try publish(table, v, "eq-merge", files ++ newFiles)(
         dv = dvOf(table, v),
         eq = eqOf(table, v) :+ EqEntry(keyCols, eqDir.toString, v),
-        txn = txn)
+        schema = evolved.orElse(carriedSchema(table, v, files ++ newFiles)),
+        fresh = written.lines, cover = cover, txn = txn)
       catch {
         case e: java.util.ConcurrentModificationException =>
           if (hasUpserts) deleteBatchDir(batch)
           deleteTree(eqDir)
           throw e
       }
-    evolved match {
-      // evolution PINS the new declared schema (old versions keep
-      // theirs — time travel reads the pre-evolution shape forever)
-      case Some(e) => publishSchema(table, next, e)
-      case None =>
-        declaredSchema(table, v).foreach(publishSchema(table, next, _))
-    }
-    commitSidecars(table, next, v, written.lines, cover)
     (next, nKeys)
   }
 
@@ -1759,11 +1728,7 @@ object Sources {
     if (affected.isEmpty) { // stale entries: absorb as metadata only
       // DVs carry (identical files); NO eq rides the claim — absorbing
       // the dead entries is this branch's whole point
-      val next = publishIfLatestWith(table, v, current, "eq-purge",
-        dv = dvOf(table, v))
-      declaredSchema(table, v).foreach(publishSchema(table, next, _))
-      copyStatsSidecar(table, v, next)
-      return (next, 0)
+      return (publish(table, v, "eq-purge", current)(dv = dvOf(table, v)), 0)
     }
     val dv = dvOf(table, v)
     val survivors = readLiveForRewrite(spark, table, v, affected)
@@ -1776,51 +1741,36 @@ object Sources {
     // (out-of-scope) files keep theirs — staged with the claim; no eq
     // rides: every in-scope file was rewritten, the version is clean
     val next =
-      try publishIfLatestWith(table, v, carried ++ newFiles, "eq-purge",
-        dv = dv.filter { case (f, _) => !inScope.contains(f) })
+      try publish(table, v, "eq-purge", carried ++ newFiles)(
+        dv = dv.filter { case (f, _) => !inScope.contains(f) },
+        fresh = written.lines, cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    rewriteSchemaCarry(spark, table, v, next)
-    commitSidecars(table, next, v, written.lines, cover)
     (next, affected.length)
   }
 
   // ---- schema-per-version: the evolution half of the format ---------
   //
-  // A version's schema is pinned in a `v<N>.schema` sidecar (JSON,
-  // published with the same temp-file + atomic-link protocol as the
-  // manifest). Readers of an OLD version see that version's pinned
-  // schema forever; an evolving commit widens/renames/extends the
-  // declared schema so readers of the NEW version see old files
-  // null-filled (added columns), losslessly widened, or mapped through
-  // the recorded rename. Sidecar-less versions (every pre-evolution
-  // commit) fall back to the head data file's footer, so the feature is
-  // strictly additive.
+  // A version's schema is pinned in a `v<N>.schema` sidecar (JSON) that
+  // rides the version's manifest link ([[publish]]). Readers of an OLD
+  // version see that version's pinned schema forever; an evolving
+  // commit widens/renames/extends the declared schema so readers of the
+  // NEW version see old files null-filled (added columns), losslessly
+  // widened, or mapped through the recorded rename. Sidecar-less
+  // versions (every pre-evolution commit) fall back to the head data
+  // file's footer, so the feature is strictly additive.
 
   /** Field-metadata key recording a rename's previous column name. */
   val RenamedFrom = "graft.renamedFrom"
 
-  private[sources] def publishSchema(table: String, version: Int,
-      schema: StructType): Unit = {
-    val dir = java.nio.file.Paths.get(table)
-    val tmp = java.nio.file.Files.createTempFile(dir, s".v$version-schema", ".tmp")
-    java.nio.file.Files.write(tmp, schema.json.getBytes("UTF-8"))
-    try java.nio.file.Files.createLink(dir.resolve(s"v$version.schema"), tmp)
-    catch { // a racing duplicate publish of the same version is benign
-      case _: java.nio.file.FileAlreadyExistsException => ()
-    } finally java.nio.file.Files.deleteIfExists(tmp)
-  }
-
   /** The declared (pinned) schema of `version`, if one was published. */
-  def declaredSchema(table: String, version: Int): Option[StructType] = {
-    val p = java.nio.file.Paths.get(table, s"v$version.schema")
-    if (!java.nio.file.Files.exists(p)) None
-    else Some(org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      .asInstanceOf[StructType])
-  }
+  def declaredSchema(table: String, version: Int): Option[StructType] =
+    resolveSidecar(table, version, "schema").map(p =>
+      org.apache.spark.sql.types.DataType.fromJson(
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+        .asInstanceOf[StructType])
 
   /** Effective schema of `version`: the pinned sidecar, else the head
     * data file's footer (pre-evolution versions). Starts no Spark job. */
@@ -1935,10 +1885,8 @@ object Sources {
         s"key column(s) ${lost.mkString(", ")} — purge_eq first")
     val cover = sidecarCover(table, prevV)
     val written = writeBatch(df, table, cover)
-    val v = publishNextVersion(table, written.files, overwrite = false,
-      fresh = written.lines, cover = cover).get
-    publishSchema(table, v, declared)
-    v
+    publishNextVersion(table, written.files, overwrite = false,
+      declared = Some(declared), fresh = written.lines, cover = cover).get
   }
 
   /** Read `version` under its DECLARED schema, aligning every file
@@ -1988,16 +1936,15 @@ object Sources {
   // filter for point-predicate skipping (`.bloom`). A data file is
   // immutable, so its lines are computed ONCE — by the job that writes
   // it ([[FileStats]]) — and every later commit that keeps the file
-  // copies them forward verbatim. No commit path scans data for them;
-  // [[commitStats]] is the explicit backfill for files no sidecar covers.
+  // carries them forward verbatim in its own link ([[publish]]). No
+  // commit path scans data for them; [[commitStats]] is the explicit
+  // backfill for files no sidecar covers.
 
   /** The raw lines of `version`'s `kind` sidecar; empty if it has none. */
-  private def sidecarRaw(table: String, version: Int,
-      kind: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(table, s"v$version.$kind")
-    if (version < 1 || !java.nio.file.Files.exists(p)) Nil
-    else sidecarLines(p)
-  }
+  private[graft] def sidecarRaw(table: String, version: Int,
+      kind: String): Seq[String] =
+    if (version < 1) Nil
+    else resolveSidecar(table, version, kind).map(sidecarLines).getOrElse(Nil)
 
   /** (file, column) of one sidecar line: `.ndv` lines lead with their
     * `R`/`H` tag (an `R` line covers no column). */
@@ -2007,6 +1954,19 @@ object Sources {
     else if (fs(0) == "H") fs.lift(1).zip(fs.lift(2))
     else None
   }
+
+  /** The data file one sidecar line describes, normalized. */
+  private def lineFile(kind: String, line: String): Option[String] = {
+    val fs = line.split("\t", 3)
+    (if (kind == "ndv") fs.lift(1) else fs.lift(0)).map(normalizePath)
+  }
+
+  /** Every line of `version`, verbatim: what a fork of the version onto
+    * another table ([[cloneTable]], [[Refs]]) carries. */
+  private[sources] def linesOf(table: String, version: Int): SidecarLines =
+    SidecarLines(filesOf(table, version).toSet, sidecarRaw(table, version,
+      "stats"), sidecarRaw(table, version, "ndv"),
+      sidecarRaw(table, version, "bloom"))
 
   /** The columns a commit based on `base` covers: the declared
     * `stats.columns`/`bloom.columns` plus every column `base`'s sidecars
@@ -2018,68 +1978,67 @@ object Sources {
       (bloomColumnsOf(table) ++ covered("bloom")).distinct)
   }
 
-  /** Publish `version`'s skipping sidecars: the lines of `carryFrom`
-    * (-1: none) for every file the version keeps, plus the `fresh` lines
-    * of the files the commit wrote. A kept file `carryFrom` counts no
-    * rows for (committed before its table covered any column, or carried
-    * from a version whose own sidecars were never written, e.g. by a
-    * racing commit that had not written them yet) is read once through
-    * the writers' accumulator ([[scanFileStats]]), so coverage lost on
-    * one commit comes back on the next; otherwise nothing is scanned.
-    * Runs after `version` is published and never fails its commit: the
-    * sidecars only prune, so on an error the version stays readable,
-    * unpruned, until the next commit restores its lines. */
-  private[sources] def commitSidecars(table: String, version: Int,
-      carryFrom: Int, fresh: SidecarLines, cover: StatsCover): Unit =
-    try {
-      val wrote = fresh.files.map(normalizePath)
-      val counted = sidecarRaw(table, carryFrom, "ndv").flatMap { l =>
-        val fs = l.split("\t", 3)
-        if (fs(0) == "R") fs.lift(1).map(normalizePath) else None
-      }.toSet
-      val lost = if (cover.isEmpty) Nil else filesOf(table, version)
-        .filterNot { f => val n = normalizePath(f); wrote(n) || counted(n) }
-      val scanned = if (lost.isEmpty) SidecarLines.empty
-        else scanFileStats(SparkSession.active, table, version, lost, cover)
-      writeSidecars(table, version, carryFrom, fresh ++ scanned, cover)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"[graft] $table v$version committed without skipping sidecars: $e")
-    }
-
-  /** [[commitSidecars]]' write: `carryFrom`'s lines of every file not in
-    * `fresh`, plus `fresh`. A sidecar kind the `cover` declares is
-    * written even when empty, as a marker that the table keeps it. */
-  private def writeSidecars(table: String, version: Int, carryFrom: Int,
-      fresh: SidecarLines, cover: StatsCover): Unit = {
-    val keep = filesOf(table, version).map(normalizePath).toSet --
-      fresh.files.map(normalizePath)
-    def carried(kind: String): Seq[String] =
-      sidecarRaw(table, carryFrom, kind).filter { l =>
-        val fs = l.split("\t", 3)
-        (if (kind == "ndv") fs.lift(1) else fs.lift(0))
-          .exists(f => keep(normalizePath(f)))
+  /** The lost-coverage scan's lines across one publish loop's attempts:
+    * data files are immutable, so each is scanned at most once. */
+  private[sources] final class ScanMemo {
+    private var done = Set.empty[String]
+    private var lines = SidecarLines.empty
+    def apply(files: Seq[String])(
+        scan: Seq[String] => SidecarLines): SidecarLines = {
+      val need = files.filterNot(f => done(normalizePath(f)))
+      if (need.nonEmpty) {
+        lines = lines ++ scan(need)
+        done ++= need.map(normalizePath)
       }
-    writeSidecar(table, version, "stats", carried("stats") ++ fresh.stats,
-      cover.stats.nonEmpty)
-    writeSidecar(table, version, "ndv", carried("ndv") ++ fresh.ndv,
-      force = false)
-    writeSidecar(table, version, "bloom", carried("bloom") ++ fresh.bloom,
-      cover.blooms.nonEmpty)
+      // only the asked files' lines: an earlier attempt may have
+      // scanned a file this one no longer keeps
+      val want = files.map(normalizePath).toSet
+      def of(kind: String, ls: Seq[String]) =
+        ls.filter(lineFile(kind, _).exists(want))
+      SidecarLines(lines.files.filter(f => want(normalizePath(f))),
+        of("stats", lines.stats), of("ndv", lines.ndv),
+        of("bloom", lines.bloom))
+    }
   }
 
-  private def writeSidecar(table: String, version: Int, kind: String,
-      lines: Seq[String], force: Boolean): Unit =
-    if (lines.nonEmpty || force) {
-      val dir = java.nio.file.Paths.get(table)
-      val tmp = java.nio.file.Files.createTempFile(dir, s".$kind$version", ".tmp")
-      try {
-        java.nio.file.Files.write(tmp, lines.sorted.mkString("\n").getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp, dir.resolve(s"v$version.$kind"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      } finally java.nio.file.Files.deleteIfExists(tmp)
+  /** The skipping lines of a version holding `files`: `carryFrom`'s
+    * (-1: none) for every file the commit did not write, plus `fresh`.
+    * A kept file `carryFrom` counts no rows for is read once through
+    * the writers' accumulator ([[scanFileStats]]) — only where `cover`
+    * declares columns. */
+  private def skippingLines(table: String, files: Seq[String],
+      carryFrom: Int, fresh: SidecarLines, cover: StatsCover,
+      scanned: ScanMemo): SidecarLines = {
+    val wrote = fresh.files.map(normalizePath)
+    val counted = sidecarRaw(table, carryFrom, "ndv").flatMap { l =>
+      val fs = l.split("\t", 3)
+      if (fs(0) == "R") fs.lift(1).map(normalizePath) else None
+    }.toSet
+    lazy val inCarry = filesOf(table, carryFrom).map(normalizePath).toSet
+    val lost = if (cover.isEmpty || carryFrom < 1) Nil else files.filter { f =>
+      val n = normalizePath(f); !wrote(n) && !counted(n) && inCarry(n) }
+    val written = fresh ++ (if (lost.isEmpty) SidecarLines.empty
+      else scanned(lost)(scanFileStats(SparkSession.active, table,
+        carryFrom, _, cover)))
+    val keep = files.map(normalizePath).toSet --
+      written.files.map(normalizePath)
+    def carried(kind: String): Seq[String] =
+      sidecarRaw(table, carryFrom, kind)
+        .filter(lineFile(kind, _).exists(keep))
+    SidecarLines(files.toSet, carried("stats") ++ written.stats,
+      carried("ndv") ++ written.ndv, carried("bloom") ++ written.bloom)
+  }
+
+  /** kind -> sidecar text of a version's skipping `lines`. A kind the
+    * `cover` declares is published even when empty, as a marker that
+    * the table keeps it. */
+  private def sidecarTexts(lines: SidecarLines,
+      cover: StatsCover): Seq[(String, String)] =
+    Seq(("stats", lines.stats, cover.stats.nonEmpty),
+      ("ndv", lines.ndv, false),
+      ("bloom", lines.bloom, cover.blooms.nonEmpty)).collect {
+      case (kind, ls, marker) if ls.nonEmpty || marker =>
+        kind -> ls.sorted.mkString("\n")
     }
 
   /** Backfill `version`'s sidecars for `cols` (min/max + NDV): files
@@ -2112,8 +2071,20 @@ object Sources {
       val n = normalizePath(f)
       cols.forall(c => statted((n, c)))
     }
-    writeSidecars(table, version, version,
-      scanFileStats(spark, table, version, need, cover), cover)
+    // the version is already published: its lines are rewritten in
+    // place, canonical, under the same atomic-move protocol
+    val dir = java.nio.file.Paths.get(table)
+    sidecarTexts(skippingLines(table, filesOf(table, version), version,
+        scanFileStats(spark, table, version, need, cover), cover,
+        new ScanMemo), cover).foreach { case (kind, text) =>
+      val tmp = java.nio.file.Files.createTempFile(dir, s".$kind$version", ".tmp")
+      try {
+        java.nio.file.Files.write(tmp, text.getBytes("UTF-8"))
+        java.nio.file.Files.move(tmp, dir.resolve(s"v$version.$kind"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      } finally java.nio.file.Files.deleteIfExists(tmp)
+    }
   }
 
   /** [[commitStats]]' scan: one job over `files` under the declared
@@ -2154,25 +2125,19 @@ object Sources {
     * "unknown" — the planner then simply gets no estimate. */
   def ndvOf(table: String,
       version: Int): (Map[String, Long], Map[(String, String), Array[Byte]]) = {
-    val p = java.nio.file.Paths.get(table, s"v$version.ndv")
-    if (!java.nio.file.Files.exists(p)) (Map.empty, Map.empty)
-    else {
-      val dec = java.util.Base64.getDecoder
-      val ls = scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(p)).asScala.filter(_.nonEmpty)
-      val rows = ls.flatMap { l =>
-        scala.util.Try {
-          val Array("R", f, n) = l.split("\t", 3); f -> n.toLong
-        }.toOption
-      }.toMap
-      val sketches = ls.flatMap { l =>
-        scala.util.Try {
-          val Array("H", f, c, b) = l.split("\t", 4)
-          (f, c) -> dec.decode(b)
-        }.toOption
-      }.toMap
-      (rows, sketches)
-    }
+    val ls = sidecarRaw(table, version, "ndv")
+    val rows = ls.flatMap { l =>
+      scala.util.Try {
+        val Array("R", f, n) = l.split("\t", 3); f -> n.toLong
+      }.toOption
+    }.toMap
+    val sketches = ls.flatMap { l =>
+      scala.util.Try {
+        val Array("H", f, c, b) = l.split("\t", 4)
+        (f, c) -> java.util.Base64.getDecoder.decode(b)
+      }.toOption
+    }.toMap
+    (rows, sketches)
   }
 
   /** Exact live row count of a version FROM METADATA alone (sidecar
@@ -2240,19 +2205,13 @@ object Sources {
     * (file, col) -> serialized bloom for a version; malformed lines
     * degrade to "no bloom" (file kept), same contract as stats. */
   def bloomsOf(table: String,
-      version: Int): Map[(String, String), Array[Byte]] = {
-    val p = java.nio.file.Paths.get(table, s"v$version.bloom")
-    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala
-      .filter(_.nonEmpty)
-      .flatMap { line =>
-        scala.util.Try {
-          val Array(f, c, b64) = line.split("\t", 3)
-          (f, c) -> java.util.Base64.getDecoder.decode(b64)
-        }.toOption
-      }.toMap
-  }
+      version: Int): Map[(String, String), Array[Byte]] =
+    sidecarRaw(table, version, "bloom").flatMap { line =>
+      scala.util.Try {
+        val Array(f, c, b64) = line.split("\t", 3)
+        (f, c) -> java.util.Base64.getDecoder.decode(b64)
+      }.toOption
+    }.toMap
 
   /** MERGE as a copy-on-write commit at FILE granularity — the table
     * format's answer to "update/delete a handful of keys in a
@@ -2461,15 +2420,14 @@ object Sources {
     // writes a fresh batch, so leaving it would strand disk forever.
     val next =
       // untouched files' DVs + pending eq entries ride the claim
-      try publishIfLatestWith(table, v, untouched ++ newFiles, "merge",
+      try publish(table, v, "merge", untouched ++ newFiles)(
         dv = carriedDv(table, v, untouched),
-        eq = carriedEq(table, v, untouched), txn = txn)
+        eq = carriedEq(table, v, untouched), fresh = written.lines,
+        cover = cover, txn = txn)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    commitSidecars(table, next, v, written.lines, cover)
-    rewriteSchemaCarry(spark, table, v, next)
     (next, affected.length, untouched.length)
   }
 
@@ -2573,20 +2531,16 @@ object Sources {
     val newFiles = written.files
     val next =
       // merged DV + carried eq entries ride the claim (every base
-      // file carries)
-      try publishIfLatestWith(table, v, files ++ newFiles, "dv-merge",
-        dv = merged.toMap, eq = carriedEq(table, v, files))
+      // file carries); evolution PINS the new declared schema, old
+      // versions keep theirs
+      try publish(table, v, "dv-merge", files ++ newFiles)(
+        dv = merged.toMap, eq = carriedEq(table, v, files),
+        schema = evolved.orElse(carriedSchema(table, v, files ++ newFiles)),
+        fresh = written.lines, cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           if (hasUpserts) deleteBatchDir(batch); throw e
       }
-    evolved match {
-      // evolution PINS the new declared schema; old versions keep theirs
-      case Some(e) => publishSchema(table, next, e)
-      case None =>
-        declaredSchema(table, v).foreach(publishSchema(table, next, _))
-    }
-    commitSidecars(table, next, v, written.lines, cover)
     (next, matched.length.toLong, true)
   }
 
@@ -2594,41 +2548,31 @@ object Sources {
     * version has no stats sidecar — or something other than a file
     * stands in its place: every read plans through these maps, and
     * skipping is an optimization, never a reason to fail a read. */
-  def statsOf(table: String, version: Int): Map[(String, String), (BigDecimal, BigDecimal)] = {
-    val p = java.nio.file.Paths.get(table, s"v$version.stats")
-    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala
-      .filter(_.nonEmpty)
-      .flatMap { line =>
+  def statsOf(table: String, version: Int): Map[(String, String), (BigDecimal, BigDecimal)] =
+    sidecarRaw(table, version, "stats").flatMap { line =>
+      // a malformed/legacy line must degrade to "no stats" (file
+      // always read), never to a read-path exception
+      scala.util.Try {
         val Array(f, c, lo, hi) = line.split("\t", 4)
-        // a malformed/legacy line must degrade to "no stats" (file
-        // always read), never to a read-path exception
-        scala.util.Try((f, c) -> (BigDecimal(lo), BigDecimal(hi))).toOption
-      }.toMap
-  }
+        (f, c) -> (BigDecimal(lo), BigDecimal(hi))
+      }.toOption
+    }.toMap
 
   /** (file, col) -> (min, max) STRING stats for a version — the tagged
     * `S:`+base64 lines [[commitStats]] writes for string columns.
     * Malformed lines degrade to "no stats" (file always read), same
     * contract as the numeric map. */
   def statsOfString(table: String,
-      version: Int): Map[(String, String), (String, String)] = {
-    val p = java.nio.file.Paths.get(table, s"v$version.stats")
-    if (!java.nio.file.Files.isRegularFile(p)) Map.empty
-    else scala.jdk.CollectionConverters.ListHasAsScala(
-      java.nio.file.Files.readAllLines(p)).asScala
-      .filter(_.nonEmpty)
-      .flatMap { line =>
-        scala.util.Try {
-          val Array(f, c, lo, hi) = line.split("\t", 4)
-          require(lo.startsWith("S:") && hi.startsWith("S:"))
-          val dec = java.util.Base64.getDecoder
-          (f, c) -> (new String(dec.decode(lo.drop(2)), "UTF-8"),
-            new String(dec.decode(hi.drop(2)), "UTF-8"))
-        }.toOption
-      }.toMap
-  }
+      version: Int): Map[(String, String), (String, String)] =
+    sidecarRaw(table, version, "stats").flatMap { line =>
+      scala.util.Try {
+        val Array(f, c, lo, hi) = line.split("\t", 4)
+        require(lo.startsWith("S:") && hi.startsWith("S:"))
+        val dec = java.util.Base64.getDecoder
+        (f, c) -> (new String(dec.decode(lo.drop(2)), "UTF-8"),
+          new String(dec.decode(hi.drop(2)), "UTF-8"))
+      }.toOption
+    }.toMap
 
   /** The file-pruning decision, exposed for tests and for callers that
     * want the skipping ratio: the version's files split into (kept,
@@ -2779,24 +2723,13 @@ object Sources {
     }
   }
 
-  /** Publish `files` as a REPLACING version derived from `basedOn` —
-    * the commit half of the row-level-operation BatchWrite (MERGE /
-    * UPDATE rewrites): conflict-detecting because the replacement rows
-    * were computed against `basedOn`, and declared schema carries
-    * forward (the rewrite preserves the table schema). */
-  private[sources] def publishReplacing(table: String, basedOn: Int,
-      files: Seq[String]): Int = {
-    val next = publishIfLatest(table, basedOn, files, "row-level rewrite")
-    declaredSchema(table, basedOn).foreach(publishSchema(table, next, _))
-    next
-  }
-
   /** ALTER TABLE as a metadata-only commit: re-publish the latest
-    * version's exact file set under `schema` as a new version. Zero
-    * data movement; conflict-detecting (an ALTER racing a data commit
-    * must not silently drop the racer's files). The stats sidecar is
-    * copied verbatim — identical file set, identical stats — so file
-    * skipping survives a schema change. */
+    * version's exact file set under `schema` as a new version — the new
+    * declared schema, the DV and eq state and the skipping lines (an
+    * identical file set has identical stats, so file skipping survives
+    * a schema change) all ride the one link. Zero data movement;
+    * conflict-detecting (an ALTER racing a data commit must not silently
+    * drop the racer's files). */
   def alterSchema(table: String, schema: StructType): Int = {
     val v = latestVersion(table)
     require(v > 0, s"$table has no committed versions")
@@ -2809,22 +2742,9 @@ object Sources {
     require(lost.isEmpty,
       s"ALTER on $table would rename/drop pending equality-delete key " +
         s"column(s) ${lost.mkString(", ")} — purge_eq first")
-    val next = publishIfLatestWith(table, v, filesOf(table, v), "alter",
-      dv = dvOf(table, v), eq = eqOf(table, v))
-    publishSchema(table, next, schema)
-    copyStatsSidecar(table, v, next)
-    next
+    publish(table, v, "alter", filesOf(table, v))(
+      dv = dvOf(table, v), eq = eqOf(table, v), schema = Some(schema))
   }
-
-  /** Carry `from`'s skipping sidecars to `to`, a version with the
-    * identical file set. DV and eq state is NOT carried here: it is
-    * correctness-bearing and rides each commit's atomic staged-sidecar
-    * claim instead (a post-claim copy re-opens the carry-pass TOCTOU
-    * that protocol closes). */
-  private[sources] def copyStatsSidecar(table: String, from: Int,
-      to: Int): Unit =
-    commitSidecars(table, to, from, SidecarLines.empty,
-      sidecarCover(table, from))
 
   /** Per-table properties sidecar (`table.properties`, JSON) — catalog
     * metadata like `stats.columns` that must outlive any one session.
@@ -3106,21 +3026,6 @@ object Sources {
       RowIds.readFileSubsetWithRowIds(spark, table, version, files)
     else readLive(spark, table, version, Some(files))
 
-  /** Schema carry for a rewrite commit: the declared schema where one
-    * exists; on a lineage table WITHOUT one, pin the pre-rewrite
-    * effective schema (minus the internal `_row_id` column) — the
-    * materialized column must never leak into footer-inferred reads. */
-  private def rewriteSchemaCarry(spark: SparkSession, table: String,
-      v: Int, next: Int): Unit =
-    declaredSchema(table, v) match {
-      case Some(s) => publishSchema(table, next, s)
-      case None if RowIds.enabled(table) =>
-        publishSchema(table, next, StructType(
-          schemaOf(spark, table, v).fields
-            .filterNot(_.name == RowIds.COL)))
-      case None => ()
-    }
-
   /** Create an empty table: version 1 is an empty file set whose
     * declared schema is the DDL schema — what `CREATE TABLE g.t (...)`
     * through [[GraftCatalog]] publishes. Readers of v1 see an empty
@@ -3129,10 +3034,7 @@ object Sources {
   def createEmptyTable(table: String, schema: StructType): Int = {
     require(latestVersion(table) == 0,
       s"$table already has committed versions")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(table))
-    publishManifest(table, 1, Nil)
-    publishSchema(table, 1, schema)
-    1
+    publish(table, 0, "create", Nil)(schema = Some(schema))
   }
 
   /** File-granular copy-on-write DELETE: files that `fileMayMatch`
@@ -3169,24 +3071,16 @@ object Sources {
     val written = writePartitionedBatch(survivors, table, batch.toString, cover)
     val newFiles = written.files
     val next =
-      // rewritten files' DVs/eq absorb; carried files' ride the claim
-      try publishIfLatestWith(table, v, carried ++ newFiles, "delete",
+      // rewritten files' DVs/eq absorb; carried files' ride the claim;
+      // a delete-all pins the pre-delete schema ([[carriedSchema]])
+      try publish(table, v, "delete", carried ++ newFiles)(
         dv = carriedDv(table, v, carried),
-        eq = carriedEq(table, v, carried))
+        eq = carriedEq(table, v, carried), fresh = written.lines,
+        cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    if ((carried ++ newFiles).isEmpty)
-      // delete-all on a sidecar-less version: pin the pre-delete
-      // effective schema or the empty version has NO schema source at
-      // all and every later read/insert dies resolving it
-      publishSchema(table, next, StructType(
-        schemaOf(spark, table, v).fields
-          .filterNot(_.name == RowIds.COL)))
-    else
-      rewriteSchemaCarry(spark, table, v, next)
-    commitSidecars(table, next, v, written.lines, cover)
     (next, affected.length, carried.length)
   }
 
@@ -3241,15 +3135,14 @@ object Sources {
     val newFiles = written.files
     val next =
       // rewritten files' DVs/eq absorb; carried files' ride the claim
-      try publishIfLatestWith(table, v, carried ++ newFiles, "update",
+      try publish(table, v, "update", carried ++ newFiles)(
         dv = carriedDv(table, v, carried),
-        eq = carriedEq(table, v, carried))
+        eq = carriedEq(table, v, carried), fresh = written.lines,
+        cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    rewriteSchemaCarry(spark, table, v, next)
-    commitSidecars(table, next, v, written.lines, cover)
     val updated = Option(obs.get.getOrElse("updated", null)) match {
       case Some(n: Number) => n.longValue()
       case _ => 0L
@@ -3340,10 +3233,12 @@ object Sources {
 
   /** The table's commit log as a DataFrame — DESCRIBE HISTORY for the
     * minimal table format: one row per version with its file count,
-    * total bytes, whether a stats sidecar exists, and the manifest's
-    * publish time. Everything comes from manifests + the filesystem
-    * (KB-scale metadata), no data files are opened — the audit surface
-    * a table owner queries before time-traveling or vacuuming. */
+    * total bytes, whether it has a stats sidecar, the manifest's publish
+    * time and the operation its `#commit` record names (null for
+    * versions published before the record). Everything comes from
+    * manifests + the filesystem (KB-scale metadata), no data files are
+    * opened and no Spark job starts — the audit surface a table owner
+    * queries before time-traveling or vacuuming. */
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     versionsOf(table).map { v =>
@@ -3352,11 +3247,12 @@ object Sources {
         java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
       val mtime = java.nio.file.Files.getLastModifiedTime(
         java.nio.file.Paths.get(table, s"v$v.manifest")).toMillis
-      val hasStats = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(table, s"v$v.stats"))
-      (v, fs.length.toLong, bytes, hasStats, new java.sql.Timestamp(mtime))
-    }.toDF("version", "n_files", "total_bytes", "has_stats", "committed_at")
-      .orderBy("version")
+      val op = manifestLines(table, v).collectFirst {
+        case l if l.startsWith("#commit\t") => l.stripPrefix("#commit\t") }
+      (v, fs.length.toLong, bytes, resolveSidecar(table, v, "stats").isDefined,
+        new java.sql.Timestamp(mtime), op)
+    }.toDF("version", "n_files", "total_bytes", "has_stats", "committed_at",
+      "operation").orderBy("version")
   }
 
   /** VACUUM: physically delete data files referenced ONLY by expired
@@ -3514,10 +3410,10 @@ object Sources {
 
   /** SHALLOW CLONE: fork `srcTable`'s latest version into a brand-new
     * independent table that shares the source's DATA FILES byte-for-
-    * byte — the commit copies only metadata (manifest, schema, DV,
-    * stats/bloom sidecars, table properties; pending equality-delete
-    * KEY parquets are copied into the clone's own tree so the source
-    * never owes the clone anything but data bytes). Writes to either
+    * byte — the commit writes only metadata: the table properties and
+    * one manifest link carrying the cut version's declared schema, its
+    * delete state as DV marks and its stats/NDV/bloom lines, so the
+    * source never owes the clone anything but data bytes. Writes to either
     * table diverge freely afterwards: each side's commits reference
     * its own new batches, and the vacuum ownership guard means the
     * clone can never delete source bytes.
@@ -3575,22 +3471,13 @@ object Sources {
         eqPos.get(f).foreach(b.or)
         f -> b
       }.toMap
-      val staged =
-        if (dv.nonEmpty) Map("dv" -> stageSidecar(dstTable, "dv",
-          dvText(dv).getBytes("UTF-8")))
-        else Map.empty[String, String]
-      publishManifest(dstTable, 1, files, staged)
-      promoteStaged(dstTable, 1, staged)
-      declaredSchema(srcTable, v).foreach(publishSchema(dstTable, 1, _))
-      // path-keyed skipping sidecars stay valid verbatim (shared paths)
-      Seq("stats", "bloom", "ndv").foreach { ext =>
-        val s = java.nio.file.Paths.get(srcTable, s"v$v.$ext")
-        if (java.nio.file.Files.exists(s))
-          java.nio.file.Files.copy(s,
-            java.nio.file.Paths.get(dstTable, s"v1.$ext"))
-      }
       writeTableProperties(dstTable, tableProperties(srcTable) ++
         Map("clone.of" -> srcTable, "clone.id" -> cloneId))
+      // the DV, the declared schema and the path-keyed skipping lines
+      // (valid verbatim: shared paths) ride the clone's first link
+      publish(dstTable, 0, "clone", files)(dv = dv,
+        schema = declaredSchema(srcTable, v), carryFrom = -1,
+        fresh = linesOf(srcTable, v), cover = StatsCover.empty)
       v
     } catch { case e: Throwable =>
       // a failed clone must not leak its pin (it would block the
@@ -3668,20 +3555,19 @@ object Sources {
       try writeBatch(compacted, table, cover)
       finally toRelease.foreach(_.unpersist(false))
     val newFiles = written.files
+    // no DV carry: compaction reads through readVersion (DVs applied)
+    // and rewrites every file — the new version is clean by definition,
+    // and its sidecars are the write's own lines for every covered
+    // column, so OPTIMIZE never drops file skipping
     val next =
-      try publishIfLatest(table, v, newFiles, "compaction")
+      try publish(table, v, "compaction", newFiles)(carryFrom = -1,
+        fresh = written.lines, cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           newFiles.headOption.foreach(f => deleteBatchDir(
             java.nio.file.Paths.get(f).getParent))
           throw e
       }
-    rewriteSchemaCarry(spark, table, v, next)
-    // no DV carry: compaction reads through readVersion (DVs applied)
-    // and rewrites every file — the new version is clean by definition,
-    // and its sidecars are the write's own lines for every covered
-    // column, so OPTIMIZE never drops file skipping
-    if (newFiles.nonEmpty) commitSidecars(table, next, -1, written.lines, cover)
     (next, before, filesOf(table, next).length)
   }
 
@@ -3741,16 +3627,14 @@ object Sources {
     val next =
       // scoped files' DV marks are applied and absorbed; carried files
       // keep theirs (and their pending eq entries) — staged at claim
-      try publishIfLatestWith(table, v, carried ++ newFiles,
-        "scoped compaction",
+      try publish(table, v, "scoped compaction", carried ++ newFiles)(
         dv = dv.filter { case (f, _) => !affected.contains(f) },
-        eq = carriedEq(table, v, carried))
+        eq = carriedEq(table, v, carried), fresh = written.lines,
+        cover = cover)
       catch {
         case e: java.util.ConcurrentModificationException =>
           deleteBatchDir(batch); throw e
       }
-    rewriteSchemaCarry(spark, table, v, next)
-    commitSidecars(table, next, v, written.lines, cover)
     (next, affected.length, newFiles.length)
   }
 }

@@ -326,4 +326,36 @@ class BranchTagSpec extends SparkTestBase {
     assert(Sources.readVersion(spark, t2, v)
       .filter(col("o_orderkey") === k).count() === 0L)
   }
+
+  test("a branch forked while its head's DV promote is pending keeps the " +
+    "head's deletes, and publishing keeps the branch head's trailers") {
+    val t = freshTable("ref-dvcrash")
+    Sources.commitVersion(spark.range(0, 20, 1, 1).select(col("id").as("k")), t)
+    Sources.deleteWhereDv(spark, t, col("k") < 3)
+    val v = Sources.latestVersion(t)
+    def pointer(table: String, ver: Int, ext: String): String = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(table,
+        s"v$ver.manifest")).asScala.map(_.split("\t", -1)).collectFirst {
+        case Array("#sidecar", `ext`, name) => name
+      }.get
+    }
+    // the state a crash between the link and the promote leaves
+    java.nio.file.Files.move(java.nio.file.Paths.get(t, s"v$v.dv"),
+      java.nio.file.Paths.get(t, pointer(t, v, "dv")))
+    val bd = Refs.createBranch(t, "audit")
+    assert(Sources.readVersion(spark, t).count() === 17L)
+    assert(Sources.readVersion(spark, bd).count() === 17L)
+    // a branch commit recording a ledger position, then publish: the
+    // rewritten branch head keeps its sidecar pointers and its `#txn`
+    Sources.commitVersion(spark.range(100, 105, 1, 1).select(col("id").as("k")),
+      bd, txn = Some("audit-feed" -> 7L))
+    val bh = Sources.latestVersion(bd)
+    Refs.publishBranch(t, "audit")
+    assert(Sources.readVersion(spark, t).count() === 22L)
+    assert(Sources.readVersion(spark, bd, bh).count() === 22L)
+    assert(Sources.appliedVersion(bd, "audit-feed") === 7L)
+    assert(scala.util.Try(pointer(bd, bh, "dv")).isSuccess,
+      "the branch head keeps its sidecar pointer")
+  }
 }

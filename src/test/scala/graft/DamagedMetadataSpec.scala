@@ -60,6 +60,39 @@ class DamagedMetadataSpec extends SparkTestBase {
       .contains("exists neither staged nor canonical"))
   }
 
+  test("a schema pointer whose file exists neither staged nor canonical " +
+    "fails the read") {
+    val t = table(tmp("dmg-schema"))
+    Sources.alterSchema(t, Sources.schemaOf(spark, t, 1)
+      .add("note", org.apache.spark.sql.types.StringType))
+    val v = Sources.latestVersion(t)
+    assert(Sources.readVersion(spark, t).columns.contains("note"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(t, s"v$v.schema"))
+    assert(loud(Sources.declaredSchema(t, v))
+      .contains("exists neither staged nor canonical"))
+    assert(loud(Sources.readVersion(spark, t).count())
+      .contains("exists neither staged nor canonical"))
+  }
+
+  test("a stats pointer whose file exists neither staged nor canonical " +
+    "reads unpruned") {
+    val root = tmp("dmg-stats")
+    val t = s"$root/t"
+    Sources.writeTableProperties(t, Map("stats.columns" -> "k",
+      "bloom.columns" -> "k"))
+    Sources.commitVersion(spark.range(0, 20, 1, 2).select(col("id").as("k"),
+      (col("id") * 10).as("v")), t)
+    val v = Sources.latestVersion(t)
+    assert(Sources.statsOf(t, v).nonEmpty)
+    Seq("stats", "ndv", "bloom").foreach(ext => java.nio.file.Files.delete(
+      java.nio.file.Paths.get(t, s"v$v.$ext")))
+    assert(Sources.statsOf(t, v).isEmpty && Sources.bloomsOf(t, v).isEmpty)
+    assert(Sources.ndvOf(t, v)._1.isEmpty)
+    assert(Sources.readVersion(spark, t).filter(col("k") === 3).count() === 1L)
+    assert(Sources.pruneFiles(t, v, "k", 0, 1)._2.isEmpty,
+      "no file is skipped without its lines")
+  }
+
   test("a malformed #txn entry fails the consumer's drain") {
     import spark.implicits._
     val root = tmp("dmg-txn")

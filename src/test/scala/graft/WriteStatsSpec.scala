@@ -64,14 +64,9 @@ class WriteStatsSpec extends SparkTestBase {
       .filter(l => l.nonEmpty && !l.startsWith("#"))
   }
 
-  private def sidecar(t: String, v: Int, kind: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(t, s"v$v.$kind")
-    if (!java.nio.file.Files.exists(p)) Nil
-    else {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
-    }
-  }
+  /** The version's `kind` lines as its manifest resolves them. */
+  private def sidecar(t: String, v: Int, kind: String): Seq[String] =
+    Sources.sidecarRaw(t, v, kind)
 
   /** The lines the former per-file Spark aggregate wrote for `files`:
     * one `groupBy(input_file_name())` of `min`/`max` cast to string,
@@ -212,8 +207,8 @@ class WriteStatsSpec extends SparkTestBase {
     assertSidecarsMatch(s"$wh/st")
   }
 
-  /** Make writing `t`'s `v<v>.stats` fail: a non-empty directory
-    * stands where the sidecar's atomic move lands. */
+  /** Make promoting `t`'s `v<v>.stats` fail: a non-empty directory
+    * stands where the staged sidecar's atomic move lands. */
   private def blockStats(t: String, v: Int): java.nio.file.Path = {
     val d = java.nio.file.Paths.get(t, s"v$v.stats")
     java.nio.file.Files.createDirectories(d.resolve("block"))
@@ -228,8 +223,11 @@ class WriteStatsSpec extends SparkTestBase {
     val block = blockStats(t, 2)
     assert(Sources.commitVersion(rows(1000L), t) === 2)
     assert(Sources.readVersion(spark, t, 2).count() === 400)
+    // the lines rode the link: only their promote was blocked, and the
+    // manifest's pointer still resolves them
+    assertSidecarsMatch(t)
     Sources.deleteTree(block)
-    assert(Sources.statsOf(t, 2).isEmpty)
+    assertSidecarsMatch(t)
     Sources.commitVersion(rows(2000L), t)
     assertSidecarsMatch(t)
 
