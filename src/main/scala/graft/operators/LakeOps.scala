@@ -1189,13 +1189,11 @@ object LakeOps {
   /** Q226 — SQL row-level DML on an EQ-PENDING table, oracle-gated:
     * the gap q220 left open. A CDC-fed table carries pending equality
     * deletes most of the time, and until this round MERGE/UPDATE/DELETE
-    * refused on it until `purge_eq`. Now the target scan resolves the
-    * pending key sets into per-file skip bitsets at planning time
-    * ([[graft.sources.GraftNativeScan]] + `Sources.eqRetiredPositions` —
-    * key columns + row index of each entry's in-scope files, probed
-    * against the key sets once per (entry, file)), so eq-retired rows
-    * are never match
-    * candidates. The lifecycle: eq-merge (API, O(keys)) → SQL MERGE on
+    * refused on it until `purge_eq`. Now the target scan
+    * ([[graft.sources.GraftNativeScan]]) drops eq-retired rows inside
+    * its read — each in-scope file's key columns tested against the
+    * union of the key sets reaching it (`Sources.Deletes`) — so they
+    * are never match candidates. The lifecycle: eq-merge (API, O(keys)) → SQL MERGE on
     * the PENDING table (updates the LIVE upserted generation, never
     * the retired one; re-inserts an eq-deleted key as NOT MATCHED) →
     * SQL row-level DELETE (modulo predicate: untranslatable, so it
@@ -1206,11 +1204,11 @@ object LakeOps {
     * group would appear in the output if a dead row ever matched —
     * the hash gate makes that impossible to miss.
     *
-    * Scale shape: the DML read tax on a pending table is one bounded
-    * key-probe job (entry scopes, key columns only) — the deferred
-    * position work the O(keys) commit skipped, paid exactly where
-    * Iceberg pays it (position-resolving equality deletes at read),
-    * reclaimed by the scheduled purge. */
+    * Scale shape: the DML read tax on a pending table is one set probe
+    * per row and key shape inside the target scan, plus the entries'
+    * key columns — the deferred position work the O(keys) commit
+    * skipped, paid exactly where Iceberg pays it (equality deletes
+    * applied at read), reclaimed by the scheduled purge. */
   val q226 = Query(
     "q226_eq_pending_dml",
     (s, dir) => {

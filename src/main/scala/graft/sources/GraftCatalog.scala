@@ -698,9 +698,8 @@ class GraftTable(spark: SparkSession, path: String, version: Int)
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
     // pending equality deletes are no bar: the target scan (the native
-    // scan) resolves them into per-file skip bitsets at planning time
-    // ([[GraftNativeScan.withEqSkips]]), so eq-retired rows are never
-    // match candidates — a CDC-fed table stays DML-able between
+    // scan) drops eq-retired rows inside its read ([[Sources.Deletes]]),
+    // so they are never match candidates — a CDC-fed table stays DML-able between
     // purge_eq runs
     () => new GraftDeltaOperation(spark, path, this, info.command())
 

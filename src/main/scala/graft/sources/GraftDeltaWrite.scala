@@ -64,8 +64,8 @@ private[sources] class GraftDeltaOperation(spark: SparkSession,
       Array(Expressions.column("_gfile"), Expressions.column("_gpos"))
 
   // the target scan is the catalog's native scan at the base version:
-  // `_gfile`/`_gpos` (and `_row_id`) served reader-side, DV marks and
-  // memoized eq-retired positions skipped (never match candidates), and
+  // `_gfile`/`_gpos` (and `_row_id`) served reader-side, DV-marked and
+  // eq-retired rows dropped inside the read (never match candidates), and
   // the statement's pushed conjuncts prune partitions, buckets and
   // files by stats/bloom before a task is planned
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =

@@ -39,19 +39,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * Every layout takes the same tiers: on partitioned layouts the
   * manifest index's own partition and `_pt` window pruning
   * ([[ManifestFileIndex.keptFiles]]), bucket pruning, stats/bloom
-  * sidecar file skipping (pushed and runtime/DPP conjuncts), then one
-  * skip bitset per kept file — its DV marks OR the positions pending eq
-  * entries retire in it, memoized per (entry, file)
-  * ([[GraftNativeScan.withEqSkips]]). Planning an eq-pending version
-  * therefore starts at most one probe job, none once the memo holds
-  * every kept pair, and a bucketed table keeps SPJ. Executors read
-  * through Spark's own parquet reader function (the [[GraftCdfStream]]
-  * pattern); pushed data-column conjuncts reach the reader for
-  * row-group pruning, and EVERY conjunct is left in the plan as a
-  * residual, so correctness never depends on parquet's evaluation or
-  * on pruning. Identity-partition values come from each file's path
-  * (the rule the index uses, cast to the served type); `_gfile`/`_gpos`
-  * and, on lineage tables, `_row_id` are synthesized reader-side.
+  * sidecar file skipping (pushed and runtime/DPP conjuncts). Kept files
+  * pack into splits by Spark's own rule ([[GraftNativeScan.pack]]); a
+  * bucketed layout plans one file per input partition, keyed by its
+  * bucket, so it keeps SPJ. Executors read through Spark's own parquet
+  * reader function (the [[GraftCdfStream]] pattern) and drop deleted
+  * rows inside the read with the one delete rule
+  * ([[Sources.Deletes]]): a file's DV marks and the key sets of the
+  * pending eq entries whose scope holds it, each entry's key columns
+  * read alongside the query's and projected away. Planning reads
+  * sidecars and memoized key sets only, so it starts no Spark job.
+  * Pushed data-column conjuncts reach the reader for row-group pruning,
+  * and EVERY conjunct is left in the plan as a residual, so correctness
+  * never depends on parquet's evaluation or on pruning.
+  * Identity-partition values come from each file's path (the rule the
+  * index uses, cast to the served type); `_gfile`/`_gpos` and, on
+  * lineage tables, `_row_id` are synthesized reader-side.
   */
 private[sources] class GraftNativeScanBuilder(spark: SparkSession,
     table: String, version: Int, schema: StructType,
@@ -68,11 +71,14 @@ private[sources] class GraftNativeScanBuilder(spark: SparkSession,
       conjuncts, bucket)
 }
 
-/** One data file of a native scan. `skip` holds the positions the file
-  * must not serve: its DV marks OR the rows pending eq entries retire
-  * in it. */
-private[sources] case class GraftFilePartition(path: String,
-    bytes: Long, bucketId: Int, skip: Option[Array[Byte]] = None)
+/** One kept data file of a native scan; `bucketId` is 0 off bucketed
+  * layouts. */
+private[sources] case class GraftFile(path: String, bytes: Long,
+    bucketId: Int)
+
+/** The files one task of a native scan reads, all of one bucket. */
+private[sources] case class GraftFilePartition(files: Array[GraftFile],
+    bucketId: Int)
   extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucketId))
@@ -133,8 +139,7 @@ private[sources] class GraftNativeScan(spark: SparkSession,
   // Strictly conservative — both tiers only ever DROP files proven
   // row-free for the keys.
   private var runtime: Seq[Filter] = Nil
-  private var keptCache: Array[GraftFilePartition] = _
-  private var partsCache: Array[GraftFilePartition] = _
+  private var keptCache: Array[GraftFile] = _
 
   // only columns the scan outputs: the planner resolves every
   // attribute named here against the pruned output and fails the
@@ -149,10 +154,7 @@ private[sources] class GraftNativeScan(spark: SparkSession,
   override def filter(fs: Array[Filter]): Unit = {
     runtime = fs.toSeq
     keptCache = null
-    partsCache = null
   }
-
-  private lazy val dv = Sources.dvOf(table, version)
 
   // the sizes of the files the partition and `_pt` window pruning
   // keep; None on flat and bucketed layouts, which list no file status
@@ -161,44 +163,52 @@ private[sources] class GraftNativeScan(spark: SparkSession,
       Some(ManifestFileIndex.keptFiles(spark, table, version, conjuncts))
     else None
 
-  // the files surviving partition, bucket and stats/bloom pruning, with
-  // their DV marks — sidecar metadata only, all the planner's
-  // statistics and partitioning read; one input partition per file
-  private def kept: Array[GraftFilePartition] = {
-    if (keptCache == null) keptCache = {
-      val statsKeep =
-        Sources.filterKeeper(table, version, filters ++ runtime)
-      val all = Sources.filesOf(table, version).filter(statsKeep).flatMap { f =>
-        val bytes = layoutKept.fold(Option(
-          java.nio.file.Files.size(java.nio.file.Paths.get(f))))(_.get(f))
-        val b = if (bucket.isEmpty) 0 else GraftNativeScan.bucketIdOf(f)
-          .getOrElse(throw new IllegalStateException(
-            s"bucketed table $table: data file outside a _b=<id> dir: $f " +
-              "(the table has non-bucketed batches — it was written " +
-              "outside the catalog commit path)"))
-        bytes.map(GraftFilePartition(f, _, b, dv.get(f).map(_.toByteArray)))
-      }
-      val keep = Seq(buckets, bucketsFor(runtime)).flatten
-        .reduceOption(_ intersect _)
-      keep.fold(all)(ks => all.filter(p => ks.contains(p.bucketId)))
-        .sortBy(p => (p.bucketId, p.path)).toArray
+  // the files surviving partition, bucket and stats/bloom pruning on
+  // the pushed conjuncts — sidecar metadata only
+  private lazy val staticKept: Array[GraftFile] = {
+    val statsKeep = Sources.filterKeeper(table, version, filters)
+    val all = Sources.filesOf(table, version).filter(statsKeep).flatMap { f =>
+      val bytes = layoutKept.fold(Option(
+        java.nio.file.Files.size(java.nio.file.Paths.get(f))))(_.get(f))
+      val b = if (bucket.isEmpty) 0 else GraftNativeScan.bucketIdOf(f)
+        .getOrElse(throw new IllegalStateException(
+          s"bucketed table $table: data file outside a _b=<id> dir: $f " +
+            "(the table has non-bucketed batches — it was written " +
+            "outside the catalog commit path)"))
+      bytes.map(GraftFile(f, _, b))
     }
+    buckets.fold(all)(ks => all.filter(p => ks.contains(p.bucketId)))
+      .sortBy(p => (p.bucketId, p.path)).toArray
+  }
+
+  // ... and on the runtime (DPP) conjuncts: what the tasks read, and
+  // all the planner's statistics and partitioning see
+  private def kept: Array[GraftFile] = {
+    if (keptCache == null) keptCache =
+      if (runtime.isEmpty) staticKept
+      else {
+        val statsKeep = Sources.filterKeeper(table, version, runtime)
+        val ks = bucketsFor(runtime)
+        staticKept.filter(p =>
+          statsKeep(p.path) && ks.forall(_.contains(p.bucketId)))
+      }
     keptCache
   }
 
-  // the kept files with the eq-retired positions OR'd in — what the
-  // tasks read
-  private def parts: Array[GraftFilePartition] = {
-    if (partsCache == null)
-      partsCache = GraftNativeScan.withEqSkips(spark, table, version, kept)
-    partsCache
-  }
+  // the one delete rule over the statically kept files: runtime
+  // filtering only drops files, so it covers every file a task reads
+  private lazy val deletes = new Sources.Deletes(spark, table,
+    staticKept.map(_.path).toSeq, Sources.dvOf(table, version),
+    Sources.eqOf(table, version), Sources.DeleteMode.Live,
+    dataSchema.fieldNames.toSet)
 
   /** Post-runtime-filter planned file count — the spec/gate witness. */
-  private[graft] def plannedFileCount: Int = parts.length
+  private[graft] def plannedFileCount: Int = kept.length
 
   override def planInputPartitions(): Array[InputPartition] =
-    parts.toArray[InputPartition]
+    if (bucket.isDefined)
+      kept.map(f => GraftFilePartition(Array(f), f.bucketId): InputPartition)
+    else GraftNativeScan.pack(spark, kept)
 
   override def outputPartitioning(): Partitioning = bucket match {
     case Some((c, n)) =>
@@ -225,7 +235,7 @@ private[sources] class GraftNativeScan(spark: SparkSession,
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftNativeScan.readerFactory(spark, dataSchema, partSchema, required,
-      filters, haveSkip = parts.exists(_.skip.isDefined),
+      filters, Option.when(!deletes.keepsAll)(deletes),
       // resolve the rid map ONLY when the query asked for the id — a
       // plain scan must not pay (or depend on) sidecar derivation
       rid = if (required.fieldNames.contains(RowIds.COL) &&
@@ -268,21 +278,22 @@ private[sources] object GraftNativeScan {
     case _ => None
   }
 
-  /** `kept` with each file's eq-retired positions OR'd into its skip
-    * bitset. Only the files that survived every pruning tier are
-    * probed, and [[Sources.eqRetiredPositions]] answers from its
-    * process-wide memo, so a plan starts a probe job only when an
-    * (entry, file) pair is new. */
-  def withEqSkips(spark: SparkSession, table: String, version: Int,
-      kept: Array[GraftFilePartition]): Array[GraftFilePartition] = {
-    val eq = Sources.eqOf(table, version)
-    if (eq.isEmpty || kept.isEmpty) kept
-    else {
-      val retired = Sources.eqRetiredPositions(spark, table,
-        kept.map(_.path).toSeq, eq)
-      kept.map(p => retired.get(p.path).fold(p)(r => p.copy(skip =
-        Sources.orBits(p.skip.map(java.util.BitSet.valueOf), Some(r)))))
-    }
+  /** `files` packed into splits by Spark's own rule for file scans
+    * (`FilePartition`: the max split bytes from the partition-bytes,
+    * open-cost and parallelism settings, then next-fit by size), so the
+    * native scan plans as many tasks as the stock path would for the
+    * same files. Files are never split: positions stay whole-file. */
+  def pack(spark: SparkSession,
+      files: Array[GraftFile]): Array[InputPartition] = {
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val open = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      files.map(_.bytes + open).sum)
+    val of = files.map(f => EqCheck.partitionedFile(f.path, f.bytes) -> f)
+    val file = of.toMap
+    FilePartition.getFilePartitions(spark, of.toSeq.map(_._1), maxSplit)
+      .map(p => GraftFilePartition(p.files.map(file), 0): InputPartition)
+      .toArray
   }
 
   /** The per-file reader construction: Spark's own parquet reader
@@ -294,12 +305,14 @@ private[sources] object GraftNativeScan {
     * cast to the served type. The `_gfile`/`_gpos` metadata columns are
     * synthesized reader-side (file path from the partition, position
     * from the row-index generator column), never read from parquet —
-    * schema clipping would null-fill them silently otherwise. Skipped
-    * positions (DV marks, eq-retired rows) drop inline via the indexed
-    * reader function (positions exact under row-group pruning). */
+    * schema clipping would null-fill them silently otherwise. A file
+    * the delete rule reaches is read through the indexed function,
+    * which also reads the rule's key columns the query does not ask for,
+    * and drops its deleted rows inline (positions exact under row-group
+    * pruning). */
   def readerFactory(spark: SparkSession, dataSchema: StructType,
       partSchema: StructType, required: StructType, filters: Seq[Filter],
-      haveSkip: Boolean,
+      deletes: Option[Sources.Deletes],
       rid: Option[Map[String, Long]]): PartitionReaderFactory = {
     import org.apache.spark.sql.types.{LongType, StructField}
     // lineage tables additionally synthesize `_row_id`: the physical
@@ -311,9 +324,14 @@ private[sources] object GraftNativeScan {
     val isPart = partSchema.fieldNames.toSet
     val hasMeta = required.fieldNames.exists(isMeta)
     val dataFields = required.fields.filterNot(f => isMeta(f.name) || isPart(f.name))
-    // the requested partition columns, served-typed, and their path types
+    // the requested partition columns, served-typed
     val partFields = required.fields.filter(f => isPart(f.name))
-    val pathSchema = StructType(partFields.map(f => partSchema(f.name)))
+    // the delete rule's key columns the query does not read
+    val (keyPart, keyData) = deletes.toSeq.flatMap(_.keyCols)
+      .filterNot(required.fieldNames.contains).map(dataSchema(_))
+      .partition(f => isPart(f.name))
+    val readData = dataFields ++ keyData
+    val readPart = partFields ++ keyPart
     // parquet sees data-column conjuncts only: never a partition column
     // (not in the file), a metadata column, or an id predicate — files
     // that predate materialization hold NULLs in the physical column,
@@ -328,44 +346,50 @@ private[sources] object GraftNativeScan {
       else Nil
     val fileSchema = StructType(dataSchema.fields.filterNot(f =>
       isPart(f.name) || isMeta(f.name)) ++ ridField)
-    def reader(fields: Seq[StructField]) =
+    def reader(fields: Seq[StructField], parts: Seq[StructField]) =
       new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, fileSchema, StructType(partFields), StructType(fields),
+        spark, fileSchema, StructType(parts), StructType(fields),
         safeFilters,
         Map(org.apache.spark.sql.execution.datasources.FileFormat
           .OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
     // the plain function's rows are the data fields then the partition
     // fields: when that IS the requested order and nothing is
-    // synthesized, a clean file's rows are the output rows
+    // synthesized, an untouched file's rows are the output rows
     val inOrder = !hasMeta && required.fieldNames.sameElements(
       (dataFields ++ partFields).map(_.name))
-    val readFunc = reader(dataFields)
-    // the indexed function's rows: data fields, the optional physical
-    // lineage column, the row-index generator column, partition fields
-    val ridPos = if (needRid) dataFields.length else -1
-    val rowIdxPos = dataFields.length + (if (needRid) 1 else 0)
+    val readFunc = reader(dataFields, partFields)
+    // the indexed function's rows: the read data fields, the optional
+    // physical lineage column, the row-index generator column, the read
+    // partition fields
+    val ridPos = if (needRid) readData.length else -1
+    val rowIdxPos = readData.length + (if (needRid) 1 else 0)
     val readFuncIdx =
-      if (!haveSkip && inOrder) readFunc
-      else reader(dataFields ++ ridField :+
+      if (inOrder && deletes.isEmpty) readFunc
+      else reader(readData ++ ridField :+
         StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-          LongType, nullable = true))
+          LongType, nullable = true), readPart)
+    def ordOf(n: String): Int =
+      if (isPart(n)) rowIdxPos + 1 + readPart.indexWhere(_.name == n)
+      else readData.indexWhere(_.name == n)
     // per-output-field extraction plan over an indexed row: its ordinal,
     // or a metadata tag (-1 = row index, -2 = file path, -3 = lineage id)
-    val dataIdx = dataFields.map(_.name).zipWithIndex.toMap
-    val partIdx = partFields.map(_.name).zipWithIndex.toMap
     val fields = required.fields.map { f =>
       f.name match {
         case "_gpos" => (-1, f.dataType)
         case "_gfile" => (-2, f.dataType)
         case n if needRid && n == RowIds.COL => (-3, f.dataType)
-        case n if isPart(n) => (rowIdxPos + 1 + partIdx(n), f.dataType)
-        case n => (dataIdx(n), f.dataType)
+        case n => (ordOf(n), f.dataType)
       }
     }
     new GraftNativeReaderFactory(readFunc, readFuncIdx, fields, inOrder,
-      rowIdxPos, ridPos, rid.getOrElse(Map.empty), pathSchema,
-      StructType(partFields), spark.sessionState.conf.sessionLocalTimeZone)
+      rowIdxPos, ridPos, rid.getOrElse(Map.empty),
+      // broadcast: an executor deserializes the key index once, not
+      // once per task
+      deletes.map(d => spark.sparkContext.broadcast(
+        d.spec(dataSchema(_).dataType, ordOf))),
+      StructType(readPart.map(f => partSchema(f.name))), StructType(readPart),
+      partFields.length, spark.sessionState.conf.sessionLocalTimeZone)
   }
 }
 
@@ -374,80 +398,91 @@ private[sources] class GraftNativeReaderFactory(
     readFuncIdx: PartitionedFile => Iterator[InternalRow],
     fields: Array[(Int, org.apache.spark.sql.types.DataType)],
     inOrder: Boolean, rowIdxPos: Int, ridPos: Int,
-    ridMap: Map[String, Long], pathSchema: StructType,
-    partSchema: StructType, tz: String)
+    ridMap: Map[String, Long],
+    deletes: Option[org.apache.spark.broadcast.Broadcast[DeleteSpec]],
+    pathSchema: StructType, partSchema: StructType, plainParts: Int,
+    tz: String)
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val gp = p.asInstanceOf[GraftFilePartition]
-    // the file's identity-partition values: its path's, in the served type
-    val pv =
-      if (pathSchema.isEmpty) InternalRow.empty
-      else {
-        val raw = ManifestFileIndex.partitionValues(gp.path, pathSchema)
-        InternalRow.fromSeq(pathSchema.fields.toSeq.indices.map(i =>
-          EqCheck.widen(raw.get(i, pathSchema(i).dataType),
-            pathSchema(i).dataType, partSchema(i).dataType, tz)))
-      }
-    val pf = EqCheck.partitionedFile(gp.path, gp.bytes, pv)
-    if (gp.skip.isEmpty && inOrder)
-      // fast path: no position to skip, no column to synthesize or
-      // reorder — the reader's rows ARE the output rows, zero copying
-      new PartitionReader[InternalRow] {
-        private val it = readFunc(pf)
-        override def next(): Boolean = it.hasNext
-        override def get(): InternalRow = it.next()
-        override def close(): Unit = ()
-      }
-    else {
-      // merge-on-read / metadata path: the indexed function's rows carry
-      // the row-index generator column; skipped positions drop inline,
-      // the extraction plan maps ordinals through and fills -1/-2/-3
-      // with index/path/lineage id
-      val bits = gp.skip.map(java.util.BitSet.valueOf)
-      val pathU = UTF8String.fromString(gp.path)
-      val ridBase: Option[Long] = ridMap.get(gp.path)
-      new PartitionReader[InternalRow] {
-        private val it = readFuncIdx(pf)
-        private var cur: InternalRow = _
-        override def next(): Boolean = {
-          while (it.hasNext) {
-            val r = it.next()
-            val alive = bits match {
-              case Some(b) =>
-                val i = r.getLong(rowIdxPos)
-                require(i <= Int.MaxValue,
-                  s"row index $i overflows the skip bitset")
-                !b.get(i.toInt)
-              case None => true
-            }
-            if (alive) { cur = r; return true }
-          }
-          false
+    val files = p.asInstanceOf[GraftFilePartition].files.iterator
+    // nothing synthesized: a generated projection picks the output
+    // columns out of an indexed row
+    lazy val project = org.apache.spark.sql.catalyst.expressions
+      .UnsafeProjection.create(fields.toSeq.map { case (j, dt) =>
+        org.apache.spark.sql.catalyst.expressions.BoundReference(j, dt,
+          nullable = true) })
+    new PartitionReader[InternalRow] {
+      private var raw: Iterator[InternalRow] = Iterator.empty
+      private var it: Iterator[InternalRow] = Iterator.empty
+      override def next(): Boolean = {
+        while (!it.hasNext) {
+          close()
+          if (!files.hasNext) return false
+          open(files.next())
         }
-        override def get(): InternalRow = {
-          val out = new GenericInternalRow(fields.length)
-          var i = 0
-          while (i < fields.length) {
-            fields(i) match {
-              case (-1, _) => out.update(i, cur.getLong(rowIdxPos))
-              case (-2, _) => out.update(i, pathU)
-              case (-3, _) => out.update(i,
-                if (ridPos >= 0 && !cur.isNullAt(ridPos))
-                  java.lang.Long.valueOf(cur.getLong(ridPos))
-                else ridBase match {
-                  case Some(b) =>
-                    java.lang.Long.valueOf(b + cur.getLong(rowIdxPos))
-                  case None => null
-                })
-              case (j, dt) => out.update(i,
-                if (cur.isNullAt(j)) null else cur.get(j, dt))
-            }
-            i += 1
+        true
+      }
+      override def get(): InternalRow = it.next()
+      override def close(): Unit = {
+        EqCheck.close(raw)
+        raw = Iterator.empty
+        it = Iterator.empty
+      }
+
+      private def open(f: GraftFile): Unit = {
+        // the file's identity-partition values: its path's, in the
+        // served type — the requested ones, then the rule's key columns
+        val pv =
+          if (pathSchema.isEmpty) Nil
+          else {
+            val inPath = ManifestFileIndex.partitionValues(f.path, pathSchema)
+            pathSchema.fields.toSeq.indices.map(i =>
+              EqCheck.widen(inPath.get(i, pathSchema(i).dataType),
+                pathSchema(i).dataType, partSchema(i).dataType, tz))
           }
-          out
+        val rule = deletes.map(_.value.file(Sources.normalizePath(f.path)))
+          .filterNot(_.keepsAll)
+        if (rule.isEmpty && inOrder) {
+          // fast path: nothing to drop, no column to synthesize or
+          // reorder — the reader's rows ARE the output rows, zero copying
+          raw = readFunc(EqCheck.partitionedFile(f.path, f.bytes,
+            InternalRow.fromSeq(pv.take(plainParts))))
+          it = raw
+        } else {
+          // merge-on-read / metadata path: the indexed function's rows
+          // carry the row-index generator column and the rule's key
+          // columns; deleted rows drop inline, the extraction plan maps
+          // ordinals through and fills -1/-2/-3 with index/path/lineage id
+          val pathU = UTF8String.fromString(f.path)
+          val ridBase: Option[Long] = ridMap.get(f.path)
+          raw = readFuncIdx(EqCheck.partitionedFile(f.path, f.bytes,
+            InternalRow.fromSeq(pv)))
+          val alive = rule.fold(raw)(r =>
+            raw.filter(row => r.keep(row.getLong(rowIdxPos), row)))
+          it = if (fields.forall(_._1 >= 0)) alive.map(project) else alive.map { cur =>
+            val out = new GenericInternalRow(fields.length)
+            var i = 0
+            while (i < fields.length) {
+              fields(i) match {
+                case (-1, _) => out.update(i, cur.getLong(rowIdxPos))
+                case (-2, _) => out.update(i, pathU)
+                case (-3, _) => out.update(i,
+                  if (ridPos >= 0 && !cur.isNullAt(ridPos))
+                    java.lang.Long.valueOf(cur.getLong(ridPos))
+                  else ridBase match {
+                    case Some(b) =>
+                      java.lang.Long.valueOf(b + cur.getLong(rowIdxPos))
+                    case None => null
+                  })
+                case (j, dt) => out.update(i,
+                  if (cur.isNullAt(j)) null else cur.get(j, dt))
+              }
+              i += 1
+            }
+            out
+          }
         }
-        override def close(): Unit = ()
       }
     }
   }

@@ -167,13 +167,21 @@ object Refs {
       dv = Sources.dvOf(table, v), schema = Sources.declaredSchema(table, v),
       carryFrom = -1, fresh = Sources.linesOf(table, v),
       cover = StatsCover.empty)
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(bd), ".fork", ".tmp")
-    java.nio.file.Files.write(tmp, v.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, forkFile(bd),
+    replaceAtomically(forkFile(bd), v.toString.getBytes("UTF-8"))
+    bd
+  }
+
+  /** Write `bytes` as `p` through a temp file and an atomic move: a
+    * reader (or a crash) sees the old content or the new, never a torn
+    * write. */
+  private def replaceAtomically(p: java.nio.file.Path,
+      bytes: Array[Byte]): Unit = {
+    val tmp = java.nio.file.Files.createTempFile(p.getParent,
+      s".${p.getFileName}", ".tmp")
+    java.nio.file.Files.write(tmp, bytes)
+    java.nio.file.Files.move(tmp, p,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    bd
   }
 
   /** FAST-FORWARD PUBLISH: make the branch head main's next version as
@@ -258,14 +266,15 @@ object Refs {
     // sanctioned manifest rewrite — same version, same files, new
     // paths, the same `#` trailers; intermediate branch versions become
     // history-only).
+    // Each file is replaced atomically: a torn manifest would read as a
+    // shorter file list.
     Seq("stats", "bloom", "dv", "ndv").foreach { kind =>
       Sources.resolveSidecar(bd, bh, kind).foreach { p =>
         val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        java.nio.file.Files.write(p, mapLine(text).getBytes("UTF-8"))
+        replaceAtomically(p, mapLine(text).getBytes("UTF-8"))
       }
     }
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(bd, s"v$bh.manifest"),
+    replaceAtomically(java.nio.file.Paths.get(bd, s"v$bh.manifest"),
       Sources.manifestLines(bd, bh).map(l =>
         if (l.startsWith("#")) l else mapPath(l))
         .mkString("\n").getBytes("UTF-8"))
@@ -317,33 +326,21 @@ object Refs {
     * expiring the branch's old manifests releases those pins — the
     * parent's next vacuum reclaims what only they referenced.
     *
-    * Deletion is restricted to branch-LOCAL data (paths under the
-    * branch's own pool): a branch manifest also lists carried PARENT
-    * files, whose liveness only the parent's vacuum may judge —
-    * deleting one here could cut the ground from under main. The
-    * branch head (and every kept version) stays fully readable.
-    * Returns (manifests removed, branch-local files deleted). */
+    * The branch IS a table, so this is [[Sources.vacuumVersions]] on
+    * the branch directory: expired versions' sidecars, the staged files
+    * they point at and their unpinned eq key sets go with them, and
+    * stranded staged files are swept. Its ownership guard restricts
+    * deletion to branch-LOCAL data (paths under the branch's own
+    * directory): a branch manifest also lists carried PARENT files,
+    * whose liveness only the parent's vacuum may judge. The branch head
+    * (and every kept version) stays fully readable. Returns (manifests
+    * removed, branch-local files deleted). */
   def expireBranch(table: String, name: String, keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must keep at least the branch head")
     val bd = branchDir(table, name)
     require(java.nio.file.Files.exists(forkFile(bd)),
       s"$table has no branch '$name'")
-    val versions = Sources.versionsOf(bd)
-    val (expired, kept) =
-      versions.splitAt(math.max(0, versions.length - keepLast))
-    val keepFiles = kept.flatMap(v => Sources.filesOf(bd, v)).toSet
-    val localPool = s"$bd/data/"
-    val dead = expired.flatMap(v => Sources.filesOf(bd, v)).toSet
-      .diff(keepFiles)
-      .filter(_.startsWith(localPool))
-    dead.foreach(f =>
-      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
-    expired.foreach { v =>
-      Seq("manifest", "stats", "bloom", "schema", "dv", "ndv", "eq")
-        .foreach(kind => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(bd, s"v$v.$kind")))
-    }
-    (expired.length, dead.size)
+    Sources.vacuumVersions(bd, keepLast)
   }
 
   /** Delete a branch. Unpublished: the whole tree (its local data was

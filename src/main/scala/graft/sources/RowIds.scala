@@ -131,8 +131,7 @@ object RowIds {
     * a data scan; the per-new-file cost of id assignment. */
   private def footerRowCount(file: String): Long = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(file), Sources.footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try r.getRecordCount finally r.close()
   }
@@ -142,8 +141,7 @@ object RowIds {
     * materialization flag and the enable-time name guard. */
   private[sources] def footerFields(file: String): Seq[String] = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file),
-      new org.apache.hadoop.conf.Configuration())
+      new org.apache.hadoop.fs.Path(file), Sources.footerConf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       import scala.jdk.CollectionConverters._

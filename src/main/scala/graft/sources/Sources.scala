@@ -287,6 +287,11 @@ object Sources {
 
   private[graft] val footerProbes =
     new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** The one Hadoop configuration of every driver-side footer read: a
+    * fresh `Configuration` reloads core-default/core-site by scanning
+    * the classpath jars on first use, a cost per read otherwise. */
+  private[graft] lazy val footerConf = new org.apache.hadoop.conf.Configuration()
   // file -> footer schema; entries are immutable once written (batch
   // dirs are uuid-named and never rewritten), so a process-wide cache
   // is safe and collapses repeated CDF ranges to zero metadata IO.
@@ -957,20 +962,82 @@ object Sources {
     case object Marked extends DeleteMode
   }
 
+  /** What `dv` and `eq` delete from `files` under `mode` — the one
+    * delete rule, which the native scan applies inside its reader and
+    * every DataFrame read as a row predicate ([[readRows]]). A row is
+    * dead when `dv` marks its position, or when an entry of `eq` whose
+    * scope holds the row's file holds its key, matched by [[EqCheck]];
+    * `mode` picks what is kept. An entry skips a file whose recorded
+    * columns (`_COLS`, plus the identity partition columns) predate one
+    * of its keys, and a scan that does not serve one (`served`): such a
+    * file serves the key as NULL, and a NULL key matches nothing. Built
+    * from sidecars and memoized key sets ([[EqKeyMemo]]): no Spark job. */
+  private[sources] final class Deletes(spark: SparkSession, table: String,
+      files: Seq[String], dv: Map[String, java.util.BitSet],
+      eq: Seq[EqEntry], mode: DeleteMode, served: Set[String]) {
+    private val norm = files.map(normalizePath).distinct
+    private val marks =
+      norm.flatMap(f => dv.get(f).map(f -> _.toByteArray)).toMap
+    private val partCols = partitionColumnsOf(table).toSet
+    private def scoped(e: EqEntry): Option[(EqEntry, Set[String])] =
+      if (!e.keyCols.forall(served)) None
+      else {
+        val scope = eqScope(table, e)
+        val hit = norm.filter(f => scope.contains(f) && e.keyCols.forall(k =>
+          partCols(k) || fileSchemaOf(spark, f).fieldNames.contains(k))).toSet
+        if (hit.isEmpty) None else Some(e -> hit)
+      }
+    private val drop = if (mode == DeleteMode.Marked) Nil else eq.flatMap(scoped)
+    private val need = mode match {
+      case DeleteMode.RetiredBy(by) => by.flatMap(scoped)
+      case _ => Nil
+    }
+
+    /** The columns the eq checks read, in the order [[spec]] expects. */
+    val keyCols: Seq[String] = (drop ++ need).flatMap(_._1.keyCols).distinct
+
+    /** The rule keeps every row of `files`. */
+    def keepsAll: Boolean =
+      mode == DeleteMode.Live && marks.isEmpty && drop.isEmpty
+
+    /** The rule keeps no row of `files`. */
+    def keepsNone: Boolean = mode match {
+      case DeleteMode.RetiredBy(_) => need.isEmpty
+      case DeleteMode.Marked => marks.isEmpty
+      case DeleteMode.Live => false
+    }
+
+    /** The rule as shipped state, for rows that hold key column `c`, of
+      * type `types(c)`, at `ords(c)`. Per file, the entries reaching it
+      * share one check per key shape ([[EqSets.union]]), so a row costs
+      * one probe per shape however many entries are pending. */
+    def spec(types: String => org.apache.spark.sql.types.DataType,
+        ords: String => Int): DeleteSpec = {
+      val sets = new EqSets(spark, (drop ++ need).map(_._1))
+      val unions = scala.collection.mutable.Map.empty[Seq[EqEntry], Array[EqCheck]]
+      def reaching(es: Seq[(EqEntry, Set[String])], f: String) = {
+        val in = es.collect { case (e, hit) if hit(f) => e }
+        unions.getOrElseUpdate(in, in.groupBy(_.keyCols).toSeq
+          .sortBy(_._1.mkString(",")).flatMap { case (ks, g) =>
+            sets.union(g, ks.map(types), ks.map(ords)) }.toArray)
+      }
+      val checks = norm.map(f => f -> ((reaching(drop, f), reaching(need, f))))
+        .filter { case (_, (d, n)) => d.nonEmpty || n.nonEmpty }.toMap
+      new DeleteSpec(
+        (table, files, dvText(dv.filter(kv => marks.contains(kv._1))),
+          drop.map(_._1.dataPath), need.map(_._1.dataPath), mode.toString),
+        marks, checks, sets.sets, sets.tz, mode)
+    }
+  }
+
   /** The files `only` of `version` (None: all of them) through the one
     * reader, [[ManifestFileIndex.frameForFiles]] under `schema`
-    * (default: the version's), and the one delete filter: one row
-    * predicate ([[DeleteFilter]]) over the scan's `_metadata.file_path`/
-    * `row_index` and the entries' key columns. A row is dead when `dv`
-    * marks its position, or when an entry of `eq` whose scope holds the
-    * row's file holds its key — matched by [[EqCheck]], the rule the
-    * position probe uses. `mode` picks what is kept. An entry
-    * skips a file whose recorded columns (`_COLS`, plus the identity
-    * partition columns) predate one of its keys; such a file serves the
-    * key as NULL, and a NULL key matches nothing. Key sets are read on
-    * the driver, so building the frame starts no Spark job, and the
-    * predicate runs inside the scan's own stage, so executing it starts
-    * none either. A scan with nothing to drop gets no filter. */
+    * (default: the version's), filtered by the one delete rule
+    * ([[Deletes]]) as a row predicate ([[DeleteFilter]]) over the
+    * scan's `_metadata.file_path`/`row_index` and the entries' key
+    * columns. The predicate runs inside the scan's own stage, so
+    * neither building nor executing the frame starts a job of its own.
+    * A scan with nothing to drop gets no filter. */
   private[sources] def readRows(spark: SparkSession, table: String,
       version: Int, only: Option[Seq[String]],
       dv: Map[String, java.util.BitSet], eq: Seq[EqEntry],
@@ -979,47 +1046,16 @@ object Sources {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     val df = ManifestFileIndex.frameForFiles(spark, table, version,
       only.map(_.toSet), schema)
-    val files = only.getOrElse(filesOf(table, version))
-    val norm = files.map(normalizePath).distinct
-    val marks = norm.flatMap(f => dv.get(f).map(f -> _.toByteArray)).toMap
     val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    val partCols = partitionColumnsOf(table).toSet
-    def scoped(e: EqEntry): Option[(EqEntry, Set[String])] =
-      if (!e.keyCols.forall(types.contains)) None
-      else {
-        val scope = eqScope(table, e)
-        val hit = norm.filter(f => scope.contains(f) && e.keyCols.forall(k =>
-          partCols(k) || fileSchemaOf(spark, f).fieldNames.contains(k))).toSet
-        if (hit.isEmpty) None else Some(e -> hit)
-      }
-    val drop = if (mode == DeleteMode.Marked) Nil else eq.flatMap(scoped)
-    val need = mode match {
-      case DeleteMode.RetiredBy(by) => by.flatMap(scoped)
-      case _ => Nil
-    }
-    mode match {
-      case DeleteMode.Live if marks.isEmpty && drop.isEmpty => return df
-      case DeleteMode.RetiredBy(_) if need.isEmpty => return df.filter(lit(false))
-      case DeleteMode.Marked if marks.isEmpty => return df.filter(lit(false))
-      case _ => ()
-    }
-    val keyCols = (drop ++ need).flatMap(_._1.keyCols).distinct
-    val sets = new EqSets(spark, (drop ++ need).map(_._1))
-    def checks(es: Seq[(EqEntry, Set[String])]) = es.map { case (e, hit) =>
-      sets.check(e, e.keyCols.map(types), e.keyCols.map(keyCols.indexOf)) -> hit
-    }
-    val (dropChecks, needChecks) = (checks(drop), checks(need))
-    val spec = new DeleteSpec(
-      (table, files, dvText(dv.filter(kv => marks.contains(kv._1))),
-        drop.map(_._1.dataPath), need.map(_._1.dataPath), mode.toString),
-      marks,
-      norm.map(f => f -> ((dropChecks.filter(_._2(f)).map(_._1).toArray,
-        needChecks.filter(_._2(f)).map(_._1).toArray))).toMap,
-      sets.sets, sets.tz, mode)
-    df.filter(org.apache.spark.sql.GraftColumnBridge.column(DeleteFilter(
+    val d = new Deletes(spark, table, only.getOrElse(filesOf(table, version)),
+      dv, eq, mode, types.keySet)
+    if (d.keepsAll) df
+    else if (d.keepsNone) df.filter(lit(false))
+    else df.filter(org.apache.spark.sql.GraftColumnBridge.column(DeleteFilter(
       (Seq(UnresolvedAttribute(Seq("_metadata", "file_path")),
         UnresolvedAttribute(Seq("_metadata", "row_index"))) ++
-        keyCols.map(UnresolvedAttribute.quoted)).toIndexedSeq, spec)))
+        d.keyCols.map(UnresolvedAttribute.quoted)).toIndexedSeq,
+      d.spec(types, d.keyCols.indexOf))))
   }
 
   // (DV carry for append paths is computed by [[carriedDv]] and staged
@@ -1253,11 +1289,12 @@ object Sources {
   //    parquet of keys plus the appended upsert batch. NO base data
   //    file is opened at commit time (EqualityDeleteSpec pins this
   //    with an input-metrics listener);
-  //  - every reader drops in-scope rows matching a key set: DataFrame
-  //    reads through the one row filter ([[readRows]]) testing each
-  //    row's key against the driver-read key sets, position consumers
-  //    through memoized skip bitsets ([[eqRetiredPositions]]) — the
-  //    read tax that [[purgeEq]] (and any full rewrite, e.g.
+  //  - every reader drops in-scope rows matching a key set through the
+  //    one delete rule ([[Deletes]]): the native scan inside its read,
+  //    DataFrame reads as a row filter ([[readRows]]), each testing a
+  //    row's key against the driver-read key sets; the streaming CDF and
+  //    clone through memoized position sets ([[eqRetiredPositions]]) —
+  //    the read tax that [[purgeEq]] (and any full rewrite, e.g.
   //    compaction) reclaims;
   //  - [[vacuumVersions]] retains expired manifests that are still
   //    pinned as a kept version's scope (the manifest file only — its
@@ -1313,11 +1350,11 @@ object Sources {
   private[graft] def eqKeyFooter(dataPath: String): (StructType, Long) = {
     val cached = eqKeyFooterCache.get(dataPath)
     if (cached != null) return cached
-    val conf = new org.apache.hadoop.conf.Configuration()
     val footers = eqKeyFiles(dataPath).map { p =>
+      keyParquetOpens.incrementAndGet()
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p.toString), conf))
+          new org.apache.hadoop.fs.Path(p.toString), footerConf))
       try (r.getFooter.getFileMetaData, r.getRecordCount)
       finally r.close()
     }
@@ -1331,72 +1368,158 @@ object Sources {
       .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter().convert(meta.getSchema))
     val out = (schema, footers.map(_._2).sum)
-    if (eqKeyFooterCache.size() >= fileSchemaCacheMax) eqKeyFooterCache.clear()
-    eqKeyFooterCache.put(dataPath, out)
+    rememberEqKeyFooter(dataPath, out)
     out
   }
 
-  /** Each entry's key tuples (its `keyCols`, in order) by key parquet
-    * path, read on the driver through Spark's own parquet reader — one
-    * reader function per distinct key schema: the same rows a
-    * broadcast of the key set collects to the driver, without the
-    * broadcast's Spark job. */
-  private def eqKeyRows(spark: SparkSession, entries: Seq[EqEntry])
-      : Map[String, (StructType, Seq[org.apache.spark.sql.catalyst.InternalRow])] =
-    entries.groupBy { e =>
-      val full = eqKeyFooter(e.dataPath)._1
-      (full, StructType(e.keyCols.map(full(_))))
-    }.toSeq.flatMap { case ((full, keySchema), es) =>
-      val read = new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetFileFormat().buildReaderWithPartitionValues(
-          spark, full, StructType(Nil), keySchema, Nil,
-          Map(org.apache.spark.sql.execution.datasources.FileFormat
-            .OPTION_RETURNING_BATCH -> "false"),
-          spark.sessionState.newHadoopConf())
-      es.map { e =>
-        e.dataPath -> (keySchema, eqKeyFiles(e.dataPath).flatMap { p =>
-          val it = read(EqCheck.partitionedFile(p.toString,
-            java.nio.file.Files.size(p)))
-          // the vectorized reader reuses its row object: copy each one
-          try it.map(_.copy()).toVector
-          finally EqCheck.close(it)
-        })
-      }
-    }.toMap
+  private def rememberEqKeyFooter(dataPath: String,
+      footer: (StructType, Long)): Unit = {
+    if (eqKeyFooterCache.size() >= fileSchemaCacheMax) eqKeyFooterCache.clear()
+    eqKeyFooterCache.put(dataPath, footer)
+  }
 
-  /** The membership sets of some eq entries, built on the driver from
-    * [[eqKeyRows]]: one set per (entry, compared types) — a widened key
-    * column compares in the wider type on both sides, as a join's type
-    * coercion would — and one [[EqCheck]] per use. The position probe
-    * and the delete filter both match through it. */
+  /** Driver-side opens of eq key parquets, footers and rows alike —
+    * the witness that a plan served from [[EqKeyMemo]] opens none. */
+  private[graft] val keyParquetOpens =
+    new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** A process-wide memo bounded by a constant total of `weight`ed
+    * bytes, least recently used first out. For values derived from
+    * immutable files only: an answer never needs invalidating, and an
+    * evicted one is recomputed on its next use. */
+  private[sources] class LruMemo[K, V](maxBytes: Long, weight: (K, V) => Long) {
+    private val map = new java.util.LinkedHashMap[K, V](64, 0.75f, true)
+    private var bytes = 0L
+
+    /** The memoized value — shared, never to be mutated. */
+    def get(k: K): Option[V] = synchronized(Option(map.get(k)))
+
+    def put(k: K, v: V): Unit = synchronized {
+      Option(map.put(k, v)).foreach(o => bytes -= weight(k, o))
+      bytes += weight(k, v)
+      val it = map.entrySet().iterator()
+      while (bytes > maxBytes && it.hasNext) {
+        val e = it.next()
+        bytes -= weight(e.getKey, e.getValue)
+        it.remove()
+      }
+    }
+  }
+
+  /** Decoded key tuples by key parquet path. Key parquets are
+    * uuid-named and written once, so every plan, version and reader
+    * that names an entry shares one decode of its keys. */
+  private[sources] object EqKeyMemo extends LruMemo[String,
+      (StructType, Vector[org.apache.spark.sql.catalyst.InternalRow])](
+      64L << 20, (k, v) => 64L + 2L * k.length + v._2.iterator.map {
+        case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+          48L + u.getSizeInBytes
+        case r => 48L + 16L * r.numFields
+      }.sum)
+
+  /** Each entry's key tuples (its `keyCols`, in order) by key parquet
+    * path, from [[EqKeyMemo]] or else read on the driver through
+    * Spark's own parquet reader — one reader function per distinct key
+    * schema: the same rows a broadcast of the key set collects to the
+    * driver, without the broadcast's Spark job. */
+  private def eqKeyRows(spark: SparkSession, entries: Seq[EqEntry])
+      : Map[String, (StructType, Vector[org.apache.spark.sql.catalyst.InternalRow])] = {
+    val (hit, miss) = entries.map(e => e -> EqKeyMemo.get(e.dataPath))
+      .partition(_._2.isDefined)
+    hit.map { case (e, v) => e.dataPath -> v.get }.toMap ++
+      miss.map(_._1).groupBy { e =>
+        val full = eqKeyFooter(e.dataPath)._1
+        (full, StructType(e.keyCols.map(full(_))))
+      }.toSeq.flatMap { case ((full, keySchema), es) =>
+        val read = new org.apache.spark.sql.execution.datasources.parquet
+          .ParquetFileFormat().buildReaderWithPartitionValues(
+            spark, full, StructType(Nil), keySchema, Nil,
+            Map(org.apache.spark.sql.execution.datasources.FileFormat
+              .OPTION_RETURNING_BATCH -> "false"),
+            spark.sessionState.newHadoopConf())
+        es.map { e =>
+          val rows = eqKeyFiles(e.dataPath).toVector.flatMap { p =>
+            keyParquetOpens.incrementAndGet()
+            val it = read(EqCheck.partitionedFile(p.toString,
+              java.nio.file.Files.size(p)))
+            // the vectorized reader reuses its row object: copy each one
+            try it.map(_.copy()).toVector
+            finally EqCheck.close(it)
+          }
+          EqKeyMemo.put(e.dataPath, (keySchema, rows))
+          e.dataPath -> (keySchema, rows)
+        }
+      }
+  }
+
+  /** The key indexes of some eq entries, built on the driver from
+    * [[eqKeyRows]]: per (key columns, compared types), one map from
+    * each key to the entries holding it — a widened key column
+    * compares in the wider type on both sides, as a join's type
+    * coercion would — and one [[EqCheck]] per use, masked to the
+    * entries it tests. The position probe and the delete rule both
+    * match through it. */
   private[sources] final class EqSets(spark: SparkSession,
       entries: Seq[EqEntry]) {
     import org.apache.spark.sql.types.DataType
     val tz: String = spark.sessionState.conf.sessionLocalTimeZone
-    private val keyRows = eqKeyRows(spark, entries.distinct)
-    private val built = scala.collection.mutable.ArrayBuffer.empty[Set[Any]]
-    private val setIdx =
-      scala.collection.mutable.Map.empty[(String, Seq[DataType]), Int]
+    private val ids = entries.distinct.zipWithIndex.toMap
+    private val keyRows = eqKeyRows(spark, ids.keys.toSeq)
+    private val built = scala.collection.mutable.ArrayBuffer.empty[EqCheck.KeyIndex]
+    private val indexOf =
+      scala.collection.mutable.Map.empty[(Seq[String], Seq[DataType]), Int]
 
-    def sets: Vector[Set[Any]] = built.toVector
+    def sets: Vector[EqCheck.KeyIndex] = built.toVector
 
     /** `e`'s check against the row columns at `ords`, of types `from`. */
-    def check(e: EqEntry, from: Seq[DataType], ords: Seq[Int]): EqCheck = {
-      val (ks, rows) = keyRows(e.dataPath)
-      val wide = from.zip(ks.fields).map { case (a, k) =>
+    def check(e: EqEntry, from: Seq[DataType], ords: Seq[Int]): EqCheck =
+      union(Seq(e), from, ords).head
+
+    private def wideOf(e: EqEntry, from: Seq[DataType]): Seq[DataType] =
+      from.zip(keyRows(e.dataPath)._1.fields).map { case (a, k) =>
         org.apache.spark.sql.catalyst.analysis.TypeCoercion
           .findWiderTypeForTwo(a, k.dataType).getOrElse(k.dataType)
       }
-      val set = setIdx.getOrElseUpdate((e.dataPath, wide), {
-        built += rows.map { r =>
-          val vs = ks.fields.indices.map(j => EqCheck.widen(
-            r.get(j, ks(j).dataType), ks(j).dataType, wide(j), tz))
-          if (vs.length == 1) vs.head else vs
-        }.toSet
-        built.length - 1
-      })
-      EqCheck(e.dataPath, set, ords.toArray, from.zip(wide).toArray)
-    }
+
+    /** The checks of the row columns at `ords`, of types `from`,
+      * against the UNION of the keys of `es` (entries with the same key
+      * columns): one per compared types, each one probe of the key
+      * index masked to `es`, however many of them reach a file. */
+    def union(es: Seq[EqEntry], from: Seq[DataType],
+        ords: Seq[Int]): Seq[EqCheck] =
+      es.distinct.sortBy(_.dataPath).groupBy(wideOf(_, from)).toSeq
+        .sortBy(_._2.head.dataPath).map { case (wide, group) =>
+          val keyCols = group.head.keyCols
+          val index = indexOf.getOrElseUpdate((keyCols, wide), {
+            // every entry of these key columns and compared types: a
+            // key holding one entry shares that entry's singleton mask
+            val m = scala.collection.mutable.HashMap.empty[Any, java.util.BitSet]
+            ids.toSeq.sortBy(_._2).foreach { case (e, id) =>
+              if (e.keyCols == keyCols && wideOf(e, from) == wide) {
+                val one = new java.util.BitSet(); one.set(id)
+                val (ks, rows) = keyRows(e.dataPath)
+                rows.foreach { r =>
+                  val vs = ks.fields.indices.map(j => EqCheck.widen(
+                    r.get(j, ks(j).dataType), ks(j).dataType, wide(j), tz))
+                  val k = if (vs.length == 1) vs.head else vs
+                  m.get(k) match {
+                    case None => m(k) = one
+                    case Some(b) if !b.get(id) =>
+                      val c = b.clone().asInstanceOf[java.util.BitSet]
+                      c.set(id); m(k) = c
+                    case _ => ()
+                  }
+                }
+              }
+            }
+            built += m
+            built.length - 1
+          })
+          val mask = new java.util.BitSet()
+          group.foreach(e => mask.set(ids(e)))
+          EqCheck(group.map(_.dataPath).mkString(","), index, mask,
+            ords.toArray, from.zip(wide).toArray)
+        }
   }
 
   private[sources] def eqText(entries: Seq[EqEntry]): String =
@@ -1438,50 +1561,28 @@ object Sources {
     * entry retires in that file, empty sets included ("probed, nothing
     * retired"). Both sides are immutable bytes — key parquets and data
     * files are uuid-named and written once, and an entry's scope is
-    * fixed at commit — so an answer never needs invalidating, and it
-    * holds for every version, plan, scan and thread that asks again.
-    * Bounded by a constant total of bitset bytes, least recently used
-    * first out; an evicted pair is re-probed on its next use. */
-  private[sources] object EqPositionMemo {
-    private val MaxBytes = 64L << 20
-    private val map = new java.util.LinkedHashMap[(String, String),
-      java.util.BitSet](64, 0.75f, true)
-    private var bytes = 0L
-
-    private def weight(k: (String, String), b: java.util.BitSet): Long =
-      64L + 2L * (k._1.length + k._2.length) + b.size() / 8
-
-    /** The memoized positions — shared, never to be mutated. */
-    def get(k: (String, String)): Option[java.util.BitSet] =
-      synchronized(Option(map.get(k)))
-
-    def put(k: (String, String), bits: java.util.BitSet): Unit =
-      synchronized {
-        val compact = java.util.BitSet.valueOf(bits.toLongArray)
-        Option(map.put(k, compact)).foreach(o => bytes -= weight(k, o))
-        bytes += weight(k, compact)
-        val it = map.entrySet().iterator()
-        while (bytes > MaxBytes && it.hasNext) {
-          val e = it.next()
-          bytes -= weight(e.getKey, e.getValue)
-          it.remove()
-        }
-      }
-  }
+    * fixed at commit — so an answer holds for every version and range
+    * that asks again. Bounded by a constant total of bitset bytes. */
+  private[sources] object EqPositionMemo extends LruMemo[(String, String),
+      java.util.BitSet](64L << 20,
+      (k, b) => 64L + 2L * (k._1.length + k._2.length) + b.size() / 8)
 
   /** Physical row positions retired by eq `entries` within exactly
-    * `files` — the POSITION form of [[readRows]]'s eq rule, for
-    * every consumer whose unit is a (file, skip bitset) partition: the
-    * catalog's native scan (reads and the SQL UPDATE/MERGE/DELETE
-    * target scan) and the streaming CDF. Answers come from [[EqPositionMemo]]; the (entry, file) pairs
-    * it lacks are probed together in ONE Spark job
-    * ([[probeEqPositions]]). No schema is inferred: key files use their
-    * footer schema, data files their writer-recorded `_COLS` schema
-    * ([[fileSchemaOf]]) plus the identity partition columns, whose
-    * values come from the path. Per-generation safe: files whose schema
-    * predates a key column are skipped for that entry, as in
-    * [[readRows]]. Keys of the returned map are the given
-    * (manifest) paths. */
+    * `files` — the POSITION form of the delete rule ([[Deletes]]), for
+    * the two consumers whose output is a position set rather than a
+    * scan: the streaming CDF, whose partitions carry (file, skip
+    * bitset) pairs for both sides of a range, and [[cloneTable]], which
+    * turns pending entries into the clone's DV marks. Every scan — the
+    * catalog's native scan and every DataFrame read — drops eq-retired
+    * rows inline instead and starts no probe. Answers come from
+    * [[EqPositionMemo]]; the (entry, file) pairs it lacks are probed
+    * together in ONE Spark job ([[probeEqPositions]]). No schema is
+    * inferred: key files use their footer schema, data files their
+    * writer-recorded `_COLS` schema ([[fileSchemaOf]]) plus the
+    * identity partition columns, whose values come from the path.
+    * Per-generation safe: files whose schema predates a key column are
+    * skipped for that entry, as in [[Deletes]]. Keys of the returned
+    * map are the given (manifest) paths. */
   private[sources] def eqRetiredPositions(spark: SparkSession,
       table: String, files: Seq[String],
       entries: Seq[EqEntry]): Map[String, java.util.BitSet] = {
@@ -1508,7 +1609,7 @@ object Sources {
     }
     if (toProbe.nonEmpty)
       probeEqPositions(spark, table, toProbe).foreach { case (k, bits) =>
-        EqPositionMemo.put(k, bits)
+        EqPositionMemo.put(k, java.util.BitSet.valueOf(bits.toLongArray))
         addHit(k._2, bits)
       }
     out.toMap
@@ -1646,6 +1747,12 @@ object Sources {
         case _ => 0L
       }
     val nKeys = obsLong(keyObs, "n")
+    // the writer knows the key parquet's footer — the key columns, which
+    // Spark writes nullable, and the observed count — so readers in this
+    // process open no footer for the new entry
+    rememberEqKeyFooter(eqDir.toString, (StructType(changes
+      .select(keyCols.map(col): _*).schema.fields
+      .map(_.copy(nullable = true))), nKeys))
     val upserts = changes.filter(col(opCol) === "upsert").drop(opCol)
     val hasUpserts = obsLong(upObs, "nu") > 0
     if (nKeys == 0 && !hasUpserts) { // provable no-op: no commit
@@ -3639,27 +3746,44 @@ object Sources {
   }
 }
 
-/** One entry's membership test, shared by the eq probe task and the
-  * delete filter: which row columns form its key (`ords`), each as
-  * (row type, compared type), and which shipped key set to test. */
+/** One membership test, shared by the eq probe task and the delete
+  * rule: which row columns form the key (`ords`), each as (row type,
+  * compared type), which shipped key index to probe, and which of its
+  * entries count (`mask`: one entry's, or every entry reaching a
+  * file). */
 private[sources] case class EqCheck(dataPath: String, set: Int,
-    ords: Array[Int], types: Array[(org.apache.spark.sql.types.DataType,
+    mask: java.util.BitSet, ords: Array[Int],
+    types: Array[(org.apache.spark.sql.types.DataType,
       org.apache.spark.sql.types.DataType)]) {
 
-  /** Whether `row`'s key is in the set. A NULL key matches nothing. */
+  /** Whether `row`'s key is held by an entry of `mask`. A NULL key
+    * matches nothing. */
   def hits(row: org.apache.spark.sql.catalyst.InternalRow,
-      sets: Vector[Set[Any]], tz: String): Boolean =
-    ords.forall(o => !row.isNullAt(o)) && {
-      val vs = ords.indices.map { n =>
-        val (from, to) = types(n)
-        EqCheck.widen(row.get(ords(n), from), from, to, tz)
+      sets: Vector[EqCheck.KeyIndex], tz: String): Boolean = {
+    val key =
+      if (ords.length == 1) {
+        if (row.isNullAt(ords(0))) return false
+        val (from, to) = types(0)
+        EqCheck.widen(row.get(ords(0), from), from, to, tz)
+      } else {
+        if (ords.exists(row.isNullAt)) return false
+        ords.indices.map { n =>
+          val (from, to) = types(n)
+          EqCheck.widen(row.get(ords(n), from), from, to, tz)
+        }
       }
-      sets(set).contains(if (vs.length == 1) vs.head else vs)
+    sets(set).get(key) match {
+      case Some(holders) => holders.intersects(mask)
+      case None => false
     }
+  }
 }
 
 private[sources] object EqCheck {
   import org.apache.spark.sql.catalyst.InternalRow
+
+  /** Each key of some entries -> the ids of the entries holding it. */
+  type KeyIndex = scala.collection.Map[Any, java.util.BitSet]
 
   /** `v` of type `from` as a comparable value of type `to`; floating
     * zeros and NaNs are made canonical, as a join normalizes its keys. */
@@ -3693,7 +3817,7 @@ private[sources] object EqCheck {
   def probe(read: org.apache.spark.sql.execution.datasources.PartitionedFile =>
         Iterator[InternalRow], f: String, len: Long, pv: InternalRow,
       idxOrd: Int, checks: Seq[EqCheck],
-      sets: Vector[Set[Any]], tz: String): Seq[(String, String, Array[Long])] = {
+      sets: Vector[KeyIndex], tz: String): Seq[(String, String, Array[Long])] = {
     val bits = checks.map(_ => new java.util.BitSet())
     val it = read(partitionedFile(f, len, pv))
     try it.foreach { row =>
@@ -3708,17 +3832,17 @@ private[sources] object EqCheck {
   }
 }
 
-/** The delete filter's state, built on the driver by
-  * [[Sources.readRows]] and shipped with the plan: per normalized
-  * file, its DV marks and the [[EqCheck]]s of the entries that reach
-  * it — `drop` (the row is dead if one hits) and `need` (in
-  * [[Sources.DeleteMode.RetiredBy]], the row is kept only if one hits).
-  * Equal by `id` — the table, files, DV text, entries and mode it was
-  * built from — so two reads of one version plan equal. */
+/** The delete rule's state, built on the driver by
+  * [[Sources.Deletes.spec]] and shipped with the plan or the reader
+  * factory: per normalized file, its DV marks and the [[EqCheck]]s of
+  * the entries that reach it — `drop` (the row is dead if one hits) and
+  * `need` (in [[Sources.DeleteMode.RetiredBy]], the row is kept only if
+  * one hits). Equal by `id` — the table, files, DV text, entries and
+  * mode it was built from — so two reads of one version plan equal. */
 private[sources] final class DeleteSpec(val id: Any,
     marks: Map[String, Array[Byte]],
     checks: Map[String, (Array[EqCheck], Array[EqCheck])],
-    sets: Vector[Set[Any]], tz: String, mode: Sources.DeleteMode)
+    sets: Vector[EqCheck.KeyIndex], tz: String, mode: Sources.DeleteMode)
   extends Serializable {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.unsafe.types.UTF8String
@@ -3726,33 +3850,45 @@ private[sources] final class DeleteSpec(val id: Any,
   @transient private lazy val bits: Map[String, java.util.BitSet] =
     marks.map { case (f, b) => f -> java.util.BitSet.valueOf(b) }
   // rows arrive file by file: resolve a path once per run of its rows
-  @transient private lazy val last =
-    new ThreadLocal[(UTF8String, java.util.BitSet, Array[EqCheck],
-      Array[EqCheck])]
+  @transient private lazy val last = new ThreadLocal[(UTF8String, FileRule)]
 
-  private def fileOf(path: UTF8String) = {
-    val hit = last.get()
-    if (hit != null && hit._1 == path) hit
-    else {
-      val f = Sources.normalizePath(path.toString)
-      val (drop, need) = checks.getOrElse(f, (Array.empty[EqCheck],
-        Array.empty[EqCheck]))
-      val st = (path.clone(), bits.getOrElse(f, null), drop, need)
-      last.set(st)
-      st
+  /** The rule for one file (its normalized path). */
+  def file(f: String): FileRule = {
+    val (drop, need) = checks.getOrElse(f, (Array.empty[EqCheck],
+      Array.empty[EqCheck]))
+    new FileRule(bits.getOrElse(f, null), drop, need)
+  }
+
+  final class FileRule(dv: java.util.BitSet, drop: Array[EqCheck],
+      need: Array[EqCheck]) {
+    /** Every row of the file is kept. */
+    def keepsAll: Boolean =
+      mode == Sources.DeleteMode.Live && dv == null && drop.isEmpty
+
+    /** Whether the row at position `idx`, whose key columns `keys`
+      * holds, is kept. */
+    def keep(idx: Long, keys: => InternalRow): Boolean = {
+      val marked = dv != null && idx <= Int.MaxValue && dv.get(idx.toInt)
+      lazy val k = keys
+      mode match {
+        case Sources.DeleteMode.Marked => marked
+        case Sources.DeleteMode.Live => !marked && !drop.exists(_.hits(k, sets, tz))
+        case Sources.DeleteMode.RetiredBy(_) => !marked && need.nonEmpty &&
+          !drop.exists(_.hits(k, sets, tz)) && need.exists(_.hits(k, sets, tz))
+      }
     }
   }
 
   def keep(path: UTF8String, idx: Long, keys: => InternalRow): Boolean = {
-    val (_, dv, drop, need) = fileOf(path)
-    val marked = dv != null && idx <= Int.MaxValue && dv.get(idx.toInt)
-    lazy val k = keys
-    mode match {
-      case Sources.DeleteMode.Marked => marked
-      case Sources.DeleteMode.Live => !marked && !drop.exists(_.hits(k, sets, tz))
-      case Sources.DeleteMode.RetiredBy(_) => !marked && need.nonEmpty &&
-        !drop.exists(_.hits(k, sets, tz)) && need.exists(_.hits(k, sets, tz))
-    }
+    val hit = last.get()
+    val rule =
+      if (hit != null && hit._1 == path) hit._2
+      else {
+        val r = file(Sources.normalizePath(path.toString))
+        last.set((path.clone(), r))
+        r
+      }
+    rule.keep(idx, keys)
   }
 
   override def toString: String = s"deletes(${checks.size} files)"

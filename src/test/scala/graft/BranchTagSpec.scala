@@ -358,4 +358,43 @@ class BranchTagSpec extends SparkTestBase {
     assert(scala.util.Try(pointer(bd, bh, "dv")).isSuccess,
       "the branch head keeps its sidecar pointer")
   }
+
+  test("expire removes what expired branch versions staged: pointed " +
+    "staged sidecars whose promote never ran, stranded staged files and " +
+    "unpinned eq key sets") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val t = freshTable("ref-expire-staged")
+    Sources.commitVersion(spark.range(0, 20, 1, 1).select(col("id").as("k")), t)
+    val bd = Refs.createBranch(t, "dev")
+    Sources.deleteWhereDv(spark, bd, col("k") < 3)
+    val dvVersion = Sources.latestVersion(bd)
+    import spark.implicits._
+    Sources.mergeVersionEq(spark, bd, Seq((5L, "delete")).toDF("k", "op"), Seq("k"))
+    assert(Sources.eqOf(bd, Sources.latestVersion(bd)).nonEmpty)
+    Sources.purgeEq(spark, bd)
+    val head = Sources.readVersion(spark, bd).collect().map(_.getLong(0)).sorted.toSeq
+    assert(head === (3L until 20L).filterNot(_ == 5L))
+    // the state a crash between the link and the promote leaves
+    val pointer = Files.readAllLines(Paths.get(bd, s"v$dvVersion.manifest"))
+      .asScala.map(_.split("\t", -1)).collectFirst {
+        case Array("#sidecar", "dv", name) => name
+      }.get
+    Files.move(Paths.get(bd, s"v$dvVersion.dv"), Paths.get(bd, pointer))
+    // a staged file no manifest points at, past the in-flight grace window
+    val stray = Paths.get(bd, ".staged-0123456789ab.stats")
+    Files.write(stray, "x".getBytes("UTF-8"))
+    Files.setLastModifiedTime(stray, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() - 3600L * 1000))
+    Refs.expireBranch(t, "dev", 1)
+    def listed(dir: java.nio.file.Path): Seq[String] =
+      if (!Files.exists(dir)) Nil
+      else Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!listed(Paths.get(bd)).exists(_.startsWith(".staged-")),
+      s"staged files left: ${listed(Paths.get(bd)).filter(_.startsWith(".staged-"))}")
+    assert(listed(Paths.get(bd, "eqdel")).isEmpty,
+      s"unpinned eq key sets left: ${listed(Paths.get(bd, "eqdel"))}")
+    assert(Sources.readVersion(spark, bd).collect().map(_.getLong(0)).sorted.toSeq
+      === head)
+  }
 }

@@ -683,13 +683,16 @@ class EqualityDeleteSpec extends SparkTestBase {
         s"lookup of $k")
     }
     val (_, first) = jobsDuring(lookup(keys(0)).queryExecution.executedPlan)
-    assert(first <= 1, s"first eq-pending plan started $first jobs")
+    assert(first === 0, s"first eq-pending plan started $first jobs")
+    val opens = Sources.keyParquetOpens.get()
     val (_, second) = jobsDuring(lookup(keys(4)).queryExecution.executedPlan)
     assert(second === 0, s"a plan with nothing new started $second jobs")
+    assert(Sources.keyParquetOpens.get() === opens,
+      "a second plan of the version opened eq key parquets")
     Sources.mergeVersionEq(spark, table,
       changes(Seq((keys(4), 4L, 4.0, "J-4")), Nil), Seq("o_orderkey"))
     val (_, third) = jobsDuring(lookup(keys(4)).queryExecution.executedPlan)
-    assert(third <= 1, s"a plan after one new entry started $third jobs")
+    assert(third === 0, s"a plan after one new entry started $third jobs")
     keys.foreach(check)
     assert(lookup(keys(0)).head().getString(2) === "J-3", "LWW")
     assert(lookup(keys(1)).isEmpty && lookup(keys(3)).isEmpty)
