@@ -406,12 +406,6 @@ private[sources] class GraftNativeReaderFactory(
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val files = p.asInstanceOf[GraftFilePartition].files.iterator
-    // nothing synthesized: a generated projection picks the output
-    // columns out of an indexed row
-    lazy val project = org.apache.spark.sql.catalyst.expressions
-      .UnsafeProjection.create(fields.toSeq.map { case (j, dt) =>
-        org.apache.spark.sql.catalyst.expressions.BoundReference(j, dt,
-          nullable = true) })
     new PartitionReader[InternalRow] {
       private var raw: Iterator[InternalRow] = Iterator.empty
       private var it: Iterator[InternalRow] = Iterator.empty
@@ -460,7 +454,7 @@ private[sources] class GraftNativeReaderFactory(
             InternalRow.fromSeq(pv)))
           val alive = rule.fold(raw)(r =>
             raw.filter(row => r.keep(row.getLong(rowIdxPos), row)))
-          it = if (fields.forall(_._1 >= 0)) alive.map(project) else alive.map { cur =>
+          it = alive.map { cur =>
             val out = new GenericInternalRow(fields.length)
             var i = 0
             while (i < fields.length) {

@@ -1368,14 +1368,9 @@ object Sources {
       .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
         .ParquetToSparkSchemaConverter().convert(meta.getSchema))
     val out = (schema, footers.map(_._2).sum)
-    rememberEqKeyFooter(dataPath, out)
-    out
-  }
-
-  private def rememberEqKeyFooter(dataPath: String,
-      footer: (StructType, Long)): Unit = {
     if (eqKeyFooterCache.size() >= fileSchemaCacheMax) eqKeyFooterCache.clear()
-    eqKeyFooterCache.put(dataPath, footer)
+    eqKeyFooterCache.put(dataPath, out)
+    out
   }
 
   /** Driver-side opens of eq key parquets, footers and rows alike —
@@ -1466,8 +1461,8 @@ object Sources {
     private val ids = entries.distinct.zipWithIndex.toMap
     private val keyRows = eqKeyRows(spark, ids.keys.toSeq)
     private val built = scala.collection.mutable.ArrayBuffer.empty[EqCheck.KeyIndex]
-    private val indexOf =
-      scala.collection.mutable.Map.empty[(Seq[String], Seq[DataType]), Int]
+    private val indexOf = scala.collection.mutable.Map
+      .empty[(Seq[String], Seq[DataType], Seq[DataType]), Int]
 
     def sets: Vector[EqCheck.KeyIndex] = built.toVector
 
@@ -1490,9 +1485,12 @@ object Sources {
       es.distinct.sortBy(_.dataPath).groupBy(wideOf(_, from)).toSeq
         .sortBy(_._2.head.dataPath).map { case (wide, group) =>
           val keyCols = group.head.keyCols
-          val index = indexOf.getOrElseUpdate((keyCols, wide), {
-            // every entry of these key columns and compared types: a
-            // key holding one entry shares that entry's singleton mask
+          // which entries compare in `wide` depends on `from` too (a
+          // file typed before a widening ALTER gives another answer),
+          // so the index is keyed by both
+          val index = indexOf.getOrElseUpdate((keyCols, from, wide), {
+            // every entry of these key columns and types: a key holding
+            // one entry shares that entry's singleton mask
             val m = scala.collection.mutable.HashMap.empty[Any, java.util.BitSet]
             ids.toSeq.sortBy(_._2).foreach { case (e, id) =>
               if (e.keyCols == keyCols && wideOf(e, from) == wide) {
@@ -1747,12 +1745,6 @@ object Sources {
         case _ => 0L
       }
     val nKeys = obsLong(keyObs, "n")
-    // the writer knows the key parquet's footer — the key columns, which
-    // Spark writes nullable, and the observed count — so readers in this
-    // process open no footer for the new entry
-    rememberEqKeyFooter(eqDir.toString, (StructType(changes
-      .select(keyCols.map(col): _*).schema.fields
-      .map(_.copy(nullable = true))), nKeys))
     val upserts = changes.filter(col(opCol) === "upsert").drop(opCol)
     val hasUpserts = obsLong(upObs, "nu") > 0
     if (nKeys == 0 && !hasUpserts) { // provable no-op: no commit

@@ -772,4 +772,68 @@ class EqualityDeleteSpec extends SparkTestBase {
     } finally pool.shutdown()
     spark.sql(s"DROP TABLE $cat.t")
   }
+
+  test("entries keyed INT and BIGINT over a widened key column retire " +
+    "their rows in files of both generations: clone and streaming CDF") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    def schemaOf(k: DataType) = StructType(Seq(
+      StructField("k", k), StructField("v", StringType)))
+    def parquetIn(dir: String): Seq[String] =
+      Option(new java.io.File(dir).listFiles()).toSeq.flatten
+        .map(_.getPath).filter(_.endsWith(".parquet")).sorted
+    // a table whose INT-typed generation sorts before its BIGINT one,
+    // with one entry of each key type, each retiring a row of the other
+    // generation's file; every probe that meets both entries sees the
+    // INT file first
+    def build(name: String): String = {
+      val t = freshTable(name)
+      val a = s"$t/data/a-int"
+      (1 to 4).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1)
+        .write.parquet(a)
+      Sources.commitVersionFiles(t, parquetIn(a),
+        batchSchema = Some(schemaOf(IntegerType)))
+      Sources.alterSchema(t, schemaOf(LongType))
+      val b = s"$t/data/b-long"
+      (11 to 14).map(i => (i.toLong, s"b$i")).toDF("k", "v").coalesce(1)
+        .write.parquet(b)
+      Sources.commitVersionFiles(t, parquetIn(b),
+        batchSchema = Some(schemaOf(LongType)))
+      Sources.mergeVersionEq(spark, t,
+        Seq((2L, "delete")).toDF("k", "op"), Seq("k"))
+      Sources.mergeVersionEq(spark, t,
+        Seq((12, "delete")).toDF("k", "op"), Seq("k"))
+      assert(Sources.eqOf(t, Sources.latestVersion(t)).length === 2)
+      t
+    }
+    val model = Seq(1L -> "a1", 3L -> "a3", 4L -> "a4",
+      11L -> "b11", 13L -> "b13", 14L -> "b14")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v").collect().map(r => r.getLong(0) -> r.getString(1))
+        .toSeq.sorted
+    // clone: the cut's eq entries become DV marks through one probe
+    val src = build("eq-widen-clone")
+    assert(rowsOf(Sources.readVersion(spark, src)) === model)
+    val dst = src + "-clone"
+    Sources.cloneTable(spark, src, dst)
+    assert(rowsOf(Sources.readVersion(spark, dst)) === model,
+      "the clone must drop both entries' rows")
+    // streaming CDF over a purge: the departing files' eq-dead rows are
+    // not re-emitted, so the slice deletes exactly the rows it re-inserts
+    val t = build("eq-widen-cdf")
+    val before = Sources.latestVersion(t)
+    Sources.purgeEq(spark, t)
+    assert(rowsOf(Sources.readVersion(spark, t)) === model)
+    spark.readStream.format("graft-cdf")
+      .option("path", t).option("startingVersion", before.toString)
+      .load().writeStream.format("memory").queryName("eq_cdf_widened")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val feed = spark.sql("SELECT * FROM eq_cdf_widened")
+    def side(kind: String) =
+      rowsOf(feed.filter(col("_change_type") === kind))
+    assert(side("delete") === model,
+      "the purge slice deletes only rows that were live")
+    assert(side("insert") === model)
+  }
 }
